@@ -1409,7 +1409,7 @@ def q_crawl_rounds(spark, sf_dir):
     from web_crawling_prj_spark.sources.pages_gen import pages_df, robots_df, seeds_df
 
     pages = pages_df(spark, sf_dir).persist()
-    cfg = CrawlConfig(num_buckets=8, n_salts=4, max_per_host=25, default_budget=25, use_bloom=False)
+    cfg = CrawlConfig(num_buckets=8, n_salts=4, max_per_host=25, default_budget=25)
     cfg.extra["max_doc_id"] = pages.agg(F.max("doc_id")).first()[0] + 1
     # bucketed store: the steady-state anti-join runs shuffle-free (r3 layout)
     # state on RAM-backed storage where available — same reasoning as the
@@ -1457,7 +1457,6 @@ def q_crawl_rounds_replay(spark, sf_dir):
         n_salts=4,
         max_per_host=25,
         default_budget=25,
-        use_bloom=False,
         round_duration_ms=600_000,
         schedule_tiebreak="url_canon",
         fetch_roll_mode="doc",
@@ -1541,7 +1540,6 @@ def q_crawl_rfc_replay(spark, sf_dir):
         n_salts=4,
         max_per_host=25,
         default_budget=25,
-        use_bloom=False,
         round_duration_ms=600_000,
         schedule_tiebreak="url_canon",
         fetch_roll_mode="doc",

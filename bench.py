@@ -53,7 +53,7 @@ def synthetic_frontier(spark, n: int, lo: int = 0):
     )
 
 
-def bench_frontier_core(spark, n: int, n_salts: int = 16, budget: int = 100, use_bloom: bool = True) -> dict:
+def bench_frontier_core(spark, n: int, n_salts: int = 16, budget: int = 100) -> dict:
     frontier = synthetic_frontier(spark, n)
     # seen-set: every url whose id ≡ 0,1 (mod 5) plus a disjoint tail → ~40% dup rate
     seen = (
@@ -79,34 +79,27 @@ def bench_frontier_core(spark, n: int, n_salts: int = 16, budget: int = 100, use
     budgets = spark.range(0).select(
         F.lit("x").alias("host"), F.lit(budget).alias("max_per_round"), F.lit(100).alias("crawl_delay_ms")
     )
-    # Steady-state configuration: the crawl maintains the seen-set bloom
-    # incrementally across rounds (plans.crawl_round sidecar), so its build is
-    # NOT per-round work — built untimed here, reported separately. The timed
-    # region is exactly the per-round path: bloom-probe → exact anti-join on
-    # survivors → salted politeness rank.
-    bloom = None
-    bcast = None
-    bloom_build_s = 0.0
-    if use_bloom:
-        t0 = time.time()
-        bloom = build_sharded_bloom(
-            seen, num_shards=32, expected_per_shard=max(1000, n // 64), fpp=0.01
-        )
-        bloom_build_s = round(time.time() - t0, 3)
-        bcast = broadcast_bloom(spark, bloom)
+    # The bloom is built untimed and reported separately (a seen-set filter
+    # is maintained across rounds, not rebuilt per round). The timed region
+    # is bloom-probe → exact anti-join on survivors → salted politeness rank.
+    t0 = time.time()
+    bloom = build_sharded_bloom(
+        seen, num_shards=32, expected_per_shard=max(1000, n // 64), fpp=0.01
+    )
+    bloom_build_s = round(time.time() - t0, 3)
+    bcast = broadcast_bloom(spark, bloom)
     t0 = time.time()
     pending = anti_join_seen(frontier, seen, bloom=bloom, bloom_bcast=bcast)
     scheduled = schedule_round(pending, budgets, n_salts=n_salts, default_budget=budget)
     n_sched = scheduled.count()
     wall = time.time() - t0
-    if bcast is not None:
-        bcast.destroy()  # round-scoped lifecycle, same as plans.crawl_round
+    bcast.destroy()  # release the executors' bitmap copies
     return {
         "n_input": n,
         "n_scheduled": n_sched,
         "wall_s": round(wall, 3),
         "rate": round(n / wall, 1),
-        "bloom": use_bloom,
+        "bloom": True,
         "bloom_build_s": bloom_build_s,
     }
 
@@ -119,7 +112,6 @@ def bench_frontier_core_bucketed(
     num_buckets: int = 32,
     runs: int = 5,
     schedule: bool = True,
-    prefilter: bool = False,
 ) -> dict:
     """Steady-state frontier core on the ROUND-3 layout: frontier and seen-set
     stored as bucketed+sorted tables on url_hash (what crawl_store maintains
@@ -163,25 +155,13 @@ def bench_frontier_core_bucketed(
             # schedule=False isolates the shuffle-free dedup stage for the
             # per-stage scaling accounting: full-core minus this is exactly
             # the politeness rank's two designed exchanges
-            pers = []  # the round-lifecycle list run_round would own: the
-            # prefilter's internal winners cache is released AFTER the
-            # consuming action, exactly like the real crawl round
             out = (
-                schedule_round(
-                    pending,
-                    budgets,
-                    n_salts=n_salts,
-                    default_budget=budget,
-                    threshold_prefilter=prefilter,
-                    persisted=pers,
-                )
+                schedule_round(pending, budgets, n_salts=n_salts, default_budget=budget)
                 if schedule
                 else pending
             )
             n_sched = out.count()
             walls.append(round(time.time() - t0, 3))
-            for df in pers:
-                df.unpersist()
     finally:
         spark.sql("DROP TABLE IF EXISTS bench_fr_bkt")
         spark.sql("DROP TABLE IF EXISTS bench_seen_bkt")
@@ -195,7 +175,6 @@ def bench_frontier_core_bucketed(
         "rate": round(n / wall, 1),
         "layout_setup_s": setup_s,
         "num_buckets": num_buckets,
-        "prefilter": prefilter,
     }
 
 
@@ -257,19 +236,18 @@ def _bench_dir_bytes(path: str) -> int:
 def bench_frontier_commit(
     spark, n: int, churn: int, rounds: int = 3, num_buckets: int = 32
 ) -> dict:
-    """Round-4 headline: per-round frontier WRITE cost — delta log (O(churn))
-    vs legacy full rewrite (O(n)) — on the same standing backlog.
+    """Per-round frontier WRITE cost of the delta log on a standing backlog:
+    each round commits only its churn (adds + tombstones), never the backlog.
 
-    Mirrors run_round's state plumbing exactly: each round reconstructs the
-    live view, 'schedules' a deterministic churn-sized batch (tombstones),
-    discovers churn new URLs (adds), and commits the next state in each
-    layout. Reports per-round wall + bytes written. At 10^10-row backlogs the
-    legacy write is the round's dominant cost; the delta write does not grow
-    with n at all."""
+    Mirrors run_round's state plumbing: each round reconstructs the live
+    view, 'schedules' a deterministic churn-sized batch (tombstones),
+    discovers churn new URLs (adds), and commits them. Reports per-round wall
+    + bytes written. (The full-rewrite comparison arm is retired with the
+    full-rewrite frontier mode; its last result, 70.4× write amplification,
+    is on record in BENCH_r07.json.)"""
     import shutil
 
     from web_crawling_prj_spark.plans.crawl_round import (
-        FRONTIER_COLS,
         FRONTIER_LOG_COLS,
         CrawlConfig,
         crawl_store,
@@ -278,27 +256,26 @@ def bench_frontier_commit(
     )
 
     out = {"n": n, "churn": churn, "rounds": rounds}
-    for mode in ("delta", "legacy"):
-        root = f"/dev/shm/wcp-bench-commit-{mode}-{os.getpid()}"
-        shutil.rmtree(root, ignore_errors=True)
-        cfg = CrawlConfig(num_buckets=num_buckets, frontier_deltas=(mode == "delta"))
-        store = crawl_store(root, cfg)
-        f0 = _bench_frontier_rows(spark, 0, n).repartition(num_buckets, "url_hash")
+    root = f"/dev/shm/wcp-bench-commit-{os.getpid()}"
+    shutil.rmtree(root, ignore_errors=True)
+    cfg = CrawlConfig(num_buckets=num_buckets)
+    store = crawl_store(root, cfg)
+    try:
+        log0 = (
+            _bench_frontier_rows(spark, 0, n)
+            .repartition(num_buckets, "url_hash")
+            .withColumns({"evt_round": F.lit(0), "is_del": F.lit(False)})
+            .select(*FRONTIER_LOG_COLS)
+        )
         empty_seen = spark.createDataFrame(
             [], "url_hash long, bucket int, first_seen_round int, first_seen_ts timestamp"
         )
-        if mode == "delta":
-            log0 = f0.withColumns({"evt_round": F.lit(0), "is_del": F.lit(False)}).select(
-                *FRONTIER_LOG_COLS
-            )
-            store.commit_round(0, {"frontier_log": log0, "seen_delta": empty_seen})
-            # steady state starts from a folded base (the crawl folds every
-            # compact_every rounds)
-            store.compact(
-                spark, "frontier_log", up_to=0, max_tiers=1, resolver=resolve_frontier_log
-            )
-        else:
-            store.commit_round(0, {"frontier": f0, "seen_delta": empty_seen})
+        store.commit_round(0, {"frontier_log": log0, "seen_delta": empty_seen})
+        # steady state starts from a folded base (the crawl folds every
+        # compact_every rounds)
+        store.compact(
+            spark, "frontier_log", up_to=0, max_tiers=1, resolver=resolve_frontier_log
+        )
         walls, bytes_per_round = [], []
         for r in range(1, rounds + 1):
             t0 = time.time()
@@ -308,36 +285,24 @@ def bench_frontier_commit(
                 F.pmod(F.xxhash64("url_hash", F.lit(r)), F.lit(max(1, n // churn))) == 0
             ).select("url_hash")
             adds = _bench_frontier_rows(spark, n + r * churn, n + (r + 1) * churn)
-            if mode == "delta":
-                log_r = (
-                    adds.withColumns({"evt_round": F.lit(r), "is_del": F.lit(False)})
-                    .select(*FRONTIER_LOG_COLS)
-                    .unionByName(_bench_del_rows(sched_keys, r))
-                    .repartition(num_buckets, "url_hash")
-                )
-                store.commit_round(r, {"frontier_log": log_r})
-            else:
-                nxt = (
-                    live.join(F.broadcast(sched_keys), "url_hash", "left_anti")
-                    .select(*FRONTIER_COLS)
-                    .unionByName(adds)
-                    .repartition(num_buckets, "url_hash")
-                )
-                store.commit_round(r, {"frontier": nxt})
+            log_r = (
+                adds.withColumns({"evt_round": F.lit(r), "is_del": F.lit(False)})
+                .select(*FRONTIER_LOG_COLS)
+                .unionByName(_bench_del_rows(sched_keys, r))
+                .repartition(num_buckets, "url_hash")
+            )
+            store.commit_round(r, {"frontier_log": log_r})
             walls.append(round(time.time() - t0, 3))
-            tbl = "frontier_log" if mode == "delta" else "frontier"
-            bytes_per_round.append(_bench_dir_bytes(store._table_round_dir(tbl, r)))
-        out[mode] = {
+            bytes_per_round.append(_bench_dir_bytes(store._table_round_dir("frontier_log", r)))
+        out["delta"] = {
             "round_walls_s": walls,
             "round_bytes": bytes_per_round,
             "mb_per_round": [round(b / 1e6, 2) for b in bytes_per_round],
         }
+    finally:
         shutil.rmtree(root, ignore_errors=True)
         for t in spark.sql(f"SHOW TABLES LIKE '{store._prefix}*'").collect():
             spark.sql(f"DROP TABLE {t.tableName}")
-    out["write_amplification_legacy_vs_delta"] = round(
-        sum(out["legacy"]["round_bytes"]) / max(1, sum(out["delta"]["round_bytes"])), 1
-    )
     return out
 
 
@@ -361,7 +326,7 @@ def bench_frontier_fold(
 
     root = f"/dev/shm/wcp-bench-fold-{os.getpid()}"
     shutil.rmtree(root, ignore_errors=True)
-    cfg = CrawlConfig(num_buckets=num_buckets, frontier_deltas=True)
+    cfg = CrawlConfig(num_buckets=num_buckets)
     store = crawl_store(root, cfg)
     out = {"n": n, "churn": churn, "window_rounds": rounds}
     try:
@@ -541,7 +506,7 @@ def main():
     spark = get_spark("wcp-bench", cores=cpus, shuffle_partitions=cpus)
     core = bench_frontier_core(spark, n_urls)
     core_bucketed = bench_frontier_core_bucketed(spark, n_urls)
-    # round-4: per-round frontier commit — delta log vs legacy full rewrite
+    # round-4: per-round frontier commit of the delta log
     commit = bench_frontier_commit(spark, n_urls, churn=max(1000, n_urls // 100))
     # round-5: fold cost — tiered minor fold (O(window churn)) vs major (O(live))
     fold = bench_frontier_fold(spark, n_urls, churn=max(1000, n_urls // 100))
@@ -674,7 +639,7 @@ def main():
         "sf": sf,
         "cpus": cpus,
         "core_bucketed_rate": core_bucketed.get("rate"),
-        "commit_write_amp_legacy_vs_delta": commit.get("write_amplification_legacy_vs_delta"),
+        "commit_mb_per_round": commit["delta"]["mb_per_round"],
         "fold_bytes_major_vs_minor": fold.get("fold_bytes_major_vs_minor"),
         "full_record": "BENCH/last_run.json",
     }

@@ -138,34 +138,31 @@ def main():
     if args.single_split:
         import tempfile
 
-        tmp = tempfile.mkdtemp(prefix="wcp_ssplit_")
-        docs.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/docs")
-        emb.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/emb")
-        docs1 = spark.read.parquet(f"{tmp}/docs")
-        emb1 = spark.read.parquet(f"{tmp}/emb")
-        out["n_splits_docs1"] = docs1.rdd.getNumPartitions()
-        out["ss_dup_ngram_spans"] = _best(
-            lambda: _noop(duplicate_ngram_spans(docs1, n=8, min_count=2)),
-            label="single-split: spans",
-            spark=spark,
-        )
-        out["ss_minhash_pairs"] = _best(
-            lambda: _noop(
-                minhash_candidate_pairs(docs1, jaccard_threshold=0.5).select(
-                    "id_a", "id_b", F.round("est_jaccard", 4)
-                )
-            ),
-            label="single-split: minhash",
-            spark=spark,
-        )
-        out["ss_semdedup"] = _best(
-            lambda: _noop(semdedup(emb1, k=8, iters=2, tau=0.4)),
-            label="single-split: semdedup",
-            spark=spark,
-        )
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
+        with tempfile.TemporaryDirectory(prefix="wcp_ssplit_") as tmp:
+            docs.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/docs")
+            emb.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/emb")
+            docs1 = spark.read.parquet(f"{tmp}/docs")
+            emb1 = spark.read.parquet(f"{tmp}/emb")
+            out["n_splits_docs1"] = docs1.rdd.getNumPartitions()
+            out["ss_dup_ngram_spans"] = _best(
+                lambda: _noop(duplicate_ngram_spans(docs1, n=8, min_count=2)),
+                label="single-split: spans",
+                spark=spark,
+            )
+            out["ss_minhash_pairs"] = _best(
+                lambda: _noop(
+                    minhash_candidate_pairs(docs1, jaccard_threshold=0.5).select(
+                        "id_a", "id_b", F.round("est_jaccard", 4)
+                    )
+                ),
+                label="single-split: minhash",
+                spark=spark,
+            )
+            out["ss_semdedup"] = _best(
+                lambda: _noop(semdedup(emb1, k=8, iters=2, tau=0.4)),
+                label="single-split: semdedup",
+                spark=spark,
+            )
 
     print(json.dumps(out))
 

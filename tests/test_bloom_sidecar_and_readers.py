@@ -11,7 +11,6 @@ from web_crawling_prj_spark.operators.bloom import (
     merge_blooms,
     might_contain,
 )
-from web_crawling_prj_spark.plans.statestore import StateStore
 from web_crawling_prj_spark.sources.readers import read
 
 
@@ -28,45 +27,6 @@ def test_bloom_roundtrip_and_merge(spark):
         .withColumn("maybe", might_contain(back))
     )
     assert probed.where(~F.col("maybe")).count() == 0  # no false negatives after merge+serde
-
-
-def test_bloom_sidecar_in_store(spark, tmp_path):
-    store = StateStore(str(tmp_path / "s"))
-    data = b"\x04\x00\x00\x00" + b"\x00" * 8  # arbitrary bytes; store is opaque
-    store.save_bloom(3, data)
-    assert store.load_bloom(3) == data
-    assert store.load_bloom(2) is None
-
-
-def test_incremental_bloom_across_rounds(spark, tmp_path, sf_dir):
-    """use_bloom=True end-to-end: round 2+ loads the sidecar instead of
-    rebuilding, and dedup results stay identical to the no-bloom run.
-
-    Legacy (frontier_deltas=False) mode: the bloom sidecar accelerates the
-    read-time seen join, which delta mode doesn't have — delta rounds skip
-    the sidecar entirely (r4 ADVICE), so the legacy path is pinned here."""
-    from web_crawling_prj_spark.plans.crawl_round import CrawlConfig, run_crawl
-    from web_crawling_prj_spark.sources.pages_gen import pages_df, robots_df, seeds_df
-
-    pages = pages_df(spark, sf_dir).cache()
-    robots, seeds = robots_df(spark), seeds_df(spark, sf_dir)
-    max_doc = pages.agg(F.max("doc_id")).first()[0] + 1
-
-    outs = {}
-    for use_bloom in (True, False):
-        cfg = CrawlConfig(
-            num_buckets=8, n_salts=4, max_per_host=25, default_budget=25,
-            use_bloom=use_bloom, frontier_deltas=False,
-        )
-        cfg.extra["max_doc_id"] = max_doc
-        store = StateStore(str(tmp_path / f"b{use_bloom}"))
-        run_crawl(spark, store, pages, robots, seeds, rounds=3, cfg=cfg)
-        log = store.read_all(spark, "fetch_log")
-        outs[use_bloom] = sorted((r.round_id, r.url_hash) for r in log.collect())
-        if use_bloom:
-            assert store.load_bloom(1) is not None and store.load_bloom(3) is not None
-    assert outs[True] == outs[False]
-    pages.unpersist()
 
 
 def test_json_dir_scan_with_file_key(spark, tmp_path):

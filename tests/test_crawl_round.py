@@ -324,31 +324,36 @@ def test_kill_mid_compaction_is_safe(spark, tmp_path, crawl_inputs):
 def test_circuit_open_then_half_open(spark, tmp_path, crawl_inputs):
     """Forced circuit states: open host schedules nothing (rows deferred);
     half-open host schedules exactly one probe URL."""
-    import dataclasses
     import datetime as dt
 
+    from web_crawling_prj_spark.plans.crawl_round import (
+        FRONTIER_LOG_COLS,
+        live_frontier,
+        run_round,
+    )
+
     pages, robots, seeds, cfg = crawl_inputs
-    # legacy full-frontier mode: the test fabricates rounds by re-committing
-    # the frontier table directly, which only exists in that layout
-    cfg = dataclasses.replace(cfg, frontier_deltas=False)
-    cfg.extra["max_doc_id"] = crawl_inputs[3].extra["max_doc_id"]
     store = crawl_store(str(tmp_path / "cb"), cfg)
     run_crawl(spark, store, pages, robots, seeds, rounds=1, cfg=cfg)
 
     hot = "host-0000.example"
-    frontier1 = store.read_round(spark, "frontier", 1)
-    assert frontier1.where(F.col("host") == hot).count() > 1
+    assert live_frontier(spark, store, 1, cfg).where(F.col("host") == hot).count() > 1
 
     def fabricate(round_id, quarantined_until):
+        # a round that changed nothing but the circuit: an empty frontier_log
+        # (the live view carries over untouched) plus the forced host_state
         state = spark.createDataFrame(
             [(hot, dt.datetime(2025, 6, 1), 12, dt.datetime(2025, 6, 1), quarantined_until)],
             "host string, last_fetch_ts timestamp, consecutive_failures long, "
             "last_fail_ts timestamp, quarantined_until timestamp",
         )
+        no_events = store.read_round(spark, "frontier_log", 0).limit(0).select(
+            *FRONTIER_LOG_COLS
+        )
         store.commit_round(
             round_id,
             {
-                "frontier": store.read_round(spark, "frontier", round_id - 1),
+                "frontier_log": no_events,
                 "seen_delta": spark.createDataFrame(
                     [], "url_hash long, bucket int, first_seen_round int, first_seen_ts timestamp"
                 ),
@@ -358,14 +363,11 @@ def test_circuit_open_then_half_open(spark, tmp_path, crawl_inputs):
 
     # round 2 fabricated: hot host OPEN far into the future
     fabricate(2, dt.datetime(2030, 1, 1))
-    from web_crawling_prj_spark.plans.crawl_round import run_round
-
     run_round(spark, store, pages, robots, 3, cfg)
     log3 = store.read_round(spark, "fetch_log", 3)
     assert log3.where(F.col("host") == hot).count() == 0  # fully open: sits out
-    # deferred, not lost: hot rows still pending in the next frontier
-    f3 = store.read_round(spark, "frontier", 3)
-    assert f3.where(F.col("host") == hot).count() > 0
+    # deferred, not lost: hot rows still live after the round
+    assert live_frontier(spark, store, 3, cfg).where(F.col("host") == hot).count() > 0
 
     # round 4 fabricated: recovery window passed → HALF_OPEN (streak still 12)
     fabricate(4, dt.datetime(2025, 6, 1, 0, 0, 30))
@@ -539,67 +541,11 @@ def test_vacuum_reaps_orphan_tier_dirs(spark, tmp_path, crawl_inputs):
     assert frozenset(r.url_hash for r in store.read_all(spark, "seen_delta").collect()) == truth
 
 
-def test_rank_prefilter_crawl_equivalence(spark, tmp_path, crawl_inputs):
-    """CrawlConfig.rank_prefilter (the sampled top-k pushdown) is a pure
-    physical choice: identical schedule and seen-set over a full crawl."""
-    import dataclasses
-
-    pages, robots, seeds, cfg = crawl_inputs
-    on = dataclasses.replace(cfg, rank_prefilter=True)
-    on.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    a = crawl_store(str(tmp_path / "pfa"), cfg)
-    run_crawl(spark, a, pages, robots, seeds, rounds=3, cfg=cfg)
-    b = crawl_store(str(tmp_path / "pfb"), on)
-    run_crawl(spark, b, pages, robots, seeds, rounds=3, cfg=on)
-    assert _final_state(a, spark) == _final_state(b, spark)
-    shutil.rmtree(str(tmp_path / "pfa"))
-    shutil.rmtree(str(tmp_path / "pfb"))
-
-
-def test_frontier_delta_mode_equals_full_rewrite(spark, tmp_path, crawl_inputs):
-    """Round-4 headline: the frontier-delta store (adds + tombstones in
-    frontier_log, LSM folds) reproduces the EXACT observable crawl of the
-    legacy full-rewrite store — per-round stats, seen-set, schedule order,
-    and the reconstructed pending/deferred views — across folds."""
-    import dataclasses
-
-    from web_crawling_prj_spark.plans.crawl_round import (
-        FRONTIER_COLS,
-        pending_frontier,
-    )
-
-    pages, robots, seeds, cfg = crawl_inputs
-    co = dataclasses.replace(cfg, frontier_deltas=False, compact_every=3)
-    co.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    cn = dataclasses.replace(cfg, frontier_deltas=True, compact_every=3)
-    cn.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-
-    a = crawl_store(str(tmp_path / "eq_old"), co)
-    b = crawl_store(str(tmp_path / "eq_new"), cn)
-    sa = run_crawl(spark, a, pages, robots, seeds, rounds=7, cfg=co)
-    sb = run_crawl(spark, b, pages, robots, seeds, rounds=7, cfg=cn)
-    assert sa == sb
-    assert _final_state(a, spark) == _final_state(b, spark)
-
-    bcasts = []
-    try:
-        pa, da, _ = pending_frontier(spark, a, 8, co, bcasts)
-        pb, db, _ = pending_frontier(spark, b, 8, cn, bcasts)
-        pa, pb, da, db = (x.select(*FRONTIER_COLS) for x in (pa, pb, da, db))
-        assert pa.exceptAll(pb).count() == 0 and pb.exceptAll(pa).count() == 0
-        assert da.exceptAll(db).count() == 0 and db.exceptAll(da).count() == 0
-    finally:
-        for bx in bcasts:
-            bx.destroy()
-    shutil.rmtree(str(tmp_path / "eq_old"))
-    shutil.rmtree(str(tmp_path / "eq_new"))
-
-
-def test_tiered_frontier_folds_and_merge_regime_equal_legacy(spark, tmp_path, crawl_inputs):
+def test_tiered_frontier_folds_and_merge_regime_equal_unfolded(spark, tmp_path, crawl_inputs):
     """Round-5 headline: TIERED frontier-log folds (minor folds O(window
     churn), tombstones kept until a major fold) + the co-located MERGE
     regime for every churn-key join (broadcast_churn_max_keys=0 forces it)
-    reproduce the exact legacy crawl. fold_max_tiers=2, compact_every=2 over
+    reproduce the exact crawl of an unfolded, broadcast-regime store. fold_max_tiers=2, compact_every=2 over
     9 rounds exercises: terminal first fold (r2), minor fold with tombstones
     (r4), MAJOR fold (r6, tier count would exceed 2), minor again (r8) — and
     the old tier's files are byte-untouched by the minor fold."""
@@ -607,11 +553,10 @@ def test_tiered_frontier_folds_and_merge_regime_equal_legacy(spark, tmp_path, cr
     import os
 
     pages, robots, seeds, cfg = crawl_inputs
-    co = dataclasses.replace(cfg, frontier_deltas=False, compact_every=2)
+    co = dataclasses.replace(cfg, compact_every=0)
     co.extra["max_doc_id"] = cfg.extra["max_doc_id"]
     cn = dataclasses.replace(
         cfg,
-        frontier_deltas=True,
         compact_every=2,
         fold_max_tiers=2,
         broadcast_churn_max_keys=0,
@@ -703,11 +648,12 @@ def test_vacuum_after_fold_bounds_store_dirs(spark, tmp_path, crawl_inputs):
         (3, 2, True),   # staggered minor/major folds with vacuum racing reads
     ],
 )
-def test_fold_schedule_sweep_equals_legacy(
+def test_fold_schedule_sweep_equals_unfolded(
     spark, tmp_path, crawl_inputs, compact_every, fold_max_tiers, vacuum
 ):
     """Fold-schedule property: ANY (compact_every, fold_max_tiers,
-    vacuum_after_fold) combination reproduces the exact legacy crawl. The
+    vacuum_after_fold) combination reproduces the exact crawl of an
+    unfolded, broadcast-regime store. The
     targeted tests pin one schedule each; this sweep covers the aggressive
     corners — fold-every-round (the un-folded window is empty at EVERY
     round boundary, so the post-fold regime estimate and the drained-
@@ -717,11 +663,10 @@ def test_fold_schedule_sweep_equals_legacy(
 
     pages, robots, seeds, cfg = crawl_inputs
     tag = f"{compact_every}_{fold_max_tiers}_{vacuum}"
-    co = dataclasses.replace(cfg, frontier_deltas=False, compact_every=0)
+    co = dataclasses.replace(cfg, compact_every=0)
     co.extra["max_doc_id"] = cfg.extra["max_doc_id"]
     cn = dataclasses.replace(
         cfg,
-        frontier_deltas=True,
         compact_every=compact_every,
         fold_max_tiers=fold_max_tiers,
         vacuum_after_fold=vacuum,
@@ -792,14 +737,13 @@ def test_churn_broadcast_regime_survives_fold_and_vacuum(spark, tmp_path):
 def test_delta_mode_commit_volume_tracks_churn_not_frontier(spark, tmp_path, crawl_inputs):
     """The delta store's per-round frontier commit is bounded by round
     ACTIVITY (adds = retries + discovery winners; dels = scheduled +
-    disallowed keys) — unchanged backlog rows are never rewritten. The
-    legacy store rewrites the whole frontier every round."""
+    disallowed keys) — unchanged backlog rows are never rewritten."""
     import dataclasses
 
     from web_crawling_prj_spark.plans.crawl_round import live_frontier
 
     pages, robots, seeds, cfg = crawl_inputs
-    cn = dataclasses.replace(cfg, frontier_deltas=True, compact_every=0)
+    cn = dataclasses.replace(cfg, compact_every=0)
     cn.extra["max_doc_id"] = cfg.extra["max_doc_id"]
     store = crawl_store(str(tmp_path / "churn"), cn)
     stats = run_crawl(spark, store, pages, robots, seeds, rounds=5, cfg=cn)
@@ -824,57 +768,10 @@ def test_delta_mode_commit_volume_tracks_churn_not_frontier(spark, tmp_path, cra
     shutil.rmtree(str(tmp_path / "churn"))
 
 
-def test_rank_prefilter_auto_threshold(spark, tmp_path, crawl_inputs):
-    """Tri-state rank_prefilter: explicit settings win; None auto-enables by
-    driver-side frontier-footprint estimate, and a crawl forced over the
-    threshold schedules identically (the pushdown is exact by construction)."""
-    import dataclasses
-
-    from web_crawling_prj_spark.plans.crawl_round import _resolve_prefilter
-
-    pages, robots, seeds, cfg = crawl_inputs
-    store = crawl_store(str(tmp_path / "pfauto"), cfg)
-    run_crawl(spark, store, pages, robots, seeds, rounds=1, cfg=cfg)
-    assert _resolve_prefilter(store, cfg) is False  # tiny store, default crossover
-    low = dataclasses.replace(cfg, rank_prefilter_auto_min_rows=1)
-    low.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    assert _resolve_prefilter(store, low) is True
-    assert _resolve_prefilter(store, dataclasses.replace(cfg, rank_prefilter=True)) is True
-    assert (
-        _resolve_prefilter(
-            store, dataclasses.replace(cfg, rank_prefilter=False, rank_prefilter_auto_min_rows=1)
-        )
-        is False
-    )
-    a = crawl_store(str(tmp_path / "pfauto_on"), low)
-    run_crawl(spark, a, pages, robots, seeds, rounds=3, cfg=low)
-    b = crawl_store(str(tmp_path / "pfauto_off"), cfg)
-    run_crawl(spark, b, pages, robots, seeds, rounds=3, cfg=cfg)
-    assert _final_state(a, spark) == _final_state(b, spark)
-    shutil.rmtree(str(tmp_path / "pfauto_on"))
-    shutil.rmtree(str(tmp_path / "pfauto_off"))
-
-
-def test_frontier_mode_mismatch_refused_on_resume(spark, tmp_path, crawl_inputs):
-    import dataclasses
-
-    pages, robots, seeds, cfg = crawl_inputs
-    store = crawl_store(str(tmp_path / "mm1"), cfg)
-    run_crawl(spark, store, pages, robots, seeds, rounds=1, cfg=cfg)  # delta layout
-    legacy = dataclasses.replace(cfg, frontier_deltas=False)
-    legacy.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    with pytest.raises(ValueError, match="frontier_deltas=True"):
-        run_crawl(spark, store, pages, robots, seeds, rounds=2, cfg=legacy)
-    store2 = crawl_store(str(tmp_path / "mm2"), legacy)
-    run_crawl(spark, store2, pages, robots, seeds, rounds=1, cfg=legacy)
-    with pytest.raises(ValueError, match="frontier_deltas=False"):
-        run_crawl(spark, store2, pages, robots, seeds, rounds=2, cfg=cfg)
-
-
 def test_drained_frontier_yields_idle_round_not_crash(spark, tmp_path, crawl_inputs):
     """A delta store whose frontier legitimately drains (all tombstones,
     folded to an EMPTY tier — empty bucketed writes emit no files) must keep
-    running idle rounds, not die in live_frontier with a mode error."""
+    running idle rounds, not die in live_frontier with a missing-log error."""
     import dataclasses
 
     from web_crawling_prj_spark.plans.crawl_round import live_frontier
@@ -952,87 +849,3 @@ def test_redirect_chains_resolve_to_terminals(spark, tmp_path, crawl_inputs):
     live = live_frontier(spark, store, 3, cfg)
     srcs = r3.select(F.col("url_canon").alias("u")).distinct()
     assert live.join(srcs, live["url_canon"] == srcs["u"], "left_semi").count() == 0
-
-
-def test_shard_rows_seen_tier_equals_broadcast_tier(spark, tmp_path, crawl_inputs):
-    """Legacy plain-layout crawl with the PARTITION-RESIDENT bloom tier
-    (approx_seen_tier='shard_rows': shards committed as rows, cogroup probe,
-    zero driver assembly) produces the identical seen-set and schedule as the
-    broadcast tier — and maintains exactly one bloom_shards round table."""
-    pages, robots, seeds, base_cfg = crawl_inputs
-
-    def run(tier, name):
-        cfg = CrawlConfig(
-            num_buckets=8, n_salts=4, max_per_host=25, default_budget=25,
-            frontier_deltas=False, use_bloom=True, approx_seen_tier=tier,
-        )
-        cfg.extra["max_doc_id"] = base_cfg.extra["max_doc_id"]
-        store = StateStore(str(tmp_path / name))  # plain layout → bloom tier active
-        run_crawl(spark, store, pages, robots, seeds, rounds=3, cfg=cfg)
-        return store
-
-    s_bc = run("broadcast", "bc")
-    s_sr = run("shard_rows", "sr")
-    assert _final_state(s_bc, spark) == _final_state(s_sr, spark)
-    # retention: only the newest shard table survives
-    have = [r for r in s_sr.committed_rounds() if s_sr.has_table("bloom_shards", r)]
-    assert have == [3]
-    # and the shard rows cover the full seen-set (no false negatives):
-    # every seen key must probe TRUE against the committed table
-    from web_crawling_prj_spark.operators.shardprobe import probe_bloom_shard_rows
-
-    seen = s_sr.read_all(spark, "seen_delta").select("url_hash")
-    rows = s_sr.read_round(spark, "bloom_shards", 3)
-    cfg = CrawlConfig(num_buckets=8)
-    probed = probe_bloom_shard_rows(
-        seen, rows, num_shards=8, expected_per_shard=cfg.bloom_expected_per_shard,
-        fpp=cfg.bloom_fpp,
-    )
-    assert probed.where(~F.col("_maybe_seen")).count() == 0
-    shutil.rmtree(str(tmp_path / "bc"))
-    shutil.rmtree(str(tmp_path / "sr"))
-
-
-def test_shard_rows_tier_migration_keeps_full_seen_set(spark, tmp_path, crawl_inputs):
-    """Migration onto the shard_rows tier (ADVICE r6 high): rounds 1-2 run
-    with the broadcast tier, round 3 switches the SAME store to shard_rows.
-    The committed bloom_shards table must cover the FULL seen-set — the old
-    maintenance path built it from round 3's delta alone, so rounds 1-2 keys
-    probed false, bypassed the exact rescue, and were re-fetched. Asserts
-    zero false negatives over all seen keys and schedule equality with a
-    never-migrated broadcast run."""
-    pages, robots, seeds, base_cfg = crawl_inputs
-
-    def mk_cfg(tier):
-        cfg = CrawlConfig(
-            num_buckets=8, n_salts=4, max_per_host=25, default_budget=25,
-            frontier_deltas=False, use_bloom=True, approx_seen_tier=tier,
-        )
-        cfg.extra["max_doc_id"] = base_cfg.extra["max_doc_id"]
-        return cfg
-
-    # control: 4 rounds entirely on the broadcast tier
-    s_bc = StateStore(str(tmp_path / "mig_bc"))
-    run_crawl(spark, s_bc, pages, robots, seeds, rounds=4, cfg=mk_cfg("broadcast"))
-
-    # migrated: 2 broadcast rounds, then resume with shard_rows for 2 more
-    s_mig = StateStore(str(tmp_path / "mig_sr"))
-    run_crawl(spark, s_mig, pages, robots, seeds, rounds=2, cfg=mk_cfg("broadcast"))
-    run_crawl(spark, s_mig, pages, robots, seeds, rounds=4, cfg=mk_cfg("shard_rows"))
-
-    assert _final_state(s_bc, spark) == _final_state(s_mig, spark)
-
-    # the committed shard table covers the WHOLE seen-set, not just deltas
-    # since the switch: every seen key probes true (bloom: no false negatives)
-    from web_crawling_prj_spark.operators.shardprobe import probe_bloom_shard_rows
-
-    cfg = mk_cfg("shard_rows")
-    seen = s_mig.read_all(spark, "seen_delta").select("url_hash")
-    rows = s_mig.read_round(spark, "bloom_shards", 4)
-    probed = probe_bloom_shard_rows(
-        seen, rows, num_shards=8,
-        expected_per_shard=cfg.bloom_expected_per_shard, fpp=cfg.bloom_fpp,
-    )
-    assert probed.where(~F.col("_maybe_seen")).count() == 0
-    shutil.rmtree(str(tmp_path / "mig_bc"))
-    shutil.rmtree(str(tmp_path / "mig_sr"))

@@ -292,64 +292,6 @@ def test_robots_txt_roundtrip(spark):
         assert gdelay == (delay if delay > 0 else None)
 
 
-def test_threshold_prefilter_equals_exact_rank(spark):
-    """The sampled-threshold pushdown must return EXACTLY the plain two-level
-    rank — hot host, tiny hosts, no-budget hosts, and priority ties included."""
-    from web_crawling_prj_spark.operators.politeness import host_budgets, schedule_round
-
-    pending = spark.range(60_000).select(
-        F.xxhash64("id").alias("url_hash"),
-        F.when(F.pmod("id", F.lit(100)) < 30, F.lit("hot.example"))
-        .otherwise(F.format_string("h%d.example", F.pmod("id", F.lit(97))))
-        .alias("host"),
-        # coarse priorities → heavy ties at every threshold boundary
-        (F.pmod(F.col("id") * 7919, F.lit(50)) / 50.0).alias("priority"),
-    )
-    robots = spark.range(97).select(
-        F.format_string("h%d.example", "id").alias("host"),
-        F.lit(500).alias("crawl_delay_ms"),
-    )
-    budgets = host_budgets(robots, 30_000, max_per_host=40)
-    base = schedule_round(pending, budgets, n_salts=8, default_budget=40)
-    fast = schedule_round(
-        pending, budgets, n_salts=8, default_budget=40, threshold_prefilter=True
-    )
-    cols = ["url_hash", "host", "host_rank", "fetch_offset_ms", "proxy_slot"]
-    assert base.select(cols).exceptAll(fast.select(cols)).count() == 0
-    assert fast.select(cols).exceptAll(base.select(cols)).count() == 0
-
-
-def test_threshold_prefilter_rescue_pass_restores_exactness(spark):
-    """Adversarial prefilter parameters (k=1 on a full sample → threshold =
-    a per-salt max, cutting far below budget) force the rescue pass; the
-    result must still equal the exact rank."""
-    from web_crawling_prj_spark.operators.politeness import host_budgets, schedule_round
-
-    pending = spark.range(5_000).select(
-        F.xxhash64("id").alias("url_hash"),
-        F.format_string("h%d.example", F.pmod("id", F.lit(7))).alias("host"),
-        (F.pmod(F.col("id") * 31, F.lit(1000)) / 1000.0).alias("priority"),
-    )
-    robots = spark.range(7).select(
-        F.format_string("h%d.example", "id").alias("host"),
-        F.lit(100).alias("crawl_delay_ms"),
-    )
-    budgets = host_budgets(robots, 30_000, max_per_host=60)
-    base = schedule_round(pending, budgets, n_salts=4, default_budget=60)
-    fast = schedule_round(
-        pending,
-        budgets,
-        n_salts=4,
-        default_budget=60,
-        threshold_prefilter=True,
-        prefilter_sample_mod=1,   # sample = everything
-        prefilter_safety=0.001,   # k = 1 → threshold ≈ per-salt max → over-cut
-    )
-    cols = ["url_hash", "host", "host_rank"]
-    assert base.select(cols).exceptAll(fast.select(cols)).count() == 0
-    assert fast.select(cols).exceptAll(base.select(cols)).count() == 0
-
-
 def test_schedule_tiebreak_url_canon(spark):
     """Replay knob: tiebreak='url_canon' breaks per-host priority ties by URL
     string order (SQL-portable), not url_hash — exact top-k semantics

@@ -347,3 +347,22 @@ def test_layout_registry_file_written_and_used(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="bucket layout"):
         drifted.commit_round(1, {"seen_delta": df.repartition(16, "url_hash")})
+
+
+def test_layout_drift_refused_after_registry_loss(spark, tmp_path):
+    """A process killed between a round's manifest rename and the layout
+    registry write leaves committed rounds with no _layout.json. The registry
+    is then rebuilt by replaying the manifests, so a writer with a different
+    bucket count is still refused."""
+    import os
+
+    from web_crawling_prj_spark.plans.crawl_round import CrawlConfig, crawl_store
+
+    store = crawl_store(str(tmp_path / "replay"), CrawlConfig(num_buckets=8))
+    df = spark.range(10).selectExpr("xxhash64(id) as url_hash")
+    store.commit_round(0, {"seen_delta": df.repartition(8, "url_hash")})
+    os.remove(os.path.join(store.root, "_manifests", "_layout.json"))
+
+    resumed = crawl_store(str(tmp_path / "replay"), CrawlConfig(num_buckets=16))
+    with pytest.raises(ValueError, match="bucket layout cannot change"):
+        resumed.commit_round(1, {"seen_delta": df.repartition(16, "url_hash")})

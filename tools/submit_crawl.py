@@ -28,7 +28,6 @@ def main() -> None:
     ap.add_argument("--num-buckets", type=int, default=16)
     ap.add_argument("--n-salts", type=int, default=16)
     ap.add_argument("--max-per-host", type=int, default=40)
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument(
         "--warc-dir",
         default=None,
@@ -53,7 +52,6 @@ def main() -> None:
         n_salts=args.n_salts,
         max_per_host=args.max_per_host,
         default_budget=args.max_per_host,
-        use_bloom=not args.no_bloom,
         warc_dir=args.warc_dir,
     )
     cfg.extra["max_doc_id"] = pages.agg(F.max("doc_id")).first()[0] + 1

@@ -86,10 +86,6 @@ def schedule_round(
     budgets: DataFrame,
     n_salts: int = 16,
     default_budget: int = 60,
-    slim: bool = False,
-    threshold_prefilter: bool = False,
-    prefilter_sample_mod: int = 64,
-    prefilter_safety: float = 2.0,
     persisted: list | None = None,
     tiebreak: str = "url_hash",
 ) -> DataFrame:
@@ -99,41 +95,15 @@ def schedule_round(
     Output: scheduled rows + host_rank / fetch_offset_ms / proxy_slot columns.
     Budgets are broadcast (one row per host — always small relative to frontier).
 
-    ``slim=True`` ranks over a key-only projection (url_hash, host, priority)
-    and joins the winners back by url_hash, so the window sorts never move wide
-    frontier rows through the shuffle. Measured on this repo's ~100B rows the
-    extra join costs more than the slimmer sort saves, so the default is
-    slim=False; enable it when frontier rows carry KB-wide payload/metadata
-    columns (then the sort-byte reduction dominates, and on a bucketed table
-    the join-back co-locates with the frontier layout for free).
-
-    ``threshold_prefilter=True`` adds a sampled top-k pushdown BEFORE the rank
-    shuffle: a deterministic 1-in-``prefilter_sample_mod`` hash sample yields a
-    conservative per-host priority threshold (the per-salt k-th highest sample,
-    k = ⌈budget·safety/mod⌉, min'd over salts — never a single-task sort), and
-    only rows at-or-above it enter the window. EXACTNESS is restored by a
-    rescue pass: a host whose post-filter winners number under its budget
-    while rows were cut re-ranks its FULL row set (see
-    :func:`_rescue_hosts_for_exactness`); ties at the threshold are always
-    kept, so the kept set provably contains the true winners whenever the
-    count reaches the budget. It cuts the rank-shuffle ROWS ~6–10× at the
-    cost of one extra full scan + the sample/threshold jobs. Round-4 honest
-    measurement (BENCH/SCALING.md, winners-cache lifecycle fixed): on this
-    single-node VM the pushdown LOSES at every point tried (16M–64M rows,
-    8 and 32 cores, 0.23–0.80×) — the earlier "2.1× at 8 cores" was the
-    leaked cache serving later best-of runs. It stays available for
-    network-bound clusters where shuffle bytes, not the local memory bus,
-    price the rank; measure before enabling (CrawlConfig.rank_prefilter).
+    ``persisted`` registers nothing any more (the rank keeps no internal
+    cache); it is accepted only because perfbench's isolated schedule probe
+    still passes it, and goes when those probes are rewritten.
     """
     # ``tiebreak``: the ascending order column breaking priority ties inside a
     # host (default url_hash — cheap 8-byte sort key). A crawl that must be
     # replayable by an engine without xxhash64 (the DuckDB replay oracle)
     # passes "url_canon": same exact-top-k semantics, portable total order.
-    slim_proj = ["url_hash", "host", "priority"] + (
-        [tiebreak] if tiebreak not in ("url_hash", "host", "priority") else []
-    )
-    slim_cols = pending.select(*slim_proj) if slim else pending
-    p = slim_cols.join(
+    p = pending.join(
         F.broadcast(budgets.select("host", "max_per_round", "crawl_delay_ms")),
         "host",
         "left",
@@ -146,28 +116,19 @@ def schedule_round(
 
     order = [F.desc("priority"), F.asc(tiebreak)]
     salt = F.pmod(F.col("url_hash"), F.lit(n_salts))
-
-    def exact_rank(rows: DataFrame) -> DataFrame:
-        w1 = Window.partitionBy("host", salt).orderBy(*order)
-        pre = (
-            rows.withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= F.col("max_per_round"))
-            .drop("_r1")
-        )
-        w2 = Window.partitionBy("host").orderBy(*order)
-        return pre.withColumn("host_rank", F.row_number().over(w2)).filter(
-            F.col("host_rank") <= F.col("max_per_round")
-        )
-
-    if threshold_prefilter:
-        sched = _rank_with_threshold_prefilter(
-            p, exact_rank, salt, prefilter_sample_mod, prefilter_safety, persisted
-        )
-    else:
-        sched = exact_rank(p)
+    w1 = Window.partitionBy("host", salt).orderBy(*order)
+    pre = (
+        p.withColumn("_r1", F.row_number().over(w1))
+        .filter(F.col("_r1") <= F.col("max_per_round"))
+        .drop("_r1")
+    )
+    w2 = Window.partitionBy("host").orderBy(*order)
+    sched = pre.withColumn("host_rank", F.row_number().over(w2)).filter(
+        F.col("host_rank") <= F.col("max_per_round")
+    )
 
     # politeness spacing + proxy rotation, all deterministic column math
-    sched = sched.withColumns(
+    return sched.withColumns(
         {
             "fetch_offset_ms": ((F.col("host_rank") - 1) * F.col("crawl_delay_ms")).cast("long"),
             "proxy_slot": F.pmod(
@@ -177,102 +138,6 @@ def schedule_round(
             ).cast("int"),
         }
     ).drop("max_per_round", "crawl_delay_ms")
-    if not slim:
-        return sched
-    winners = sched.select("url_hash", "host_rank", "fetch_offset_ms", "proxy_slot")
-    return pending.join(winners, "url_hash", "inner")
-
-
-def _rank_with_threshold_prefilter(
-    p: DataFrame,
-    exact_rank,
-    salt,
-    sample_mod: int,
-    safety: float,
-    persisted: list | None = None,
-) -> DataFrame:
-    """Sampled top-k pushdown around ``exact_rank`` — exact by construction.
-
-    1. deterministic hash sample (1 in ``sample_mod`` rows);
-    2. conservative per-host threshold: within each (host, salt) the k-th
-       highest sampled priority (k = ⌈budget·safety/mod⌉ ≥ 1), then MIN over
-       salts — the min keeps MORE rows and bounds every sort by the salt
-       fan-out, never a single hot-host task;
-    3. keep rows with priority ≥ threshold (ties kept → the kept set contains
-       the true winners whenever it is budget-deep) plus all rows of hosts too
-       small to have a threshold; exact_rank the survivors;
-    4. rescue: any thresholded host whose winner count came up short of its
-       budget re-ranks its FULL rows — only then can a cut row have mattered.
-       The rescue set is detected with one tiny aggregation over the winner
-       rows (≤ hosts×budget) and is empty in the expected case, so the extra
-       pass usually never runs.
-    """
-    sample = p.where(F.pmod(F.xxhash64("url_hash"), F.lit(sample_mod)) == 0)
-    k = F.greatest(
-        F.lit(1), F.ceil(F.col("max_per_round") * float(safety) / sample_mod)
-    ).cast("int")
-    # the TRUE per-host sample k-th, computed with the same two-level trick as
-    # the main rank (per-(host,salt) top-k then exact per-host k-th over
-    # ≤ n_salts·k survivors) — a hot host's sample never sorts in one task,
-    # and cold hosts get TIGHT thresholds too (a per-salt min would barely
-    # filter them: most (host,salt) cells hold fewer than k samples)
-    ws1 = Window.partitionBy("host", salt).orderBy(F.desc("priority"))
-    s_pre = sample.withColumn("_sr", F.row_number().over(ws1)).where(F.col("_sr") <= k)
-    ws2 = Window.partitionBy("host").orderBy(F.desc("priority"))
-    thr = (
-        s_pre.withColumn("_sr2", F.row_number().over(ws2))
-        .where(F.col("_sr2") == k)
-        .select("host", F.col("priority").alias("_thr"))
-    )
-    # the threshold-applied marker rides THROUGH the rank so rescue detection
-    # reads it off the cached winners — re-deriving "was this host
-    # thresholded?" from thr would re-run the sample + its windows over the
-    # full input a second time
-    filtered = (
-        p.join(F.broadcast(thr), "host", "left")
-        .where(F.col("_thr").isNull() | (F.col("priority") >= F.col("_thr")))
-        .withColumn("_had_thr", F.col("_thr").isNotNull())
-        .drop("_thr")
-    )
-    # persist the winners: the rescue check below is an ACTION over them, and
-    # without the cache it would re-execute the whole filtered rank a second
-    # time when the caller consumes the result. Bounded ≤ hosts×budget rows.
-    # Spark's unpersist is non-cascading and the returned plan carries a
-    # Project on top of this one, so the CALLER cannot release this cache by
-    # unpersisting the return value — the handle must be surfaced via
-    # ``persisted`` (run_round's round lifecycle) or released here before
-    # returning (one recompute at the caller's action).
-    sched = exact_rank(filtered).persist()
-    if persisted is not None:
-        persisted.append(sched)
-
-    # rescue detection: thresholded hosts whose winners fall short of budget.
-    # (A thresholded host whose TOTAL rows are under budget lands here too —
-    # nothing qualifying was cut, its redo is a no-op on few rows; the
-    # threshold's k-sample requirement makes such hosts rare.) Broadcast
-    # joins, never collected values or isin literals — the rescue set must
-    # not grow the plan or the driver with host-count.
-    short = (
-        sched.where(F.col("_had_thr"))
-        .groupBy("host")
-        .agg(F.count("*").alias("_n"), F.first("max_per_round").alias("_b"))
-        .where(F.col("_n") < F.col("_b"))
-        .select("host")
-    )
-    if short.isEmpty():  # the expected case: one tiny job over cached winners
-        if persisted is None:
-            # no owner to release the cache later — drop it now; the caller's
-            # action recomputes the filtered rank once (same total executions
-            # as never persisting), but nothing accumulates across rounds
-            sched.unpersist()
-        return sched.drop("_had_thr")
-    ok = sched.join(F.broadcast(short), "host", "left_anti").drop("_had_thr")
-    redo = exact_rank(p.join(F.broadcast(short), "host", "left_semi"))
-    result = ok.unionByName(redo)
-    # rare path: the returned plan no longer equals the cached one — release
-    # now (harmless double-unpersist later if registered in ``persisted``)
-    sched.unpersist()
-    return result
 
 
 def batch_ids(df: DataFrame, batch_size: int = 50) -> DataFrame:

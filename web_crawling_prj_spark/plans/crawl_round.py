@@ -1,22 +1,30 @@
-"""The crawl round — one Spark job per round, the engine's flagship plan.
+"""The crawl round — the engine's flagship plan.
 
 Reference lifecycle being re-expressed (SURVEY.md §3.1, dags/common/
 base_source_dag.py): branch(mode) → build frontier → dedup vs seen → schedule
 batches with politeness → fetch with retries → persist results + summary.
-Here every boundary is a stage inside one declarative plan:
+Here every boundary is a stage of one declarative round plan; the commit's
+writes execute it (measured: 57–61 Spark jobs per round on perfbench's
+crawl_backlog at local[4], most of them small):
 
-    frontier ──(bloom + left-anti vs seen)──► pending
-    pending ──(robots gate, broadcast)──► allowed
-    allowed ──(salted 2-level top-k per host)──► scheduled
+    frontier_log ──(latest event per key over tiers + recent rounds)──► live
+    live ──(backoff gate)──► pending ∪ deferred
+    pending ──(robots gate, broadcast)──► allowed ∪ disallowed keys
+    allowed ──(circuit breaker: open hosts sit out)──► candidates
+    candidates ──(salted 2-level top-k per host)──► scheduled
     scheduled ──(synthetic/mapInPandas fetch + Arrow extract)──► fetch_log
     fetch_log ──(classify, budgets, backoff)──► retries
     fetch_log ──(outlink discovery)──► discovered
-    retries ∪ discovered ∪ leftover ──► next frontier
-    commit atomically: seen-delta, fetch_log, frontier, per-partition metrics
+    retries ∪ discovered ∪ incumbents ──(dedup, left-anti vs seen)──► adds
+    commit atomically: seen_delta, fetch_log, frontier_log (adds + scheduled
+    and disallowed tombstones), host_state, metrics, run_report
+    every compact_every rounds: fold seen_delta and frontier_log into tiers
 
 Scale decisions, explicit:
-- seen-set partitioned by pmod(url_hash, P); the anti-join shuffles the
-  frontier once on the same key (bucketed layout reusable round over round);
+- frontier_log and the seen-set are bucketed on url_hash (P buckets); the
+  live view is one pushed-down scan per tier plus delta-sized joins, and it
+  is seen-clean by construction — the seen-set is probed only at write time,
+  against the round's delta-sized winners;
 - budgets/robots are per-host (tiny) → broadcast joins, never shuffled;
 - hot-host skew bounded by the salted two-level rank (operators.politeness);
 - the fetch join broadcasts the scheduled batch against the page store, so the
@@ -38,19 +46,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from web_crawling_prj_spark.functions.hashing import bucket_of, url_hash
-from web_crawling_prj_spark.functions.urls import canonicalize_url_udf, host_of
-from web_crawling_prj_spark.operators.bloom import (
-    bloom_from_bytes,
-    bloom_to_bytes,
-    broadcast_bloom,
-    build_sharded_bloom,
-    merge_blooms,
-)
+from web_crawling_prj_spark.functions.urls import host_of
 from web_crawling_prj_spark.operators.dedup import anti_join_seen_layered, dedup_within_batch
 from web_crawling_prj_spark.operators.fetch import discover_outlinks, synthetic_fetch
 from web_crawling_prj_spark.operators.politeness import host_budgets, schedule_round
 from web_crawling_prj_spark.operators.retry import classify_fetch_log, update_circuit_state
-from web_crawling_prj_spark.operators.robots import gate_frontier, gate_frontier_flagged
+from web_crawling_prj_spark.operators.robots import gate_frontier_flagged
 from web_crawling_prj_spark.plans.statestore import StateStore
 
 FRONTIER_COLS = [
@@ -66,7 +67,7 @@ FRONTIER_COLS = [
     "next_eligible_ts",
 ]
 
-#: frontier-as-event-log layout (frontier_deltas mode): each round commits only
+#: frontier-as-event-log layout: each round commits only
 #: its CHANGES — adds (full replacement rows: retries, discovery winners) and
 #: dels (key-only tombstones: scheduled + robots-disallowed keys). The live
 #: frontier is per-key latest-event-wins over (evt_round, add-beats-del).
@@ -86,9 +87,6 @@ class CrawlConfig:
     round_duration_ms: int = 30_000
     max_per_host: int = 40
     default_budget: int = 40
-    bloom_fpp: float = 0.01
-    bloom_expected_per_shard: int = 200_000
-    use_bloom: bool = True
     links_per_page: int = 3
     failure_per_mille: int = 28
     base_ts: str = "2025-06-01 00:00:00"
@@ -96,20 +94,17 @@ class CrawlConfig:
     # Deterministic (power iteration over committed lineage), so resume/
     # parallelism invariants hold with it enabled.
     pagerank_weight: float = 0.0
-    # PageRank refresh cadence (delta mode). The score computation is
-    # inherently O(all fetched pages) — the one remaining per-round
-    # O(history) job when the blend is on: _link_lineage re-reads the FULL
-    # committed fetch_log and the power iteration sweeps the whole graph.
+    # PageRank refresh cadence. The score computation is inherently O(all
+    # fetched pages) — the one remaining per-round O(history) job when the
+    # blend is on: _link_lineage re-reads the FULL committed fetch_log and
+    # the power iteration sweeps the whole graph.
     # With K > 1 the scores are recomputed only every K-th round, committed
     # as a `pagerank_scores` table, and the rounds in between blend the last
     # committed scores (standard periodic-refresh engineering: priorities
     # tolerate K rounds of staleness; the heavy job amortizes to O(graph/K)
     # per round). Resume-deterministic — the refresh schedule is derived
     # from committed state, never wall clock. K = 1 (default) recomputes
-    # every round and commits nothing, byte-identical to the old behavior.
-    # Legacy full-rewrite mode ignores the cadence (its every-round frontier
-    # rewrite is already O(backlog), so the blend does not change its
-    # complexity class).
+    # every round and commits nothing.
     pagerank_every: int = 1
     # focused crawling (operators.focus, WWW'99): when focus_weight > 0 and
     # focus_terms is non-empty, each round BM25-scores the pages it fetched
@@ -123,37 +118,15 @@ class CrawlConfig:
     focus_weight: float = 0.0
     # crawl-trap budgeting (operators.traps): cap how many URLs of one URL
     # TEMPLATE (volatile tokens collapsed) may be scheduled per round
-    # (0 = off). Cut rows are NOT dropped — they stay pending (legacy: in
-    # leftover; delta: live in the log), so a trap drains at cap/round while
-    # the rest of its host's budget goes to real pages.
+    # (0 = off). Cut rows are NOT dropped — they stay live in the log (never
+    # tombstoned), so a trap drains at cap/round while the rest of its host's
+    # budget goes to real pages.
     trap_max_per_template: int = 0
     # fold seen_delta round dirs into a bucketed base every K rounds so the
     # per-round seen-set scan lists O(1+K) paths forever (0 = off). Pure
     # file-layout rewrite, never a semantics change; resume-safe (atomic
     # pointer swap, old dirs kept).
     compact_every: int = 8
-    # sampled top-k pushdown before the politeness rank (exact via rescue
-    # pass — politeness.schedule_round(threshold_prefilter=)). Tri-state:
-    # True/False force it; None (default) auto-enables when the committed
-    # frontier's on-disk size implies ≥ rank_prefilter_auto_min_rows live
-    # rows (driver-side file-size arithmetic: no count() job, no data read).
-    # HONEST MEASUREMENT NOTE (round 4, BENCH/SCALING.md): with the winners-
-    # cache leak fixed, the pushdown LOSES at every measured point on this
-    # VM (0.23–0.80× at 16M–64M rows, both parallelism levels) — round 3's
-    # "2.1× at 8 cores" was the leaked cache serving later best-of runs. The
-    # default crossover therefore sits beyond the measured range; it exists
-    # for real clusters whose rank shuffle is network-bound (where cutting
-    # shuffle rows 6–10× is the win this VM's shared memory bus never shows)
-    # — measure there before lowering it.
-    rank_prefilter: bool | None = None
-    rank_prefilter_auto_min_rows: int = 1_000_000_000
-    # commit frontier CHANGES (adds + key tombstones in `frontier_log`)
-    # instead of rewriting the full `frontier` table every round — per-round
-    # commit bytes ∝ round churn, not frontier size (the 10^10-row backlog
-    # must never be rewritten to schedule a 10^6-row batch). Observable crawl
-    # behavior is identical in both modes (equality-tested); a store is
-    # created in one mode and stays in it.
-    frontier_deltas: bool = True
     # LSM fold width for BOTH state tables (seen_delta concatenation tiers,
     # frontier_log event tiers). Minor folds touch only the rounds since the
     # newest tier — O(window churn); a major fold (all tiers merge, the only
@@ -201,16 +174,6 @@ class CrawlConfig:
     # source URL itself is terminal (class 'redirect', budget 0 → seen).
     redirect_per_mille: int = 0
     redirect_max_hops: int = 8
-    # approximate seen-tier transport (legacy plain-layout mode only — the
-    # bucketed layout replaces the tier structurally and delta mode never
-    # probes the seen-set at read time):
-    #   "broadcast"  — assemble the shard array on the driver and broadcast
-    #                  (fastest to a few hundred MB; the 10^10-URL OOM cliff);
-    #   "shard_rows" — shards live as (shard, bitmap) ROWS in a per-round
-    #                  `bloom_shards` store table, maintained incrementally
-    #                  (delta-OR per round) and probed map-side by cogroup —
-    #                  zero driver memory term (operators.shardprobe).
-    approx_seen_tier: str = "broadcast"
     extra: dict = field(default_factory=dict)
 
     def round_ts(self, round_id: int) -> str:
@@ -222,14 +185,13 @@ class CrawlConfig:
 
 
 def crawl_store(root: str, cfg: CrawlConfig | None = None) -> StateStore:
-    """The crawl's StateStore: frontier and seen-set BUCKETED on url_hash with
-    cfg.num_buckets — the layout that makes the steady-state per-round
-    anti-join shuffle-free (each task reads its own bucket from both sides;
-    see tests/test_plan_shapes.py). Iceberg analog: bucket(N, url_hash)
-    partition transform on both tables."""
+    """The crawl's StateStore: frontier_log and seen-set BUCKETED on url_hash
+    with cfg.num_buckets — the layout that keeps the live view's tier joins
+    and the write-time seen filter free of backlog-sized exchanges (each task
+    reads its own bucket from both sides; see tests/test_plan_shapes.py).
+    Iceberg analog: bucket(N, url_hash) partition transform on both tables."""
     cfg = cfg or CrawlConfig()
     spec = {
-        "frontier": ("url_hash", cfg.num_buckets),
         "frontier_log": ("url_hash", cfg.num_buckets),
         "seen_delta": ("url_hash", cfg.num_buckets),
     }
@@ -278,21 +240,17 @@ def frontier_from_seeds(seeds: DataFrame) -> DataFrame:
 
 
 def init_crawl(spark: SparkSession, store: StateStore, seeds: DataFrame, cfg: CrawlConfig) -> None:
-    """Round 0: commit the seed frontier and an empty seen-set."""
+    """Round 0: commit the seed frontier (as round-0 add events) and an empty
+    seen-set."""
     frontier = frontier_from_seeds(seeds).repartition(cfg.num_buckets, "url_hash")
     empty_seen = spark.createDataFrame(
         [], "url_hash long, bucket int, first_seen_round int, first_seen_ts timestamp"
     )
-    if cfg.frontier_deltas:
-        log0 = frontier.withColumns(
-            {"evt_round": F.lit(0), "is_del": F.lit(False)}
-        ).select(*FRONTIER_LOG_COLS)
-        store.commit_round(
-            0, {"frontier_log": log0, "seen_delta": empty_seen}, extra_meta={"kind": "init"}
-        )
-        return
+    log0 = frontier.withColumns({"evt_round": F.lit(0), "is_del": F.lit(False)}).select(
+        *FRONTIER_LOG_COLS
+    )
     store.commit_round(
-        0, {"frontier": frontier, "seen_delta": empty_seen}, extra_meta={"kind": "init"}
+        0, {"frontier_log": log0, "seen_delta": empty_seen}, extra_meta={"kind": "init"}
     )
 
 
@@ -306,19 +264,15 @@ def run_round(
 ) -> dict:
     """Execute one crawl round and commit its state atomically.
 
-    All round-scoped resources (persisted DataFrames, the bloom broadcast)
-    are released in one finally block — any exit path, including the
-    failure-threshold abort or an unexpected error, must not leak caches or
-    executor bitmap copies into the next round."""
+    All round-scoped caches are released in one finally block — any exit
+    path, including the failure-threshold abort or an unexpected error, must
+    not leak them into the next round."""
     persisted: list[DataFrame] = []
-    bcasts: list = []
     try:
-        return _run_round(spark, store, pages, robots, round_id, cfg, persisted, bcasts)
+        return _run_round(spark, store, pages, robots, round_id, cfg, persisted)
     finally:
         for df in persisted:
             df.unpersist()
-        for b in bcasts:
-            b.destroy()
 
 
 def _resolve_events(log: DataFrame) -> DataFrame:
@@ -477,20 +431,16 @@ def live_frontier(
     parts_out: list | None = None,
     bcast_ok: bool | None = None,
 ) -> DataFrame:
-    """The live frontier as of committed round ``upto_round``, either mode.
-
-    frontier_deltas mode: the union of :func:`live_frontier_parts` — tier
-    branches ∖ newer-layer keys ∪ recent adds. Each tier is touched by
-    exactly ONE pushed-down scan per round — O(live) read, O(churn)
-    everything else — versus the legacy mode's O(live) WRITE every round.
-    The live view is disjoint from the seen-set by construction (adds are
-    seen-filtered at write time, and every key entering the seen-set is
-    tombstoned the same round), so pending needs no read-time seen join at
-    all. ``parts_out``: optional list the branches are appended to (same
-    contract as live_frontier_parts) for callers that also need the
-    layout-preserving branches."""
-    if not cfg.frontier_deltas:
-        return store.read_round(spark, "frontier", upto_round)
+    """The live frontier as of committed round ``upto_round``: the union of
+    :func:`live_frontier_parts` — tier branches ∖ newer-layer keys ∪ recent
+    adds. Each tier is touched by exactly ONE pushed-down scan per round —
+    O(live) read, O(churn) everything else; nothing is ever rewritten to
+    schedule a round. The live view is disjoint from the seen-set by
+    construction (adds are seen-filtered at write time, and every key
+    entering the seen-set is tombstoned the same round), so pending needs no
+    read-time seen join at all. ``parts_out``: optional list the branches
+    are appended to (same contract as live_frontier_parts) for callers that
+    also need the layout-preserving branches."""
     parts, _resolved = live_frontier_parts(
         spark, store, upto_round, cfg, persisted=persisted, bcast_ok=bcast_ok
     )
@@ -499,10 +449,11 @@ def live_frontier(
     if not parts:
         # no parts with rows. Either the frontier legitimately DRAINED (all
         # tombstones folded to an empty tier — empty bucketed writes emit no
-        # files) / init ran with zero seeds, or this store was never in delta
-        # mode. A delta store commits frontier_log EVERY round, so the newest
-        # manifest answers — walk newest-first and stop at the first mention
-        # (the drained idle tail must not re-parse every manifest each round).
+        # files) / init ran with zero seeds, or this store has no frontier
+        # event log at all. A crawl store commits frontier_log EVERY round,
+        # so the newest manifest answers — walk newest-first and stop at the
+        # first mention (the drained idle tail must not re-parse every
+        # manifest each round).
         if store.base_upto("frontier_log") is not None:
             return _empty_frontier(spark)
         for r in reversed(store.committed_rounds()):
@@ -511,8 +462,8 @@ def live_frontier(
             if "frontier_log" in store.manifest(r).get("tables", []):
                 return _empty_frontier(spark)
         raise ValueError(
-            f"no frontier_log state up to round {upto_round} — store was "
-            "initialised with frontier_deltas=False (modes cannot mix mid-store)"
+            f"no frontier_log state up to round {upto_round} — this store has "
+            "no frontier event log; it was not created by init_crawl/run_crawl"
         )
     live = parts[0]
     for p in parts[1:]:
@@ -525,146 +476,41 @@ def pending_frontier(
     store: StateStore,
     round_id: int,
     cfg: CrawlConfig,
-    bcasts: list,
     persisted: list | None = None,
     parts_out: list | None = None,
     bcast_ok: bool | None = None,
-) -> tuple[DataFrame, DataFrame, "object"]:
-    """Steps 0–2 of a round: read the committed frontier, split by backoff
-    eligibility, and dedup vs the seen-set → (pending, deferred, bloom).
+) -> tuple[DataFrame, DataFrame]:
+    """Steps 0–1 of a round: the live view as of the previous round, split by
+    backoff eligibility → (pending, deferred).
 
-    This is THE scale-critical plan of the steady state. frontier_deltas mode
-    (default): the live view comes from :func:`live_frontier` — one bucketed
-    base scan + one broadcast anti-join + the resolved recent churn; no seen
-    join exists at read time because the log is kept seen-clean at write
-    time. Legacy full-rewrite mode: the frontier scan, the bloom probe, and
-    the anti-join chain against the compacted seen base + per-round deltas
-    all run in the frontier's own bucket layout — zero exchanges end to end
-    (tests/test_plan_shapes.py pins both shapes on this exact function)."""
-    round_ts = cfg.round_ts(round_id)
-    if cfg.frontier_deltas:
-        frontier = live_frontier(
-            spark, store, round_id - 1, cfg,
-            persisted=persisted, parts_out=parts_out, bcast_ok=bcast_ok,
-        )
-    else:
-        frontier = store.read_round(spark, "frontier", round_id - 1)
-        seen_bases, seen_deltas = store.read_parts(spark, "seen_delta", up_to=round_id - 1)
-
-    # 0) optional importance re-prioritization from the discovered link graph.
-    # LEGACY mode only at this point: blending here rewrites every frontier
-    # row's priority (fine when the whole frontier is rewritten anyway) but
-    # the scores join sits BEFORE the anti-join and breaks the zero-exchange
-    # bucket propagation — the documented degraded shape of the legacy path.
-    # Delta mode blends at SCHEDULING time instead (_run_round step 5): the
-    # rank stage shuffles by design, the pending plan keeps its shape, and
-    # commits stay O(churn) (stored priorities are not rewritten; the blend
-    # is a pure scheduling-time view).
-    if cfg.pagerank_weight > 0 and not cfg.frontier_deltas:
-        from web_crawling_prj_spark.operators.graph import priority_from_pagerank
-
-        link_log = _link_lineage(spark, store, round_id, cfg)
-        if link_log is not None:
-            frontier = priority_from_pagerank(frontier, link_log, weight=cfg.pagerank_weight)
-
-    # 1) backoff gate (reference C10): only rows whose next_eligible_ts has passed
+    This is THE scale-critical plan of the steady state: the live view comes
+    from :func:`live_frontier` — one bucketed scan per tier + delta-sized
+    joins against the resolved recent churn. No seen join exists at read
+    time because the log is kept seen-clean at write time
+    (tests/test_plan_shapes.py pins the shape on this exact function)."""
+    round_ts = F.lit(cfg.round_ts(round_id)).cast("timestamp")
+    frontier = live_frontier(
+        spark, store, round_id - 1, cfg,
+        persisted=persisted, parts_out=parts_out, bcast_ok=bcast_ok,
+    )
+    # backoff gate (reference C10): only rows whose next_eligible_ts has
+    # passed; live ∩ seen = ∅ by construction → pending IS the eligible set
     eligible = frontier.where(
-        F.col("next_eligible_ts").isNull() | (F.col("next_eligible_ts") <= F.lit(round_ts).cast("timestamp"))
+        F.col("next_eligible_ts").isNull() | (F.col("next_eligible_ts") <= round_ts)
     )
     deferred = frontier.where(
-        F.col("next_eligible_ts").isNotNull() & (F.col("next_eligible_ts") > F.lit(round_ts).cast("timestamp"))
+        F.col("next_eligible_ts").isNotNull() & (F.col("next_eligible_ts") > round_ts)
     )
-    if cfg.frontier_deltas:
-        # live ∩ seen = ∅ by construction → pending IS the eligible set
-        return eligible, deferred, None
-
-    # 2) dedup vs seen. Two layout-matched strategies:
-    #    - BUCKETED store (crawl_store): frontier, seen base, and deltas all
-    #      carry HashPartitioning(url_hash, P) + per-bucket sort → the chained
-    #      anti-joins are zero-exchange streaming merges. The bloom tier is
-    #      deliberately NOT routed here: it only ever saved shuffle bytes, the
-    #      bucketed join has none, the seen side streams fully either way, and
-    #      the Arrow probe node would break partitioning propagation
-    #      (EvalPython nodes report unknown output partitioning) and reinstate
-    #      the exchange it was meant to avoid.
-    #    - PLAIN store: bloom prefilter routes provably-unseen rows around the
-    #      exchange, maintained INCREMENTALLY (puffin-style sidecar; each
-    #      round ORs in a delta bloom — the full seen-set is never rescanned).
-    bloom = None
-    bloom_bcast = None  # round-owned broadcast (destroyed in run_round's
-    # finally) — a thousand-round crawl must not accumulate bitmaps on executors
-    if seen_bases or seen_deltas:
-        if _use_bloom(store, cfg) and cfg.approx_seen_tier == "shard_rows":
-            # partition-resident tier: probe the committed shard ROWS map-side
-            # (cogroup — each task decodes only its own shard; no driver
-            # assembly, no broadcast). Routing contract unchanged: probe-false
-            # rows skip the layered anti-join, probe-true rows are rescued
-            # exactly.
-            from web_crawling_prj_spark.operators.shardprobe import (
-                build_bloom_shard_rows,
-                probe_bloom_shard_rows,
-            )
-
-            if store.has_table("bloom_shards", round_id - 1):
-                shard_rows = store.read_round(spark, "bloom_shards", round_id - 1)
-            else:  # store predates the tier: one-time build over the seen-set
-                shard_rows = build_bloom_shard_rows(
-                    store.read_all(spark, "seen_delta", up_to=round_id - 1),
-                    num_shards=cfg.num_buckets,
-                    expected_per_shard=cfg.bloom_expected_per_shard,
-                    fpp=cfg.bloom_fpp,
-                )
-            probed = probe_bloom_shard_rows(
-                eligible,
-                shard_rows,
-                num_shards=cfg.num_buckets,
-                expected_per_shard=cfg.bloom_expected_per_shard,
-                fpp=cfg.bloom_fpp,
-            )
-            new = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-            cand = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-            pending = new.unionByName(
-                anti_join_seen_layered(cand, [*seen_bases, *seen_deltas])
-            )
-            return pending, deferred, None
-        if _use_bloom(store, cfg):
-            raw = store.load_bloom(round_id - 1)
-            if raw is not None:
-                bloom = bloom_from_bytes(raw)
-            else:  # first bloom round (or store predates blooms): one-time build
-                seen_all = store.read_all(spark, "seen_delta", up_to=round_id - 1)
-                bloom = build_sharded_bloom(
-                    seen_all,
-                    num_shards=cfg.num_buckets,
-                    expected_per_shard=cfg.bloom_expected_per_shard,
-                    fpp=cfg.bloom_fpp,
-                )
-            bloom_bcast = broadcast_bloom(spark, bloom)
-            bcasts.append(bloom_bcast)
-        pending = anti_join_seen_layered(
-            eligible, [*seen_bases, *seen_deltas], bloom=bloom, bloom_bcast=bloom_bcast
-        )
-    else:
-        pending = eligible
-    return pending, deferred, bloom
+    return eligible, deferred
 
 
 def _link_lineage(
     spark: SparkSession, store: StateStore, round_id: int, cfg: CrawlConfig
 ) -> DataFrame | None:
-    """Link-graph edges (src_url_hash → url_hash) for PageRank priorities.
-
-    Legacy mode reads them off the committed full-frontier history. Delta
-    mode re-derives them from the committed fetch_log (outlinks are a pure
-    function of fetched pages) — the log only stores each discovery winner
-    once, so the frontier history no longer carries every edge."""
-    if not cfg.frontier_deltas:
-        lineage = store.read_all(spark, "frontier", up_to=round_id - 1)
-        if lineage is None:
-            return None
-        return lineage.where(F.col("src_url_hash").isNotNull()).select(
-            "src_url_hash", "url_hash"
-        )
+    """Link-graph edges (src_url_hash → url_hash) for PageRank priorities,
+    re-derived from the committed fetch_log (outlinks are a pure function of
+    fetched pages) — the frontier log stores each discovery winner once, so
+    it does not carry every edge."""
     log = store.read_all(spark, "fetch_log", up_to=round_id - 1)
     if log is None:
         return None
@@ -677,7 +523,8 @@ def _link_lineage(
 def _pagerank_priority(
     spark: SparkSession, store: StateStore, round_id: int, cfg: CrawlConfig, df: DataFrame
 ) -> tuple[DataFrame, DataFrame | None]:
-    """Delta-mode PageRank blend with the ``pagerank_every`` refresh cadence.
+    """Scheduling-time PageRank blend with the ``pagerank_every`` refresh
+    cadence.
 
     Returns (blended df, scores-to-commit or None). A round REUSES the
     newest committed ``pagerank_scores`` table strictly younger than K
@@ -707,14 +554,14 @@ def _pagerank_priority(
 
 
 #: zstd-parquet bytes per frontier row, measured on the bench layout (16M
-#: rows → ~1.0 GB). Only feeds the prefilter auto-enable ESTIMATE — a 2×
-#: error moves the crossover 2×, which the wide wash region tolerates.
+#: rows → ~1.0 GB). Only feeds the churn-regime fallback ESTIMATE (when a
+#: parquet footer is unreadable) — a 2× error moves the crossover 2×.
 _FRONTIER_BYTES_PER_ROW_EST = 64
 
 
 def _dir_bytes(d: str) -> int:
-    """Driver-side parquet footprint of one store dir — feeds the prefilter
-    and broadcast-regime ESTIMATES only (no Spark job; a 2× error is fine)."""
+    """Driver-side parquet footprint of one store dir — feeds the
+    broadcast-regime ESTIMATE only (no Spark job; a 2× error is fine)."""
     total = 0
     if not os.path.isdir(d):
         return 0
@@ -758,38 +605,6 @@ def _dir_rows(d: str) -> int:
     return total
 
 
-def _resolve_prefilter(store: StateStore, cfg: CrawlConfig) -> bool:
-    """Tri-state rank_prefilter: explicit setting wins; None auto-enables
-    when the committed frontier's on-disk footprint implies the live row
-    count has crossed the measured amortization threshold. Driver-side
-    os.walk over the store dirs — no Spark job."""
-    if cfg.rank_prefilter is not None:
-        return cfg.rank_prefilter
-    # estimate LIVE state only, never history: delta mode sums EVERY fold
-    # tier (tiered folds: the live set spans all of them; tombstone rows in
-    # non-terminal tiers inflate the estimate slightly — fine) + only the
-    # un-folded round dirs (folded dirs stay on disk until vacuum but are
-    # superseded); legacy mode reads only the last round's dir (older dirs
-    # are history). Walk is O(live dirs), not O(rounds) — called once per round.
-    if cfg.frontier_deltas:
-        tiers = store.tiers("frontier_log")
-        floor = tiers[-1]["upto"] if tiers else -1
-        total = sum(_dir_bytes(store._base_dir("frontier_log", t["upto"])) for t in tiers)
-        for r in store.committed_rounds():
-            if r > floor:
-                total += _dir_bytes(store._table_round_dir("frontier_log", r))
-    else:
-        last = store.last_committed_round()
-        total = _dir_bytes(store._table_round_dir("frontier", last)) if last is not None else 0
-    return total >= cfg.rank_prefilter_auto_min_rows * _FRONTIER_BYTES_PER_ROW_EST
-
-
-def _use_bloom(store: StateStore, cfg: CrawlConfig) -> bool:
-    """Bloom tier is the PLAIN-layout optimization; the bucketed layout
-    replaces it structurally (see pending_frontier step 2)."""
-    return cfg.use_bloom and "seen_delta" not in store.bucket_spec
-
-
 def _run_round(
     spark: SparkSession,
     store: StateStore,
@@ -798,37 +613,30 @@ def _run_round(
     round_id: int,
     cfg: CrawlConfig,
     persisted: list,
-    bcasts: list,
 ) -> dict:
     round_ts = cfg.round_ts(round_id)
     live_parts: list[DataFrame] = []
     # churn-broadcast regime: round-constant — estimated ONCE here, shared by
     # the live view's tier joins and the incumbent probe below
-    bcast_ok = _churn_broadcast_ok(store, round_id - 1, cfg) if cfg.frontier_deltas else True
-    pending, deferred, bloom = pending_frontier(
-        spark, store, round_id, cfg, bcasts,
+    bcast_ok = _churn_broadcast_ok(store, round_id - 1, cfg)
+    pending, deferred = pending_frontier(
+        spark, store, round_id, cfg,
         persisted=persisted, parts_out=live_parts, bcast_ok=bcast_ok,
     )
 
-    # 3) robots gate (broadcast join + codegen'd prefix predicate). Persisted
-    # HERE (not after the circuit split) so the quarantined branch does not
-    # re-run the live-view reconstruction at commit time. Delta mode keeps
-    # BOTH outcomes of the gate: disallowed keys become frontier tombstones
-    # (legacy mode removes them by simply not rewriting them).
-    disallowed_keys = None
-    if cfg.frontier_deltas:
-        flagged = gate_frontier_flagged(pending, robots).persist()
-        persisted.append(flagged)
-        gated = flagged.where(F.col("robots_allowed")).drop("robots_allowed")
-        disallowed_keys = flagged.where(~F.col("robots_allowed")).select("url_hash")
-    else:
-        gated = gate_frontier(pending, robots).persist()
-        persisted.append(gated)
+    # 2) robots gate (broadcast join + codegen'd prefix predicate). Persisted
+    # HERE so the gated and disallowed branches do not each re-run the
+    # live-view reconstruction at commit time. Both outcomes of the gate are
+    # kept: disallowed keys become frontier tombstones.
+    flagged = gate_frontier_flagged(pending, robots).persist()
+    persisted.append(flagged)
+    gated = flagged.where(F.col("robots_allowed")).drop("robots_allowed")
+    disallowed_keys = flagged.where(~F.col("robots_allowed")).select("url_hash")
     allowed = gated
 
-    # 4) circuit breaker (reference C12): hosts with open circuits sit out this
-    # round but their URLs are DEFERRED, not dropped — they rejoin the next
-    # frontier untouched (quarantine is temporal, never data loss). Circuit
+    # 3) circuit breaker (reference C12): hosts with open circuits sit out this
+    # round but their URLs are DEFERRED, not dropped — they stay live in the
+    # log untouched (quarantine is temporal, never data loss). Circuit
     # state is maintained INCREMENTALLY: each round folds only its own fetch
     # log into the committed host_state table (O(round), not O(history)).
     prev_host_state = None
@@ -846,26 +654,20 @@ def _run_round(
         half_open_hosts = tripped.where(
             F.col("quarantined_until") <= F.lit(round_ts).cast("timestamp")
         ).select("host")
-        quarantined = allowed.join(F.broadcast(open_hosts), "host", "left_semi").select(
-            *FRONTIER_COLS
-        )
         allowed = allowed.join(F.broadcast(open_hosts), "host", "left_anti")
-    else:
-        quarantined = None
 
-    # 5) politeness schedule (salted two-level exact top-k per host).
-    # `gated` is cached above (feeds allowed/quarantined/leftover); `scheduled`
-    # feeds both fetch and the leftover anti-join — persist it so the window
-    # stages run once per round.
-    # Delta-mode PageRank blend happens HERE, on the rows entering the rank:
-    # the rank stage owns its two designed exchanges anyway, so the scores
-    # join rides into them instead of degrading the pending plan (see
-    # pending_frontier step 0). The blend is a scheduling-time view: unsched-
-    # uled backlog rows keep their base priorities (never rewritten — commit
-    # volume stays O(churn)); only rows that re-enter via the retry path
-    # carry a blended value forward (bounded by the retry budget).
+    # 4) politeness schedule (salted two-level exact top-k per host).
+    # `scheduled` feeds the fetch, the incumbent probe and the tombstones —
+    # persist it so the window stages run once per round.
+    # The PageRank blend happens HERE, on the rows entering the rank: the
+    # rank stage owns its two designed exchanges anyway, so the scores join
+    # rides into them instead of degrading the pending plan. The blend is a
+    # scheduling-time view: unscheduled backlog rows keep their base
+    # priorities (never rewritten — commit volume stays O(churn)); only rows
+    # that re-enter via the retry path carry a blended value forward
+    # (bounded by the retry budget).
     pr_scores = None
-    if cfg.pagerank_weight > 0 and cfg.frontier_deltas:
+    if cfg.pagerank_weight > 0:
         allowed, pr_scores = _pagerank_priority(spark, store, round_id, cfg, allowed)
     budgets = host_budgets(robots, cfg.round_duration_ms, max_per_host=cfg.max_per_host)
     if half_open_hosts is not None:
@@ -880,8 +682,8 @@ def _run_round(
             .drop("_ho")
         )
     # crawl-trap budgeting: candidates for THIS round's schedule are capped
-    # per URL template; `allowed` itself stays untouched so trap-cut rows
-    # remain pending (legacy leftover math subtracts from the uncapped set)
+    # per URL template; trap-cut rows are never tombstoned, so they remain
+    # live for later rounds
     candidates = allowed
     if cfg.trap_max_per_template > 0:
         from web_crawling_prj_spark.operators.traps import cap_trapped_frontier
@@ -898,22 +700,14 @@ def _run_round(
         budgets,
         n_salts=cfg.n_salts,
         default_budget=cfg.default_budget,
-        threshold_prefilter=_resolve_prefilter(store, cfg),
-        persisted=persisted,
         tiebreak=cfg.schedule_tiebreak,
     ).persist()
     persisted.append(scheduled)
-    # frontier rows that lost the budget race stay pending for the next round.
-    # Delta mode never materializes them: they simply stay live in the log
-    # (not tombstoned), so the O(frontier) anti-join below is legacy-only.
-    leftover = None
-    if not cfg.frontier_deltas:
-        leftover = allowed.join(scheduled.select("url_hash"), "url_hash", "left_anti").select(
-            *FRONTIER_COLS
-        )
+    # frontier rows that lost the budget race are never materialized: they
+    # simply stay live in the log (not tombstoned) for the next round.
 
-    # 6) fetch + extract (synthetic deterministic fetcher; same schema as real).
-    # The fetch log feeds FOUR consumers (next frontier, seen delta, metrics,
+    # 5) fetch + extract (synthetic deterministic fetcher; same schema as real).
+    # The fetch log feeds FOUR consumers (frontier adds, seen delta, metrics,
     # its own commit) — persist it so the fetch+extract stage runs once, not
     # once per committed table.
     fetch_log = synthetic_fetch(
@@ -929,7 +723,7 @@ def _run_round(
     fetch_log = classify_fetch_log(fetch_log).persist()
     persisted.append(fetch_log)
 
-    # 7) retries re-enter the frontier with backoff; exhausted rows tombstone
+    # 6) retries re-enter the frontier with backoff; exhausted rows tombstone
     retries = (
         fetch_log.where(F.col("can_retry"))
         .select(
@@ -947,14 +741,14 @@ def _run_round(
         .select(*FRONTIER_COLS)
     )
 
-    # 8) outlink discovery feeds the next frontier
+    # 7) outlink discovery feeds the next frontier
     max_doc = cfg.extra.get("max_doc_id")
     discovered = discover_outlinks(
         fetch_log, links_per_page=cfg.links_per_page, max_doc_id=max_doc
     ).withColumns({"attempt": F.lit(0), "next_eligible_ts": F.lit(None).cast("timestamp")})
     discovered = discovered.select(*FRONTIER_COLS)
 
-    # 8b) redirect resolution (reference: httpx follow_redirects inside
+    # 7b) redirect resolution (reference: httpx follow_redirects inside
     # services/request_client.py; here the redirect map is DATA): this
     # round's 3xx rows resolve — through each other, when several hops of a
     # chain were fetched in the same round — to terminal targets, which
@@ -999,7 +793,7 @@ def _run_round(
         )
         discovered = discovered.unionByName(terminals)
 
-    # 8c) focused crawling (WWW'99): blend each parent page's BM25 topic
+    # 7c) focused crawling (WWW'99): blend each parent page's BM25 topic
     # relevance into its children's priority. Scorer input is THIS round's
     # fetch log only (delta-sized); the rel table is per-round-small and
     # broadcasts. Redirect terminals blend their 3xx source's relevance,
@@ -1015,99 +809,83 @@ def _run_round(
             discovered, rel, weight=cfg.focus_weight
         ).select(*FRONTIER_COLS)
 
-    # dedup preference (both modes): in-flight retry state (attempt, backoff)
-    # must survive a fresh rediscovery of the same URL — otherwise attempt
-    # counters reset and the per-class retry budget / backoff gate are
-    # silently bypassed.
+    # dedup preference: in-flight retry state (attempt, backoff) must survive
+    # a fresh rediscovery of the same URL — otherwise attempt counters reset
+    # and the per-class retry budget / backoff gate are silently bypassed.
     _prefer = [
         -F.coalesce(F.col("attempt"), F.lit(0)),
         -F.coalesce(F.col("priority"), F.lit(0.0)),
     ]
-    if cfg.frontier_deltas:
-        # Delta commit: O(churn) rows, never the 10^10-row backlog.
-        #   adds = winners among {retries, discovered} ∪ their incumbent rows
-        #          (same dedup_within_batch + prefer as the legacy full dedup,
-        #          so conflict resolution is identical BY CONSTRUCTION — a
-        #          winning incumbent re-adds its own row, a no-op on the view),
-        #          seen-filtered at write time (anti_join_seen_layered) so the
-        #          live view stays disjoint from the seen-set;
-        #   dels = scheduled keys (fetched→seen, or replaced by their retry
-        #          row) + robots-disallowed keys.
-        cand = retries.unionByName(discovered)
-        cand_keys = cand.select("url_hash").distinct()
-        # incumbents = unchanged live rows competing with a candidate key.
-        # Two regimes, flipped by the same driver-side churn estimate as the
-        # live view's tier joins (cfg.broadcast_churn_max_keys):
-        if bcast_ok:
-            # broadcast regime (normal scale): probe the ROUND-CACHED gated/
-            # deferred views — (gated ∖ scheduled) covers leftover +
-            # quarantined; deferred rows bypass the gate by design. The key
-            # sets are round-churn-sized → forced broadcast is the fast join.
-            inc_gated = (
-                gated.join(F.broadcast(cand_keys), "url_hash", "left_semi")
-                .join(F.broadcast(scheduled.select("url_hash")), "url_hash", "left_anti")
+    # 8) delta commit: O(churn) rows, never the 10^10-row backlog.
+    #   adds = winners among {retries, discovered} ∪ their incumbent rows
+    #          (dedup_within_batch + prefer over candidates AND the live rows
+    #          they collide with — a winning incumbent re-adds its own row,
+    #          a no-op on the view),
+    #          seen-filtered at write time (anti_join_seen_layered) so the
+    #          live view stays disjoint from the seen-set;
+    #   dels = scheduled keys (fetched→seen, or replaced by their retry
+    #          row) + robots-disallowed keys.
+    cand = retries.unionByName(discovered)
+    cand_keys = cand.select("url_hash").distinct()
+    # incumbents = unchanged live rows competing with a candidate key.
+    # Two regimes, flipped by the same driver-side churn estimate as the
+    # live view's tier joins (cfg.broadcast_churn_max_keys):
+    if bcast_ok:
+        # broadcast regime (normal scale): probe the ROUND-CACHED gated/
+        # deferred views — (gated ∖ scheduled) covers the unscheduled and
+        # quarantined rows; deferred rows bypass the gate by design. The key
+        # sets are round-churn-sized → forced broadcast is the fast join.
+        inc_gated = (
+            gated.join(F.broadcast(cand_keys), "url_hash", "left_semi")
+            .join(F.broadcast(scheduled.select("url_hash")), "url_hash", "left_anti")
+            .select(*FRONTIER_COLS)
+        )
+        inc = inc_gated.unionByName(
+            deferred.join(F.broadcast(cand_keys), "url_hash", "left_semi").select(
+                *FRONTIER_COLS
+            )
+        )
+    else:
+        # merge regime (churn too big to collect into the driver): probe
+        # each live BRANCH — every branch keeps HashPartitioning(url_hash,
+        # P) (live_frontier_parts contract), so the semi-joins shuffle
+        # ONLY the repartitioned key set (its exchange is reused across
+        # branches), never the backlog. The probe result is ≤ |cand| rows
+        # per branch; the robots flag is re-derived on it (broadcast
+        # join), and incumbents keep exactly the broadcast regime's rows:
+        # (eligible ∧ allowed ∧ ¬scheduled) ∪ ¬eligible — an eligible-but-
+        # disallowed row is tombstoned this round, never an incumbent.
+        ck = cand_keys.repartition(cfg.num_buckets, "url_hash")
+        probe = None
+        for p in live_parts:
+            hit = p.join(ck, "url_hash", "left_semi")
+            probe = hit if probe is None else probe.unionByName(hit)
+        if probe is None:
+            inc = None
+        else:
+            elig = F.col("next_eligible_ts").isNull() | (
+                F.col("next_eligible_ts") <= F.lit(round_ts).cast("timestamp")
+            )
+            inc = (
+                gate_frontier_flagged(probe, robots)
+                .where(F.col("robots_allowed") | ~elig)
+                .drop("robots_allowed")
+                .join(
+                    scheduled.select("url_hash").repartition(
+                        cfg.num_buckets, "url_hash"
+                    ),
+                    "url_hash",
+                    "left_anti",
+                )
                 .select(*FRONTIER_COLS)
             )
-            inc = inc_gated.unionByName(
-                deferred.join(F.broadcast(cand_keys), "url_hash", "left_semi").select(
-                    *FRONTIER_COLS
-                )
-            )
-        else:
-            # merge regime (churn too big to collect into the driver): probe
-            # each live BRANCH — every branch keeps HashPartitioning(url_hash,
-            # P) (live_frontier_parts contract), so the semi-joins shuffle
-            # ONLY the repartitioned key set (its exchange is reused across
-            # branches), never the backlog. The probe result is ≤ |cand| rows
-            # per branch; the robots flag is re-derived on it (broadcast
-            # join), and incumbents keep exactly the broadcast regime's rows:
-            # (eligible ∧ allowed ∧ ¬scheduled) ∪ ¬eligible — an eligible-but-
-            # disallowed row is tombstoned this round, never an incumbent.
-            ck = cand_keys.repartition(cfg.num_buckets, "url_hash")
-            probe = None
-            for p in live_parts:
-                hit = p.join(ck, "url_hash", "left_semi")
-                probe = hit if probe is None else probe.unionByName(hit)
-            if probe is None:
-                inc = None
-            else:
-                elig = F.col("next_eligible_ts").isNull() | (
-                    F.col("next_eligible_ts") <= F.lit(round_ts).cast("timestamp")
-                )
-                inc = (
-                    gate_frontier_flagged(probe, robots)
-                    .where(F.col("robots_allowed") | ~elig)
-                    .drop("robots_allowed")
-                    .join(
-                        scheduled.select("url_hash").repartition(
-                            cfg.num_buckets, "url_hash"
-                        ),
-                        "url_hash",
-                        "left_anti",
-                    )
-                    .select(*FRONTIER_COLS)
-                )
-        winners = dedup_within_batch(
-            (cand if inc is None else cand.unionByName(inc)).repartition(
-                cfg.num_buckets, "url_hash"
-            ),
-            key="url_hash",
-            prefer=_prefer,
-        )
-        next_frontier = None
-    else:
-        candidates = leftover.unionByName(deferred).unionByName(retries).unionByName(discovered)
-        if quarantined is not None:
-            candidates = candidates.unionByName(quarantined)
-        # Repartition BEFORE the dedup groupBy: hashpartitioning(url_hash, P)
-        # satisfies the aggregation's clustering requirement AND is exactly the
-        # bucket layout the frontier write wants — one exchange total, and the
-        # bucketed write then emits one file per bucket.
-        next_frontier = dedup_within_batch(
-            candidates.repartition(cfg.num_buckets, "url_hash"),
-            key="url_hash",
-            prefer=_prefer,
-        )
+    winners = dedup_within_batch(
+        (cand if inc is None else cand.unionByName(inc)).repartition(
+            cfg.num_buckets, "url_hash"
+        ),
+        key="url_hash",
+        prefer=_prefer,
+    )
 
     # 9) seen-delta: everything scheduled this round (fetched or failed —
     # failures re-enter via the retry path, not by staying "unseen";
@@ -1147,79 +925,34 @@ def _run_round(
         "host_state": new_host_state,
         "run_report": run_summary(metrics),
     }
-    if (
-        not cfg.frontier_deltas
-        and _use_bloom(store, cfg)
-        and cfg.approx_seen_tier == "shard_rows"
-    ):
-        # partition-resident tier maintenance: OR this round's delta shard
-        # rows into the committed table — incremental, distributed, never a
-        # full seen-set rescan; committed atomically with the round
-        from web_crawling_prj_spark.operators.shardprobe import (
-            build_bloom_shard_rows,
-            merge_bloom_shard_rows,
-        )
-
-        if store.has_table("bloom_shards", round_id - 1):
-            shard_rows = merge_bloom_shard_rows(
-                store.read_round(spark, "bloom_shards", round_id - 1),
-                build_bloom_shard_rows(
-                    seen_delta,
-                    num_shards=cfg.num_buckets,
-                    expected_per_shard=cfg.bloom_expected_per_shard,
-                    fpp=cfg.bloom_fpp,
-                ),
-            )
-        else:
-            # migration bootstrap (ADVICE r6 high): no committed shard table
-            # yet — a store that predates the tier must seed it from the FULL
-            # seen-set, not this round's delta alone, or every later round
-            # probes a delta-only filter and previously-seen URLs bypass the
-            # exact anti-join rescue (re-enqueue/refetch). One-time cost, the
-            # same full build pending_frontier already ran for this round's
-            # probe.
-            base = seen_delta.select("url_hash")
-            hist = store.read_all(spark, "seen_delta", up_to=round_id - 1)
-            if hist is not None:
-                base = hist.select("url_hash").unionByName(base)
-            shard_rows = build_bloom_shard_rows(
-                base,
-                num_shards=cfg.num_buckets,
-                expected_per_shard=cfg.bloom_expected_per_shard,
-                fpp=cfg.bloom_fpp,
-            )
-        tables["bloom_shards"] = shard_rows
     if pr_scores is not None:
         # refreshed this round with pagerank_every > 1: commit the normalized
         # scores so the next K-1 rounds blend them without touching the full
         # fetch_log history (pagerank() localCheckpoints its result — this
         # write re-runs nothing)
         tables["pagerank_scores"] = pr_scores
-    if cfg.frontier_deltas:
-        # write-time seen filter on the delta-sized winners (this round's
-        # seen_delta included): keeps the live view seen-clean so reads never
-        # join against the seen-set at all. The winners carry the bucket
-        # layout (repartition upstream), so the tier joins co-locate.
-        seen_bases, seen_deltas = store.read_parts(spark, "seen_delta", up_to=round_id - 1)
-        adds = anti_join_seen_layered(winners, [*seen_bases, *seen_deltas, seen_delta])
-        ftypes = {f.name: f.dataType for f in pending.select(*FRONTIER_COLS).schema.fields}
-        del_keys = scheduled.select("url_hash").unionByName(disallowed_keys)
-        del_rows = del_keys.select(
-            *[
-                F.lit(None).cast(ftypes[c]).alias(c) if c != "url_hash" else F.col(c)
-                for c in FRONTIER_COLS
-            ],
-            F.lit(round_id).alias("evt_round"),
-            F.lit(True).alias("is_del"),
-        )
-        add_rows = adds.select(
-            *FRONTIER_COLS, F.lit(round_id).alias("evt_round"), F.lit(False).alias("is_del")
-        )
-        tables["frontier_log"] = add_rows.unionByName(del_rows).repartition(
-            cfg.num_buckets, "url_hash"
-        )
-    else:
-        tables["frontier"] = next_frontier
+    # write-time seen filter on the delta-sized winners (this round's
+    # seen_delta included): keeps the live view seen-clean so reads never
+    # join against the seen-set at all. The winners carry the bucket layout
+    # (repartition upstream), so the tier joins co-locate.
+    seen_bases, seen_deltas = store.read_parts(spark, "seen_delta", up_to=round_id - 1)
+    adds = anti_join_seen_layered(winners, [*seen_bases, *seen_deltas, seen_delta])
+    ftypes = {f.name: f.dataType for f in pending.select(*FRONTIER_COLS).schema.fields}
+    del_keys = scheduled.select("url_hash").unionByName(disallowed_keys)
+    del_rows = del_keys.select(
+        *[
+            F.lit(None).cast(ftypes[c]).alias(c) if c != "url_hash" else F.col(c)
+            for c in FRONTIER_COLS
+        ],
+        F.lit(round_id).alias("evt_round"),
+        F.lit(True).alias("is_del"),
+    )
+    add_rows = adds.select(
+        *FRONTIER_COLS, F.lit(round_id).alias("evt_round"), F.lit(False).alias("is_del")
+    )
+    tables["frontier_log"] = add_rows.unionByName(del_rows).repartition(
+        cfg.num_buckets, "url_hash"
+    )
     store.commit_round(round_id, tables, extra_meta={"round_ts": round_ts})
     if pr_scores is not None:
         # retention: only the newest committed scores are ever read (the
@@ -1230,33 +963,6 @@ def _run_round(
         for r in store.committed_rounds():
             if r < round_id and store.has_table("pagerank_scores", r):
                 store.drop_round_table("pagerank_scores", r)
-    if "bloom_shards" in tables:
-        # same retention as pagerank_scores: only the newest shard table is
-        # ever probed, so reap superseded rounds — O(P·m) storage total, not
-        # O(rounds·P·m). Kill-safe for the same reason.
-        for r in store.committed_rounds():
-            if r < round_id and store.has_table("bloom_shards", r):
-                store.drop_round_table("bloom_shards", r)
-    # maintain the cumulative bloom sidecar: delta bloom over this round's
-    # seen_delta (tiny, fetch_log is cached) OR'd into the running bitmap.
-    # Skipped entirely on the bucketed layout — nothing ever probes it there —
-    # AND in delta mode, where no read path probes the seen-set at all (a
-    # delta-mode round would otherwise overwrite the sidecar with just its
-    # own delta bloom: wasted work + a broken cumulative contract, ADVICE r4).
-    # The shard_rows tier maintains its own committed table instead.
-    if (
-        not cfg.frontier_deltas
-        and _use_bloom(store, cfg)
-        and cfg.approx_seen_tier != "shard_rows"
-    ):
-        delta = build_sharded_bloom(
-            seen_delta,
-            num_shards=cfg.num_buckets,
-            expected_per_shard=cfg.bloom_expected_per_shard,
-            fpp=cfg.bloom_fpp,
-        )
-        merged = merge_blooms(bloom, delta) if bloom is not None else delta
-        store.save_bloom(round_id, bloom_to_bytes(merged))
 
     # read the committed tables back ONCE (two small driver jobs per round);
     # the artifact render, the summary, and the abort check all share the rows
@@ -1274,7 +980,7 @@ def _run_round(
     }
     # batch/run failure threshold (reference C4/C5): abort AFTER committing so
     # a resumed run (mode='failed' analog) starts from consistent state;
-    # run_round's finally releases the caches/broadcast on this path too
+    # run_round's finally releases the caches on this path too
     if cfg.extra.get("abort_on_failed_run"):
         if report and report["run_failed"]:
             raise RuntimeError(
@@ -1394,24 +1100,6 @@ def run_crawl(
     guard_union_partitioning(spark)
     cfg = cfg or CrawlConfig()
     last = store.last_committed_round()
-    if last is not None:
-        # a store is created in one frontier layout and stays in it: resuming
-        # with the other mode would silently read an empty frontier — refuse
-        # up front with the fix in the message (same spirit as the bucket
-        # layout drift guard in statestore)
-        committed = store.manifest(last).get("tables", [])
-        has_log = "frontier_log" in committed or store.base_upto("frontier_log") is not None
-        has_full = "frontier" in committed
-        if cfg.frontier_deltas and has_full and not has_log:
-            raise ValueError(
-                "store was created with frontier_deltas=False (full-rewrite "
-                "layout); resume with CrawlConfig(frontier_deltas=False)"
-            )
-        if not cfg.frontier_deltas and has_log and not has_full:
-            raise ValueError(
-                "store was created with frontier_deltas=True (event-log "
-                "layout); resume with CrawlConfig(frontier_deltas=True)"
-            )
     if last is None:
         init_crawl(spark, store, seeds, cfg)
         last = 0
@@ -1438,26 +1126,22 @@ def run_crawl(
                 num_buckets=cfg.num_buckets,
                 max_tiers=cfg.fold_max_tiers,
             )
-            if cfg.frontier_deltas:
-                # TIERED event-log fold: a minor fold resolves only the
-                # rounds since the newest tier — O(window churn), keeping
-                # tombstones that target older tiers — so the only O(live)
-                # job left anywhere is the major fold every
-                # fold_max_tiers·compact_every rounds (amortized
-                # O(live/(T·K)) per round; was O(live/K) with the round-4
-                # always-major fold, and O(live) EVERY round in legacy mode).
-                store.compact(
-                    spark,
-                    "frontier_log",
-                    up_to=r,
-                    num_buckets=cfg.num_buckets,
-                    max_tiers=cfg.fold_max_tiers,
-                    resolver=resolve_frontier_log,
-                )
+            # TIERED event-log fold: a minor fold resolves only the rounds
+            # since the newest tier — O(window churn), keeping tombstones
+            # that target older tiers — so the only O(live) job left anywhere
+            # is the major fold every fold_max_tiers·compact_every rounds
+            # (amortized O(live/(T·K)) per round).
+            store.compact(
+                spark,
+                "frontier_log",
+                up_to=r,
+                num_buckets=cfg.num_buckets,
+                max_tiers=cfg.fold_max_tiers,
+                resolver=resolve_frontier_log,
+            )
             if cfg.vacuum_after_fold:
                 store.vacuum_compacted("seen_delta", spark)
-                if cfg.frontier_deltas:
-                    store.vacuum_compacted("frontier_log", spark)
+                store.vacuum_compacted("frontier_log", spark)
     return stats
 
 

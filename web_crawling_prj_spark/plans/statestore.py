@@ -241,11 +241,13 @@ class StateStore:
 
     def _load_layout(self) -> dict[str, Any]:
         """Store-level layout registry: table → {col, n} (bucketed) or None
-        (plain), recorded the first time each table is committed. Stores
-        written before this file existed are seeded by replaying every
-        manifest oldest→newest (the newest mention of a table wins), so a
-        table committed intermittently is still covered — the defect the
-        last-manifest-only check had."""
+        (plain), recorded the first time each table is committed. A missing
+        registry is rebuilt by replaying every manifest oldest→newest (the
+        newest mention of a table wins, so a table committed intermittently
+        is still covered). The replay is the crash-recovery path: a process
+        killed between a round's manifest rename and ``_save_layout`` leaves
+        committed rounds with no registry, and without the replay the next
+        writer could commit a drifted layout unchecked."""
         path = self._layout_path()
         if os.path.exists(path):
             with open(path) as f:
@@ -297,32 +299,11 @@ class StateStore:
                 )
         return layout
 
-    # --- sketch sidecars (Iceberg-style puffin analog: bloom bytes per round) ---
-
-    def save_bloom(self, round_id: int, data: bytes) -> None:
-        """Persist the cumulative seen-set bloom alongside the round. Written
-        after the manifest; a round whose bloom is missing (kill in between)
-        falls back to a one-time rebuild from the seen-set — never wrong,
-        because the bloom is an optimization tier only."""
-        path = os.path.join(self.root, "_manifests", f"{round_id:06d}.bloom")
-        fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_manifests"), suffix=".btmp")
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        os.rename(tmp, path)
-
-    def load_bloom(self, round_id: int) -> bytes | None:
-        path = os.path.join(self.root, "_manifests", f"{round_id:06d}.bloom")
-        if not os.path.exists(path):
-            return None
-        with open(path, "rb") as f:
-            return f.read()
-
     # --- compaction (Iceberg rewrite_data_files analog, LSM-tiered) ---
     #
     # read_all unions one directory per committed round; at round 10^4 every
-    # seen-set scan would list 10^4 dirs and the bloom-rebuild fallback would
-    # rescan all of them. compact() folds rounds into base TIERS with an
-    # LSM-style size-tiered schedule:
+    # seen-set scan would list 10^4 dirs. compact() folds rounds into base
+    # TIERS with an LSM-style size-tiered schedule:
     #
     #   MINOR fold (the common case): only the rounds since the newest tier
     #   are read and written into ONE new tier — O(K·delta) work, never a
@@ -344,14 +325,12 @@ class StateStore:
         return os.path.join(self.root, "_manifests", f"{table}.base.json")
 
     def tiers(self, table: str) -> list[dict[str, Any]]:
-        """Base tiers, oldest→newest. Legacy single-base pointers read as one
-        tier — stores written by earlier versions keep working unchanged."""
+        """Base tiers, oldest→newest (the pointer file compact() publishes)."""
         path = self._base_pointer_path(table)
         if not os.path.exists(path):
             return []
         with open(path) as f:
-            data = json.load(f)
-        return data["tiers"] if "tiers" in data else [data]
+            return json.load(f)["tiers"]
 
     def base_upto(self, table: str) -> int | None:
         t = self.tiers(table)
@@ -382,11 +361,10 @@ class StateStore:
         ``resolver``: optional callable applied to the folded union before
         writing — for EVENT-LOG tables (e.g. the crawl's ``frontier_log``)
         whose fold must resolve per-key latest state rather than concatenate
-        rows. Called as ``resolver(df, terminal)`` when its signature takes
-        two parameters (``resolver(df)`` otherwise, for older callers):
-        ``terminal=True`` means the fold output becomes the OLDEST tier
-        (major fold, or the store's first tier) — no older layer exists that
-        a tombstone could still target, so the resolver may drop tombstones.
+        rows. Called as ``resolver(df, terminal)``: ``terminal=True`` means
+        the fold output becomes the OLDEST tier (major fold, or the store's
+        first tier) — no older layer exists that a tombstone could still
+        target, so the resolver may drop tombstones.
         A non-terminal MINOR fold resolves only its own window and must KEEP
         tombstone rows (they shadow keys living in older tiers); readers
         chain tiers newest-over-oldest (each tier's keys shadow older tiers)
@@ -409,18 +387,8 @@ class StateStore:
             paths = [self._table_round_dir(table, r) for r in new_rounds]
             df = self._read_rounds(spark, table, paths)
         if resolver is not None:
-            import inspect
-
-            try:
-                n_params = len(inspect.signature(resolver).parameters)
-            except (TypeError, ValueError):
-                # uninspectable callable (C-implemented, odd partials): these
-                # are exactly the legacy 1-param callers the fallback exists
-                # for — every 2-param resolver in this codebase is a plain
-                # Python function whose signature inspects fine
-                n_params = 1
             terminal = major or not cur  # fold output has no tier beneath it
-            df = resolver(df, terminal) if n_params >= 2 else resolver(df)
+            df = resolver(df, terminal)
         new_dir = self._base_dir(table, upto)
         tier: dict[str, Any] = {"upto": upto}
         if table in self.bucket_spec:
