@@ -225,7 +225,7 @@ def _bench_del_rows(keys_df, r: int):
 
 def _bench_dir_bytes(path: str) -> int:
     """TOTAL on-disk footprint (every file, not just parquet — the write-amp
-    benches charge manifests/markers too, unlike crawl_round._dir_bytes)."""
+    benches charge manifests/markers too)."""
     total = 0
     for dp, _dn, fns in os.walk(path):
         for fn in fns:

@@ -543,9 +543,10 @@ def test_vacuum_reaps_orphan_tier_dirs(spark, tmp_path, crawl_inputs):
 
 def test_tiered_frontier_folds_and_merge_regime_equal_unfolded(spark, tmp_path, crawl_inputs):
     """Round-5 headline: TIERED frontier-log folds (minor folds O(window
-    churn), tombstones kept until a major fold) + the co-located MERGE
-    regime for every churn-key join (broadcast_churn_max_keys=0 forces it)
-    reproduce the exact crawl of an unfolded, broadcast-regime store. fold_max_tiers=2, compact_every=2 over
+    churn), tombstones kept until a major fold) + the co-located MERGE plan
+    for every churn-key join (spark.sql.autoBroadcastJoinThreshold=-1 forces
+    it) reproduce the exact crawl of an unfolded store planned under the
+    default threshold. fold_max_tiers=2, compact_every=2 over
     9 rounds exercises: terminal first fold (r2), minor fold with tombstones
     (r4), MAJOR fold (r6, tier count would exceed 2), minor again (r8) — and
     the old tier's files are byte-untouched by the minor fold."""
@@ -555,12 +556,7 @@ def test_tiered_frontier_folds_and_merge_regime_equal_unfolded(spark, tmp_path, 
     pages, robots, seeds, cfg = crawl_inputs
     co = dataclasses.replace(cfg, compact_every=0)
     co.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    cn = dataclasses.replace(
-        cfg,
-        compact_every=2,
-        fold_max_tiers=2,
-        broadcast_churn_max_keys=0,
-    )
+    cn = dataclasses.replace(cfg, compact_every=2, fold_max_tiers=2)
     cn.extra["max_doc_id"] = cfg.extra["max_doc_id"]
 
     a = crawl_store(str(tmp_path / "tier_old"), co)
@@ -571,16 +567,24 @@ def test_tiered_frontier_folds_and_merge_regime_equal_unfolded(spark, tmp_path, 
         d = store._base_dir("frontier_log", upto)
         return {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)}
 
-    sb = run_crawl(spark, b, pages, robots, seeds, rounds=3, cfg=cn)  # fold @ r2
+    def merge_crawl(rounds):
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            return run_crawl(spark, b, pages, robots, seeds, rounds=rounds, cfg=cn)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    sb = merge_crawl(3)  # fold @ r2
     snap = tier_files(b, 2)
-    sb += run_crawl(spark, b, pages, robots, seeds, rounds=5, cfg=cn)  # minor fold @ r4
+    sb += merge_crawl(5)  # minor fold @ r4
     # after r2 (terminal) + r4 (minor): two tiers, minor fold carries dels
     assert [t["upto"] for t in b.tiers("frontier_log")] == [2, 4]
     log4 = spark.read.parquet(b._base_dir("frontier_log", 4))
     assert log4.where(F.col("is_del")).count() > 0  # non-terminal keeps tombstones
     assert tier_files(b, 2) == snap  # minor fold left the old tier byte-untouched
     sa += run_crawl(spark, a, pages, robots, seeds, rounds=9, cfg=co)
-    sb += run_crawl(spark, b, pages, robots, seeds, rounds=9, cfg=cn)
+    sb += merge_crawl(9)
     assert [t["upto"] for t in b.tiers("frontier_log")] == [6, 8]  # major@6, minor@8
     log6 = spark.read.parquet(b._base_dir("frontier_log", 6))
     assert log6.where(F.col("is_del")).count() == 0  # terminal dropped tombstones
@@ -653,12 +657,11 @@ def test_fold_schedule_sweep_equals_unfolded(
 ):
     """Fold-schedule property: ANY (compact_every, fold_max_tiers,
     vacuum_after_fold) combination reproduces the exact crawl of an
-    unfolded, broadcast-regime store. The
-    targeted tests pin one schedule each; this sweep covers the aggressive
-    corners — fold-every-round (the un-folded window is empty at EVERY
-    round boundary, so the post-fold regime estimate and the drained-
-    detection paths run constantly) and deep tier stacks (tier-vs-tier
-    tombstone shadowing through 3 layers)."""
+    unfolded store. The targeted tests pin one schedule each; this sweep
+    covers the aggressive corners — fold-every-round (the un-folded window
+    is empty at EVERY round boundary, so the tier-only live view and the
+    drained-detection paths run constantly) and deep tier stacks (tier-vs-
+    tier tombstone shadowing through 3 layers)."""
     import dataclasses
 
     pages, robots, seeds, cfg = crawl_inputs
@@ -680,58 +683,6 @@ def test_fold_schedule_sweep_equals_unfolded(
     assert _final_state(a, spark) == _final_state(b, spark)
     shutil.rmtree(str(tmp_path / f"sw_old_{tag}"))
     shutil.rmtree(str(tmp_path / f"sw_new_{tag}"))
-
-
-def test_churn_broadcast_regime_survives_fold_and_vacuum(spark, tmp_path):
-    """Regression (round-5 review): the broadcast↔merge regime estimate must
-    NOT collapse to 0 on the first round after a fold. The un-folded window
-    is empty right after a fold, but the next round's candidate keys are
-    ≈ last round's churn — at 10^8-key rounds, force-broadcasting them is
-    the exact OOM cliff broadcast_churn_max_keys exists to prevent. The
-    estimate floors at the newest non-empty round dir, and falls back to the
-    newest tier when vacuum reclaimed the round dirs too."""
-    from web_crawling_prj_spark.plans.crawl_round import (
-        FRONTIER_LOG_COLS,
-        _churn_broadcast_ok,
-        resolve_frontier_log,
-    )
-
-    store = StateStore(str(tmp_path / "regime"))
-    rows = (
-        spark.range(4000)
-        .select(
-            F.concat(F.lit("http://h"), F.col("id")).alias("url"),
-            F.concat(F.lit("http://h"), F.col("id")).alias("url_canon"),
-            F.col("id").alias("url_hash"),
-            F.lit("h").alias("host"),
-            F.lit(1.0).alias("priority"),
-            F.lit(0).alias("depth"),
-            F.lit(None).cast("timestamp").alias("discovered_ts"),
-            F.lit(None).cast("long").alias("src_url_hash"),
-            F.lit(0).alias("attempt"),
-            F.lit(None).cast("timestamp").alias("next_eligible_ts"),
-            F.lit(1).alias("evt_round"),
-            F.lit(False).alias("is_del"),
-        )
-        .select(*FRONTIER_LOG_COLS)
-    )
-    store.commit_round(1, {"frontier_log": rows})
-    # 4000-key churn vs a 10-key broadcast ceiling → merge regime...
-    cfg = CrawlConfig(num_buckets=4, broadcast_churn_max_keys=10)
-    assert not _churn_broadcast_ok(store, 1, cfg)
-    store.compact(spark, "frontier_log", up_to=1, max_tiers=4, resolver=resolve_frontier_log)
-    # ...and STILL the merge regime right after the fold (window empty, round
-    # dir present: last-round floor) and after vacuum (tier fallback)
-    assert not _churn_broadcast_ok(store, 1, cfg)
-    store.vacuum_compacted("frontier_log")
-    assert not _churn_broadcast_ok(store, 1, cfg)
-    # a genuinely tiny-churn store keeps the broadcast regime throughout
-    roomy = CrawlConfig(num_buckets=4, broadcast_churn_max_keys=1_000_000)
-    assert _churn_broadcast_ok(store, 1, roomy)
-    # round-6: the estimate is EXACT (parquet footer rows, not bytes÷const) —
-    # the crossover sits precisely at the true key count
-    assert not _churn_broadcast_ok(store, 1, CrawlConfig(num_buckets=4, broadcast_churn_max_keys=3_999))
-    assert _churn_broadcast_ok(store, 1, CrawlConfig(num_buckets=4, broadcast_churn_max_keys=4_000))
 
 
 def test_delta_mode_commit_volume_tracks_churn_not_frontier(spark, tmp_path, crawl_inputs):

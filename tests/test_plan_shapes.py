@@ -156,12 +156,13 @@ def test_bucketed_seen_set_anti_join_is_shuffle_free(spark, tmp_path):
 
 
 def test_delta_mode_pending_plan_never_touches_base_with_a_shuffle(spark, sf_dir, tmp_path):
-    """Frontier-delta steady state (round 4): the pending plan's BASE branch
-    is one parquet scan + one broadcast anti-join — no shuffle, no sort, no
-    seen-set join at read time (the log is kept seen-clean at write time) —
-    and the eligibility filter is PUSHED DOWN into the base scan. The only
-    exchanges in the whole plan move the resolved recent churn (delta-sized),
-    never the 10^10-row backlog."""
+    """Frontier-delta steady state (round 4): with broadcasts off, the
+    pending plan's BASE branch is one bucketed parquet scan merged against
+    the co-located recent-churn keys — no shuffle of the base, no seen-set
+    join at read time (the log is kept seen-clean at write time) — and the
+    eligibility filter is PUSHED DOWN into the base scan. The only exchanges
+    in the whole plan move the resolved recent churn (delta-sized), never
+    the 10^10-row backlog."""
     from web_crawling_prj_spark.plans.crawl_round import (
         CrawlConfig,
         crawl_store,
@@ -179,15 +180,18 @@ def test_delta_mode_pending_plan_never_touches_base_with_a_shuffle(spark, sf_dir
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        pending, _ = pending_frontier(spark, store, 6, cfg)
+        pending = pending_frontier(spark, store, 6, cfg)
         plan = explain_str(pending, "simple")
         # exchanges move ONLY the recent churn: one repartition feeding the
         # latest-event resolution per consumer (recent branch + base's
         # tombstone keys), both REPARTITION_BY_NUM over the per-round logs
         assert plan.count("Exchange hashpartitioning") == 2, plan
         assert plan.count("REPARTITION_BY_NUM") == 2, plan
-        # the base tier joins through a broadcast anti-join, never a shuffle
-        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+        # the base tier joins through a co-located merge anti-join: no
+        # broadcast, and no planner-inserted exchange on either side
+        assert "SortMergeJoin" in plan and "LeftAnti" in plan, plan
+        assert "BroadcastExchange" not in plan, plan
+        assert "ENSURE_REQUIREMENTS" not in plan, plan
         # no seen-set table anywhere in the read plan
         assert "seen_delta" not in plan, plan
         # eligibility predicate AND the tombstone filter both reached the
@@ -202,7 +206,7 @@ def test_delta_mode_pending_plan_never_touches_base_with_a_shuffle(spark, sf_dir
 
         cfg_pr = dataclasses.replace(cfg, pagerank_weight=0.4)
         cfg_pr.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-        pending_pr, _ = pending_frontier(spark, store, 6, cfg_pr)
+        pending_pr = pending_frontier(spark, store, 6, cfg_pr)
         plan_pr = explain_str(pending_pr, "simple")
         assert plan_pr.count("Exchange hashpartitioning") == 2, plan_pr
         assert "seen_delta" not in plan_pr and "fetch_log" not in plan_pr, plan_pr
@@ -212,15 +216,13 @@ def test_delta_mode_pending_plan_never_touches_base_with_a_shuffle(spark, sf_dir
 
 def test_tiered_delta_live_view_two_regimes_plan_shape(spark, sf_dir, tmp_path):
     """Tiered frontier folds (round 5): with MULTIPLE base tiers the pending
-    plan reads each tier through ONE pushed-down bucketed scan; tier-vs-tier
-    shadowing joins are co-located zero-exchange merges, and the recent-churn
-    key joins flip by cfg.broadcast_churn_max_keys — forced broadcast below,
-    the same co-located merge above. In BOTH regimes every hash exchange in
-    the plan is a designed REPARTITION_BY_NUM over the delta-sized churn;
-    the planner never inserts an ENSURE_REQUIREMENTS exchange — i.e. the
-    backlog side never moves. And the two regimes return identical rows."""
-    import dataclasses
-
+    plan reads each tier through ONE pushed-down bucketed scan. The tier-vs-
+    tier shadowing and recent-churn key joins carry no hints, so Spark's
+    autoBroadcastJoinThreshold chooses: under the default the toy churn
+    broadcasts; at -1 every join is a co-located merge. In BOTH plans every
+    hash exchange is a designed REPARTITION_BY_NUM over the delta-sized
+    churn; the planner never inserts an ENSURE_REQUIREMENTS exchange — i.e.
+    the backlog side never moves. And the two plans return identical rows."""
     from web_crawling_prj_spark.plans.crawl_round import (
         CrawlConfig,
         crawl_store,
@@ -236,23 +238,21 @@ def test_tiered_delta_live_view_two_regimes_plan_shape(spark, sf_dir, tmp_path):
     run_crawl(spark, store, pages, robots, seeds, rounds=5, cfg=cfg)
     assert [t["upto"] for t in store.tiers("frontier_log")] == [2, 4]
 
+    # default threshold: the toy churn is far below it, so Spark broadcasts
+    pending = pending_frontier(spark, store, 6, cfg)
+    plan = explain_str(pending, "simple")
+    assert "frontier_log_base_000002" in plan and "frontier_log_base_000004" in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert plan.count("Exchange hashpartitioning") == plan.count("REPARTITION_BY_NUM"), plan
+    assert "ENSURE_REQUIREMENTS" not in plan, plan
+    rows = sorted(pending.collect(), key=lambda r: r.url_hash)
+
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
+        # broadcasts off: zero broadcast, the co-located merge everywhere,
+        # still no planner-inserted exchange
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # broadcast regime (default threshold; toy churn is far below it)
-        pending, _ = pending_frontier(spark, store, 6, cfg)
-        plan = explain_str(pending, "simple")
-        assert "frontier_log_base_000002" in plan and "frontier_log_base_000004" in plan, plan
-        assert "BroadcastHashJoin" in plan, plan  # recent-churn keys broadcast
-        assert "SortMergeJoin" in plan, plan  # tier-vs-tier co-located merge
-        assert plan.count("Exchange hashpartitioning") == plan.count("REPARTITION_BY_NUM"), plan
-        assert "ENSURE_REQUIREMENTS" not in plan, plan
-
-        # merge regime: churn keys too big to collect — zero broadcast, the
-        # co-located merge everywhere, still no planner-inserted exchange
-        cfg_m = dataclasses.replace(cfg, broadcast_churn_max_keys=0)
-        cfg_m.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-        pending_m, _ = pending_frontier(spark, store, 6, cfg_m)
+        pending_m = pending_frontier(spark, store, 6, cfg)
         plan_m = explain_str(pending_m, "simple")
         assert "BroadcastExchange" not in plan_m, plan_m
         assert "SortMergeJoin" in plan_m, plan_m
@@ -260,10 +260,8 @@ def test_tiered_delta_live_view_two_regimes_plan_shape(spark, sf_dir, tmp_path):
             "REPARTITION_BY_NUM"
         ), plan_m
         assert "ENSURE_REQUIREMENTS" not in plan_m, plan_m
-
         # physical choice only: identical pending rows either way
-        assert pending.exceptAll(pending_m).count() == 0
-        assert pending_m.exceptAll(pending).count() == 0
+        assert sorted(pending_m.collect(), key=lambda r: r.url_hash) == rows
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

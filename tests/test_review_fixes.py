@@ -258,12 +258,11 @@ def test_png_path_is_backend_independent(spark):
         mm.DECODE_BACKEND = old
 
 
-def test_read_parts_raises_on_vacuumed_history(spark, tmp_path):
-    """read_parts must refuse to reconstruct a historical seen-set whose
+@pytest.mark.parametrize("reader", ["read_parts", "read_all"])
+def test_read_parts_raises_on_vacuumed_history(spark, tmp_path, reader):
+    """Both readers must refuse to reconstruct a historical seen-set whose
     rounds were folded into a deeper tier and vacuumed — a silently
     incomplete seen-set would re-schedule fetched URLs."""
-    import pytest
-
     from web_crawling_prj_spark.plans.statestore import StateStore
 
     store = StateStore(str(tmp_path / "hist"))
@@ -272,11 +271,15 @@ def test_read_parts_raises_on_vacuumed_history(spark, tmp_path):
         store.commit_round(r, {"seen_delta": df})
     store.compact(spark, "seen_delta", up_to=3)
     store.vacuum_compacted("seen_delta")
+    read = getattr(store, reader)
     with pytest.raises(ValueError, match="cannot reconstruct"):
-        store.read_parts(spark, "seen_delta", up_to=1)
+        read(spark, "seen_delta", up_to=1)
     # at-or-past the tier: fine
-    bases, deltas = store.read_parts(spark, "seen_delta", up_to=3)
-    assert sum(b.count() for b in bases) == 20 and deltas == []
+    if reader == "read_parts":
+        bases, deltas = read(spark, "seen_delta", up_to=3)
+        assert sum(b.count() for b in bases) == 20 and deltas == []
+    else:
+        assert read(spark, "seen_delta", up_to=3).count() == 20
 
 
 def test_bucket_layout_drift_refused(spark, tmp_path):

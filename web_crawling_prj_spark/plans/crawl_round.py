@@ -4,11 +4,11 @@ Reference lifecycle being re-expressed (SURVEY.md §3.1, dags/common/
 base_source_dag.py): branch(mode) → build frontier → dedup vs seen → schedule
 batches with politeness → fetch with retries → persist results + summary.
 Here every boundary is a stage of one declarative round plan; the commit's
-writes execute it (measured: 57–61 Spark jobs per round on perfbench's
+writes execute it (measured: 52 Spark jobs per round on perfbench's
 crawl_backlog at local[4], most of them small):
 
     frontier_log ──(latest event per key over tiers + recent rounds)──► live
-    live ──(backoff gate)──► pending ∪ deferred
+    live ──(backoff gate)──► pending (backing-off rows stay live untouched)
     pending ──(robots gate, broadcast)──► allowed ∪ disallowed keys
     allowed ──(circuit breaker: open hosts sit out)──► candidates
     candidates ──(salted 2-level top-k per host)──► scheduled
@@ -25,6 +25,10 @@ Scale decisions, explicit:
   live view is one pushed-down scan per tier plus delta-sized joins, and it
   is seen-clean by construction — the seen-set is probed only at write time,
   against the round's delta-sized winners;
+- the churn-key joins (tier shadowing, recent-event keys, the incumbent
+  probe) carry no hints: Spark's autoBroadcastJoinThreshold picks broadcast
+  or co-located merge, as it always has for the seen filter. Every branch
+  keeps the bucket layout, so neither choice moves the backlog;
 - budgets/robots are per-host (tiny) → broadcast joins, never shuffled;
 - hot-host skew bounded by the salted two-level rank (operators.politeness);
 - the fetch join broadcasts the scheduled batch against the page store, so the
@@ -39,7 +43,6 @@ local[32] and across kill/resume (tests/test_crawl_round.py).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -139,16 +142,6 @@ class CrawlConfig:
     # dirs are touched, so a partial vacuum never affects current-head reads
     # and the next fold's vacuum finishes the job.
     vacuum_after_fold: bool = False
-    # forced-broadcast ceiling for the per-round churn-key joins (the
-    # un-folded frontier_log window vs the base tiers, and the candidate/
-    # scheduled key probes). While the window's estimated key count (driver-
-    # side file-size arithmetic, no job) stays below this, churn keys
-    # broadcast — fastest, and safe: 20M longs ≈ 160 MB serialized. Above it
-    # the joins switch to the co-located bucketed merge shape: every live
-    # branch keeps HashPartitioning(url_hash, P), so only the delta-sized key
-    # sets shuffle and nothing is collected driver-side (the 10^8-key regime
-    # where a forced broadcast is an OOM cliff, VERDICT r4 watch-item #3).
-    broadcast_churn_max_keys: int = 20_000_000
     # WARC archive sidecar (sources.warc): when set, every committed round's
     # successful fetches are exported as WARC/1.0 response records under
     # warc_dir/round=NNNNNN/ (num_buckets files, bucketed by url_hash — the
@@ -312,76 +305,28 @@ def _resolve_recent_log(deltas: list[DataFrame], num_buckets: int) -> DataFrame:
     return _resolve_events(ev.repartition(num_buckets, "url_hash"))
 
 
-def _churn_broadcast_ok(store: StateStore, upto_round: int, cfg: CrawlConfig) -> bool:
-    """One regime switch per round for every forced-broadcast churn-key join:
-    True while the estimated churn-key count stays under
-    cfg.broadcast_churn_max_keys. Driver-side and jobless: EXACT row counts
-    from parquet footer metadata (:func:`_dir_rows` — immune to encoding
-    drift), falling back to file-size ÷ bytes-per-row only if a footer is
-    unreadable; either way both regimes are correct, a mis-estimate only
-    moves the crossover.
-
-    The estimate is max(un-folded window rows, newest non-empty round's
-    rows): the window bounds the resolved recent-event key set exactly, and
-    the last-round floor keeps the first round AFTER a fold honest — its
-    window is empty, but THIS round's candidate keys are ≈ last round's
-    churn, which must not be force-broadcast just because the log was folded
-    (at 10^8-key rounds that broadcast is the exact OOM cliff this switch
-    exists to prevent). When the round dirs are vacuumed too, the newest
-    tier stands in: a minor tier is the last window's resolved churn (a ≤K×
-    overestimate — conservative); a major tier is the whole backlog, which
-    errs to the merge regime — always correct, never the memory cliff."""
-    tiers = store.tiers("frontier_log")
-    floor = tiers[-1]["upto"] if tiers else -1
-    window = 0
-    last_round = 0
-    # newest-first: sum the un-folded window, then stop at the FIRST
-    # non-empty (or vacuumed — vacuum removes a contiguous ≤floor prefix)
-    # folded dir — O(window + 1) walks per round, never O(all rounds)
-    for r in reversed(store.committed_rounds()):
-        if r > upto_round:
-            continue
-        d = store._table_round_dir("frontier_log", r)
-        if r > floor:
-            b = _dir_keys_est(d)
-            window += b
-            if b and not last_round:
-                last_round = b
-        else:
-            if last_round or not os.path.isdir(d):
-                break
-            b = _dir_keys_est(d)
-            if b:
-                last_round = b
-                break
-    est = max(window, last_round)
-    if est == 0 and tiers:
-        est = _dir_keys_est(store._base_dir("frontier_log", floor))
-    return est <= cfg.broadcast_churn_max_keys
-
-
 def live_frontier_parts(
     spark: SparkSession,
     store: StateStore,
     upto_round: int,
     cfg: CrawlConfig,
     persisted: list | None = None,
-    bcast_ok: bool | None = None,
 ) -> tuple[list[DataFrame], DataFrame | None]:
     """The live frontier as a LIST of branches whose union is the live view,
     each branch keeping the store's HashPartitioning(url_hash, num_buckets)
     bucket layout — the union erases it (Spark's Union reports unknown
     output partitioning), so callers that need co-located probes (the
-    incumbent lookup's merge regime) join the branches, not the union.
+    incumbent lookup) join the branches, not the union.
 
     Branches: one per base tier (oldest→newest) + one for the resolved
     recent churn. Per tier: live rows (``~is_del`` pushed into the scan — a
     non-terminal tier carries tombstones targeting older tiers) ∖ keys of
-    every NEWER tier (zero-exchange co-located merges: both sides are
-    bucketed scans) ∖ recent-event keys (broadcast below
-    cfg.broadcast_churn_max_keys; above it the co-located merge — the
-    resolved aggregation already carries the same partitioning). Per-round
-    cost: one pushed-down scan of each tier + delta-sized everything else.
+    every NEWER tier ∖ recent-event keys. The joins carry no hints: Spark
+    broadcasts a key set under ``spark.sql.autoBroadcastJoinThreshold`` and
+    otherwise merges co-located — both tier scans are bucketed and the
+    resolved aggregation carries the same partitioning, so neither choice
+    moves the backlog. Per-round cost: one pushed-down scan of each tier +
+    delta-sized everything else.
 
     Returns ``(parts, resolved)``: parts in FRONTIER_COLS shape; ``resolved``
     = per-key-latest recent events (FRONTIER_LOG_COLS shape, persisted when a
@@ -394,19 +339,13 @@ def live_frontier_parts(
         if persisted is not None:
             resolved = resolved.persist()
             persisted.append(resolved)
-    if bcast_ok is None:  # round-constant; _run_round computes it ONCE and
-        # passes it down (the estimate walks the store's round dirs)
-        bcast_ok = _churn_broadcast_ok(store, upto_round, cfg)
     parts: list[DataFrame] = []
     for i, b in enumerate(bases):  # oldest→newest
         branch = b.where(~F.col("is_del")).select(*FRONTIER_COLS)
         for newer in bases[i + 1 :]:
             branch = branch.join(newer.select("url_hash"), "url_hash", "left_anti")
         if resolved is not None:
-            keys = resolved.select("url_hash")
-            branch = branch.join(
-                F.broadcast(keys) if bcast_ok else keys, "url_hash", "left_anti"
-            )
+            branch = branch.join(resolved.select("url_hash"), "url_hash", "left_anti")
         parts.append(branch)
     if resolved is not None:
         parts.append(resolved.where(~F.col("is_del")).select(*FRONTIER_COLS))
@@ -429,7 +368,6 @@ def live_frontier(
     cfg: CrawlConfig,
     persisted: list | None = None,
     parts_out: list | None = None,
-    bcast_ok: bool | None = None,
 ) -> DataFrame:
     """The live frontier as of committed round ``upto_round``: the union of
     :func:`live_frontier_parts` — tier branches ∖ newer-layer keys ∪ recent
@@ -441,9 +379,7 @@ def live_frontier(
     read-time seen join at all. ``parts_out``: optional list the branches
     are appended to (same contract as live_frontier_parts) for callers that
     also need the layout-preserving branches."""
-    parts, _resolved = live_frontier_parts(
-        spark, store, upto_round, cfg, persisted=persisted, bcast_ok=bcast_ok
-    )
+    parts, _resolved = live_frontier_parts(spark, store, upto_round, cfg, persisted=persisted)
     if parts_out is not None:
         parts_out.extend(parts)
     if not parts:
@@ -478,30 +414,26 @@ def pending_frontier(
     cfg: CrawlConfig,
     persisted: list | None = None,
     parts_out: list | None = None,
-    bcast_ok: bool | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Steps 0–1 of a round: the live view as of the previous round, split by
-    backoff eligibility → (pending, deferred).
+) -> DataFrame:
+    """Steps 0–1 of a round: the live view as of the previous round, cut to
+    the rows whose backoff has passed → pending. Rows still backing off stay
+    live in the log untouched.
 
     This is THE scale-critical plan of the steady state: the live view comes
     from :func:`live_frontier` — one bucketed scan per tier + delta-sized
-    joins against the resolved recent churn. No seen join exists at read
-    time because the log is kept seen-clean at write time
-    (tests/test_plan_shapes.py pins the shape on this exact function)."""
+    joins against the resolved recent churn, with Spark choosing broadcast
+    or co-located merge for each. No seen join exists at read time because
+    the log is kept seen-clean at write time (tests/test_plan_shapes.py pins
+    the shape on this exact function)."""
     round_ts = F.lit(cfg.round_ts(round_id)).cast("timestamp")
     frontier = live_frontier(
-        spark, store, round_id - 1, cfg,
-        persisted=persisted, parts_out=parts_out, bcast_ok=bcast_ok,
+        spark, store, round_id - 1, cfg, persisted=persisted, parts_out=parts_out
     )
     # backoff gate (reference C10): only rows whose next_eligible_ts has
     # passed; live ∩ seen = ∅ by construction → pending IS the eligible set
-    eligible = frontier.where(
+    return frontier.where(
         F.col("next_eligible_ts").isNull() | (F.col("next_eligible_ts") <= round_ts)
     )
-    deferred = frontier.where(
-        F.col("next_eligible_ts").isNotNull() & (F.col("next_eligible_ts") > round_ts)
-    )
-    return eligible, deferred
 
 
 def _link_lineage(
@@ -553,58 +485,6 @@ def _pagerank_priority(
     return blended, (pr_n if K > 1 else None)
 
 
-#: zstd-parquet bytes per frontier row, measured on the bench layout (16M
-#: rows → ~1.0 GB). Only feeds the churn-regime fallback ESTIMATE (when a
-#: parquet footer is unreadable) — a 2× error moves the crossover 2×.
-_FRONTIER_BYTES_PER_ROW_EST = 64
-
-
-def _dir_bytes(d: str) -> int:
-    """Driver-side parquet footprint of one store dir — feeds the
-    broadcast-regime ESTIMATE only (no Spark job; a 2× error is fine)."""
-    total = 0
-    if not os.path.isdir(d):
-        return 0
-    for dp, _dn, fns in os.walk(d):
-        for fn in fns:
-            if fn.endswith(".parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(dp, fn))
-                except OSError:
-                    pass
-    return total
-
-
-def _dir_keys_est(d: str) -> int:
-    """Churn-key count of one store dir: exact footer rows when readable,
-    bytes ÷ per-row constant otherwise."""
-    rows = _dir_rows(d)
-    return rows if rows >= 0 else _dir_bytes(d) // _FRONTIER_BYTES_PER_ROW_EST
-
-
-def _dir_rows(d: str) -> int:
-    """EXACT row count of one store dir from parquet FOOTER metadata —
-    still driver-side and jobless (a footer read is a few KB of tail bytes
-    per file), but immune to the encoding/compression drift a bytes÷constant
-    estimate suffers (VERDICT r5 wrong #5). Returns -1 when any footer is
-    unreadable so callers can fall back to the bytes estimate."""
-    if not os.path.isdir(d):
-        return 0
-    try:
-        import pyarrow.parquet as pq
-    except Exception:  # pragma: no cover - pyarrow is a baked-in dependency
-        return -1
-    total = 0
-    for dp, _dn, fns in os.walk(d):
-        for fn in fns:
-            if fn.endswith(".parquet"):
-                try:
-                    total += pq.ParquetFile(os.path.join(dp, fn)).metadata.num_rows
-                except Exception:
-                    return -1
-    return total
-
-
 def _run_round(
     spark: SparkSession,
     store: StateStore,
@@ -616,23 +496,18 @@ def _run_round(
 ) -> dict:
     round_ts = cfg.round_ts(round_id)
     live_parts: list[DataFrame] = []
-    # churn-broadcast regime: round-constant — estimated ONCE here, shared by
-    # the live view's tier joins and the incumbent probe below
-    bcast_ok = _churn_broadcast_ok(store, round_id - 1, cfg)
-    pending, deferred = pending_frontier(
-        spark, store, round_id, cfg,
-        persisted=persisted, parts_out=live_parts, bcast_ok=bcast_ok,
+    pending = pending_frontier(
+        spark, store, round_id, cfg, persisted=persisted, parts_out=live_parts
     )
 
     # 2) robots gate (broadcast join + codegen'd prefix predicate). Persisted
-    # HERE so the gated and disallowed branches do not each re-run the
+    # HERE so the allowed and disallowed branches do not each re-run the
     # live-view reconstruction at commit time. Both outcomes of the gate are
     # kept: disallowed keys become frontier tombstones.
     flagged = gate_frontier_flagged(pending, robots).persist()
     persisted.append(flagged)
-    gated = flagged.where(F.col("robots_allowed")).drop("robots_allowed")
+    allowed = flagged.where(F.col("robots_allowed")).drop("robots_allowed")
     disallowed_keys = flagged.where(~F.col("robots_allowed")).select("url_hash")
-    allowed = gated
 
     # 3) circuit breaker (reference C12): hosts with open circuits sit out this
     # round but their URLs are DEFERRED, not dropped — they stay live in the
@@ -827,58 +702,35 @@ def _run_round(
     #          row) + robots-disallowed keys.
     cand = retries.unionByName(discovered)
     cand_keys = cand.select("url_hash").distinct()
-    # incumbents = unchanged live rows competing with a candidate key.
-    # Two regimes, flipped by the same driver-side churn estimate as the
-    # live view's tier joins (cfg.broadcast_churn_max_keys):
-    if bcast_ok:
-        # broadcast regime (normal scale): probe the ROUND-CACHED gated/
-        # deferred views — (gated ∖ scheduled) covers the unscheduled and
-        # quarantined rows; deferred rows bypass the gate by design. The key
-        # sets are round-churn-sized → forced broadcast is the fast join.
-        inc_gated = (
-            gated.join(F.broadcast(cand_keys), "url_hash", "left_semi")
-            .join(F.broadcast(scheduled.select("url_hash")), "url_hash", "left_anti")
+    # incumbents = unchanged live rows competing with a candidate key. Probe
+    # each live BRANCH — every branch keeps HashPartitioning(url_hash, P)
+    # (live_frontier_parts contract), so the semi-joins move ONLY the
+    # repartitioned key set (its exchange is reused across branches), never
+    # the backlog. The probe result is ≤ |cand| rows per branch; the robots
+    # flag is re-derived on it (broadcast join), and incumbents are
+    # (eligible ∧ allowed ∧ ¬scheduled) ∪ ¬eligible — an eligible-but-
+    # disallowed row is tombstoned this round, never an incumbent.
+    ck = cand_keys.repartition(cfg.num_buckets, "url_hash")
+    probe = None
+    for p in live_parts:
+        hit = p.join(ck, "url_hash", "left_semi")
+        probe = hit if probe is None else probe.unionByName(hit)
+    inc = None
+    if probe is not None:
+        elig = F.col("next_eligible_ts").isNull() | (
+            F.col("next_eligible_ts") <= F.lit(round_ts).cast("timestamp")
+        )
+        inc = (
+            gate_frontier_flagged(probe, robots)
+            .where(F.col("robots_allowed") | ~elig)
+            .drop("robots_allowed")
+            .join(
+                scheduled.select("url_hash").repartition(cfg.num_buckets, "url_hash"),
+                "url_hash",
+                "left_anti",
+            )
             .select(*FRONTIER_COLS)
         )
-        inc = inc_gated.unionByName(
-            deferred.join(F.broadcast(cand_keys), "url_hash", "left_semi").select(
-                *FRONTIER_COLS
-            )
-        )
-    else:
-        # merge regime (churn too big to collect into the driver): probe
-        # each live BRANCH — every branch keeps HashPartitioning(url_hash,
-        # P) (live_frontier_parts contract), so the semi-joins shuffle
-        # ONLY the repartitioned key set (its exchange is reused across
-        # branches), never the backlog. The probe result is ≤ |cand| rows
-        # per branch; the robots flag is re-derived on it (broadcast
-        # join), and incumbents keep exactly the broadcast regime's rows:
-        # (eligible ∧ allowed ∧ ¬scheduled) ∪ ¬eligible — an eligible-but-
-        # disallowed row is tombstoned this round, never an incumbent.
-        ck = cand_keys.repartition(cfg.num_buckets, "url_hash")
-        probe = None
-        for p in live_parts:
-            hit = p.join(ck, "url_hash", "left_semi")
-            probe = hit if probe is None else probe.unionByName(hit)
-        if probe is None:
-            inc = None
-        else:
-            elig = F.col("next_eligible_ts").isNull() | (
-                F.col("next_eligible_ts") <= F.lit(round_ts).cast("timestamp")
-            )
-            inc = (
-                gate_frontier_flagged(probe, robots)
-                .where(F.col("robots_allowed") | ~elig)
-                .drop("robots_allowed")
-                .join(
-                    scheduled.select("url_hash").repartition(
-                        cfg.num_buckets, "url_hash"
-                    ),
-                    "url_hash",
-                    "left_anti",
-                )
-                .select(*FRONTIER_COLS)
-            )
     winners = dedup_within_batch(
         (cand if inc is None else cand.unionByName(inc)).repartition(
             cfg.num_buckets, "url_hash"

@@ -516,39 +516,16 @@ class StateStore:
         multi-path delta scan (same data `read_all` returns, split at the
         compaction floor). Part count is bounded: ≤ max_tiers + K.
         """
-        rounds = self.committed_rounds()
-        if up_to is not None:
-            rounds = [r for r in rounds if r <= up_to]
-        usable = [t for t in self.tiers(table) if up_to is None or t["upto"] <= up_to]
-        floor = usable[-1]["upto"] if usable else -1
-        # same reconstructability contract as read_all: a round past the
-        # usable tiers whose manifest says it wrote this table but whose dir
-        # is gone was folded into a deeper tier and vacuumed — returning an
-        # INCOMPLETE seen-set silently would re-schedule already-fetched URLs
-        missing = [
-            r
-            for r in rounds
-            if r > floor
-            and table in self.manifest(r).get("tables", [])
-            and not os.path.exists(self._table_round_dir(table, r))
-        ]
-        if missing:
-            raise ValueError(
-                f"{table}: rounds {missing} were compacted into a tier beyond "
-                f"up_to={up_to} and vacuumed; read_parts cannot reconstruct history"
-            )
+        tiers, delta_rounds = self._layers(table, up_to)
         bases = []
-        for t in usable:
+        for t in tiers:
             d = self._base_dir(table, t["upto"])
-            if not self._dir_has_rows(d):
-                continue  # tier folded only empty rounds
             if table in self.bucket_spec:
                 tbl = self._base_tbl_name(table, t["upto"])
                 self._ensure_registered(spark, tbl, d, t)
                 bases.append(spark.table(tbl).drop("round"))
             else:
                 bases.append(spark.read.parquet(d).drop("round"))
-        delta_rounds = [r for r in rounds if r > floor and self._round_has_rows(table, r)]
         if table in self.bucket_spec:
             deltas = [self.read_round(spark, table, r) for r in delta_rounds]
         else:
@@ -560,11 +537,44 @@ class StateStore:
             )
         return bases, deltas
 
+    def _layers(self, table: str, up_to: int | None) -> tuple[list[dict], list[int]]:
+        """The layering both readers share: (usable base tiers that hold
+        rows, oldest→newest; the rounds past them that hold rows of ``table``).
+
+        A historical read (up_to below the newest tier) uses the largest
+        usable tier prefix and the surviving round dirs. Rounds past the
+        usable tiers must still have their dirs — but only rounds whose
+        MANIFEST says they wrote this table (a round that never wrote it
+        legitimately has no dir; a vacuumed one did and doesn't). A missing
+        one was folded into a deeper tier and vacuumed: returning an
+        INCOMPLETE seen-set silently would re-schedule already-fetched URLs,
+        so this raises instead."""
+        rounds = self.committed_rounds()
+        if up_to is not None:
+            rounds = [r for r in rounds if r <= up_to]
+        usable = [t for t in self.tiers(table) if up_to is None or t["upto"] <= up_to]
+        floor = usable[-1]["upto"] if usable else -1
+        rounds = [r for r in rounds if r > floor]
+        missing = [
+            r
+            for r in rounds
+            if table in self.manifest(r).get("tables", [])
+            and not os.path.exists(self._table_round_dir(table, r))
+        ]
+        if missing:
+            raise ValueError(
+                f"{table}: rounds {missing} were compacted into a tier beyond "
+                f"up_to={up_to} and vacuumed; cannot reconstruct history"
+            )
+        # a tier that folded only empty rounds, or a round that wrote an
+        # empty table, has no files to read
+        tiers = [t for t in usable if self._dir_has_rows(self._base_dir(table, t["upto"]))]
+        return tiers, [r for r in rounds if self._round_has_rows(table, r)]
+
     def _round_has_rows(self, table: str, round_id: int) -> bool:
         """True iff the round wrote this table with ≥1 data file (bucketed
         writes of an EMPTY DataFrame emit no files at all)."""
-        d = self._table_round_dir(table, round_id)
-        return os.path.exists(d) and any(f.endswith(".parquet") for f in os.listdir(d))
+        return self._dir_has_rows(self._table_round_dir(table, round_id))
 
     def read_all(self, spark: SparkSession, table: str, up_to: int | None = None) -> DataFrame | None:
         """Union of a table across all committed rounds (e.g. the full seen-set).
@@ -577,39 +587,15 @@ class StateStore:
         usable tier prefix and the surviving round dirs; it raises if the
         needed rounds were folded deeper and vacuumed.
         """
-        rounds = self.committed_rounds()
-        if up_to is not None:
-            rounds = [r for r in rounds if r <= up_to]
-        usable = [t for t in self.tiers(table) if up_to is None or t["upto"] <= up_to]
-        floor = usable[-1]["upto"] if usable else -1
-        # rounds past the usable tiers must still have their dirs — but only
-        # rounds whose MANIFEST says they wrote this table (a round that never
-        # wrote it legitimately has no dir; a vacuumed one did and doesn't)
-        missing = [
-            r
-            for r in rounds
-            if r > floor
-            and table in self.manifest(r).get("tables", [])
-            and not os.path.exists(self._table_round_dir(table, r))
-        ]
-        if missing:
-            raise ValueError(
-                f"{table}: rounds {missing} were compacted into a tier beyond "
-                f"up_to={up_to} and vacuumed; read_all cannot reconstruct history"
-            )
+        tiers, delta_rounds = self._layers(table, up_to)
         parts = [
             # tiers compacted by earlier versions baked the synthetic `round`
             # partition column into their files — drop it (no-op otherwise)
             # so tier ∪ delta unions line up on every store vintage
             spark.read.parquet(self._base_dir(table, t["upto"])).drop("round")
-            for t in usable
-            if self._dir_has_rows(self._base_dir(table, t["upto"]))
+            for t in tiers
         ]
-        paths = [
-            self._table_round_dir(table, r)
-            for r in rounds
-            if r > floor and self._round_has_rows(table, r)
-        ]
+        paths = [self._table_round_dir(table, r) for r in delta_rounds]
         if paths:
             parts.append(
                 self._read_rounds(spark, table, paths)
