@@ -27,6 +27,19 @@ def crawl_inputs(spark, sf_dir):
     pages.unpersist()
 
 
+@pytest.fixture(scope="module")
+def three_round_store(spark, tmp_path_factory, crawl_inputs):
+    """ONE 3-round crawl with the default crawl_inputs config, shared by the
+    tests that only read a crawled store — ``(store, run_crawl stats)``.
+    Read-only: a test that commits, folds, vacuums or fabricates rounds
+    builds its own store."""
+    pages, robots, seeds, cfg = crawl_inputs
+    store = crawl_store(str(tmp_path_factory.mktemp("crawl3") / "store"), cfg)
+    stats = run_crawl(spark, store, pages, robots, seeds, rounds=3, cfg=cfg)
+    yield store, stats
+    shutil.rmtree(store.root)
+
+
 def _final_state(store, spark):
     seen = store.read_all(spark, "seen_delta")
     log = store.read_all(spark, "fetch_log")
@@ -49,10 +62,9 @@ def test_frontier_from_seeds_dedups(spark, sf_dir):
     assert f.count() < seeds.count()  # duplicate seeds collapsed
 
 
-def test_three_rounds_end_to_end(spark, tmp_path, crawl_inputs):
+def test_three_rounds_end_to_end(spark, crawl_inputs, three_round_store):
     pages, robots, seeds, cfg = crawl_inputs
-    store = crawl_store(str(tmp_path / "s1"), cfg)
-    stats = run_crawl(spark, store, pages, robots, seeds, rounds=3, cfg=cfg)
+    store, stats = three_round_store
     assert [s["round_id"] for s in stats] == [1, 2, 3]
     assert all(s["scheduled"] > 0 for s in stats)
     assert sum(s["ok"] for s in stats) > 0
@@ -81,10 +93,9 @@ def test_three_rounds_end_to_end(spark, tmp_path, crawl_inputs):
     assert metrics.where(F.col("scheduled_cnt") > 0).count() > 0
 
 
-def test_kill_resume_reproduces_state(spark, tmp_path, crawl_inputs):
+def test_kill_resume_reproduces_state(spark, tmp_path, crawl_inputs, three_round_store):
     pages, robots, seeds, cfg = crawl_inputs
-    a = crawl_store(str(tmp_path / "a"), cfg)
-    run_crawl(spark, a, pages, robots, seeds, rounds=3, cfg=cfg)
+    a, _ = three_round_store  # uninterrupted 3-round run
 
     # "killed" run: stop after round 1, then resume to 3
     b = crawl_store(str(tmp_path / "b"), cfg)
@@ -96,7 +107,6 @@ def test_kill_resume_reproduces_state(spark, tmp_path, crawl_inputs):
     run_crawl(spark, b, pages, robots, seeds, rounds=3, cfg=cfg)
 
     assert _final_state(a, spark) == _final_state(b, spark)
-    shutil.rmtree(str(tmp_path / "a"))
     shutil.rmtree(str(tmp_path / "b"))
 
 
@@ -116,10 +126,9 @@ def test_determinism_across_parallelism(spark, tmp_path, crawl_inputs):
     assert _final_state(s3, spark) == _final_state(s8, spark)
 
 
-def test_robots_and_budget_invariants(spark, tmp_path, crawl_inputs):
+def test_robots_and_budget_invariants(spark, crawl_inputs, three_round_store):
     pages, robots, seeds, cfg = crawl_inputs
-    store = crawl_store(str(tmp_path / "inv"), cfg)
-    run_crawl(spark, store, pages, robots, seeds, rounds=2, cfg=cfg)
+    store, _ = three_round_store
     log = store.read_all(spark, "fetch_log")
 
     # politeness: per (round, host) scheduled count ≤ budget
@@ -142,12 +151,10 @@ def test_robots_and_budget_invariants(spark, tmp_path, crawl_inputs):
     assert viol.count() == 0
 
 
-def test_failed_mode_frontier(spark, tmp_path, crawl_inputs):
+def test_failed_mode_frontier(spark, three_round_store):
     from web_crawling_prj_spark.plans.crawl_round import failed_mode_frontier
 
-    pages, robots, seeds, cfg = crawl_inputs
-    store = crawl_store(str(tmp_path / "fm"), cfg)
-    run_crawl(spark, store, pages, robots, seeds, rounds=2, cfg=cfg)
+    store, _ = three_round_store
     fm = failed_mode_frontier(spark, store)
     rows = fm.collect()
     assert len(rows) > 0  # unknown seeds 404 permanently
@@ -239,7 +246,9 @@ def test_robots_refresh_blocks_host_next_round(spark, tmp_path, crawl_inputs):
     assert per_round.get(2, 0) == 0 and per_round.get(3, 0) == 0  # gone after refresh
 
 
-def test_run_report_committed_and_abort_threshold(spark, tmp_path, crawl_inputs):
+def test_run_report_committed_and_abort_threshold(
+    spark, tmp_path, crawl_inputs, three_round_store
+):
     """C20/C4: every round commits a run_report row (success-rate parity with
     the metrics table); with abort_on_failed_run a flood of failures raises
     AFTER the round committed (resume-consistent abort)."""
@@ -248,9 +257,8 @@ def test_run_report_committed_and_abort_threshold(spark, tmp_path, crawl_inputs)
     from web_crawling_prj_spark.plans.reports import run_summary
 
     pages, robots, seeds, cfg = crawl_inputs
-    store = crawl_store(str(tmp_path / "rep"), cfg)
-    run_crawl(spark, store, pages, robots, seeds, rounds=2, cfg=cfg)
-    for r in (1, 2):
+    store, _ = three_round_store
+    for r in (1, 2, 3):
         rep = store.read_round(spark, "run_report", r).collect()
         assert len(rep) == 1 and rep[0].round_id == r
         m = store.read_round(spark, "metrics", r)
@@ -316,7 +324,7 @@ def test_kill_mid_compaction_is_safe(spark, tmp_path, crawl_inputs):
     store.read_all(spark, "seen_delta").limit(1).write.parquet(dead)
     assert store.base_upto("seen_delta") is None
     full = store.read_all(spark, "seen_delta").count()
-    store.compact(spark, "seen_delta", up_to=2, num_buckets=cfg.num_buckets)
+    store.compact(spark, "seen_delta", up_to=2)
     assert store.base_upto("seen_delta") == 2
     assert store.read_all(spark, "seen_delta").count() == full
 
@@ -376,24 +384,23 @@ def test_circuit_open_then_half_open(spark, tmp_path, crawl_inputs):
     assert log5.where(F.col("host") == hot).count() == 1  # exactly one probe
 
 
-def test_bucketed_store_equals_plain_store(spark, tmp_path, crawl_inputs):
+def test_bucketed_store_equals_plain_store(spark, tmp_path, crawl_inputs, three_round_store):
     """The bucketed layout is a pure physical choice: a crawl on the bucketed
     crawl_store produces the identical seen-set and schedule as one on a plain
     parquet StateStore."""
     pages, robots, seeds, cfg = crawl_inputs
     plain = StateStore(str(tmp_path / "plain"))
     run_crawl(spark, plain, pages, robots, seeds, rounds=3, cfg=cfg)
-    bkt = crawl_store(str(tmp_path / "bkt"), cfg)
-    run_crawl(spark, bkt, pages, robots, seeds, rounds=3, cfg=cfg)
+    bkt, _ = three_round_store
     assert _final_state(plain, spark) == _final_state(bkt, spark)
     shutil.rmtree(str(tmp_path / "plain"))
-    shutil.rmtree(str(tmp_path / "bkt"))
 
 
 def test_bucketed_tables_reregister_in_fresh_catalog(spark, tmp_path, crawl_inputs):
     """Resume in a NEW session: the in-memory catalog is empty, so bucketed
-    reads re-create the external table entries from manifest metadata. The
-    data (and bucket layout) live on disk; registration is metadata-only."""
+    tier reads re-create the external table entries from the tier pointer.
+    The data (and bucket layout) live on disk; registration is metadata-only.
+    The catalog holds exactly the live tiers: per-round dirs never register."""
     pages, robots, seeds, cfg = crawl_inputs
     from web_crawling_prj_spark.plans.crawl_round import live_frontier
 
@@ -403,9 +410,15 @@ def test_bucketed_tables_reregister_in_fresh_catalog(spark, tmp_path, crawl_inpu
     before = live_frontier(spark, store, 2, cfg).count()
     seen_before = store.read_all(spark, "seen_delta").count()
 
+    entries = {t.tableName for t in spark.sql(f"SHOW TABLES LIKE '{store._prefix}*'").collect()}
+    assert entries == {
+        store._tier_catalog_name(table, t["upto"])
+        for table in ("seen_delta", "frontier_log")
+        for t in store.tiers(table)
+    } == {store._tier_catalog_name("seen_delta", 2)}
     # simulate the fresh session: drop every catalog entry this store created
-    for t in spark.sql(f"SHOW TABLES LIKE '{store._prefix}*'").collect():
-        spark.sql(f"DROP TABLE {t.tableName}")
+    for name in entries:
+        spark.sql(f"DROP TABLE {name}")
     store2 = crawl_store(str(tmp_path / "fresh"), cfg)  # resumed driver
     assert store2.last_committed_round() == 2
     f = live_frontier(spark, store2, 2, cfg)
@@ -420,16 +433,14 @@ def test_bucketed_tables_reregister_in_fresh_catalog(spark, tmp_path, crawl_inpu
     assert stats["scheduled"] > 0
 
 
-def test_run_artifact_matches_committed_tables(spark, tmp_path, crawl_inputs):
+def test_run_artifact_matches_committed_tables(spark, three_round_store):
     """The rendered per-round report artifact (md + json next to the manifest)
     carries EXACTLY the committed run_report / metrics numbers."""
     import json
     import os
 
-    pages, robots, seeds, cfg = crawl_inputs
-    store = crawl_store(str(tmp_path / "art"), cfg)
-    run_crawl(spark, store, pages, robots, seeds, rounds=2, cfg=cfg)
-    for r in (1, 2):
+    store, _ = three_round_store
+    for r in (1, 2, 3):
         jpath = os.path.join(store.root, "_manifests", f"{r:06d}.report.json")
         mpath = os.path.join(store.root, "_manifests", f"{r:06d}.report.md")
         assert os.path.exists(jpath) and os.path.exists(mpath)

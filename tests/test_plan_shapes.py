@@ -297,9 +297,11 @@ def test_union_guard_enforced_at_library_level(spark, tmp_path):
     the driver's own harness session reproduced 243-vs-201 duplicate fetch
     rows in crawl_rounds_replay because only the session factory set the
     conf). statestore.guard_union_partitioning is called from every bucketed
-    catalog-read choke point and from run_crawl; this test flips the conf to
-    the buggy upstream default mid-session, reads a bucketed store across
-    two rounds, and asserts both the corrected conf and exact results."""
+    tier catalog-read choke point and from run_crawl; this test folds two
+    rounds of a bucketed table into two minor tiers, flips the conf to the
+    buggy upstream default mid-session, unions the two tier reads
+    ``read_parts`` returns, and asserts both the corrected conf and exact
+    results."""
     from web_crawling_prj_spark.plans.statestore import StateStore
 
     store = StateStore(str(tmp_path / "ug_store"), bucket_spec={"t": ("k", 8)})
@@ -307,10 +309,14 @@ def test_union_guard_enforced_at_library_level(spark, tmp_path):
     b = spark.range(500, 1500).select(F.col("id").alias("k"))
     store.commit_round(0, {"t": a.repartition(8, "k")})
     store.commit_round(1, {"t": b.repartition(8, "k")})
+    assert store.compact(spark, "t", up_to=0, max_tiers=2) == 0
+    assert store.compact(spark, "t", up_to=1, max_tiers=2) == 1  # minor
     spark.conf.set("spark.sql.unionOutputPartitioning", "true")
     try:
-        u = store.read_round(spark, "t", 0).unionByName(store.read_round(spark, "t", 1))
-        # read_round's registration path must have re-pinned the guard
+        bases, deltas = store.read_parts(spark, "t")
+        assert len(bases) == 2 and deltas == []
+        u = bases[0].unionByName(bases[1])
+        # read_parts' tier registration path must have re-pinned the guard
         assert spark.conf.get("spark.sql.unionOutputPartitioning") == "false"
         assert u.distinct().count() == 1500
         assert u.groupBy("k").count().where("count = 2").count() == 500

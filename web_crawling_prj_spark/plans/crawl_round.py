@@ -4,7 +4,7 @@ Reference lifecycle being re-expressed (SURVEY.md §3.1, dags/common/
 base_source_dag.py): branch(mode) → build frontier → dedup vs seen → schedule
 batches with politeness → fetch with retries → persist results + summary.
 Here every boundary is a stage of one declarative round plan; the commit's
-writes execute it (measured: 52 Spark jobs per round on perfbench's
+writes execute it (measured: 58 Spark jobs per round on perfbench's
 crawl_backlog at local[4], most of them small):
 
     frontier_log ──(latest event per key over tiers + recent rounds)──► live
@@ -21,10 +21,13 @@ crawl_backlog at local[4], most of them small):
     every compact_every rounds: fold seen_delta and frontier_log into tiers
 
 Scale decisions, explicit:
-- frontier_log and the seen-set are bucketed on url_hash (P buckets); the
-  live view is one pushed-down scan per tier plus delta-sized joins, and it
-  is seen-clean by construction — the seen-set is probed only at write time,
-  against the round's delta-sized winners;
+- frontier_log and the seen-set fold tiers are bucketed on url_hash (P
+  buckets); the un-folded rounds are plain parquet, read as one delta-sized
+  scan. The live view is one pushed-down scan per tier plus delta-sized
+  joins, and it is seen-clean by construction — the seen-set is probed only
+  at write time, against the round's delta-sized winners: one co-located
+  (or broadcast) anti-join per seen tier, one against the un-folded seen
+  deltas;
 - the churn-key joins (tier shadowing, recent-event keys, the incumbent
   probe) carry no hints: Spark's autoBroadcastJoinThreshold picks broadcast
   or co-located merge, as it always has for the seen filter. Every branch
@@ -178,11 +181,13 @@ class CrawlConfig:
 
 
 def crawl_store(root: str, cfg: CrawlConfig | None = None) -> StateStore:
-    """The crawl's StateStore: frontier_log and seen-set BUCKETED on url_hash
-    with cfg.num_buckets — the layout that keeps the live view's tier joins
-    and the write-time seen filter free of backlog-sized exchanges (each task
-    reads its own bucket from both sides; see tests/test_plan_shapes.py).
-    Iceberg analog: bucket(N, url_hash) partition transform on both tables."""
+    """The crawl's StateStore: frontier_log and seen-set fold tiers BUCKETED
+    on url_hash with cfg.num_buckets — the layout that keeps the live view's
+    tier joins and the write-time seen filter free of backlog-sized
+    exchanges (each task reads its own bucket from both sides; see
+    tests/test_plan_shapes.py). Per-round dirs stay plain parquet: they hold
+    only the churn since the last fold. Iceberg analog: bucket(N, url_hash)
+    partition transform on both tables."""
     cfg = cfg or CrawlConfig()
     spec = {
         "frontier_log": ("url_hash", cfg.num_buckets),
@@ -293,25 +298,13 @@ def _resolve_events(log: DataFrame) -> DataFrame:
     )
 
 
-def _resolve_recent_log(deltas: list[DataFrame], num_buckets: int) -> DataFrame:
-    """Per-key latest event over the un-folded frontier_log rounds: union of
-    the per-round logs (delta-sized: Σ round churn since the last fold), ONE
-    repartition to the frontier's bucket layout, then :func:`_resolve_events`.
-    Output partitioning is HashPartitioning(url_hash, num_buckets), so
-    downstream joins against the bucketed base/seen tables co-locate."""
-    ev = deltas[0]
-    for d in deltas[1:]:
-        ev = ev.unionByName(d)
-    return _resolve_events(ev.repartition(num_buckets, "url_hash"))
-
-
 def live_frontier_parts(
     spark: SparkSession,
     store: StateStore,
     upto_round: int,
     cfg: CrawlConfig,
     persisted: list | None = None,
-) -> tuple[list[DataFrame], DataFrame | None]:
+) -> list[DataFrame]:
     """The live frontier as a LIST of branches whose union is the live view,
     each branch keeping the store's HashPartitioning(url_hash, num_buckets)
     bucket layout — the union erases it (Spark's Union reports unknown
@@ -319,7 +312,11 @@ def live_frontier_parts(
     incumbent lookup) join the branches, not the union.
 
     Branches: one per base tier (oldest→newest) + one for the resolved
-    recent churn. Per tier: live rows (``~is_del`` pushed into the scan — a
+    recent churn — the per-key latest event over the un-folded rounds (one
+    plain scan of Σ round churn since the last fold), repartitioned ONCE to
+    the tiers' bucket layout, so the tier joins against it co-locate. It is
+    persisted when a ``persisted`` list is passed (it feeds every branch).
+    Per tier: live rows (``~is_del`` pushed into the scan — a
     non-terminal tier carries tombstones targeting older tiers) ∖ keys of
     every NEWER tier ∖ recent-event keys. The joins carry no hints: Spark
     broadcasts a key set under ``spark.sql.autoBroadcastJoinThreshold`` and
@@ -328,14 +325,11 @@ def live_frontier_parts(
     moves the backlog. Per-round cost: one pushed-down scan of each tier +
     delta-sized everything else.
 
-    Returns ``(parts, resolved)``: parts in FRONTIER_COLS shape; ``resolved``
-    = per-key-latest recent events (FRONTIER_LOG_COLS shape, persisted when a
-    ``persisted`` list is passed — it feeds many consumers per round), or
-    None when no un-folded rounds exist."""
+    Returns the branches, in FRONTIER_COLS shape."""
     bases, deltas = store.read_parts(spark, "frontier_log", up_to=upto_round)
     resolved = None
-    if deltas:
-        resolved = _resolve_recent_log(deltas, cfg.num_buckets)
+    if deltas:  # one plain scan over the un-folded rounds
+        resolved = _resolve_events(deltas[0].repartition(cfg.num_buckets, "url_hash"))
         if persisted is not None:
             resolved = resolved.persist()
             persisted.append(resolved)
@@ -349,7 +343,7 @@ def live_frontier_parts(
         parts.append(branch)
     if resolved is not None:
         parts.append(resolved.where(~F.col("is_del")).select(*FRONTIER_COLS))
-    return parts, resolved
+    return parts
 
 
 def _empty_frontier(spark: SparkSession) -> DataFrame:
@@ -379,7 +373,7 @@ def live_frontier(
     read-time seen join at all. ``parts_out``: optional list the branches
     are appended to (same contract as live_frontier_parts) for callers that
     also need the layout-preserving branches."""
-    parts, _resolved = live_frontier_parts(spark, store, upto_round, cfg, persisted=persisted)
+    parts = live_frontier_parts(spark, store, upto_round, cfg, persisted=persisted)
     if parts_out is not None:
         parts_out.extend(parts)
     if not parts:
@@ -786,7 +780,9 @@ def _run_round(
     # write-time seen filter on the delta-sized winners (this round's
     # seen_delta included): keeps the live view seen-clean so reads never
     # join against the seen-set at all. The winners carry the bucket layout
-    # (repartition upstream), so the tier joins co-locate.
+    # (repartition upstream), so the tier joins co-locate; the un-folded
+    # seen deltas are one plain scan of ≤ compact_every rounds of churn,
+    # broadcast or shuffled on their own side only.
     seen_bases, seen_deltas = store.read_parts(spark, "seen_delta", up_to=round_id - 1)
     adds = anti_join_seen_layered(winners, [*seen_bases, *seen_deltas, seen_delta])
     ftypes = {f.name: f.dataType for f in pending.select(*FRONTIER_COLS).schema.fields}
@@ -971,13 +967,7 @@ def run_crawl(
 
             archive_round(spark, store, pages, r, cfg.warc_dir, cfg.num_buckets)
         if cfg.compact_every and r % cfg.compact_every == 0:
-            store.compact(
-                spark,
-                "seen_delta",
-                up_to=r,
-                num_buckets=cfg.num_buckets,
-                max_tiers=cfg.fold_max_tiers,
-            )
+            store.compact(spark, "seen_delta", up_to=r, max_tiers=cfg.fold_max_tiers)
             # TIERED event-log fold: a minor fold resolves only the rounds
             # since the newest tier — O(window churn), keeping tombstones
             # that target older tiers — so the only O(live) job left anywhere
@@ -987,7 +977,6 @@ def run_crawl(
                 spark,
                 "frontier_log",
                 up_to=r,
-                num_buckets=cfg.num_buckets,
                 max_tiers=cfg.fold_max_tiers,
                 resolver=resolve_frontier_log,
             )

@@ -23,17 +23,23 @@ Tables are partitioned by round (directory) and data files are laid out by the
 seen-set bucket column where applicable, so reads prune by round and joins can
 reuse the bucket layout.
 
-**Bucketed layout** (``bucket_spec``): tables named in ``bucket_spec`` —
-``{table: (key_col, num_buckets)}`` — are written as BUCKETED metastore tables
-(``bucketBy(n, key)`` + explicit ``path`` under the store root, so the data
-files and the manifest commit point are exactly where they always were; only
-the catalog entry is extra). This is the 100 TB steady-state answer to the
-per-round frontier ∖ seen anti-join: when both sides carry the same
-``HashPartitioning(key, n)`` bucket layout, the join needs ZERO exchanges —
-each task reads its own bucket from both sides (Iceberg bucket-partition
-transform analog). Catalog entries are re-created from manifest metadata on
-read (``_ensure_registered``), so a resumed driver in a fresh session — whose
-in-memory catalog is empty — sees the same bucketed tables.
+**Bucketed layout** (``bucket_spec``): for tables named in ``bucket_spec`` —
+``{table: (key_col, num_buckets)}`` — every FOLD TIER is written as a
+BUCKETED metastore table (``bucketBy(n, key)`` + explicit ``path`` under the
+store root, so the data files and the pointer commit point are exactly where
+they always were; only the catalog entry is extra). Tiers hold the backlog,
+and this is the 100 TB steady-state answer to joins against it: when both
+sides carry the same ``HashPartitioning(key, n)`` bucket layout, the join
+needs ZERO exchanges — each task reads its own bucket from both sides
+(Iceberg bucket-partition transform analog). Per-round dirs are plain
+parquet: they hold ≤ K rounds of churn, every reader scans them together as
+one multi-path read (which never exposes a partitioning), and callers
+repartition on the key, so a round still writes ≤ n files. The manifest
+still records each round's bucket spec, which the layout registry and the
+drift check read. So the catalog holds exactly the live tiers; entries are
+re-created from the tier pointer on read (``_ensure_registered``), so a
+resumed driver in a fresh session — whose in-memory catalog is empty — sees
+the same bucketed tiers.
 """
 
 from __future__ import annotations
@@ -57,9 +63,10 @@ def guard_union_partitioning(spark: SparkSession) -> None:
     HashPartitioning even though Union CONCATENATES partitions (key k lands in
     partition i AND n+i) — a downstream distinct/groupBy/latest-event
     resolution then elides its exchange (including an explicit
-    ``repartition()``) and returns DUPLICATE rows. Every multi-round read of a
-    bucketed store table unions such scans, so this must be off in the session
-    executing those plans. The conf is runtime-settable; flipping it only
+    ``repartition()``) and returns DUPLICATE rows. Unions of branches built on
+    bucketed tier scans (the crawl's live view and its incumbent probe) are
+    exactly that shape, so this must be off in the session executing those
+    plans. The conf is runtime-settable; flipping it only
     removes an (incorrect) exchange elision, it never changes results of
     correct plans. Cost: one conf round-trip per call (sub-ms) — called once
     per store read entry point, not per row.
@@ -79,25 +86,29 @@ class StateStore:
         self.bucket_spec = bucket_spec or {}
         os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
         # catalog names must be unique per store root (tests run many stores
-        # against one session) and survive nothing — the manifest carries the
-        # DDL to re-register them anywhere
+        # against one session) and survive nothing — the tier pointer carries
+        # the DDL to re-register them anywhere
         self._prefix = "wcs_" + hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:10]
 
-    # --- bucketed-table plumbing ---
+    # --- bucketed-tier plumbing ---
 
-    def _tbl_name(self, table: str, round_id: int) -> str:
-        return f"{self._prefix}_{table}_r{round_id:06d}"
-
-    def _base_tbl_name(self, table: str, upto: int) -> str:
+    def _tier_catalog_name(self, table: str, upto: int) -> str:
         return f"{self._prefix}_{table}_base_{upto:06d}"
 
     @staticmethod
     def _schema_ddl(df: DataFrame) -> str:
         return df._jdf.schema().toDDL()
 
+    @staticmethod
+    def _write_plain(df: DataFrame, path: str) -> None:
+        if os.path.exists(path):
+            shutil.rmtree(path)  # orphan from a killed run
+        df.write.mode("overwrite").parquet(path)
+
     def _write_bucketed(self, df: DataFrame, table: str, path: str, tbl: str) -> dict[str, Any]:
-        """Write `df` as a bucketed external table at `path`; returns the
-        manifest metadata needed to re-register it in a fresh session.
+        """Write fold tier `df` as a bucketed external table at `path`;
+        returns the tier-pointer metadata needed to re-register it in a
+        fresh session.
 
         Callers own the partitioning: data already laid out as
         ``HashPartitioning(key, n)`` (repartition(n, key)) writes exactly one
@@ -192,19 +203,9 @@ class StateStore:
         layout = self._check_layout_drift(tables)
         from concurrent.futures import ThreadPoolExecutor
 
-        bucket_meta: dict[str, dict[str, Any]] = {}
-
         def _write(item):
             name, df = item
-            path = self._table_round_dir(name, round_id)
-            if name in self.bucket_spec:
-                bucket_meta[name] = self._write_bucketed(
-                    df, name, path, self._tbl_name(name, round_id)
-                )
-                return
-            if os.path.exists(path):
-                shutil.rmtree(path)  # orphan from a killed run
-            df.write.mode("overwrite").parquet(path)
+            self._write_plain(df, self._table_round_dir(name, round_id))
 
         # independent output dirs → write concurrently (the scheduler overlaps
         # the jobs); the manifest rename below stays the single commit point,
@@ -217,6 +218,11 @@ class StateStore:
         with ThreadPoolExecutor(max_workers=min(8, max(1, len(tables)))) as ex:
             list(ex.map(_write, tables.items()))
         meta = {"round_id": round_id, "tables": sorted(tables), **(extra_meta or {})}
+        # the round's bucket spec, replayed by _load_layout when the layout
+        # registry is lost (the dirs themselves are plain parquet)
+        bucket_meta = {
+            t: {"col": c, "n": n} for t, (c, n) in self.bucket_spec.items() if t in tables
+        }
         if bucket_meta:
             meta["bucketed"] = bucket_meta
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_manifests"), suffix=".tmp")
@@ -348,8 +354,6 @@ class StateStore:
         spark: SparkSession,
         table: str,
         up_to: int | None = None,
-        num_buckets: int | None = None,
-        bucket_col: str = "bucket",
         max_tiers: int = 4,
         resolver=None,
     ) -> int | None:
@@ -396,17 +400,10 @@ class StateStore:
             # on the key per fold buys every subsequent round a shuffle-free
             # anti-join against it
             col, n = self.bucket_spec[table]
-            tier.update(
-                self._write_bucketed(
-                    df.repartition(n, col), table, new_dir, self._base_tbl_name(table, upto)
-                )
-            )
+            tbl = self._tier_catalog_name(table, upto)
+            tier.update(self._write_bucketed(df.repartition(n, col), table, new_dir, tbl))
         else:
-            if num_buckets and bucket_col in df.columns:
-                df = df.repartition(num_buckets, bucket_col)  # keep the join layout
-            if os.path.exists(new_dir):
-                shutil.rmtree(new_dir)
-            df.write.mode("overwrite").parquet(new_dir)
+            self._write_plain(df, new_dir)
         new_tiers = [tier] if major else [*cur, tier]
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_manifests"), suffix=".tmp")
         with os.fdopen(fd, "w") as f:
@@ -418,15 +415,14 @@ class StateStore:
                 if os.path.exists(d):
                     shutil.rmtree(d)
                 if table in self.bucket_spec:
-                    spark.sql(f"DROP TABLE IF EXISTS {self._base_tbl_name(table, t['upto'])}")
+                    spark.sql(f"DROP TABLE IF EXISTS {self._tier_catalog_name(table, t['upto'])}")
         return upto
 
     def vacuum_compacted(self, table: str, spark: SparkSession | None = None) -> int:
         """Delete per-round dirs already folded into the base. Irreversible
         for per-round history: read_round on a folded round and
         read_all(up_to < base) raise afterwards (read_all at or past the base
-        is unaffected — the base carries every folded row). Pass ``spark`` to
-        also drop the folded rounds' catalog entries (bucketed tables).
+        is unaffected — the base carries every folded row).
 
         Also reaps ORPHAN tier dirs: a kill between a major fold's pointer
         publish and its cleanup loop leaves the superseded tier dirs on disk
@@ -434,7 +430,8 @@ class StateStore:
         so no later fold's cleanup ever sees them). Safe by the store's
         single-writer contract — compact and vacuum never run concurrently,
         so an unreferenced ``upto=`` dir is always a leftover, never a tier
-        mid-write."""
+        mid-write. Pass ``spark`` to also drop the orphan tiers' catalog
+        entries (bucketed tables)."""
         upto = self.base_upto(table)
         if upto is None:
             return 0
@@ -444,8 +441,6 @@ class StateStore:
             if r <= upto and os.path.exists(d):
                 shutil.rmtree(d)
                 n += 1
-                if spark is not None and table in self.bucket_spec:
-                    spark.sql(f"DROP TABLE IF EXISTS {self._tbl_name(table, r)}")
         live = {t["upto"] for t in self.tiers(table)}
         base_root = os.path.join(self.root, f"{table}__base")
         if os.path.isdir(base_root):
@@ -462,11 +457,11 @@ class StateStore:
                 n += 1
                 if spark is not None and table in self.bucket_spec:
                     spark.sql(
-                        f"DROP TABLE IF EXISTS {self._base_tbl_name(table, tier_upto)}"
+                        f"DROP TABLE IF EXISTS {self._tier_catalog_name(table, tier_upto)}"
                     )
         return n
 
-    def drop_round_table(self, table: str, round_id: int, spark: SparkSession | None = None) -> bool:
+    def drop_round_table(self, table: str, round_id: int) -> bool:
         """Delete ONE committed round's table dir (retention for superseded
         snapshot tables, e.g. pagerank_scores — only the newest is ever
         read). The manifest is untouched: ``has_table`` turns False (it
@@ -477,65 +472,53 @@ class StateStore:
         if not os.path.exists(d):
             return False
         shutil.rmtree(d)
-        if spark is not None and table in self.bucket_spec:
-            spark.sql(f"DROP TABLE IF EXISTS {self._tbl_name(table, round_id)}")
         return True
 
     # --- read path (only committed rounds are visible) ---
 
     def has_table(self, table: str, round_id: int) -> bool:
-        """True iff `round_id` is committed AND wrote this table (older stores
-        may predate a table's existence)."""
+        """True iff `round_id` is committed AND its dir for this table exists
+        (rounds that never wrote the table, and dirs reaped by
+        ``drop_round_table``/``vacuum_compacted``, have none)."""
         return os.path.exists(self._manifest_path(round_id)) and os.path.exists(
             self._table_round_dir(table, round_id)
         )
 
     def read_round(self, spark: SparkSession, table: str, round_id: int) -> DataFrame:
-        """Bucketed tables come back as catalog reads (``spark.table``) so the
-        scan exposes its HashPartitioning to joins; plain tables as parquet."""
+        """One committed round of ``table``: a plain parquet read (per-round
+        dirs carry no catalog entry, bucketed tables included)."""
         if not os.path.exists(self._manifest_path(round_id)):
             raise ValueError(f"round {round_id} is not committed")
-        bmeta = self.manifest(round_id).get("bucketed", {}).get(table)
-        if table in self.bucket_spec and bmeta is not None:
-            tbl = self._tbl_name(table, round_id)
-            self._ensure_registered(spark, tbl, self._table_round_dir(table, round_id), bmeta)
-            return spark.table(tbl)
         return spark.read.parquet(self._table_round_dir(table, round_id))
 
     def read_parts(
         self, spark: SparkSession, table: str, up_to: int | None = None
     ) -> tuple[list[DataFrame], list[DataFrame]]:
         """Layout-aware split read: ([base tiers, oldest→newest],
-        [per-round deltas]).
+        [un-folded rounds]) — the same data `read_all` returns, split at the
+        compaction floor.
 
-        For bucketed tables every part is a catalog read carrying the bucket
-        layout, so a caller can CHAIN anti-joins against each tier then each
-        delta with zero exchanges (a union would erase the partitioning —
-        Spark's Union node reports unknown output partitioning even over
-        co-bucketed children). For plain tables: per-tier dir reads + ONE
-        multi-path delta scan (same data `read_all` returns, split at the
-        compaction floor). Part count is bounded: ≤ max_tiers + K.
+        For bucketed tables every tier is a catalog read carrying the bucket
+        layout, so a caller can CHAIN anti-joins against each tier with zero
+        exchanges (a union would erase the partitioning — Spark's Union node
+        reports unknown output partitioning even over co-bucketed children).
+        Plain tables' tiers are plain dir reads. The un-folded rounds come
+        back as ONE multi-path plain scan (a list of 0 or 1 frames): it
+        holds ≤ K rounds of churn, so a join against it broadcasts or
+        shuffles only that. Part count is bounded: ≤ max_tiers + 1.
         """
         tiers, delta_rounds = self._layers(table, up_to)
         bases = []
         for t in tiers:
             d = self._base_dir(table, t["upto"])
             if table in self.bucket_spec:
-                tbl = self._base_tbl_name(table, t["upto"])
+                tbl = self._tier_catalog_name(table, t["upto"])
                 self._ensure_registered(spark, tbl, d, t)
-                bases.append(spark.table(tbl).drop("round"))
+                bases.append(spark.table(tbl))
             else:
-                bases.append(spark.read.parquet(d).drop("round"))
-        if table in self.bucket_spec:
-            deltas = [self.read_round(spark, table, r) for r in delta_rounds]
-        else:
-            paths = [self._table_round_dir(table, r) for r in delta_rounds]
-            deltas = (
-                [self._read_rounds(spark, table, paths)]
-                if paths
-                else []
-            )
-        return bases, deltas
+                bases.append(spark.read.parquet(d))
+        paths = [self._table_round_dir(table, r) for r in delta_rounds]
+        return bases, [self._read_rounds(spark, table, paths)] if paths else []
 
     def _layers(self, table: str, up_to: int | None) -> tuple[list[dict], list[int]]:
         """The layering both readers share: (usable base tiers that hold
@@ -566,14 +549,17 @@ class StateStore:
                 f"{table}: rounds {missing} were compacted into a tier beyond "
                 f"up_to={up_to} and vacuumed; cannot reconstruct history"
             )
-        # a tier that folded only empty rounds, or a round that wrote an
-        # empty table, has no files to read
+        # a tier that folded only empty rounds has no files to read (empty
+        # bucketed writes emit none); a round that never wrote the table
+        # has no dir
         tiers = [t for t in usable if self._dir_has_rows(self._base_dir(table, t["upto"]))]
         return tiers, [r for r in rounds if self._round_has_rows(table, r)]
 
     def _round_has_rows(self, table: str, round_id: int) -> bool:
-        """True iff the round wrote this table with ≥1 data file (bucketed
-        writes of an EMPTY DataFrame emit no files at all)."""
+        """True iff the round wrote this table. A round dir always holds a
+        data file: a plain write of an EMPTY DataFrame leaves one schema-only
+        file, which reads as zero rows (bucketed tier writes of an empty
+        DataFrame emit no files at all — hence the tier check in _layers)."""
         return self._dir_has_rows(self._table_round_dir(table, round_id))
 
     def read_all(self, spark: SparkSession, table: str, up_to: int | None = None) -> DataFrame | None:
@@ -588,18 +574,10 @@ class StateStore:
         needed rounds were folded deeper and vacuumed.
         """
         tiers, delta_rounds = self._layers(table, up_to)
-        parts = [
-            # tiers compacted by earlier versions baked the synthetic `round`
-            # partition column into their files — drop it (no-op otherwise)
-            # so tier ∪ delta unions line up on every store vintage
-            spark.read.parquet(self._base_dir(table, t["upto"])).drop("round")
-            for t in tiers
-        ]
+        parts = [spark.read.parquet(self._base_dir(table, t["upto"])) for t in tiers]
         paths = [self._table_round_dir(table, r) for r in delta_rounds]
         if paths:
-            parts.append(
-                self._read_rounds(spark, table, paths)
-            )
+            parts.append(self._read_rounds(spark, table, paths))
         if not parts:
             return None
         out = parts[0]

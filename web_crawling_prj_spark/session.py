@@ -43,10 +43,10 @@ def get_spark(
         # hash joins over sort-merge for the hash-keyed crawl joins; AQE
         # skew-splitting keeps partitions bounded so SHJ stays safe
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        # The crawl state store writes bucketed+sorted tables with EXACTLY one
-        # file per bucket (statestore._write_bucketed callers repartition on
-        # the bucket key), so exposing the on-disk per-bucket order is safe
-        # and turns the steady-state frontier ∖ seen anti-join into a pure
+        # The crawl state store writes its fold tiers as bucketed+sorted
+        # tables with EXACTLY one file per bucket (statestore._write_bucketed
+        # callers repartition on the bucket key), so exposing the on-disk
+        # per-bucket order is safe and turns the tier anti-joins into a pure
         # streaming merge: zero exchanges AND zero sorts. Spark only claims
         # the ordering when a bucket has ≤1 file — multi-file buckets fall
         # back to an in-memory sort, never to wrong results.
@@ -59,8 +59,9 @@ def get_spark(
         # (including explicit repartition()!) and returns duplicates.
         # Minimal repro on a stock session: two bucketBy(8,"k") tables,
         # ranges 0..999 and 500..1499 → union.distinct() = 2000, not 1500.
-        # The frontier-delta log resolution unions per-round bucketed tables
-        # before its latest-event groupBy, so this MUST stay off.
+        # The store's per-round dirs are plain parquet, but the crawl's live
+        # view and its incumbent probe union branches built on bucketed fold
+        # tier scans, so this MUST stay off.
         .config("spark.sql.unionOutputPartitioning", "false")
         # Python-boundary cost OFF the driver hot path (guide §4): PySpark 4's
         # per-DataFrame-op call-site capture costs 3 py4j round-trips + a
