@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import dataclasses
 import shutil
 
 import pytest
@@ -27,16 +28,38 @@ def crawl_inputs(spark, sf_dir):
     pages.unpersist()
 
 
+def _fold_every_2(cfg: CrawlConfig) -> CrawlConfig:
+    """``cfg`` folding every 2 rounds: a 3-round crawl then reads one fold
+    tier of each state table plus one un-folded round."""
+    return dataclasses.replace(cfg, compact_every=2)
+
+
 @pytest.fixture(scope="module")
 def three_round_store(spark, tmp_path_factory, crawl_inputs):
-    """ONE 3-round crawl with the default crawl_inputs config, shared by the
-    tests that only read a crawled store — ``(store, run_crawl stats)``.
-    Read-only: a test that commits, folds, vacuums or fabricates rounds
-    builds its own store."""
+    """ONE 3-round crawl with the crawl_inputs config folding every 2 rounds
+    (``_fold_every_2``), shared by the tests that only read a crawled store
+    — ``(store, run_crawl stats)``. Read-only: a test that commits, folds,
+    vacuums or fabricates rounds builds its own store."""
     pages, robots, seeds, cfg = crawl_inputs
+    cfg = _fold_every_2(cfg)
     store = crawl_store(str(tmp_path_factory.mktemp("crawl3") / "store"), cfg)
     stats = run_crawl(spark, store, pages, robots, seeds, rounds=3, cfg=cfg)
     yield store, stats
+    shutil.rmtree(store.root)
+
+
+@pytest.fixture(scope="module")
+def unfolded_five_rounds(spark, tmp_path_factory, crawl_inputs):
+    """ONE 5-round crawl that never folds (``compact_every=0``) — the
+    reference the fold-schedule tests compare against, shared read-only as
+    ``(store, run_crawl stats, cfg)``. A test that continues the crawl copies
+    the store first."""
+    pages, robots, seeds, cfg = crawl_inputs
+    co = dataclasses.replace(cfg, compact_every=0)
+    co.extra["max_doc_id"] = cfg.extra["max_doc_id"]
+    store = crawl_store(str(tmp_path_factory.mktemp("unfolded5") / "store"), co)
+    stats = run_crawl(spark, store, pages, robots, seeds, rounds=5, cfg=co)
+    yield store, stats, co
     shutil.rmtree(store.root)
 
 
@@ -60,6 +83,20 @@ def test_frontier_from_seeds_dedups(spark, sf_dir):
     f = frontier_from_seeds(seeds)
     assert f.count() == f.select("url_hash").distinct().count()
     assert f.count() < seeds.count()  # duplicate seeds collapsed
+
+
+def test_init_round_commits_only_the_seed_log(spark, tmp_path, crawl_inputs):
+    """Round 0 commits the seed frontier as add events and nothing else: the
+    seen-set starts empty, so no seen_delta is written."""
+    from web_crawling_prj_spark.plans.crawl_round import init_crawl, live_frontier
+
+    pages, robots, seeds, cfg = crawl_inputs
+    store = crawl_store(str(tmp_path / "init"), cfg)
+    init_crawl(spark, store, seeds, cfg)
+    assert store.manifest(0)["tables"] == ["frontier_log"]
+    assert store.read_parts(spark, "seen_delta", up_to=0) == ([], [])
+    live = live_frontier(spark, store, 0, cfg)
+    assert live.count() == frontier_from_seeds(seeds).count() > 0
 
 
 def test_three_rounds_end_to_end(spark, crawl_inputs, three_round_store):
@@ -95,6 +132,7 @@ def test_three_rounds_end_to_end(spark, crawl_inputs, three_round_store):
 
 def test_kill_resume_reproduces_state(spark, tmp_path, crawl_inputs, three_round_store):
     pages, robots, seeds, cfg = crawl_inputs
+    cfg = _fold_every_2(cfg)
     a, _ = three_round_store  # uninterrupted 3-round run
 
     # "killed" run: stop after round 1, then resume to 3
@@ -169,8 +207,6 @@ def test_failed_mode_frontier(spark, three_round_store):
 
 
 def test_pagerank_priority_round(spark, tmp_path, crawl_inputs):
-    import dataclasses
-
     pages, robots, seeds, cfg = crawl_inputs
     cfg2 = dataclasses.replace(cfg, pagerank_weight=0.4)
     cfg2.extra["max_doc_id"] = cfg.extra["max_doc_id"]
@@ -190,8 +226,6 @@ def test_pagerank_refresh_cadence_commits_and_reuses_scores(spark, tmp_path, cra
     scores without touching the fetch_log history. The refresh schedule is a
     pure function of committed state, so a rerun lands on the same rounds
     and the crawl stays deterministic."""
-    import dataclasses
-
     pages, robots, seeds, cfg = crawl_inputs
     cfg2 = dataclasses.replace(cfg, pagerank_weight=0.4, pagerank_every=3)
     cfg2.extra["max_doc_id"] = cfg.extra["max_doc_id"]
@@ -252,8 +286,6 @@ def test_run_report_committed_and_abort_threshold(
     """C20/C4: every round commits a run_report row (success-rate parity with
     the metrics table); with abort_on_failed_run a flood of failures raises
     AFTER the round committed (resume-consistent abort)."""
-    import dataclasses
-
     from web_crawling_prj_spark.plans.reports import run_summary
 
     pages, robots, seeds, cfg = crawl_inputs
@@ -277,24 +309,25 @@ def test_run_report_committed_and_abort_threshold(
     assert store2.last_committed_round() == 1  # abort happened post-commit
 
 
-def test_seen_compaction_equivalence_and_path_bound(spark, tmp_path, crawl_inputs):
+def test_seen_compaction_equivalence_and_path_bound(
+    spark, tmp_path, crawl_inputs, unfolded_five_rounds
+):
     """Compaction is a pure layout rewrite: an 8-round crawl compacting every
     3 rounds produces the identical seen-set/schedule as one that never
     compacts (itself kill/resumed mid-run), while its seen-set scan reads
     O(1+K) directories instead of one per round."""
-    import dataclasses
-
     pages, robots, seeds, cfg = crawl_inputs
     ca = dataclasses.replace(cfg, compact_every=3)
     ca.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    cb = dataclasses.replace(cfg, compact_every=0)
-    cb.extra["max_doc_id"] = cfg.extra["max_doc_id"]
 
     a = crawl_store(str(tmp_path / "ca"), cfg)
     run_crawl(spark, a, pages, robots, seeds, rounds=8, cfg=ca)
-    b = crawl_store(str(tmp_path / "cb"), cfg)
-    run_crawl(spark, b, pages, robots, seeds, rounds=4, cfg=cb)  # "killed" …
-    run_crawl(spark, b, pages, robots, seeds, rounds=8, cfg=cb)  # … resumed
+    # the never-compacting crawl, "killed" after round 5 (a copy of the
+    # shared 5-round store) and resumed to 8
+    ref, _, cb = unfolded_five_rounds
+    shutil.copytree(ref.root, str(tmp_path / "cb"))
+    b = crawl_store(str(tmp_path / "cb"), cb)
+    run_crawl(spark, b, pages, robots, seeds, rounds=8, cfg=cb)
 
     assert _final_state(a, spark) == _final_state(b, spark)
     assert a.base_upto("seen_delta") == 6  # last multiple of 3 ≤ 8
@@ -387,11 +420,15 @@ def test_circuit_open_then_half_open(spark, tmp_path, crawl_inputs):
 def test_bucketed_store_equals_plain_store(spark, tmp_path, crawl_inputs, three_round_store):
     """The bucketed layout is a pure physical choice: a crawl on the bucketed
     crawl_store produces the identical seen-set and schedule as one on a plain
-    parquet StateStore."""
+    parquet StateStore. Both fold after round 2, so bucketed tiers are
+    compared with plain ones."""
     pages, robots, seeds, cfg = crawl_inputs
     plain = StateStore(str(tmp_path / "plain"))
-    run_crawl(spark, plain, pages, robots, seeds, rounds=3, cfg=cfg)
+    run_crawl(spark, plain, pages, robots, seeds, rounds=3, cfg=_fold_every_2(cfg))
     bkt, _ = three_round_store
+    for table in ("seen_delta", "frontier_log"):
+        assert [(t["upto"], t["n"]) for t in bkt.tiers(table)] == [(2, cfg.num_buckets)]
+        assert plain.tiers(table) == [{"upto": 2}]
     assert _final_state(plain, spark) == _final_state(bkt, spark)
     shutil.rmtree(str(tmp_path / "plain"))
 
@@ -488,7 +525,6 @@ def test_tiered_compaction_minor_never_rewrites_old_tiers(spark, tmp_path, crawl
     the existing tier's files are byte-untouched (no O(N) rewrite per fold);
     a MAJOR fold (tier count > max_tiers) merges everything into one tier.
     read_all is invariant through all of it."""
-    import dataclasses
     import os
 
     pages, robots, seeds, cfg = crawl_inputs
@@ -527,7 +563,6 @@ def test_vacuum_reaps_orphan_tier_dirs(spark, tmp_path, crawl_inputs):
     leaves superseded tier dirs unreferenced forever (no later fold's
     cleanup lists them). vacuum_compacted reaps them; live tiers and the
     folded state are untouched."""
-    import dataclasses
     import os
 
     pages, robots, seeds, cfg = crawl_inputs
@@ -552,7 +587,9 @@ def test_vacuum_reaps_orphan_tier_dirs(spark, tmp_path, crawl_inputs):
     assert frozenset(r.url_hash for r in store.read_all(spark, "seen_delta").collect()) == truth
 
 
-def test_tiered_frontier_folds_and_merge_regime_equal_unfolded(spark, tmp_path, crawl_inputs):
+def test_tiered_frontier_folds_and_merge_regime_equal_unfolded(
+    spark, tmp_path, crawl_inputs, unfolded_five_rounds
+):
     """Round-5 headline: TIERED frontier-log folds (minor folds O(window
     churn), tombstones kept until a major fold) + the co-located MERGE plan
     for every churn-key join (spark.sql.autoBroadcastJoinThreshold=-1 forces
@@ -561,18 +598,18 @@ def test_tiered_frontier_folds_and_merge_regime_equal_unfolded(spark, tmp_path, 
     9 rounds exercises: terminal first fold (r2), minor fold with tombstones
     (r4), MAJOR fold (r6, tier count would exceed 2), minor again (r8) — and
     the old tier's files are byte-untouched by the minor fold."""
-    import dataclasses
     import os
 
     pages, robots, seeds, cfg = crawl_inputs
-    co = dataclasses.replace(cfg, compact_every=0)
-    co.extra["max_doc_id"] = cfg.extra["max_doc_id"]
     cn = dataclasses.replace(cfg, compact_every=2, fold_max_tiers=2)
     cn.extra["max_doc_id"] = cfg.extra["max_doc_id"]
 
+    # the unfolded store continues past round 5: copy the shared one
+    ref, sa, co = unfolded_five_rounds
+    shutil.copytree(ref.root, str(tmp_path / "tier_old"))
     a = crawl_store(str(tmp_path / "tier_old"), co)
     b = crawl_store(str(tmp_path / "tier_new"), cn)
-    sa = run_crawl(spark, a, pages, robots, seeds, rounds=5, cfg=co)
+    sa = list(sa)
 
     def tier_files(store, upto):
         d = store._base_dir("frontier_log", upto)
@@ -605,22 +642,19 @@ def test_tiered_frontier_folds_and_merge_regime_equal_unfolded(spark, tmp_path, 
     shutil.rmtree(str(tmp_path / "tier_new"))
 
 
-def test_vacuum_after_fold_bounds_store_dirs(spark, tmp_path, crawl_inputs):
+def test_vacuum_after_fold_bounds_store_dirs(spark, tmp_path, crawl_inputs, unfolded_five_rounds):
     """CrawlConfig.vacuum_after_fold reclaims folded round dirs each fold:
     the store's per-round dir inventory stays bounded by the un-folded
-    window, the crawl's observable state is unchanged, and a partial
-    (killed) vacuum is repaired by the next one."""
-    import dataclasses
+    window, the crawl's observable state is unchanged (equal to a crawl
+    that never folds), and a partial (killed) vacuum is repaired by the
+    next one."""
     import os
 
     pages, robots, seeds, cfg = crawl_inputs
     cv = dataclasses.replace(cfg, compact_every=2, vacuum_after_fold=True)
     cv.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    cn = dataclasses.replace(cfg, compact_every=2)
-    cn.extra["max_doc_id"] = cfg.extra["max_doc_id"]
 
     a = crawl_store(str(tmp_path / "vac"), cv)
-    b = crawl_store(str(tmp_path / "novac"), cn)
     run_crawl(spark, a, pages, robots, seeds, rounds=4, cfg=cv)
 
     def round_dirs(store, table):
@@ -641,11 +675,13 @@ def test_vacuum_after_fold_bounds_store_dirs(spark, tmp_path, crawl_inputs):
         fh.write(b"stale bytes from a killed vacuum")  # never read: r3 <= floor
     run_crawl(spark, a, pages, robots, seeds, rounds=5, cfg=cv)
     assert round_dirs(a, "frontier_log") == ["round=000003", "round=000005"]
-    run_crawl(spark, b, pages, robots, seeds, rounds=5, cfg=cn)
-    assert _final_state(a, spark) == _final_state(b, spark)  # remnant ignored
+    ref, _, cn = unfolded_five_rounds
+    assert _final_state(a, spark) == _final_state(ref, spark)  # remnant ignored
     # resume past the vacuumed history keeps working, and the r6 fold's
     # vacuum repairs the killed one: the round-3 remnant is gone
     run_crawl(spark, a, pages, robots, seeds, rounds=7, cfg=cv)
+    shutil.copytree(ref.root, str(tmp_path / "novac"))
+    b = crawl_store(str(tmp_path / "novac"), cn)
     run_crawl(spark, b, pages, robots, seeds, rounds=7, cfg=cn)
     assert _final_state(a, spark) == _final_state(b, spark)
     assert not os.path.exists(remnant)
@@ -664,7 +700,7 @@ def test_vacuum_after_fold_bounds_store_dirs(spark, tmp_path, crawl_inputs):
     ],
 )
 def test_fold_schedule_sweep_equals_unfolded(
-    spark, tmp_path, crawl_inputs, compact_every, fold_max_tiers, vacuum
+    spark, tmp_path, crawl_inputs, unfolded_five_rounds, compact_every, fold_max_tiers, vacuum
 ):
     """Fold-schedule property: ANY (compact_every, fold_max_tiers,
     vacuum_after_fold) combination reproduces the exact crawl of an
@@ -673,12 +709,8 @@ def test_fold_schedule_sweep_equals_unfolded(
     is empty at EVERY round boundary, so the tier-only live view and the
     drained-detection paths run constantly) and deep tier stacks (tier-vs-
     tier tombstone shadowing through 3 layers)."""
-    import dataclasses
-
     pages, robots, seeds, cfg = crawl_inputs
     tag = f"{compact_every}_{fold_max_tiers}_{vacuum}"
-    co = dataclasses.replace(cfg, compact_every=0)
-    co.extra["max_doc_id"] = cfg.extra["max_doc_id"]
     cn = dataclasses.replace(
         cfg,
         compact_every=compact_every,
@@ -686,29 +718,21 @@ def test_fold_schedule_sweep_equals_unfolded(
         vacuum_after_fold=vacuum,
     )
     cn.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    a = crawl_store(str(tmp_path / f"sw_old_{tag}"), co)
+    a, sa, _ = unfolded_five_rounds
     b = crawl_store(str(tmp_path / f"sw_new_{tag}"), cn)
-    sa = run_crawl(spark, a, pages, robots, seeds, rounds=5, cfg=co)
     sb = run_crawl(spark, b, pages, robots, seeds, rounds=5, cfg=cn)
     assert sa == sb
     assert _final_state(a, spark) == _final_state(b, spark)
-    shutil.rmtree(str(tmp_path / f"sw_old_{tag}"))
     shutil.rmtree(str(tmp_path / f"sw_new_{tag}"))
 
 
-def test_delta_mode_commit_volume_tracks_churn_not_frontier(spark, tmp_path, crawl_inputs):
+def test_delta_mode_commit_volume_tracks_churn_not_frontier(spark, unfolded_five_rounds):
     """The delta store's per-round frontier commit is bounded by round
     ACTIVITY (adds = retries + discovery winners; dels = scheduled +
     disallowed keys) — unchanged backlog rows are never rewritten."""
-    import dataclasses
-
     from web_crawling_prj_spark.plans.crawl_round import live_frontier
 
-    pages, robots, seeds, cfg = crawl_inputs
-    cn = dataclasses.replace(cfg, compact_every=0)
-    cn.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    store = crawl_store(str(tmp_path / "churn"), cn)
-    stats = run_crawl(spark, store, pages, robots, seeds, rounds=5, cfg=cn)
+    store, stats, cn = unfolded_five_rounds
 
     for s in stats:
         r = s["round_id"]
@@ -727,15 +751,12 @@ def test_delta_mode_commit_volume_tracks_churn_not_frontier(spark, tmp_path, cra
     live = live_frontier(spark, store, 5, cn)
     assert live.count() > 0
     assert live.groupBy("url_hash").count().where("count > 1").count() == 0
-    shutil.rmtree(str(tmp_path / "churn"))
 
 
 def test_drained_frontier_yields_idle_round_not_crash(spark, tmp_path, crawl_inputs):
     """A delta store whose frontier legitimately drains (all tombstones,
     folded to an EMPTY tier — empty bucketed writes emit no files) must keep
     running idle rounds, not die in live_frontier with a missing-log error."""
-    import dataclasses
-
     from web_crawling_prj_spark.plans.crawl_round import live_frontier
 
     pages, robots, seeds, cfg = crawl_inputs
@@ -747,6 +768,31 @@ def test_drained_frontier_yields_idle_round_not_crash(spark, tmp_path, crawl_inp
     assert stats[-1]["scheduled"] == 0  # fully drained, still committing rounds
     assert live_frontier(spark, store, 6, tiny).count() == 0
     shutil.rmtree(str(tmp_path / "drain"))
+
+
+def test_live_frontier_of_empty_log_and_of_no_log(spark, tmp_path):
+    """An empty committed frontier_log is an empty frontier, before and
+    after it folds into an empty tier; a store that holds no frontier_log
+    at all is refused."""
+    from web_crawling_prj_spark.plans.crawl_round import (
+        FRONTIER_LOG_COLS,
+        _empty_frontier,
+        live_frontier,
+        resolve_frontier_log,
+    )
+
+    cfg = CrawlConfig(num_buckets=4)
+    store = crawl_store(str(tmp_path / "empty_log"), cfg)
+    log = _empty_frontier(spark).withColumns({"evt_round": F.lit(0), "is_del": F.lit(False)})
+    store.commit_round(0, {"frontier_log": log.select(*FRONTIER_LOG_COLS)})
+    assert live_frontier(spark, store, 0, cfg).count() == 0
+    assert store.compact(spark, "frontier_log", resolver=resolve_frontier_log) == 0
+    assert live_frontier(spark, store, 0, cfg).count() == 0
+
+    seen_only = crawl_store(str(tmp_path / "seen_only"), cfg)
+    seen_only.commit_round(0, {"seen_delta": spark.range(3).selectExpr("id AS url_hash")})
+    with pytest.raises(ValueError, match="no frontier event log"):
+        live_frontier(spark, seen_only, 0, cfg)
 
 
 def test_tracking_param_aliases_collapse_before_seen(spark):

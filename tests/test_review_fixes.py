@@ -283,89 +283,67 @@ def test_read_parts_raises_on_vacuumed_history(spark, tmp_path, reader):
 
 
 def test_bucket_layout_drift_refused(spark, tmp_path):
-    """Resuming a bucketed store with a different num_buckets must fail loudly
-    — mixed layouts would silently put the exchange back in every
-    co-partitioned join."""
-    import pytest
-
+    """Once a fold tier exists, resuming a bucketed store with a different
+    num_buckets must fail loudly — mixed layouts would silently put the
+    exchange back in every co-partitioned join."""
     from web_crawling_prj_spark.plans.crawl_round import CrawlConfig, crawl_store
 
-    store = crawl_store(str(tmp_path / "drift"), CrawlConfig(num_buckets=8))
+    root = str(tmp_path / "drift")
     df = spark.range(10).selectExpr("xxhash64(id) as url_hash")
+    store = crawl_store(root, CrawlConfig(num_buckets=8))
     store.commit_round(0, {"seen_delta": df.repartition(8, "url_hash")})
+    assert store.compact(spark, "seen_delta") == 0
 
-    resumed = crawl_store(str(tmp_path / "drift"), CrawlConfig(num_buckets=16))
+    resumed = crawl_store(root, CrawlConfig(num_buckets=16))
     with pytest.raises(ValueError, match="bucket layout cannot change"):
         resumed.commit_round(1, {"seen_delta": df.repartition(16, "url_hash")})
+    with pytest.raises(ValueError, match="bucket layout cannot change"):
+        resumed.compact(spark, "seen_delta")
     # same layout resumes fine
-    ok = crawl_store(str(tmp_path / "drift"), CrawlConfig(num_buckets=8))
+    ok = crawl_store(root, CrawlConfig(num_buckets=8))
     ok.commit_round(1, {"seen_delta": df.repartition(8, "url_hash")})
     assert ok.last_committed_round() == 1
 
 
-def test_bucket_layout_drift_refused_both_directions(spark, tmp_path):
-    """Dropping bucketing on resume (bucketed store → plain writer) must be
-    refused just like changing the bucket count."""
-    import pytest
+def test_bucket_layout_free_until_first_fold(spark, tmp_path):
+    """Before the first fold no layout is on disk: a writer with another
+    spec commits fine, and its first fold records that writer's layout in
+    the tier pointer — the only record of it (no registry file, no
+    per-manifest copy)."""
+    import os
 
+    from web_crawling_prj_spark.plans.crawl_round import CrawlConfig, crawl_store
+
+    root = str(tmp_path / "free")
+    df = spark.range(10).selectExpr("xxhash64(id) as url_hash")
+    store = crawl_store(root, CrawlConfig(num_buckets=8))
+    store.commit_round(0, {"seen_delta": df.repartition(8, "url_hash")})
+    first = crawl_store(root, CrawlConfig(num_buckets=16))  # no tier yet: accepted
+    first.commit_round(1, {"seen_delta": df.repartition(16, "url_hash")})
+    assert first.compact(spark, "seen_delta") == 1
+    assert [(t["col"], t["n"]) for t in first.tiers("seen_delta")] == [("url_hash", 16)]
+    assert not os.path.exists(os.path.join(root, "_manifests", "_layout.json"))
+    assert all("bucketed" not in first.manifest(r) for r in (0, 1))
+
+
+def test_bucket_layout_drift_refused_both_directions(spark, tmp_path):
+    """Once a fold tier exists, dropping bucketing on resume (bucketed store
+    → plain writer) must be refused just like changing the bucket count,
+    and so must adding it (plain store → bucketed writer)."""
     from web_crawling_prj_spark.plans.crawl_round import CrawlConfig, crawl_store
     from web_crawling_prj_spark.plans.statestore import StateStore
 
     bkt = crawl_store(str(tmp_path / "dir2"), CrawlConfig(num_buckets=8))
     df = spark.range(10).selectExpr("xxhash64(id) as url_hash")
     bkt.commit_round(0, {"seen_delta": df.repartition(8, "url_hash")})
+    bkt.compact(spark, "seen_delta")
     plain = StateStore(str(tmp_path / "dir2"))
     with pytest.raises(ValueError, match="bucket layout cannot change"):
         plain.commit_round(1, {"seen_delta": df})
     # and plain → bucketed is refused too
     p2 = StateStore(str(tmp_path / "dir3"))
     p2.commit_round(0, {"seen_delta": df})
+    p2.compact(spark, "seen_delta")
     b2 = crawl_store(str(tmp_path / "dir3"), CrawlConfig(num_buckets=8))
     with pytest.raises(ValueError, match="bucket layout cannot change"):
         b2.commit_round(1, {"seen_delta": df.repartition(8, "url_hash")})
-
-
-def test_layout_registry_file_written_and_used(spark, tmp_path):
-    """The _layout.json registry is actually created on the first commit (the
-    post-commit replay would already contain the round's tables — regression
-    for the unreachable-registration ordering) and later commits check
-    against it without replaying manifests."""
-    import json
-    import os
-
-    from web_crawling_prj_spark.plans.crawl_round import CrawlConfig, crawl_store
-
-    store = crawl_store(str(tmp_path / "layoutreg"), CrawlConfig(num_buckets=8))
-    df = spark.range(10).selectExpr("id AS url_hash", "CAST(id AS INT) AS bucket",
-                                    "CAST(1 AS INT) AS first_seen_round",
-                                    "CAST(NULL AS TIMESTAMP) AS first_seen_ts")
-    store.commit_round(0, {"seen_delta": df.repartition(8, "url_hash")})
-    path = os.path.join(store.root, "_manifests", "_layout.json")
-    assert os.path.exists(path)
-    reg = json.load(open(path))
-    assert reg["seen_delta"] == {"col": "url_hash", "n": 8}
-    # drift still refused, now via the registry
-    drifted = crawl_store(str(tmp_path / "layoutreg"), CrawlConfig(num_buckets=16))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="bucket layout"):
-        drifted.commit_round(1, {"seen_delta": df.repartition(16, "url_hash")})
-
-
-def test_layout_drift_refused_after_registry_loss(spark, tmp_path):
-    """A process killed between a round's manifest rename and the layout
-    registry write leaves committed rounds with no _layout.json. The registry
-    is then rebuilt by replaying the manifests, so a writer with a different
-    bucket count is still refused."""
-    import os
-
-    from web_crawling_prj_spark.plans.crawl_round import CrawlConfig, crawl_store
-
-    store = crawl_store(str(tmp_path / "replay"), CrawlConfig(num_buckets=8))
-    df = spark.range(10).selectExpr("xxhash64(id) as url_hash")
-    store.commit_round(0, {"seen_delta": df.repartition(8, "url_hash")})
-    os.remove(os.path.join(store.root, "_manifests", "_layout.json"))
-
-    resumed = crawl_store(str(tmp_path / "replay"), CrawlConfig(num_buckets=16))
-    with pytest.raises(ValueError, match="bucket layout cannot change"):
-        resumed.commit_round(1, {"seen_delta": df.repartition(16, "url_hash")})

@@ -186,7 +186,22 @@ def test_token_bucket_stream_with_ttl_enabled(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # an availableNow query with a processing-time state timeout keeps
+    # running no-data batches until its idle state expires (idle_ttl_ms),
+    # so wait (120 s at most) for the rows to reach the sink and stop it,
+    # not for termination
+    import time
+
+    deadline = time.monotonic() + 120
+    try:
+        while (
+            q.isActive
+            and time.monotonic() < deadline
+            and spark.sql("SELECT count(*) FROM ttl_gate").first()[0] < len(rows)
+        ):
+            time.sleep(0.5)
+    finally:
+        q.stop()
     got = spark.sql("SELECT * FROM ttl_gate").collect()
     assert len(got) == 6
     # burst 3 + refills: first 3 admitted immediately; each +1 epoch refills 2

@@ -56,10 +56,10 @@ def resolve_redirects(
         state = nxt.where(F.col("_s").isNotNull()).select(
             "src", F.col("_d").alias("final"), (F.col("hops") + 1).alias("hops")
         )
-        # checkpoint the lineage every few hops: an 8-deep loop of joins is
-        # fine, but callers may pass larger budgets
-        if len(done_parts) % 4 == 0:
-            state = state.localCheckpoint(eager=False)
+        # checkpoint every hop: hop k's done rows and the next state both
+        # read state k, so without the cut the final union re-runs the whole
+        # join chain once per hop (quadratic in max_hops)
+        state = state.localCheckpoint(eager=False)
     # rows still holding an edge after the budget: terminated iff their
     # current node has no outgoing edge (the hop budget landed exactly on a
     # terminal), else over-budget/cycle

@@ -4,7 +4,7 @@ Reference lifecycle being re-expressed (SURVEY.md §3.1, dags/common/
 base_source_dag.py): branch(mode) → build frontier → dedup vs seen → schedule
 batches with politeness → fetch with retries → persist results + summary.
 Here every boundary is a stage of one declarative round plan; the commit's
-writes execute it (measured: 58 Spark jobs per round on perfbench's
+writes execute it (measured: 56 Spark jobs per round on perfbench's
 crawl_backlog at local[4], most of them small):
 
     frontier_log ──(latest event per key over tiers + recent rounds)──► live
@@ -238,18 +238,13 @@ def frontier_from_seeds(seeds: DataFrame) -> DataFrame:
 
 
 def init_crawl(spark: SparkSession, store: StateStore, seeds: DataFrame, cfg: CrawlConfig) -> None:
-    """Round 0: commit the seed frontier (as round-0 add events) and an empty
-    seen-set."""
+    """Round 0: commit the seed frontier as round-0 add events. The seen-set
+    starts empty, so round 0 writes no seen_delta."""
     frontier = frontier_from_seeds(seeds).repartition(cfg.num_buckets, "url_hash")
-    empty_seen = spark.createDataFrame(
-        [], "url_hash long, bucket int, first_seen_round int, first_seen_ts timestamp"
-    )
     log0 = frontier.withColumns({"evt_round": F.lit(0), "is_del": F.lit(False)}).select(
         *FRONTIER_LOG_COLS
     )
-    store.commit_round(
-        0, {"frontier_log": log0, "seen_delta": empty_seen}, extra_meta={"kind": "init"}
-    )
+    store.commit_round(0, {"frontier_log": log0}, extra_meta={"kind": "init"})
 
 
 def run_round(
@@ -377,20 +372,12 @@ def live_frontier(
     if parts_out is not None:
         parts_out.extend(parts)
     if not parts:
-        # no parts with rows. Either the frontier legitimately DRAINED (all
-        # tombstones folded to an empty tier — empty bucketed writes emit no
-        # files) / init ran with zero seeds, or this store has no frontier
-        # event log at all. A crawl store commits frontier_log EVERY round,
-        # so the newest manifest answers — walk newest-first and stop at the
-        # first mention (the drained idle tail must not re-parse every
-        # manifest each round).
+        # no parts with rows. Every committed frontier_log round leaves a
+        # parquet file (an empty round a schema-only one), so either the
+        # frontier DRAINED into an empty tier (empty bucketed writes emit no
+        # files) or this store has no frontier event log at all.
         if store.base_upto("frontier_log") is not None:
             return _empty_frontier(spark)
-        for r in reversed(store.committed_rounds()):
-            if r > upto_round:
-                continue
-            if "frontier_log" in store.manifest(r).get("tables", []):
-                return _empty_frontier(spark)
         raise ValueError(
             f"no frontier_log state up to round {upto_round} — this store has "
             "no frontier event log; it was not created by init_crawl/run_crawl"
@@ -641,7 +628,10 @@ def _run_round(
             F.col("fetched_ts").alias("discovered_ts"),
             F.col("url_hash").alias("src_url_hash"),
         )
-        r3 = canonicalize_urls_hybrid(r3, "_loc", "dst").drop("_loc")
+        # persisted: the hop loop reads the edges once per hop, and the
+        # terminals feed both the candidate keys and the winners
+        r3 = canonicalize_urls_hybrid(r3, "_loc", "dst").drop("_loc").persist()
+        persisted.append(r3)
         resolved = resolve_redirects(r3.select("src", "dst"), max_hops=cfg.redirect_max_hops)
         terminals = (
             resolved.where(F.col("terminated"))
@@ -659,7 +649,9 @@ def _run_round(
                 F.lit(None).cast("timestamp").alias("next_eligible_ts"),
             )
             .select(*FRONTIER_COLS)
+            .persist()
         )
+        persisted.append(terminals)
         discovered = discovered.unionByName(terminals)
 
     # 7c) focused crawling (WWW'99): blend each parent page's BM25 topic

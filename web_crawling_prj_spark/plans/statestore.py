@@ -34,12 +34,15 @@ needs ZERO exchanges — each task reads its own bucket from both sides
 (Iceberg bucket-partition transform analog). Per-round dirs are plain
 parquet: they hold ≤ K rounds of churn, every reader scans them together as
 one multi-path read (which never exposes a partitioning), and callers
-repartition on the key, so a round still writes ≤ n files. The manifest
-still records each round's bucket spec, which the layout registry and the
-drift check read. So the catalog holds exactly the live tiers; entries are
-re-created from the tier pointer on read (``_ensure_registered``), so a
-resumed driver in a fresh session — whose in-memory catalog is empty — sees
-the same bucketed tiers.
+repartition on the key, so a round still writes ≤ n files. The tier
+pointer (``_manifests/<table>.base.json``) is the only record of a table's
+layout: each bucketed tier carries its (col, n) and schema DDL, a plain tier
+neither; round manifests record no layout. The drift check compares a
+writer's spec with the newest tier, so a store is free to pick its layout
+until its first fold and fixed after it. The catalog holds exactly the live
+tiers; entries are re-created from the tier pointer on read
+(``_ensure_registered``), so a resumed driver in a fresh session — whose
+in-memory catalog is empty — sees the same bucketed tiers.
 """
 
 from __future__ import annotations
@@ -193,14 +196,15 @@ class StateStore:
         """Write all tables for a round, then atomically publish the manifest.
 
         If the process dies mid-write, no manifest exists → the round never
-        happened; rerunning the round overwrites the orphan directories.
+        happened; rerunning the round overwrites the orphan directories. The
+        manifest rename is the round's only commit step. A writer whose
+        bucket spec drifted from a table's fold tiers is refused before
+        anything is written (``_check_layout_drift``).
         """
         if os.path.exists(self._manifest_path(round_id)):
             raise ValueError(f"round {round_id} already committed")
-        # snapshot the layout registry BEFORE the commit point: after the
-        # manifest rename a replay-seeded registry would already contain this
-        # round's tables and first-seen registration would never fire
-        layout = self._check_layout_drift(tables)
+        for name in tables:  # refuse a drifted writer before anything is written
+            self._check_layout_drift(name)
         from concurrent.futures import ThreadPoolExecutor
 
         def _write(item):
@@ -218,92 +222,33 @@ class StateStore:
         with ThreadPoolExecutor(max_workers=min(8, max(1, len(tables)))) as ex:
             list(ex.map(_write, tables.items()))
         meta = {"round_id": round_id, "tables": sorted(tables), **(extra_meta or {})}
-        # the round's bucket spec, replayed by _load_layout when the layout
-        # registry is lost (the dirs themselves are plain parquet)
-        bucket_meta = {
-            t: {"col": c, "n": n} for t, (c, n) in self.bucket_spec.items() if t in tables
-        }
-        if bucket_meta:
-            meta["bucketed"] = bucket_meta
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_manifests"), suffix=".tmp")
         with os.fdopen(fd, "w") as f:
             json.dump(meta, f)
         os.rename(tmp, self._manifest_path(round_id))  # the atomic commit point
-        # record first-seen layouts AFTER the commit point (a killed write
-        # must not register a layout for a round that never happened), using
-        # the PRE-commit snapshot so newly-committed tables register
-        changed = not os.path.exists(self._layout_path())
-        for name in tables:
-            if name not in layout:
-                spec = self.bucket_spec.get(name)
-                layout[name] = {"col": spec[0], "n": spec[1]} if spec else None
-                changed = True
-        if changed:
-            self._save_layout(layout)
         return meta
 
-    def _layout_path(self) -> str:
-        return os.path.join(self.root, "_manifests", "_layout.json")
-
-    def _load_layout(self) -> dict[str, Any]:
-        """Store-level layout registry: table → {col, n} (bucketed) or None
-        (plain), recorded the first time each table is committed. A missing
-        registry is rebuilt by replaying every manifest oldest→newest (the
-        newest mention of a table wins, so a table committed intermittently
-        is still covered). The replay is the crash-recovery path: a process
-        killed between a round's manifest rename and ``_save_layout`` leaves
-        committed rounds with no registry, and without the replay the next
-        writer could commit a drifted layout unchecked."""
-        path = self._layout_path()
-        if os.path.exists(path):
-            with open(path) as f:
-                return json.load(f)
-        layout: dict[str, Any] = {}
-        for r in self.committed_rounds():
-            m = self.manifest(r)
-            b = m.get("bucketed", {})
-            for t in m.get("tables", []):
-                layout[t] = {"col": b[t]["col"], "n": b[t]["n"]} if t in b else None
-        return layout
-
-    def _save_layout(self, layout: dict[str, Any]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_manifests"), suffix=".ltmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(layout, f)
-        os.rename(tmp, self._layout_path())
-
-    def _check_layout_drift(self, tables: dict[str, DataFrame]) -> dict[str, Any]:
-        """The bucket layout is STORE-INTRINSIC: a resume whose writer differs
-        from the committed rounds — different (col, n), bucketing dropped, or
-        bucketing newly added — would write new rounds in a mismatched layout.
-        Reads stay CORRECT either way (each table re-registers with its own
-        recorded spec) but every co-partitioned join silently regains its
-        exchange. Refuse loudly, in BOTH directions, for EVERY table ever
-        committed (the registry covers intermittently-committed tables too)."""
-        layout = self._load_layout()
-        if not layout:
-            return layout
-        for name in tables:
-            if name not in layout:
-                continue  # table is new to the store: any layout is fine
-            old = layout[name]
-            new = self.bucket_spec.get(name)
-            if old is None and new is None:
-                continue
-            if old is None or new is None:
-                was = "bucketed" if old is not None else "plain"
-                now = "bucketed" if new is not None else "plain"
-                raise ValueError(
-                    f"{name}: store was committed {was} but this writer is "
-                    f"{now} — bucket layout cannot change mid-store"
-                )
-            if (old["col"], old["n"]) != tuple(new):
-                raise ValueError(
-                    f"{name}: store was committed with bucket layout "
-                    f"({old['col']}, {old['n']}) but this writer is configured "
-                    f"for {tuple(new)} — bucket layout cannot change mid-store"
-                )
-        return layout
+    def _check_layout_drift(self, table: str) -> None:
+        """The bucket layout is STORE-INTRINSIC once a fold tier exists: a
+        writer whose spec differs from the newest tier's — different
+        (col, n), bucketing dropped, or bucketing newly added — would fold
+        later rounds into a mismatched layout, and every co-partitioned join
+        would silently regain its exchange. Refuse loudly, in BOTH
+        directions. The tier pointer is the only record of a layout (a
+        bucketed tier records col/n, a plain one neither); before the first
+        fold nothing is on disk to drift from, so any writer is accepted."""
+        tiers = self.tiers(table)
+        if not tiers:
+            return
+        old = (tiers[-1]["col"], tiers[-1]["n"]) if "col" in tiers[-1] else None
+        new = tuple(self.bucket_spec[table]) if table in self.bucket_spec else None
+        if old != new:
+            was = f"bucketed {old}" if old else "plain"
+            now = f"bucketed {new}" if new else "plain"
+            raise ValueError(
+                f"{table}: store tiers are {was} but this writer is {now} — "
+                "bucket layout cannot change mid-store"
+            )
 
     # --- compaction (Iceberg rewrite_data_files analog, LSM-tiered) ---
     #
@@ -360,7 +305,9 @@ class StateStore:
         """Fold the rounds since the newest tier into a base tier (minor), or
         everything into one tier when ``max_tiers`` would be exceeded (major);
         atomic pointer swap either way. Returns the new tier's upto round, or
-        None if there is nothing to fold.
+        None if there is nothing to fold. The tier is written in this store's
+        ``bucket_spec`` layout, and its pointer entry records that layout; a
+        spec that drifted from the newest tier's is refused first.
 
         ``resolver``: optional callable applied to the folded union before
         writing — for EVENT-LOG tables (e.g. the crawl's ``frontier_log``)
@@ -374,6 +321,7 @@ class StateStore:
         chain tiers newest-over-oldest (each tier's keys shadow older tiers)
         and filter tombstones last — fold cost is O(window churn), never a
         rewrite of the accumulated live set."""
+        self._check_layout_drift(table)  # a tier write is where a layout reaches disk
         cur = self.tiers(table)
         floor = cur[-1]["upto"] if cur else -1
         new_rounds = [
@@ -498,20 +446,21 @@ class StateStore:
         [un-folded rounds]) — the same data `read_all` returns, split at the
         compaction floor.
 
-        For bucketed tables every tier is a catalog read carrying the bucket
-        layout, so a caller can CHAIN anti-joins against each tier with zero
-        exchanges (a union would erase the partitioning — Spark's Union node
-        reports unknown output partitioning even over co-bucketed children).
-        Plain tables' tiers are plain dir reads. The un-folded rounds come
-        back as ONE multi-path plain scan (a list of 0 or 1 frames): it
-        holds ≤ K rounds of churn, so a join against it broadcasts or
-        shuffles only that. Part count is bounded: ≤ max_tiers + 1.
+        Every bucketed tier (its pointer entry records the layout) is a
+        catalog read carrying the bucket layout, so a caller can CHAIN
+        anti-joins against each tier with zero exchanges (a union would erase
+        the partitioning — Spark's Union node reports unknown output
+        partitioning even over co-bucketed children). Plain tiers are plain
+        dir reads. The un-folded rounds come back as ONE multi-path plain
+        scan (a list of 0 or 1 frames): it holds ≤ K rounds of churn, so a
+        join against it broadcasts or shuffles only that. Part count is
+        bounded: ≤ max_tiers + 1.
         """
         tiers, delta_rounds = self._layers(table, up_to)
         bases = []
         for t in tiers:
             d = self._base_dir(table, t["upto"])
-            if table in self.bucket_spec:
+            if "col" in t:  # bucketed tier: the pointer records its layout
                 tbl = self._tier_catalog_name(table, t["upto"])
                 self._ensure_registered(spark, tbl, d, t)
                 bases.append(spark.table(tbl))
