@@ -10,6 +10,7 @@ from web_crawling_prj_spark.plans.crawl_round import (
     CrawlConfig,
     crawl_store,
     frontier_from_seeds,
+    round_checkpoints,
     run_crawl,
 )
 from web_crawling_prj_spark.plans.statestore import StateStore
@@ -827,7 +828,24 @@ def test_redirect_chains_resolve_to_terminals(spark, tmp_path, crawl_inputs):
     )
     cfg.extra["max_doc_id"] = base_cfg.extra["max_doc_id"]
     store = crawl_store(str(tmp_path / "redir"), cfg)
-    run_crawl(spark, store, pages, robots, seeds, rounds=3, cfg=cfg)
+    # leak bound, checked after every round: the persistent RDDs are the
+    # caller's caches plus at most ONE round's checkpoints (the barriers and
+    # the redirect hops) — the previous round's are freed, the caller's
+    # cached ``pages`` never is
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    for r in (1, 2, 3):
+        run_crawl(spark, store, pages, robots, seeds, rounds=r, cfg=cfg)
+        held = {rdd.id() for rdd in round_checkpoints._rdds}
+        assert 0 < len(held) <= 3 + cfg.redirect_max_hops - 1, held
+        now = persistent()
+        assert held <= now
+        cache = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(pages._jdf)
+        pages_rdd = cache.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
+        assert now - held <= before | {pages_rdd}, (now, held, before)
+        assert pages_rdd in now, "the caller's cached pages were freed"
     log = store.read_all(spark, "fetch_log")
 
     r3 = log.where(F.col("error_class") == "redirect")

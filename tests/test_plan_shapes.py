@@ -59,6 +59,61 @@ def test_robots_gate_broadcasts_rules(spark, sf_dir):
     assert n_shuffles(gated) == 0, explain_str(gated, "simple")  # no shuffle at all
 
 
+def _ancestors(plan: str, marker: str) -> list[str]:
+    """Node lines of a simple-mode plan tree above the first line holding
+    ``marker``, nearest first."""
+    lines = plan.splitlines()
+    i = next(k for k, line in enumerate(lines) if marker in line)
+    depth = lambda line: len(line) - len(line.lstrip(" :+-"))  # noqa: E731
+    d, out = depth(lines[i]), []
+    for line in reversed(lines[:i]):
+        if line.strip() and depth(line) < d:
+            out.append(line.strip(" :+-"))
+            d = depth(line)
+    return out
+
+
+def test_fetch_join_never_moves_the_page_store(spark, tmp_path):
+    """synthetic_fetch: the pages scan meets the broadcast batch keys in a
+    LeftSemi BroadcastHashJoin before anything else — no BroadcastExchange
+    or Exchange sits between the pages scan and that join, so the page
+    store is cut to the batch before any row of it moves (a left outer join
+    of the batch against the pages would build its hash table on the page
+    store)."""
+    from web_crawling_prj_spark.operators.fetch import synthetic_fetch
+
+    spark.range(5_000).select(
+        F.format_string("https://h%d.example/doc/%d", F.pmod("id", F.lit(50)), "id").alias("url"),
+        F.lit("2025-01-01").cast("timestamp").alias("warc_ts"),
+        F.encode(F.format_string("<html><p>doc %d</p></html>", "id"), "utf-8").alias("html"),
+        F.format_string("doc %d", "id").alias("text"),
+        F.lit("en").alias("lang"),
+        F.col("id").alias("doc_id"),
+    ).write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    batch = spark.range(0, 10_000, 97).select(
+        F.format_string("https://h%d.example/doc/%d", F.pmod("id", F.lit(50)), "id").alias("url_canon"),
+        F.xxhash64("id").alias("url_hash"),
+        F.format_string("h%d.example", F.pmod("id", F.lit(50))).alias("host"),
+        F.lit(0.5).alias("priority"),
+        F.lit(0).alias("depth"),
+        F.lit(0).alias("attempt"),
+        F.lit(0).cast("long").alias("fetch_offset_ms"),
+        F.lit(0).alias("proxy_slot"),
+    )
+    fetched = synthetic_fetch(batch, pages, 1, "2025-06-01 00:00:00")
+    plan = explain_str(fetched, "simple")
+    assert plan.count("FileScan parquet") == 1, plan
+    up = _ancestors(plan, "FileScan parquet")
+    join = next(k for k, node in enumerate(up) if "Join" in node)
+    assert "BroadcastHashJoin" in up[join] and "LeftSemi, BuildRight" in up[join], up
+    assert not any("Exchange" in node for node in up[:join]), up
+    # every batch row comes back once: the 52 ids below 5000 hit a page,
+    # the other 52 are 404s
+    codes = [r.http_code for r in fetched.collect()]
+    assert len(codes) == 104 and codes.count(404) == 52, codes
+
+
 def test_anti_join_is_single_shuffle_hash_join(spark):
     """frontier ∖ seen: one exchange per side, LeftAnti, hash join (never
     sort-merge — no sort of the 100 TB side)."""
@@ -210,6 +265,31 @@ def test_delta_mode_pending_plan_never_touches_base_with_a_shuffle(spark, sf_dir
         plan_pr = explain_str(pending_pr, "simple")
         assert plan_pr.count("Exchange hashpartitioning") == 2, plan_pr
         assert "seen_delta" not in plan_pr and "fetch_log" not in plan_pr, plan_pr
+        # the plan the crawl runs: run_round passes a `persisted` list, so
+        # the resolved churn is cached. The cached scan does not report the
+        # cache's HashPartitioning, so the planner re-shuffles the churn
+        # KEYS to the base's buckets — one delta-sized ENSURE_REQUIREMENTS
+        # exchange over the cache. The base side still reaches its merge
+        # anti-join with no exchange: the backlog never moves
+        persisted = []
+        pending_p = pending_frontier(spark, store, 6, cfg, persisted=persisted)
+        try:
+            plan_p = explain_str(pending_p, "simple")
+            assert len(persisted) == 1 and "InMemoryTableScan" in plan_p, plan_p
+            up = _ancestors(plan_p, "frontier_log_base")
+            join = next(k for k, node in enumerate(up) if "Join" in node)
+            assert "SortMergeJoin" in up[join] and "LeftAnti" in up[join], up
+            assert not any("Exchange" in node for node in up[:join]), up
+            assert plan_p.count("ENSURE_REQUIREMENTS") == 1, plan_p
+            assert plan_p.count("InMemoryTableScan") == 2, plan_p
+            assert "BroadcastExchange" not in plan_p, plan_p
+            assert "seen_delta" not in plan_p, plan_p
+            assert sorted(pending_p.collect(), key=lambda r: r.url_hash) == sorted(
+                pending.collect(), key=lambda r: r.url_hash
+            )
+        finally:
+            for df in persisted:
+                df.unpersist()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -67,8 +67,12 @@ def synthetic_fetch(
 
     The join is on ``url_canon``: pages-side key is canonical by construction
     (the store is keyed the same way the seen-set is). At scale `pages` is the
-    big side; the scheduled batch is the small side → Catalyst broadcasts the
-    batch, and the page store is never shuffled.
+    big side and the scheduled batch the small one, but a left outer join
+    can only build its hash table on the page store. So the page store is
+    first cut to the batch: a left-semi join streams the pages scan against
+    the broadcast batch keys, and only those hits (at most batch-sized) meet
+    the batch in the left join. The page store is never shuffled or
+    broadcast (tests/test_plan_shapes.py).
     """
     page_payload = pages.select(
         F.col("url").alias("url_canon"),
@@ -78,7 +82,9 @@ def synthetic_fetch(
         "lang",
         F.col("doc_id").alias("page_doc_id"),
     )
-    j = scheduled.join(page_payload, "url_canon", "left")
+    keys = F.broadcast(scheduled.select("url_canon"))
+    hits = page_payload.join(keys, "url_canon", "left_semi")
+    j = scheduled.join(hits, "url_canon", "left")
 
     # Failure draw in [0, 10000). Two deterministic modes:
     #   "xxhash" (default): xxhash64(round_id, url_canon) — best mixing.

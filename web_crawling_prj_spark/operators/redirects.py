@@ -20,6 +20,8 @@ recursive SQL CTE → value-exact DuckDB oracle (query ``redirect_resolve``).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,6 +31,7 @@ def resolve_redirects(
     src: str = "src",
     dst: str = "dst",
     max_hops: int = 8,
+    checkpoint: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """``(src, dst)`` redirect edges → ``(src, final, hops, terminated)``.
 
@@ -38,7 +41,13 @@ def resolve_redirects(
     cycle; a walk that lands on a terminal at exactly ``max_hops`` counts as
     terminated). Each iteration joins ONLY the still-live rows against the
     edge table; resolved rows never re-shuffle. ``edges`` must be a FUNCTION
-    (one outgoing edge per src — an HTTP response carries one Location)."""
+    (one outgoing edge per src — an HTTP response carries one Location).
+
+    ``checkpoint`` cuts each hop's lineage (default: a lazy
+    ``localCheckpoint``); a caller that frees its checkpoints itself passes
+    its own, e.g. the crawl round's :class:`RoundCheckpoints`."""
+    if checkpoint is None:
+        checkpoint = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     state = e.select(
         F.col("_s").alias("src"),
@@ -59,7 +68,7 @@ def resolve_redirects(
         # checkpoint every hop: hop k's done rows and the next state both
         # read state k, so without the cut the final union re-runs the whole
         # join chain once per hop (quadratic in max_hops)
-        state = state.localCheckpoint(eager=False)
+        state = checkpoint(state)
     # rows still holding an edge after the budget: terminated iff their
     # current node has no outgoing edge (the hop budget landed exactly on a
     # terminal), else over-budget/cycle

@@ -3,9 +3,11 @@
 Reference lifecycle being re-expressed (SURVEY.md §3.1, dags/common/
 base_source_dag.py): branch(mode) → build frontier → dedup vs seen → schedule
 batches with politeness → fetch with retries → persist results + summary.
-Here every boundary is a stage of one declarative round plan; the commit's
-writes execute it (measured: 56 Spark jobs per round on perfbench's
-crawl_backlog at local[4], most of them small):
+Here every boundary is a stage of one declarative round plan. Three
+barriers — the robots-flagged live view, the schedule and the fetch log —
+are checkpointed and computed where the round reaches them; the commit's
+writes execute the rest from the fetch log's checkpoint (measured: 42 Spark
+jobs per round on perfbench's crawl_backlog at local[4], most of them small):
 
     frontier_log ──(latest event per key over tiers + recent rounds)──► live
     live ──(backoff gate)──► pending (backing-off rows stay live untouched)
@@ -34,8 +36,18 @@ Scale decisions, explicit:
   keeps the bucket layout, so neither choice moves the backlog;
 - budgets/robots are per-host (tiny) → broadcast joins, never shuffled;
 - hot-host skew bounded by the salted two-level rank (operators.politeness);
-- the fetch join broadcasts the scheduled batch against the page store, so the
-  100 TB side never moves;
+- the fetch join cuts the page store to the batch first (a left-semi join
+  against the broadcast batch keys), so the 100 TB side never moves;
+- the round's barriers (robots-flagged live view, schedule, fetch log) are
+  lazy localCheckpoints, not persisted plans: each is computed once by one
+  chain of jobs, and every later plan — above all the commit writes —
+  starts from a small LogicalRDD instead of re-analysing the nested round.
+  The resolved recent churn stays persisted (its cache feeds every live
+  branch). Trade-off: checkpoint blocks have no lineage, so a lost executor
+  fails the round before its commit instead of recomputing the lost
+  partitions; nothing is committed, and resume reruns the round.
+  Checkpoints are freed when the next round starts (RoundCheckpoints),
+  which bounds memory to one round's barriers;
 - per-partition lineage counters are computed by seen-bucket (deterministic,
   unlike spark_partition_id) and land in the metrics table each round.
 
@@ -247,6 +259,45 @@ def init_crawl(spark: SparkSession, store: StateStore, seeds: DataFrame, cfg: Cr
     store.commit_round(0, {"frontier_log": log0}, extra_meta={"kind": "init"})
 
 
+class RoundCheckpoints:
+    """The crawl round's checkpointed barriers, held until the NEXT round
+    starts.
+
+    ``localCheckpoint`` cuts a frame's lineage: every later plan starts from
+    a small ``LogicalRDD`` instead of re-analysing the nested round. Its
+    blocks are not a cached relation, so ``DataFrame.unpersist`` does not
+    free them — the holder keeps each checkpoint's RDD and unpersists that.
+    They are freed when the next round starts, not in the round's own
+    ``finally``: a caller may still read the round's frames after
+    :func:`run_round` returns, and memory stays bounded by one round's
+    barriers either way. Blocks of a stopped SparkContext died with it and
+    are only forgotten."""
+
+    def __init__(self) -> None:
+        self._rdds: list = []
+        self._sources: list[DataFrame] = []
+        self._sc = None
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        out = df.localCheckpoint(eager=False)
+        self._rdds.append(out._jdf.queryExecution().logical().rdd())
+        # the lazy checkpoint's first job still reports to the source plan's
+        # SQL metrics: keep the source referenced so they are not collected
+        self._sources.append(df)
+        return out
+
+    def release(self, spark: SparkSession) -> None:
+        if self._sc is spark.sparkContext:
+            for rdd in self._rdds:
+                rdd.unpersist(False)
+        self._rdds, self._sources = [], []
+        self._sc = spark.sparkContext
+
+
+#: the one holder of the current round's checkpoints (see RoundCheckpoints)
+round_checkpoints = RoundCheckpoints()
+
+
 def run_round(
     spark: SparkSession,
     store: StateStore,
@@ -257,9 +308,12 @@ def run_round(
 ) -> dict:
     """Execute one crawl round and commit its state atomically.
 
-    All round-scoped caches are released in one finally block — any exit
-    path, including the failure-threshold abort or an unexpected error, must
-    not leak them into the next round."""
+    The previous round's checkpoints are freed first (:class:`RoundCheckpoints`).
+    This round's persisted caches are released in one finally block — any
+    exit path, including the failure-threshold abort or an unexpected error,
+    must not leak them into the next round; its checkpoints live until the
+    next round starts."""
+    round_checkpoints.release(spark)
     persisted: list[DataFrame] = []
     try:
         return _run_round(spark, store, pages, robots, round_id, cfg, persisted)
@@ -481,12 +535,12 @@ def _run_round(
         spark, store, round_id, cfg, persisted=persisted, parts_out=live_parts
     )
 
-    # 2) robots gate (broadcast join + codegen'd prefix predicate). Persisted
-    # HERE so the allowed and disallowed branches do not each re-run the
-    # live-view reconstruction at commit time. Both outcomes of the gate are
-    # kept: disallowed keys become frontier tombstones.
-    flagged = gate_frontier_flagged(pending, robots).persist()
-    persisted.append(flagged)
+    # 2) robots gate (broadcast join + codegen'd prefix predicate).
+    # Checkpointed HERE so the allowed and disallowed branches do not each
+    # re-run the live-view reconstruction, and every later plan starts from
+    # the checkpoint instead of the nested live view. Both outcomes of the
+    # gate are kept: disallowed keys become frontier tombstones.
+    flagged = round_checkpoints.checkpoint(gate_frontier_flagged(pending, robots))
     allowed = flagged.where(F.col("robots_allowed")).drop("robots_allowed")
     disallowed_keys = flagged.where(~F.col("robots_allowed")).select("url_hash")
 
@@ -514,7 +568,7 @@ def _run_round(
 
     # 4) politeness schedule (salted two-level exact top-k per host).
     # `scheduled` feeds the fetch, the incumbent probe and the tombstones —
-    # persist it so the window stages run once per round.
+    # checkpoint it so the window stages run once per round.
     # The PageRank blend happens HERE, on the rows entering the rank: the
     # rank stage owns its two designed exchanges anyway, so the scores join
     # rides into them instead of degrading the pending plan. The blend is a
@@ -551,21 +605,22 @@ def _run_round(
             max_per_template=cfg.trap_max_per_template,
             n_salts=cfg.n_salts,
         )
-    scheduled = schedule_round(
-        candidates,
-        budgets,
-        n_salts=cfg.n_salts,
-        default_budget=cfg.default_budget,
-        tiebreak=cfg.schedule_tiebreak,
-    ).persist()
-    persisted.append(scheduled)
+    scheduled = round_checkpoints.checkpoint(
+        schedule_round(
+            candidates,
+            budgets,
+            n_salts=cfg.n_salts,
+            default_budget=cfg.default_budget,
+            tiebreak=cfg.schedule_tiebreak,
+        )
+    )
     # frontier rows that lost the budget race are never materialized: they
     # simply stay live in the log (not tombstoned) for the next round.
 
     # 5) fetch + extract (synthetic deterministic fetcher; same schema as real).
     # The fetch log feeds FOUR consumers (frontier adds, seen delta, metrics,
-    # its own commit) — persist it so the fetch+extract stage runs once, not
-    # once per committed table.
+    # its own commit) — checkpoint it so the fetch+extract stage runs once,
+    # not once per committed table, and the commit writes plan from it alone.
     fetch_log = synthetic_fetch(
         scheduled,
         pages,
@@ -576,8 +631,7 @@ def _run_round(
         redirect_per_mille=cfg.redirect_per_mille,
         max_doc_id=cfg.extra.get("max_doc_id"),
     )
-    fetch_log = classify_fetch_log(fetch_log).persist()
-    persisted.append(fetch_log)
+    fetch_log = round_checkpoints.checkpoint(classify_fetch_log(fetch_log))
 
     # 6) retries re-enter the frontier with backoff; exhausted rows tombstone
     retries = (
@@ -632,7 +686,11 @@ def _run_round(
         # terminals feed both the candidate keys and the winners
         r3 = canonicalize_urls_hybrid(r3, "_loc", "dst").drop("_loc").persist()
         persisted.append(r3)
-        resolved = resolve_redirects(r3.select("src", "dst"), max_hops=cfg.redirect_max_hops)
+        resolved = resolve_redirects(
+            r3.select("src", "dst"),
+            max_hops=cfg.redirect_max_hops,
+            checkpoint=round_checkpoints.checkpoint,
+        )
         terminals = (
             resolved.where(F.col("terminated"))
             .join(r3.drop("dst"), "src")
@@ -820,7 +878,7 @@ def _run_round(
     }
     # batch/run failure threshold (reference C4/C5): abort AFTER committing so
     # a resumed run (mode='failed' analog) starts from consistent state;
-    # run_round's finally releases the caches on this path too
+    # run_round's finally releases the persisted caches on this path too
     if cfg.extra.get("abort_on_failed_run"):
         if report and report["run_failed"]:
             raise RuntimeError(
