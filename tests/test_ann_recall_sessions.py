@@ -1,17 +1,13 @@
 from __future__ import annotations
 
-import datetime as dt
-
 import pytest
 from pyspark.sql import functions as F
 
-from web_crawling_prj_spark.functions.extract import explode_map_keys_split
 from web_crawling_prj_spark.operators.similarity import (
     brute_force_topk,
     lsh_bucketed_topk,
     recall_at_k,
 )
-from web_crawling_prj_spark.streaming.ingest import host_sessions, stream_frontier
 
 
 @pytest.fixture(scope="module")
@@ -39,45 +35,6 @@ def test_recall_of_bruteforce_is_one(spark, emb):
     )
     gold = brute_force_topk(emb, q, k=5)
     assert recall_at_k(gold, gold, 5) == pytest.approx(1.0)
-
-
-def test_streaming_session_window(spark, tmp_path):
-    t0 = dt.datetime(2025, 6, 1, 0, 0, 0)
-    rows = (
-        [("https://a.example/p%d" % i, 0.5, 0, t0 + dt.timedelta(minutes=i)) for i in range(3)]
-        # 20-minute silence → a second session for host a
-        + [("https://a.example/q%d" % i, 0.9, 0, t0 + dt.timedelta(minutes=30 + i)) for i in range(2)]
-        + [("https://b.example/x", 0.1, 0, t0)]
-    )
-    drop = str(tmp_path / "drop")
-    spark.createDataFrame(
-        rows, "url string, priority double, depth int, discovered_ts timestamp"
-    ).coalesce(1).write.parquet(drop)
-    s = stream_frontier(spark, drop, dedup=False)
-    q = (
-        host_sessions(s, gap="5 minutes")
-        .writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM sessions_out").collect()
-    a_sessions = sorted((r.n_urls, r.max_priority) for r in out if r.host == "a.example")
-    assert a_sessions == [(2, 0.9), (3, 0.5)]  # burst split into two sessions
-    assert [(r.n_urls) for r in out if r.host == "b.example"] == [1]
-
-
-def test_explode_map_keys_split(spark):
-    # F14: optionComboToPartId keys → variation arrays (wayfair_service.py:77-83)
-    df = spark.createDataFrame(
-        [({"Blue-King": 1, "Red-Twin": 2},)], "combos map<string,int>"
-    )
-    out = explode_map_keys_split(df, "combos", sep="-")
-    got = sorted(tuple(r.parts) for r in out.collect())
-    assert got == [("Blue", "King"), ("Red", "Twin")]
 
 
 def test_ivf_topk_planted_recall_and_determinism(spark):

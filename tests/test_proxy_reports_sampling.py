@@ -3,7 +3,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from web_crawling_prj_spark.operators.proxy import health_check_pool, validated_pool
 from web_crawling_prj_spark.operators.sampling import (
     hash_sample,
     proportional_per_group,
@@ -16,27 +15,6 @@ from web_crawling_prj_spark.plans.reports import (
     SyntheticReportService,
     run_report_pipeline,
 )
-
-
-@pytest.fixture()
-def proxies(spark):
-    return spark.range(50).select(
-        F.format_string("10.0.0.%d:8080", F.col("id")).alias("endpoint"),
-        F.col("id").alias("pid"),
-    )
-
-
-def test_health_check_deterministic(spark, proxies):
-    h1 = {r.endpoint: r.healthy for r in health_check_pool(proxies).collect()}
-    h2 = {r.endpoint: r.healthy for r in health_check_pool(proxies).collect()}
-    assert h1 == h2
-    assert 0 < sum(h1.values()) < 50  # some up, some down
-
-
-def test_validated_pool_limit_and_slots(spark, proxies):
-    pool = validated_pool(proxies, limit=10).collect()
-    assert len(pool) == 10
-    assert sorted(r.proxy_slot for r in pool) == list(range(10))
 
 
 def _no_sleep(_):

@@ -7,7 +7,6 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from web_crawling_prj_spark.functions.extract import clean_percent, first_struct_match, paginate
 from web_crawling_prj_spark.functions.urls import canonicalize_url
 from web_crawling_prj_spark.operators.dedup import dedup_within_batch
 from web_crawling_prj_spark.operators.retry import (
@@ -17,7 +16,6 @@ from web_crawling_prj_spark.operators.retry import (
 )
 from web_crawling_prj_spark.operators.scd2 import scd2_apply_batch
 from web_crawling_prj_spark.plans.reports import ReportJob, ReportServiceConfig, SyntheticReportService, run_report_pipeline
-from web_crawling_prj_spark.sources.readers import read
 
 
 def test_canonicalize_percent_encoded_dot_segments():
@@ -25,28 +23,6 @@ def test_canonicalize_percent_encoded_dot_segments():
     assert canonicalize_url("https://example.com/a/%2E%2E/b") == "https://example.com/b"
     c = canonicalize_url("https://example.com/a/%2e/b/%2E%2E/c")
     assert canonicalize_url(c) == c == "https://example.com/a/c"
-
-
-def test_first_struct_match_no_match_is_null(spark):
-    df = spark.createDataFrame(
-        [([{"k": "a", "v": "1"}],), ([],)], "arr array<struct<k string, v string>>"
-    )
-    rows = df.select(first_struct_match("arr", "k", "zzz", "v").alias("out")).collect()
-    assert [r.out for r in rows] == [None, None]  # no ANSI element_at crash
-
-
-def test_paginate_single_page_fans_out_nothing(spark):
-    df = spark.createDataFrame([(1, 1), (2, 0), (3, 4)], "id int, total int")
-    out = paginate(df, "total").collect()
-    got = sorted((r.id, r.page) for r in out)
-    assert got == [(3, 2), (3, 3), (3, 4)]  # totals 1 and 0 emit zero pages
-
-
-def test_clean_percent_coerces_garbage(spark):
-    df = spark.createDataFrame([("5%",), ("N/A",), ("",)], "s string")
-    vals = [r.v for r in df.select(clean_percent("s").alias("v")).collect()]
-    assert vals[0] == pytest.approx(0.05)
-    assert vals[1] is None and vals[2] is None  # coerce, never crash (ANSI)
 
 
 def test_report_threshold_is_ceil(spark):
@@ -131,37 +107,6 @@ def test_incremental_circuit_equals_full_recompute(spark):
         assert inc == ref, f"divergence after round with {len(r)} rows: {inc} != {ref}"
     assert inc["a"] == (0, None)  # recovered
     assert inc["c"][0] == 1
-
-
-def test_csv_skip_rows_real(spark, tmp_path):
-    p = tmp_path / "report.csv"
-    p.write_text("Google Report junk line 1\njunk line 2\nsku,price\nA,1.5\nB,2.0\n")
-    df = read(spark, "csv", str(p), schema="sku string, price double", skip_rows=2)
-    got = sorted((r.sku, r.price) for r in df.collect())
-    assert got == [("A", 1.5), ("B", 2.0)]
-
-
-def test_csv_skip_rows_quoted_newline_and_permissive(spark, tmp_path):
-    """RFC-4180 corners of the skip_rows path: a quoted field with an
-    embedded newline stays ONE record (the old split-on-newline parse broke
-    it in half), quoted delimiters survive, and a malformed numeric cell
-    goes NULL (PERMISSIVE parity) instead of raising under ANSI."""
-    p = tmp_path / "report2.csv"
-    p.write_text(
-        'junk 1\njunk 2\nsku,descr,price\n'
-        'A,"line one\nline two",1.5\n'
-        'B,"has, comma",2.0\n'
-        "C,plain,not_a_number\n"
-    )
-    df = read(
-        spark, "csv", str(p), schema="sku string, descr string, price double", skip_rows=2
-    )
-    got = {r.sku: (r.descr, r.price) for r in df.collect()}
-    assert got == {
-        "A": ("line one\nline two", 1.5),
-        "B": ("has, comma", 2.0),
-        "C": ("plain", None),
-    }
 
 
 def test_full_rebuild_seeds_incremental_circuit(spark):

@@ -415,54 +415,6 @@ def test_torn_gz_archive_raises_not_truncates(spark, tmp_path):
         read_warc_dir(spark, str(tmp_path)).collect()
 
 
-def test_stream_warc_records_incremental_ingest(spark, tmp_path):
-    """Streaming ingestion over a growing archive dir: files present at
-    start-up parse in the first availableNow pass; files that appear later
-    parse exactly once in a subsequent pass (file-source processed-log);
-    the streamed rows match the batch reader's byte-for-byte."""
-    from web_crawling_prj_spark.sources.warc import (
-        warc_gz_files_df,
-        write_warc_files,
-    )
-    from web_crawling_prj_spark.streaming.ingest import stream_warc_records
-
-    arc = tmp_path / "arc"
-
-    def make(ids, name):
-        rec = _encode(spark, [(i, f"body {i}") for i in ids])
-        files = warc_gz_files_df(rec, F.lit(name), F.col("doc_id"), F.col("record"))
-        write_warc_files(files, str(arc), suffix=".warc.gz")
-
-    make([0, 1, 2], 0)
-    out = str(tmp_path / "out")
-
-    def drain():
-        # parquet sink + shared checkpoint: the file source's processed-log
-        # survives restarts, so each drain parses only the NEW files
-        q = (
-            stream_warc_records(spark, str(arc))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    got1 = spark.read.parquet(out).select("payload").collect()
-    assert sorted(r.payload for r in got1) == ["body 0", "body 1", "body 2"]
-
-    make([3, 4], 1)  # the archive grows (next crawl round exported)
-    drain()
-    got2 = spark.read.parquet(out).select("payload").collect()
-    # old files never re-parse (no duplicates); new ones parse exactly once
-    assert sorted(r.payload for r in got2) == [f"body {i}" for i in range(5)]
-
-    batch = read_warc_dir(spark, str(arc)).select("payload").collect()
-    assert sorted(r.payload for r in batch) == sorted(r.payload for r in got2)
-
-
 def test_parser_is_a_narrow_transform(spark):
     """Files never shuffle on the parse path: the plan between the scan and
     the Arrow eval has no Exchange (file-per-task at a directory scan)."""
@@ -531,72 +483,3 @@ def test_read_warc_splits_row_identical_and_parallel(spark, tmp_path):
     cdx.unpersist()
 
 
-def test_stream_curated_pages_filters_and_matches_batch(spark, tmp_path):
-    """Streaming curation (ingest.stream_curated_pages): language + Gopher
-    gates on the WARC ingest stream keep exactly the docs the batch path
-    keeps; growing the archive curates only the new files."""
-    from web_crawling_prj_spark.functions.text import gopher_metrics, gopher_pass
-    from web_crawling_prj_spark.sources.pages_gen import _render_html_udf
-    from web_crawling_prj_spark.sources.warc import (
-        http_response_payload,
-        pages_from_warc,
-        warc_gz_files_df,
-        warc_record_col,
-        write_warc_files,
-    )
-    from web_crawling_prj_spark.streaming.ingest import stream_curated_pages
-
-    good = "the data pipeline runs well and we have results to share with care " * 6
-    texts = {
-        0: good,                                       # en, passes Gopher
-        1: "the cat is small",                         # en, < 50 words
-        2: "der hund und die katze ist nicht mit zu den haus gegangen " * 6,  # de
-        3: good + " # " * 30,                          # en, symbol ratio
-        4: good + " indeed we say more of it today",   # en, passes
-    }
-    arc = tmp_path / "arc"
-
-    def make(ids, fkey):
-        d = spark.createDataFrame(
-            [(i, texts[i]) for i in ids], "doc_id long, text string"
-        )
-        uri = F.concat(F.lit("https://h.example/doc/"), F.col("doc_id"))
-        html = _render_html_udf(F.col("text"), F.lit("en"), uri)
-        rec = d.select(
-            "doc_id",
-            warc_record_col(
-                uri, http_response_payload(F.decode(html, "UTF-8")), rec_type="response"
-            ).alias("record"),
-        )
-        files = warc_gz_files_df(rec, F.lit(fkey), F.col("doc_id"), F.col("record"))
-        write_warc_files(files, str(arc), suffix=".warc.gz")
-
-    make([0, 1, 2, 3], 0)
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-
-    def drain():
-        q = (
-            stream_curated_pages(spark, str(arc))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    got = [r.url for r in spark.read.parquet(out).select("url").collect()]
-    assert got == ["https://h.example/doc/0"]
-
-    make([4], 1)  # archive grows: only the new file curates
-    drain()
-    got2 = sorted(r.url for r in spark.read.parquet(out).select("url").collect())
-    assert got2 == ["https://h.example/doc/0", "https://h.example/doc/4"]
-
-    # streaming ≡ batch
-    batch = pages_from_warc(read_warc_dir(spark, str(arc)))
-    batch = batch.where(F.col("lang") == "en").where(
-        gopher_pass(gopher_metrics(F.col("text")))
-    )
-    assert sorted(r.url for r in batch.select("url").collect()) == got2

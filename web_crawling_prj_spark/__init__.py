@@ -4,7 +4,8 @@ A brand-new implementation (not a port) of the data-processing semantics of the
 reference crawl/ETL system ``tiendinhquang/web-crawling-prj``:
 
 - frontier construction + seen-set dedup (reference: set-subtraction anti-joins,
-  ``services/wayfair_service.py:196-252``) as broadcast/bloom-assisted left-anti joins;
+  ``services/wayfair_service.py:196-252``) as a write-time left-anti join whose
+  strategy (broadcast or co-located merge) the planner picks — no Bloom filter;
 - politeness-aware per-host scheduling (reference: rate-limit sleeps + semaphores,
   ``services/request_client.py:222-263``) as salted window-ranked DataFrames;
 - retry/backoff/circuit-breaker semantics (reference: ``services/error_handler.py``)

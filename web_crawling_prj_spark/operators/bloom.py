@@ -103,30 +103,6 @@ def build_sharded_bloom(
     return ShardedBloom(bits=bits, num_shards=p, m_bits=m_bits, k=k)
 
 
-def merge_blooms(a: ShardedBloom, b: ShardedBloom) -> ShardedBloom:
-    """OR two compatible shard arrays — the incremental-maintenance primitive:
-    each round builds a bloom over its (small) seen DELTA and ORs it into the
-    persisted cumulative bloom, so the filter never rescans the full seen-set."""
-    if (a.num_shards, a.m_bits, a.k) != (b.num_shards, b.m_bits, b.k):
-        raise ValueError("bloom parameter mismatch")
-    return ShardedBloom(bits=a.bits | b.bits, num_shards=a.num_shards, m_bits=a.m_bits, k=a.k)
-
-
-def bloom_to_bytes(bloom: ShardedBloom) -> bytes:
-    import struct
-
-    head = struct.pack("<III", bloom.num_shards, bloom.m_bits, bloom.k)
-    return head + bloom.bits.tobytes()
-
-
-def bloom_from_bytes(data: bytes) -> ShardedBloom:
-    import struct
-
-    p, m_bits, k = struct.unpack("<III", data[:12])
-    bits = np.frombuffer(data[12:], dtype=np.uint8).reshape(p, m_bits // 8).copy()
-    return ShardedBloom(bits=bits, num_shards=p, m_bits=m_bits, k=k)
-
-
 def broadcast_bloom(spark, bloom: ShardedBloom):
     """Ship the shard bitmaps as a broadcast variable. The CALLER owns the
     lifecycle: destroy() it once the round's jobs are done — a long crawl that

@@ -1,1 +1,1 @@
-from web_crawling_prj_spark.sources import pages_gen, readers  # noqa: F401
+from web_crawling_prj_spark.sources import pages_gen  # noqa: F401
