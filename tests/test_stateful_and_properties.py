@@ -1,12 +1,7 @@
+"""Property tests of ``canonicalize_url``: idempotence and a preserved
+query-parameter multiset over generated URLs."""
+
 from __future__ import annotations
-
-import datetime as dt
-
-import pytest
-from pyspark.sql import functions as F
-
-from web_crawling_prj_spark.streaming.ingest import stream_frontier
-from web_crawling_prj_spark.streaming.stateful import politeness_gate_stream
 
 try:
     from hypothesis import given, settings
@@ -15,72 +10,6 @@ try:
     HAVE_HYPOTHESIS = True
 except ImportError:
     HAVE_HYPOTHESIS = False
-
-
-def test_token_bucket_stream(spark, tmp_path):
-    """Burst of 15 urls for one host at the same second: burst=10 admitted,
-    5 deferred; a second host with 2 urls sails through."""
-    t0 = dt.datetime(2025, 6, 1, 0, 0, 0)
-    rows = [("https://hot.example/p%d" % i, 0.5, 0, t0) for i in range(15)]
-    rows += [("https://cold.example/p%d" % i, 0.5, 0, t0) for i in range(2)]
-    # a null discovered_ts must be DROPPED by the gate (its timestamp is the
-    # gate's clock) — before the guard it reached the state fn as NaN and
-    # poison-pilled the query on every replay
-    rows += [("https://null.example/p0", 0.5, 0, None)]
-    df = spark.createDataFrame(rows, "url string, priority double, depth int, discovered_ts timestamp")
-    drop = str(tmp_path / "drop")
-    df.coalesce(1).write.parquet(drop)
-
-    s = stream_frontier(spark, drop, dedup=False)
-    gated = politeness_gate_stream(s, rate_per_s=2.0, burst=10.0)
-    q = (
-        gated.writeStream.format("memory")
-        .queryName("gate_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM gate_out").collect()
-    hot = [r for r in out if r.host == "hot.example"]
-    cold = [r for r in out if r.host == "cold.example"]
-    assert sum(r.admitted for r in hot) == 10 and sum(not r.admitted for r in hot) == 5
-    assert all(r.admitted for r in cold) and len(cold) == 2
-    assert not [r for r in out if r.host == "null.example"]  # null-ts dropped
-
-
-def test_token_bucket_state_persists_across_batches(spark, tmp_path):
-    """Second micro-batch starts from the drained bucket, refilled by elapsed time."""
-    t0 = dt.datetime(2025, 6, 1, 0, 0, 0)
-    drop = str(tmp_path / "drop2")
-    b1 = [("https://h.example/a%d" % i, 0.5, 0, t0) for i in range(10)]  # drains burst
-    spark.createDataFrame(b1, "url string, priority double, depth int, discovered_ts timestamp").coalesce(1).write.parquet(drop)
-
-    out_dir = str(tmp_path / "gate2_out")
-
-    def run_batch():
-        s = stream_frontier(spark, drop, dedup=False)
-        gated = politeness_gate_stream(s, rate_per_s=2.0, burst=10.0)
-        # memory sink can't recover a checkpoint across restarts → parquet bridge
-        q = (
-            gated.writeStream.foreachBatch(
-                lambda df, _e: df.write.mode("append").parquet(out_dir)
-            )
-            .option("checkpointLocation", str(tmp_path / "ck2"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch()
-    # batch 2: 5 urls 1 second later → only 2 tokens refilled (2 rps)
-    b2 = [("https://h.example/b%d" % i, 0.5, 0, t0 + dt.timedelta(seconds=1)) for i in range(5)]
-    spark.createDataFrame(b2, "url string, priority double, depth int, discovered_ts timestamp").coalesce(1).write.mode("append").parquet(drop)
-    run_batch()
-    out = spark.read.parquet(out_dir).collect()
-    second = [r for r in out if "/b" in r.url_canon]
-    assert len(second) == 5 and sum(r.admitted for r in second) == 2
 
 
 if HAVE_HYPOTHESIS:
@@ -117,255 +46,3 @@ if HAVE_HYPOTHESIS:
         n_raw = len([p for p in urlsplit(url).query.split("&") if p])
         n_canon = len([p for p in urlsplit(c).query.split("&") if p])
         assert n_raw == n_canon  # sorting, never dropping
-
-
-def test_token_bucket_ttl_timeout_branch():
-    """TTL state expiry: on hasTimedOut the bucket is removed and nothing is
-    emitted; on normal batches the timeout is re-armed (unit-level, with a
-    fake GroupState — processing-time expiry itself is wall-clock)."""
-    import pandas as pd
-
-    from web_crawling_prj_spark.streaming.stateful import make_token_bucket_fn
-
-    class FakeState:
-        def __init__(self, exists=False, value=None, timed_out=False):
-            self._exists, self._value, self.hasTimedOut = exists, value, timed_out
-            self.removed, self.timeout_set = False, None
-
-        @property
-        def exists(self):
-            return self._exists
-
-        @property
-        def get(self):
-            return self._value
-
-        def update(self, v):
-            self._exists, self._value = True, v
-
-        def remove(self):
-            self.removed, self._exists = True, False
-
-        def setTimeoutDuration(self, ms):
-            self.timeout_set = ms
-
-    fn = make_token_bucket_fn(rate_per_s=2.0, burst=4.0, idle_ttl_ms=60_000)
-
-    # timed-out idle host: state removed, zero rows
-    st = FakeState(exists=True, value=(3.0, 100), timed_out=True)
-    out = list(fn(("h",), iter([]), st))
-    assert st.removed and sum(len(p) for p in out) == 0
-
-    # normal batch: rows emitted, state updated, TTL re-armed
-    st2 = FakeState()
-    batch = pd.DataFrame(
-        {"url_canon": ["u1", "u2"], "url_hash": [1, 2], "event_epoch": [10, 10]}
-    )
-    out2 = pd.concat(list(fn(("h",), iter([batch]), st2)))
-    assert len(out2) == 2 and out2["admitted"].all()
-    assert st2.exists and st2.timeout_set == 60_000
-
-
-def test_token_bucket_stream_with_ttl_enabled(spark, tmp_path):
-    """Integration smoke: the ProcessingTimeTimeout-configured stream runs and
-    admits exactly what the NoTimeout one does on the same single batch."""
-    from web_crawling_prj_spark.streaming.stateful import politeness_gate_stream
-
-    rows = [("h1.example", f"https://h1.example/{i}", i, 1000 + i) for i in range(6)]
-    src = spark.createDataFrame(
-        rows, "host string, url_canon string, url_hash long, discovered_ts long"
-    )
-    path = str(tmp_path / "ttl_src")
-    src.write.parquet(path)
-    stream = spark.readStream.schema(src.schema).parquet(path)
-    gated = politeness_gate_stream(stream, rate_per_s=2.0, burst=3.0, idle_ttl_ms=120_000)
-    q = (
-        gated.writeStream.format("memory")
-        .queryName("ttl_gate")
-        .option("checkpointLocation", str(tmp_path / "ttl_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # an availableNow query with a processing-time state timeout keeps
-    # running no-data batches until its idle state expires (idle_ttl_ms),
-    # so wait (120 s at most) for the rows to reach the sink and stop it,
-    # not for termination
-    import time
-
-    deadline = time.monotonic() + 120
-    try:
-        while (
-            q.isActive
-            and time.monotonic() < deadline
-            and spark.sql("SELECT count(*) FROM ttl_gate").first()[0] < len(rows)
-        ):
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    got = spark.sql("SELECT * FROM ttl_gate").collect()
-    assert len(got) == 6
-    # burst 3 + refills: first 3 admitted immediately; each +1 epoch refills 2
-    assert sum(1 for r in got if r.admitted) >= 3
-
-
-def test_token_bucket_vectorized_equals_scalar_reference_and_is_fast():
-    """The numpy token-bucket kernel must emit rows IDENTICAL to the scalar
-    per-row recurrence (admitted flags and float tokens_after alike) on an
-    adversarial sequence — bursty same-epoch runs, idle gaps, out-of-order
-    epochs across chunks — and must chew through a 10^5-event single-host
-    group far faster than row-at-a-time pandas ever could."""
-    import time
-
-    import numpy as np
-    import pandas as pd
-
-    from web_crawling_prj_spark.streaming.stateful import make_token_bucket_fn
-
-    class FakeState:
-        def __init__(self):
-            self._exists, self._value, self.hasTimedOut = False, None, False
-
-        @property
-        def exists(self):
-            return self._exists
-
-        @property
-        def get(self):
-            return self._value
-
-        def update(self, v):
-            self._exists, self._value = True, v
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-    def scalar_reference(chunks, rate_per_s, burst):
-        tokens, last_epoch = burst, 0
-        out = []
-        for pdf in chunks:
-            pdf = pdf.sort_values(["event_epoch", "url_hash"])
-            for _, row in pdf.iterrows():
-                epoch = int(row["event_epoch"])
-                tokens = min(burst, tokens + max(0, epoch - last_epoch) * rate_per_s)
-                last_epoch = max(last_epoch, epoch)
-                admitted = tokens >= 1.0
-                if admitted:
-                    tokens -= 1.0
-                out.append(("h", row["url_canon"], int(row["url_hash"]), epoch, admitted, tokens))
-        return pd.DataFrame(
-            out, columns=["host", "url_canon", "url_hash", "event_epoch", "admitted", "tokens_after"]
-        ), tokens, last_epoch
-
-    rng = np.random.default_rng(11)
-    chunks = []
-    base = 0
-    for c in range(4):
-        n = 400
-        # bursty: many duplicate epochs + gaps; chunk 3 jumps BACKWARD in time
-        ep = np.sort(rng.choice(np.arange(base, base + 60), size=n))
-        base += 40 if c != 2 else -30
-        chunks.append(
-            pd.DataFrame(
-                {
-                    "url_canon": [f"u{c}-{i}" for i in range(n)],
-                    "url_hash": rng.permutation(n).astype("int64"),
-                    "event_epoch": ep.astype("int64"),
-                }
-            )
-        )
-    fn = make_token_bucket_fn(rate_per_s=1.7, burst=9.3)
-    st = FakeState()
-    got = pd.concat(list(fn(("h",), iter([c.copy() for c in chunks]), st)), ignore_index=True)
-    want, t_end, e_end = scalar_reference([c.copy() for c in chunks], 1.7, 9.3)
-    pd.testing.assert_frame_equal(got.reset_index(drop=True), want, check_dtype=False)
-    assert st.get == (float(t_end), int(e_end))  # carried state identical too
-
-    # 10^5 events, one host, all-distinct epochs (worst case for the
-    # unique-epoch loop): must finish in well under a second of kernel time
-    big = pd.DataFrame(
-        {
-            "url_canon": ["u"] * 100_000,
-            "url_hash": np.arange(100_000, dtype="int64"),
-            "event_epoch": np.arange(100_000, dtype="int64"),
-        }
-    )
-    st2 = FakeState()
-    t0 = time.time()
-    out = pd.concat(list(fn(("h",), iter([big]), st2)), ignore_index=True)
-    wall = time.time() - t0
-    assert len(out) == 100_000 and out["admitted"].all()  # rate 1.7/s, 1 event/s
-    assert wall < 2.0, f"vectorized token bucket took {wall:.2f}s for 1e5 events"
-
-
-def test_token_bucket_property_random_sequences():
-    """Hypothesis: for ANY event sequence (duplicate epochs, gaps, unsorted
-    hashes) and any (rate, burst), the numpy kernel's emissions and carried
-    state equal the scalar per-row recurrence."""
-    import pandas as pd
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from web_crawling_prj_spark.streaming.stateful import make_token_bucket_fn
-
-    class FakeState:
-        def __init__(self):
-            self._exists, self._value, self.hasTimedOut = False, None, False
-
-        @property
-        def exists(self):
-            return self._exists
-
-        @property
-        def get(self):
-            return self._value
-
-        def update(self, v):
-            self._exists, self._value = True, v
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-    def scalar(pdf, rate, burst):
-        tokens, last = burst, 0
-        out = []
-        pdf = pdf.sort_values(["event_epoch", "url_hash"])
-        for _, row in pdf.iterrows():
-            e = int(row["event_epoch"])
-            tokens = min(burst, tokens + max(0, e - last) * rate)
-            last = max(last, e)
-            adm = tokens >= 1.0
-            if adm:
-                tokens -= 1.0
-            out.append((row["url_canon"], int(row["url_hash"]), e, adm, tokens))
-        return out, tokens, last
-
-    events = st.lists(
-        st.tuples(st.integers(min_value=0, max_value=40), st.integers(min_value=-50, max_value=50)),
-        min_size=1,
-        max_size=60,
-    )
-
-    @settings(max_examples=30, deadline=None)
-    @given(ev=events, rate=st.sampled_from([0.5, 1.7, 3.0]), burst=st.sampled_from([1.0, 4.3, 9.0]))
-    def check(ev, rate, burst):
-        pdf = pd.DataFrame(
-            {
-                "url_canon": [f"u{i}" for i in range(len(ev))],
-                "url_hash": [h for _, h in ev],
-                "event_epoch": [e for e, _ in ev],
-            }
-        )
-        fn = make_token_bucket_fn(rate_per_s=rate, burst=burst)
-        stt = FakeState()
-        got = pd.concat(list(fn(("h",), iter([pdf.copy()]), stt)), ignore_index=True)
-        want, t_end, e_end = scalar(pdf.copy(), rate, burst)
-        assert stt.get == (float(t_end), int(e_end))
-        got_rows = list(
-            zip(got["url_canon"], got["url_hash"], got["event_epoch"], got["admitted"], got["tokens_after"])
-        )
-        assert len(got_rows) == len(want)
-        for g, w in zip(got_rows, want):
-            assert g[:4] == w[:4]
-            assert abs(g[4] - w[4]) == 0.0  # float-exact
-
-    check()

@@ -1,136 +1,10 @@
+"""The ETL mapping layer (``plans/mapping.py``): column staging, tolerant
+rename, SCD2 full load and the dict-union join."""
+
 from __future__ import annotations
 
-import datetime as dt
-import io
-import zipfile
-
-import pytest
-from pyspark.sql import functions as F
-
-from web_crawling_prj_spark.functions.extract import (
-    clean_percent,
-    filename_to_key,
-    first_struct_match,
-    json_path,
-    month_name_to_last_day,
-    paginate,
-    pivot_first,
-    template_substitute,
-    to_local_timestamp,
-)
 from web_crawling_prj_spark.plans.mapping import ETLConfig, load_batch, rename_columns, stage_batch
-from web_crawling_prj_spark.sources.sinks import truncate_reload, unzip_csv_rows, write_csv, write_keyed
-from web_crawling_prj_spark.streaming.ingest import host_rate_stats, sink_to_frontier, stream_frontier
 
-
-# ---------- streaming ----------
-
-@pytest.fixture()
-def drop_zone(spark, tmp_path):
-    rows = [
-        ("https://A.example/x#f", 0.9, 0, dt.datetime(2025, 6, 1, 0, 0, 0)),
-        ("https://a.example/x", 0.5, 0, dt.datetime(2025, 6, 1, 0, 1, 0)),  # dup after canon
-        ("https://b.example/y?b=2&a=1", 0.7, 1, dt.datetime(2025, 6, 1, 0, 2, 0)),
-    ]
-    df = spark.createDataFrame(rows, "url string, priority double, depth int, discovered_ts timestamp")
-    path = str(tmp_path / "drop")
-    df.coalesce(1).write.parquet(path)
-    return path
-
-
-def test_stream_frontier_dedups_within_watermark(spark, drop_zone, tmp_path):
-    s = stream_frontier(spark, drop_zone)
-    q = (
-        s.writeStream.format("memory")
-        .queryName("stream_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM stream_out").collect()
-    urls = sorted(r.url_canon for r in out)
-    assert urls == ["https://a.example/x", "https://b.example/y?a=1&b=2"]
-    assert all(r.url_hash is not None and r.host for r in out)
-
-
-def test_host_rate_stats_windows(spark, drop_zone, tmp_path):
-    s = stream_frontier(spark, drop_zone, dedup=False)
-    agg = host_rate_stats(s, window="5 minutes", slide="5 minutes")
-    # complete mode: append would only emit watermark-closed windows, and this
-    # bounded fixture never advances the watermark past its own window end
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("rates_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r.host: r.n_discovered for r in spark.sql("SELECT * FROM rates_out").collect()}
-    assert rows == {"a.example": 2, "b.example": 1}
-
-
-def test_sink_to_frontier_exactly_once(spark, drop_zone, tmp_path):
-    s = stream_frontier(spark, drop_zone)
-    q = sink_to_frontier(s, str(tmp_path / "out"), str(tmp_path / "ck3"))
-    q.awaitTermination(120)
-    first = spark.read.parquet(str(tmp_path / "out")).count()
-    # restart with same checkpoint: no new input → no duplicate appends
-    q2 = sink_to_frontier(stream_frontier(spark, drop_zone), str(tmp_path / "out"), str(tmp_path / "ck3"))
-    q2.awaitTermination(120)
-    assert spark.read.parquet(str(tmp_path / "out")).count() == first == 2
-    # REPLAYED epoch (fresh checkpoint → epoch 0 runs again, the shape a
-    # crash between write and checkpoint-commit leaves): the epoch-dir
-    # overwrite replaces its own output — an append sink would double to 4
-    q3 = sink_to_frontier(stream_frontier(spark, drop_zone), str(tmp_path / "out"), str(tmp_path / "ck3b"))
-    q3.awaitTermination(120)
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 2
-
-
-# ---------- sinks ----------
-
-def test_write_keyed_and_csv(spark, tmp_path):
-    df = spark.createDataFrame([("k1", 1), ("k2", 2)], "sku string, v int")
-    write_keyed(df, str(tmp_path / "keyed"), key_col="sku")
-    back = spark.read.parquet(str(tmp_path / "keyed"))
-    assert back.count() == 2 and "sku" in back.columns
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="key column"):
-        write_keyed(df, str(tmp_path / "keyed2"), key_col="nope")
-    write_csv(df, str(tmp_path / "csvout"))
-    txt = "".join(
-        p.read_text() for p in (tmp_path / "csvout").glob("*.csv")
-    )
-    assert '"k1","1"' in txt  # QUOTE_ALL parity
-
-
-def test_truncate_reload(spark, tmp_path):
-    p = str(tmp_path / "tr")
-    truncate_reload(spark.createDataFrame([(1,)], "a int"), p)
-    truncate_reload(spark.createDataFrame([(2,), (3,)], "a int"), p)
-    assert sorted(r.a for r in spark.read.parquet(p).collect()) == [2, 3]
-
-
-def test_unzip_csv_rows(spark):
-    def make_zip(csv_text):
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w") as z:
-            z.writestr("report.csv", csv_text)
-        return buf.getvalue()
-
-    rows = [("r1", make_zip("a,b\n1,2\n3,4\n")), ("r2", make_zip("a,b\n5,6\n"))]
-    df = spark.createDataFrame(rows, "report_id string, zip_blob binary")
-    out = unzip_csv_rows(df).collect()
-    assert len(out) == 3
-    got = {(r.report_id, r.a, r.b) for r in out}
-    assert got == {("r1", "1", "2"), ("r1", "3", "4"), ("r2", "5", "6")}
-
-
-# ---------- mapping / ETL config ----------
 
 def test_mapping_pipeline(spark):
     cfg = ETLConfig(
@@ -164,56 +38,6 @@ def test_stage_batch_hash(spark):
     assert out.first().hash_key is not None
 
 
-# ---------- extract functions ----------
-
-def test_extract_functions(spark):
-    df = spark.createDataFrame(
-        [
-            (
-                '{"data": {"product": {"reviewPagesTotal": 4}}}',
-                [{"__typename": "SalePrice", "display": "$9"}, {"__typename": "ListPrice", "display": "$12"}],
-                "W123_Blue_King.json",
-                "req___ST_YEAR__-end",
-                dt.datetime(2025, 6, 1, 12, 0, 0),
-                "April 2025",
-                "< 10%",
-                4,
-            )
-        ],
-        "props string, prices array<struct<__typename string, display string>>, fname string, "
-        "tmpl string, ts timestamp, month string, pct string, total_pages int",
-    )
-    row = df.select(
-        json_path("props", "$.data.product.reviewPagesTotal").alias("pages"),
-        first_struct_match("prices", "__typename", "ListPrice", "display").alias("list_price"),
-        filename_to_key("fname").alias("key_parts"),
-        template_substitute("tmpl", {"__ST_YEAR__": "2025"}).alias("tmpl_out"),
-        to_local_timestamp("ts", "America/Los_Angeles").alias("la_ts"),
-        month_name_to_last_day("month").alias("month_end"),
-        clean_percent("pct").alias("pct_val"),
-    ).first()
-    assert row.pages == "4"
-    assert row.list_price == "$12"
-    assert row.key_parts == ["W123", "Blue", "King"]
-    assert row.tmpl_out == "req_2025-end"
-    assert row.la_ts == dt.datetime(2025, 6, 1, 5, 0, 0)
-    assert str(row.month_end) == "2025-04-30"
-    assert row.pct_val == pytest.approx(0.0999)
-
-    pages = paginate(df, "total_pages").select("page").collect()
-    assert sorted(r.page for r in pages) == [2, 3, 4]
-
-
-def test_pivot_first(spark):
-    df = spark.createDataFrame(
-        [("s1", "2025-01-01", True), ("s1", "2025-01-02", False), ("s2", "2025-01-01", False)],
-        "sku string, d string, win boolean",
-    )
-    out = pivot_first(df, "sku", "d", "win", values=["2025-01-01", "2025-01-02"]).collect()
-    m = {r.sku: (r["2025-01-01"], r["2025-01-02"]) for r in out}
-    assert m == {"s1": (True, False), "s2": (False, None)}
-
-
 def test_dict_union_join(spark):
     """J8 golden: {**header, **detail} — detail's value wins on overlap, header
     fills the rest, one output row per detail row."""
@@ -233,59 +57,3 @@ def test_dict_union_join(spark):
         (1, "d2"): ("APR", None),  # detail wins even when null (dict-union)
         (2, "d3"): ("MAY", 30.0),
     }
-
-
-def test_col_index_to_name_parity():
-    """F20 parity with sharepoint_manager.py:790-798 (1→A … 27→AA … 703→AAA)."""
-    from web_crawling_prj_spark.functions.extract import col_index_to_name, parse_cell_address
-
-    assert [col_index_to_name(i) for i in (1, 26, 27, 52, 53, 702, 703)] == [
-        "A", "Z", "AA", "AZ", "BA", "ZZ", "AAA",
-    ]
-    assert parse_cell_address("C100") == (100, 3)
-    assert parse_cell_address("AA2") == (2, 27)
-
-
-def test_chunked_range_updates(spark):
-    """S15: 7 ordered rows, chunk 3, 3 columns, sheet start A2 → ranges
-    A2:C4 / A5:C7 / A8:C8 with ordered string payloads."""
-    from web_crawling_prj_spark.sources.sinks import chunked_range_updates
-
-    df = spark.createDataFrame(
-        [(i, f"sku-{i}", i * 1.5) for i in range(7)], "id int, sku string, price double"
-    )
-    out = {r.chunk_id: r for r in chunked_range_updates(df, ["id"], chunk_size=3).collect()}
-    assert [out[i].range_address for i in (0, 1, 2)] == ["A2:C4", "A5:C7", "A8:C8"]
-    assert [out[i].n_rows for i in (0, 1, 2)] == [3, 3, 1]
-    assert out[0].payload[0] == ["0", "sku-0", "0.0"]
-    assert out[2].payload == [["6", "sku-6", "9.0"]]
-
-
-def test_streaming_hll_matches_batch_registers(spark, tmp_path):
-    """Streaming HLL registers (complete mode, bounded <=2^p state) are
-    byte-identical to the batch hll_build over the same data — so streaming
-    micro-batches merge with batch sidecars via hll_merge."""
-    from web_crawling_prj_spark.operators.sketches import hll_build, hll_estimate
-    from web_crawling_prj_spark.streaming.ingest import streaming_hll_registers
-
-    df = spark.range(3000).select(
-        F.concat(F.lit("https://h.example/"), F.col("id")).alias("url_hash")
-    )
-    path = str(tmp_path / "hll_drop")
-    df.write.parquet(path)
-    stream = spark.readStream.schema("url_hash string").parquet(path)
-    q = (
-        streaming_hll_registers(stream, p=10)
-        .writeStream.format("memory")
-        .queryName("hll_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "hll_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.sql("SELECT reg, max_rho FROM hll_out").collect()))
-    want = sorted(map(tuple, hll_build(df, "url_hash", p=10).collect()))
-    assert got == want
-    est = hll_estimate(hll_build(df, "url_hash", p=10), p=10)
-    assert abs(est - 3000) / 3000 < 0.17  # p=10 → σ≈3.25%, 5σ
