@@ -29,6 +29,12 @@ def crawl_inputs(spark, sf_dir):
     pages.unpersist()
 
 
+def _cache_manager(spark):
+    """The session's CacheManager: every relation ``persist``/``cache``
+    registered and has not released yet."""
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
 def _fold_every_2(cfg: CrawlConfig) -> CrawlConfig:
     """``cfg`` folding every 2 rounds: a 3-round crawl then reads one fold
     tier of each state table plus one un-folded round."""
@@ -220,36 +226,6 @@ def test_pagerank_priority_round(spark, tmp_path, crawl_inputs):
     assert _final_state(store, spark) == _final_state(store2, spark)
 
 
-def test_pagerank_refresh_cadence_commits_and_reuses_scores(spark, tmp_path, crawl_inputs):
-    """pagerank_every=3: scores are recomputed (and committed as a
-    `pagerank_scores` table) only on refresh rounds — round 2 (first round
-    with lineage) and round 5 — while the rounds between blend the committed
-    scores without touching the fetch_log history. The refresh schedule is a
-    pure function of committed state, so a rerun lands on the same rounds
-    and the crawl stays deterministic."""
-    pages, robots, seeds, cfg = crawl_inputs
-    cfg2 = dataclasses.replace(cfg, pagerank_weight=0.4, pagerank_every=3)
-    cfg2.extra["max_doc_id"] = cfg.extra["max_doc_id"]
-    store = crawl_store(str(tmp_path / "prk"), cfg)
-    stats = run_crawl(spark, store, pages, robots, seeds, rounds=6, cfg=cfg2)
-    assert all(s["scheduled"] > 0 for s in stats)
-    refreshed = [
-        r for r in store.committed_rounds() if "pagerank_scores" in store.manifest(r)["tables"]
-    ]
-    assert refreshed == [2, 5]
-    # retention: the round-5 refresh reaps the superseded round-2 score dir —
-    # score storage is O(graph), not O(refreshes·graph)
-    retained = [r for r in store.committed_rounds() if store.has_table("pagerank_scores", r)]
-    assert retained == [5]
-    scores = store.read_round(spark, "pagerank_scores", 5)
-    assert scores.columns == ["url_hash", "_prn"]
-    assert scores.count() > 0
-    # determinism across reruns (the reuse path is exercised on rounds 3-4/6)
-    store2 = crawl_store(str(tmp_path / "prk2"), cfg)
-    run_crawl(spark, store2, pages, robots, seeds, rounds=6, cfg=cfg2)
-    assert _final_state(store, spark) == _final_state(store2, spark)
-
-
 def test_robots_refresh_blocks_host_next_round(spark, tmp_path, crawl_inputs):
     """C13: the between-rounds robots_source hook — a host whose robots.txt
     turns to Disallow:/ after round 1 is scheduled in round 1 but never again."""
@@ -305,9 +281,13 @@ def test_run_report_committed_and_abort_threshold(
     store2 = crawl_store(str(tmp_path / "rep2"), cfg)
     import pytest as _pytest
 
+    cached = _cache_manager(spark).numCachedEntries()
     with _pytest.raises(RuntimeError, match="failed"):
         run_crawl(spark, store2, pages, robots, seeds, rounds=1, cfg=bad)
     assert store2.last_committed_round() == 1  # abort happened post-commit
+    # the abort leaks no cached relation: the round keeps its frames only
+    # as checkpoints, which the next round frees
+    assert _cache_manager(spark).numCachedEntries() == cached
 
 
 def test_seen_compaction_equivalence_and_path_bound(
@@ -829,17 +809,23 @@ def test_redirect_chains_resolve_to_terminals(spark, tmp_path, crawl_inputs):
     cfg.extra["max_doc_id"] = base_cfg.extra["max_doc_id"]
     store = crawl_store(str(tmp_path / "redir"), cfg)
     # leak bound, checked after every round: the persistent RDDs are the
-    # caller's caches plus at most ONE round's checkpoints (the barriers and
-    # the redirect hops) — the previous round's are freed, the caller's
-    # cached ``pages`` never is
+    # caller's caches plus at most ONE round's checkpoints (the resolved
+    # churn, the three barriers, the redirect edges, hops and terminals) —
+    # the previous round's are freed, the caller's cached ``pages`` never is
     def persistent():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
+    cm = _cache_manager(spark)
     before = persistent()
+    cached_before = cm.numCachedEntries()
     for r in (1, 2, 3):
         run_crawl(spark, store, pages, robots, seeds, rounds=r, cfg=cfg)
         held = {rdd.id() for rdd in round_checkpoints._rdds}
-        assert 0 < len(held) <= 3 + cfg.redirect_max_hops - 1, held
+        assert 0 < len(held) <= 6 + cfg.redirect_max_hops - 1, held
+        # the CacheManager holds no relation the round built: only the
+        # caller's cached ``pages`` (and whatever was cached before)
+        assert cm.numCachedEntries() == cached_before
+        assert cm.lookupCachedData(pages._jdf).isDefined()
         now = persistent()
         assert held <= now
         cache = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(pages._jdf)

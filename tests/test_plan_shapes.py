@@ -222,6 +222,7 @@ def test_delta_mode_pending_plan_never_touches_base_with_a_shuffle(spark, sf_dir
         CrawlConfig,
         crawl_store,
         pending_frontier,
+        round_checkpoints,
         run_crawl,
     )
     from web_crawling_prj_spark.sources.pages_gen import pages_df, robots_df, seeds_df
@@ -265,31 +266,31 @@ def test_delta_mode_pending_plan_never_touches_base_with_a_shuffle(spark, sf_dir
         plan_pr = explain_str(pending_pr, "simple")
         assert plan_pr.count("Exchange hashpartitioning") == 2, plan_pr
         assert "seen_delta" not in plan_pr and "fetch_log" not in plan_pr, plan_pr
-        # the plan the crawl runs: run_round passes a `persisted` list, so
-        # the resolved churn is cached. The cached scan does not report the
-        # cache's HashPartitioning, so the planner re-shuffles the churn
-        # KEYS to the base's buckets — one delta-sized ENSURE_REQUIREMENTS
-        # exchange over the cache. The base side still reaches its merge
-        # anti-join with no exchange: the backlog never moves
-        persisted = []
-        pending_p = pending_frontier(spark, store, 6, cfg, persisted=persisted)
+        # the plan the crawl runs: run_round passes the round's checkpoint
+        # holder, so the resolved churn is a lazy localCheckpoint. Its RDD
+        # scan does not report the HashPartitioning it was built with, so
+        # the planner re-shuffles the churn KEYS to the base's buckets —
+        # one delta-sized ENSURE_REQUIREMENTS exchange over the checkpoint.
+        # The base side still reaches its merge anti-join with no exchange:
+        # the backlog never moves
+        round_checkpoints.release(spark)
+        pending_p = pending_frontier(spark, store, 6, cfg, checkpoint=round_checkpoints.checkpoint)
         try:
             plan_p = explain_str(pending_p, "simple")
-            assert len(persisted) == 1 and "InMemoryTableScan" in plan_p, plan_p
+            assert len(round_checkpoints._rdds) == 1 and "Scan ExistingRDD" in plan_p, plan_p
             up = _ancestors(plan_p, "frontier_log_base")
             join = next(k for k, node in enumerate(up) if "Join" in node)
             assert "SortMergeJoin" in up[join] and "LeftAnti" in up[join], up
             assert not any("Exchange" in node for node in up[:join]), up
             assert plan_p.count("ENSURE_REQUIREMENTS") == 1, plan_p
-            assert plan_p.count("InMemoryTableScan") == 2, plan_p
+            assert plan_p.count("Scan ExistingRDD") == 2, plan_p
             assert "BroadcastExchange" not in plan_p, plan_p
             assert "seen_delta" not in plan_p, plan_p
             assert sorted(pending_p.collect(), key=lambda r: r.url_hash) == sorted(
                 pending.collect(), key=lambda r: r.url_hash
             )
         finally:
-            for df in persisted:
-                df.unpersist()
+            round_checkpoints.release(spark)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

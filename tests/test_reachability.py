@@ -22,13 +22,6 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 PKG = "web_crawling_prj_spark"
 
-# Unreached modules that stay for now, each with why. The set is exact: a
-# module that is deleted or becomes reached must leave it too.
-KEPT_UNREACHED = {
-    f"{PKG}.plans.mapping": "the ETL mapping layer; its deletion, with its four "
-    "tests, is a change of its own (ROADMAP item 8)",
-}
-
 
 def _entry_files() -> list[Path]:
     files = [REPO / "__spark_entry__.py", REPO / "bench.py", REPO / "bench_extra.py"]
@@ -84,10 +77,5 @@ def test_every_package_module_is_reached_from_an_entry_point():
         if p.name != "__init__.py"
     }
     assert modules, "package not found"
-    unreached = modules - _reached()
-    assert not unreached - KEPT_UNREACHED.keys(), (
-        f"package modules no entry point imports: {sorted(unreached - KEPT_UNREACHED.keys())}"
-    )
-    assert KEPT_UNREACHED.keys() <= unreached, (
-        f"KEPT_UNREACHED names modules that are gone or reached: {sorted(KEPT_UNREACHED.keys() - unreached)}"
-    )
+    unreached = sorted(modules - _reached())
+    assert not unreached, f"package modules no entry point imports: {unreached}"

@@ -38,16 +38,17 @@ Scale decisions, explicit:
 - hot-host skew bounded by the salted two-level rank (operators.politeness);
 - the fetch join cuts the page store to the batch first (a left-semi join
   against the broadcast batch keys), so the 100 TB side never moves;
-- the round's barriers (robots-flagged live view, schedule, fetch log) are
-  lazy localCheckpoints, not persisted plans: each is computed once by one
+- every frame the round keeps — the resolved recent churn (it feeds every
+  live branch), the three barriers (robots-flagged live view, schedule,
+  fetch log) and the redirect edges and terminals — is a lazy
+  localCheckpoint, not a persisted plan: each is computed once by one
   chain of jobs, and every later plan — above all the commit writes —
   starts from a small LogicalRDD instead of re-analysing the nested round.
-  The resolved recent churn stays persisted (its cache feeds every live
-  branch). Trade-off: checkpoint blocks have no lineage, so a lost executor
-  fails the round before its commit instead of recomputing the lost
-  partitions; nothing is committed, and resume reruns the round.
-  Checkpoints are freed when the next round starts (RoundCheckpoints),
-  which bounds memory to one round's barriers;
+  Trade-off: checkpoint blocks have no lineage, so a lost executor fails
+  the round before its commit instead of recomputing the lost partitions;
+  nothing is committed, and resume reruns the round. Checkpoints are freed
+  when the next round starts (RoundCheckpoints), which bounds memory to
+  one round's frames;
 - per-partition lineage counters are computed by seen-bucket (deterministic,
   unlike spark_partition_id) and land in the metrics table each round.
 
@@ -58,6 +59,7 @@ local[32] and across kill/resume (tests/test_crawl_round.py).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -112,18 +114,6 @@ class CrawlConfig:
     # Deterministic (power iteration over committed lineage), so resume/
     # parallelism invariants hold with it enabled.
     pagerank_weight: float = 0.0
-    # PageRank refresh cadence. The score computation is inherently O(all
-    # fetched pages) — the one remaining per-round O(history) job when the
-    # blend is on: _link_lineage re-reads the FULL committed fetch_log and
-    # the power iteration sweeps the whole graph.
-    # With K > 1 the scores are recomputed only every K-th round, committed
-    # as a `pagerank_scores` table, and the rounds in between blend the last
-    # committed scores (standard periodic-refresh engineering: priorities
-    # tolerate K rounds of staleness; the heavy job amortizes to O(graph/K)
-    # per round). Resume-deterministic — the refresh schedule is derived
-    # from committed state, never wall clock. K = 1 (default) recomputes
-    # every round and commits nothing.
-    pagerank_every: int = 1
     # focused crawling (operators.focus, WWW'99): when focus_weight > 0 and
     # focus_terms is non-empty, each round BM25-scores the pages it fetched
     # against the terms and blends the parent's saturated relevance into the
@@ -260,17 +250,17 @@ def init_crawl(spark: SparkSession, store: StateStore, seeds: DataFrame, cfg: Cr
 
 
 class RoundCheckpoints:
-    """The crawl round's checkpointed barriers, held until the NEXT round
+    """The crawl round's checkpointed frames, held until the NEXT round
     starts.
 
     ``localCheckpoint`` cuts a frame's lineage: every later plan starts from
     a small ``LogicalRDD`` instead of re-analysing the nested round. Its
     blocks are not a cached relation, so ``DataFrame.unpersist`` does not
     free them — the holder keeps each checkpoint's RDD and unpersists that.
-    They are freed when the next round starts, not in the round's own
-    ``finally``: a caller may still read the round's frames after
+    They are freed when the next round starts, not when the round returns
+    or raises: a caller may still read the round's frames after
     :func:`run_round` returns, and memory stays bounded by one round's
-    barriers either way. Blocks of a stopped SparkContext died with it and
+    frames either way. Blocks of a stopped SparkContext died with it and
     are only forgotten."""
 
     def __init__(self) -> None:
@@ -309,17 +299,12 @@ def run_round(
     """Execute one crawl round and commit its state atomically.
 
     The previous round's checkpoints are freed first (:class:`RoundCheckpoints`).
-    This round's persisted caches are released in one finally block — any
-    exit path, including the failure-threshold abort or an unexpected error,
-    must not leak them into the next round; its checkpoints live until the
-    next round starts."""
+    Every frame this round keeps is one of its checkpoints, which live until
+    the next round starts — on every exit path, the failure-threshold abort
+    and an unexpected error included — so the round caches nothing a later
+    round could find leaked."""
     round_checkpoints.release(spark)
-    persisted: list[DataFrame] = []
-    try:
-        return _run_round(spark, store, pages, robots, round_id, cfg, persisted)
-    finally:
-        for df in persisted:
-            df.unpersist()
+    return _run_round(spark, store, pages, robots, round_id, cfg)
 
 
 def _resolve_events(log: DataFrame) -> DataFrame:
@@ -352,7 +337,7 @@ def live_frontier_parts(
     store: StateStore,
     upto_round: int,
     cfg: CrawlConfig,
-    persisted: list | None = None,
+    checkpoint: Callable[[DataFrame], DataFrame] | None = None,
 ) -> list[DataFrame]:
     """The live frontier as a LIST of branches whose union is the live view,
     each branch keeping the store's HashPartitioning(url_hash, num_buckets)
@@ -363,8 +348,10 @@ def live_frontier_parts(
     Branches: one per base tier (oldest→newest) + one for the resolved
     recent churn — the per-key latest event over the un-folded rounds (one
     plain scan of Σ round churn since the last fold), repartitioned ONCE to
-    the tiers' bucket layout, so the tier joins against it co-locate. It is
-    persisted when a ``persisted`` list is passed (it feeds every branch).
+    the tiers' bucket layout, so the tier joins against it co-locate. It
+    feeds every branch, so it goes through ``checkpoint`` when one is passed
+    (``DataFrame -> DataFrame``, e.g. ``round_checkpoints.checkpoint``);
+    ``None`` keeps it lazy.
     Per tier: live rows (``~is_del`` pushed into the scan — a
     non-terminal tier carries tombstones targeting older tiers) ∖ keys of
     every NEWER tier ∖ recent-event keys. The joins carry no hints: Spark
@@ -379,9 +366,8 @@ def live_frontier_parts(
     resolved = None
     if deltas:  # one plain scan over the un-folded rounds
         resolved = _resolve_events(deltas[0].repartition(cfg.num_buckets, "url_hash"))
-        if persisted is not None:
-            resolved = resolved.persist()
-            persisted.append(resolved)
+        if checkpoint is not None:
+            resolved = checkpoint(resolved)
     parts: list[DataFrame] = []
     for i, b in enumerate(bases):  # oldest→newest
         branch = b.where(~F.col("is_del")).select(*FRONTIER_COLS)
@@ -409,7 +395,7 @@ def live_frontier(
     store: StateStore,
     upto_round: int,
     cfg: CrawlConfig,
-    persisted: list | None = None,
+    checkpoint: Callable[[DataFrame], DataFrame] | None = None,
     parts_out: list | None = None,
 ) -> DataFrame:
     """The live frontier as of committed round ``upto_round``: the union of
@@ -422,7 +408,7 @@ def live_frontier(
     read-time seen join at all. ``parts_out``: optional list the branches
     are appended to (same contract as live_frontier_parts) for callers that
     also need the layout-preserving branches."""
-    parts = live_frontier_parts(spark, store, upto_round, cfg, persisted=persisted)
+    parts = live_frontier_parts(spark, store, upto_round, cfg, checkpoint=checkpoint)
     if parts_out is not None:
         parts_out.extend(parts)
     if not parts:
@@ -447,7 +433,7 @@ def pending_frontier(
     store: StateStore,
     round_id: int,
     cfg: CrawlConfig,
-    persisted: list | None = None,
+    checkpoint: Callable[[DataFrame], DataFrame] | None = None,
     parts_out: list | None = None,
 ) -> DataFrame:
     """Steps 0–1 of a round: the live view as of the previous round, cut to
@@ -462,7 +448,7 @@ def pending_frontier(
     the shape on this exact function)."""
     round_ts = F.lit(cfg.round_ts(round_id)).cast("timestamp")
     frontier = live_frontier(
-        spark, store, round_id - 1, cfg, persisted=persisted, parts_out=parts_out
+        spark, store, round_id - 1, cfg, checkpoint=checkpoint, parts_out=parts_out
     )
     # backoff gate (reference C10): only rows whose next_eligible_ts has
     # passed; live ∩ seen = ∅ by construction → pending IS the eligible set
@@ -489,35 +475,16 @@ def _link_lineage(
 
 def _pagerank_priority(
     spark: SparkSession, store: StateStore, round_id: int, cfg: CrawlConfig, df: DataFrame
-) -> tuple[DataFrame, DataFrame | None]:
-    """Scheduling-time PageRank blend with the ``pagerank_every`` refresh
-    cadence.
-
-    Returns (blended df, scores-to-commit or None). A round REUSES the
-    newest committed ``pagerank_scores`` table strictly younger than K
-    rounds (the walk checks at most K manifests, newest-first — never
-    O(rounds)); otherwise it REFRESHES: full-history lineage → pagerank →
-    normalized scores, committed with this round iff K > 1 (K = 1 reuses
-    nothing, so committing would be dead weight). The cadence is a pure
-    function of committed state — kill/resume and reruns land on the same
-    refresh rounds, keeping the crawl's determinism invariants."""
+) -> DataFrame:
+    """Scheduling-time PageRank blend: full-history lineage → pagerank →
+    normalized scores, recomputed every round from committed state, so
+    kill/resume and reruns blend the same scores."""
     from web_crawling_prj_spark.operators.graph import blend_priority, normalized_pagerank
 
-    K = max(1, cfg.pagerank_every)
-    for r in reversed(store.committed_rounds()):
-        if r >= round_id:
-            continue
-        if round_id - r >= K:
-            break
-        if store.has_table("pagerank_scores", r):
-            scores = store.read_round(spark, "pagerank_scores", r)
-            return blend_priority(df, scores, weight=cfg.pagerank_weight), None
     link_log = _link_lineage(spark, store, round_id, cfg)
     if link_log is None:
-        return df, None
-    pr_n = normalized_pagerank(link_log)
-    blended = blend_priority(df, pr_n, weight=cfg.pagerank_weight)
-    return blended, (pr_n if K > 1 else None)
+        return df
+    return blend_priority(df, normalized_pagerank(link_log), weight=cfg.pagerank_weight)
 
 
 def _run_round(
@@ -527,12 +494,11 @@ def _run_round(
     robots: DataFrame,
     round_id: int,
     cfg: CrawlConfig,
-    persisted: list,
 ) -> dict:
     round_ts = cfg.round_ts(round_id)
     live_parts: list[DataFrame] = []
     pending = pending_frontier(
-        spark, store, round_id, cfg, persisted=persisted, parts_out=live_parts
+        spark, store, round_id, cfg, checkpoint=round_checkpoints.checkpoint, parts_out=live_parts
     )
 
     # 2) robots gate (broadcast join + codegen'd prefix predicate).
@@ -576,9 +542,8 @@ def _run_round(
     # priorities (never rewritten — commit volume stays O(churn)); only rows
     # that re-enter via the retry path carry a blended value forward
     # (bounded by the retry budget).
-    pr_scores = None
     if cfg.pagerank_weight > 0:
-        allowed, pr_scores = _pagerank_priority(spark, store, round_id, cfg, allowed)
+        allowed = _pagerank_priority(spark, store, round_id, cfg, allowed)
     budgets = host_budgets(robots, cfg.round_duration_ms, max_per_host=cfg.max_per_host)
     if half_open_hosts is not None:
         # half-open circuit: budget forced to 1 probe for the host
@@ -682,16 +647,17 @@ def _run_round(
             F.col("fetched_ts").alias("discovered_ts"),
             F.col("url_hash").alias("src_url_hash"),
         )
-        # persisted: the hop loop reads the edges once per hop, and the
+        # checkpointed: the hop loop reads the edges once per hop, and the
         # terminals feed both the candidate keys and the winners
-        r3 = canonicalize_urls_hybrid(r3, "_loc", "dst").drop("_loc").persist()
-        persisted.append(r3)
+        r3 = round_checkpoints.checkpoint(
+            canonicalize_urls_hybrid(r3, "_loc", "dst").drop("_loc")
+        )
         resolved = resolve_redirects(
             r3.select("src", "dst"),
             max_hops=cfg.redirect_max_hops,
             checkpoint=round_checkpoints.checkpoint,
         )
-        terminals = (
+        terminals = round_checkpoints.checkpoint(
             resolved.where(F.col("terminated"))
             .join(r3.drop("dst"), "src")
             .select(
@@ -707,9 +673,7 @@ def _run_round(
                 F.lit(None).cast("timestamp").alias("next_eligible_ts"),
             )
             .select(*FRONTIER_COLS)
-            .persist()
         )
-        persisted.append(terminals)
         discovered = discovered.unionByName(terminals)
 
     # 7c) focused crawling (WWW'99): blend each parent page's BM25 topic
@@ -821,12 +785,6 @@ def _run_round(
         "host_state": new_host_state,
         "run_report": run_summary(metrics),
     }
-    if pr_scores is not None:
-        # refreshed this round with pagerank_every > 1: commit the normalized
-        # scores so the next K-1 rounds blend them without touching the full
-        # fetch_log history (pagerank() localCheckpoints its result — this
-        # write re-runs nothing)
-        tables["pagerank_scores"] = pr_scores
     # write-time seen filter on the delta-sized winners (this round's
     # seen_delta included): keeps the live view seen-clean so reads never
     # join against the seen-set at all. The winners carry the bucket layout
@@ -852,15 +810,6 @@ def _run_round(
         cfg.num_buckets, "url_hash"
     )
     store.commit_round(round_id, tables, extra_meta={"round_ts": round_ts})
-    if pr_scores is not None:
-        # retention: only the newest committed scores are ever read (the
-        # reuse walk in _pagerank_priority looks back < K rounds), so reap
-        # superseded score dirs now — score storage stays O(graph), not
-        # O(rounds·graph) over a long crawl. Kill-safe: a kill before the
-        # reap just leaves dirs for the next refresh round to collect.
-        for r in store.committed_rounds():
-            if r < round_id and store.has_table("pagerank_scores", r):
-                store.drop_round_table("pagerank_scores", r)
 
     # read the committed tables back ONCE (two small driver jobs per round);
     # the artifact render, the summary, and the abort check all share the rows
@@ -878,7 +827,7 @@ def _run_round(
     }
     # batch/run failure threshold (reference C4/C5): abort AFTER committing so
     # a resumed run (mode='failed' analog) starts from consistent state;
-    # run_round's finally releases the persisted caches on this path too
+    # the round's checkpoints are freed when the next round starts
     if cfg.extra.get("abort_on_failed_run"):
         if report and report["run_failed"]:
             raise RuntimeError(

@@ -409,25 +409,12 @@ class StateStore:
                     )
         return n
 
-    def drop_round_table(self, table: str, round_id: int) -> bool:
-        """Delete ONE committed round's table dir (retention for superseded
-        snapshot tables, e.g. pagerank_scores — only the newest is ever
-        read). The manifest is untouched: ``has_table`` turns False (it
-        requires the dir), so readers that probe before reading skip the
-        round cleanly; ``read_round`` on it would raise, same as after
-        ``vacuum_compacted``. Returns True iff a dir was removed."""
-        d = self._table_round_dir(table, round_id)
-        if not os.path.exists(d):
-            return False
-        shutil.rmtree(d)
-        return True
-
     # --- read path (only committed rounds are visible) ---
 
     def has_table(self, table: str, round_id: int) -> bool:
         """True iff `round_id` is committed AND its dir for this table exists
         (rounds that never wrote the table, and dirs reaped by
-        ``drop_round_table``/``vacuum_compacted``, have none)."""
+        ``vacuum_compacted``, have none)."""
         return os.path.exists(self._manifest_path(round_id)) and os.path.exists(
             self._table_round_dir(table, round_id)
         )
