@@ -196,23 +196,6 @@ def test_robots_and_budget_invariants(spark, crawl_inputs, three_round_store):
     assert viol.count() == 0
 
 
-def test_failed_mode_frontier(spark, three_round_store):
-    from web_crawling_prj_spark.plans.crawl_round import failed_mode_frontier
-
-    store, _ = three_round_store
-    fm = failed_mode_frontier(spark, store)
-    rows = fm.collect()
-    assert len(rows) > 0  # unknown seeds 404 permanently
-    assert all(r.attempt == 0 and r.next_eligible_ts is None for r in rows)
-    # every failed-mode url really is a permanent failure in the log
-    log = store.read_all(spark, "fetch_log")
-    perm = {
-        r.url_hash
-        for r in log.where((F.col("error_class") != "ok") & (~F.col("can_retry"))).collect()
-    }
-    assert {r.url_hash for r in rows} <= perm
-
-
 def test_pagerank_priority_round(spark, tmp_path, crawl_inputs):
     pages, robots, seeds, cfg = crawl_inputs
     cfg2 = dataclasses.replace(cfg, pagerank_weight=0.4)

@@ -1,13 +1,11 @@
-"""Adaptive recrawl laws: doubling on unchanged, reset on change, cap,
-partition-independence, and the due-set pick."""
+"""Adaptive recrawl laws: doubling on unchanged, reset on change, cap, and
+partition-independence."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from web_crawling_prj_spark.operators.recrawl import due_for_refetch, recrawl_schedule
+from web_crawling_prj_spark.operators.recrawl import recrawl_schedule
 
 
 def _hist(spark, fps, key="u"):
@@ -44,59 +42,3 @@ def test_schedule_is_partitioning_independent(spark):
 def test_schedule_is_one_shuffle(spark):
     plan = _sched(_hist(spark, [1, 1, 2]))._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1  # one window partitioning, reused
-
-
-def test_refresh_mode_frontier_from_committed_crawl(spark, tmp_path):
-    """Freshness mode over a real committed crawl: due pages come back as
-    frontier rows (attempt reset, deadline as next_eligible_ts), all of them
-    previously-fetched ok pages."""
-    from web_crawling_prj_spark.plans.crawl_round import (
-        CrawlConfig,
-        crawl_store,
-        refresh_mode_frontier,
-        run_crawl,
-    )
-    from web_crawling_prj_spark.sources.pages_gen import pages_df, robots_df, seeds_df
-
-    sf = "/root/testdata/sf0.001"
-    pages, seeds, robots = pages_df(spark, sf), seeds_df(spark, sf), robots_df(spark)
-    cfg = CrawlConfig(num_buckets=4)
-    store = crawl_store(str(tmp_path / "store"), cfg)
-    run_crawl(spark, store, pages, robots, seeds, rounds=2, cfg=cfg)
-
-    # far future → every ok-fetched page is due exactly once
-    far = refresh_mode_frontier(spark, store, "2030-01-01 00:00:00")
-    ok_urls = {
-        r["url_hash"]
-        for r in store.read_all(spark, "fetch_log")
-        .where(F.col("error_class") == "ok")
-        .select("url_hash")
-        .distinct()
-        .collect()
-    }
-    rows = far.collect()
-    assert {r["url_hash"] for r in rows} == ok_urls
-    assert len(rows) == len(ok_urls)  # one frontier row per page
-    assert all(r["attempt"] == 0 for r in rows)
-    assert all(r["next_eligible_ts"] is not None for r in rows)
-    # just after the crawl, nothing has aged past its first-interval deadline
-    cfg_ts = cfg.round_ts(2)
-    soon = refresh_mode_frontier(spark, store, cfg_ts)
-    assert soon.count() <= len(ok_urls)
-
-
-def test_due_for_refetch_latest_row_and_deadline(spark):
-    # two pages: "hot" changes every fetch (short intervals — due soon),
-    # "cold" never changes (long interval — not yet due)
-    hot = _hist(spark, [1, 2, 3], key="hot")
-    cold = _hist(spark, [5, 5, 5, 5, 5, 5], key="cold")
-    sched = _sched(hot.unionByName(cold))
-    # hot's latest: ts=2h, interval 1h → due at 3h; cold's latest: ts=5h,
-    # streak 5 → interval 32h → due at 37h
-    due_at_4h = due_for_refetch(sched, key="page", ts="ts", now="2026-01-01 04:00:00")
-    assert [r["page"] for r in due_at_4h.collect()] == ["hot"]
-    due_at_38h = due_for_refetch(sched, key="page", ts="ts", now="2026-01-02 14:00:00")
-    assert sorted(r["page"] for r in due_at_38h.collect()) == ["cold", "hot"]
-    # exactly one row per due page, and it is the LATEST fetch's row
-    r = {x["page"]: x for x in due_at_38h.collect()}
-    assert r["hot"]["seq"] == 2 and r["cold"]["seq"] == 5

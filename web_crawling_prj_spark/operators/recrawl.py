@@ -19,10 +19,8 @@ Relational design, one shuffle total: everything is computed over a single
 - ``interval`` : ``base · 2^min(streak, max_doublings)`` hours;
 - ``next_fetch_ts`` : this fetch's ts + interval.
 
-The scheduler then feeds ``next_fetch_ts`` into the frontier's
-``next_eligible_ts`` (the same backoff gate retries use) — due pages surface,
-fresh-looking pages wait. Exactly SQL-expressible → value-exact DuckDB oracle
-(query ``recrawl_schedule``).
+Exactly SQL-expressible → value-exact DuckDB oracle (query
+``recrawl_schedule``).
 """
 
 from __future__ import annotations
@@ -66,15 +64,3 @@ def recrawl_schedule(
         }
     )
 
-
-def due_for_refetch(
-    scheduled: DataFrame, key: str, ts: str, now, tiebreak: str | None = None
-) -> DataFrame:
-    """Latest schedule row per key, filtered to pages whose ``next_fetch_ts``
-    has passed — the recrawl candidate set a round unions into its frontier.
-    Pass the same ``tiebreak`` column ``recrawl_schedule`` used so the pick is
-    deterministic even when two history rows share a ``ts``."""
-    order = [F.col(ts).desc()] + ([F.col(tiebreak).desc()] if tiebreak else [])
-    w = Window.partitionBy(key).orderBy(*order)
-    latest = scheduled.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
-    return latest.where(F.col("next_fetch_ts") <= F.lit(now).cast("timestamp")).drop("_rn")

@@ -10,16 +10,19 @@ writes execute the rest from the fetch log's checkpoint (measured: 42 Spark
 jobs per round on perfbench's crawl_backlog at local[4], most of them small):
 
     frontier_log ──(latest event per key over tiers + recent rounds)──► live
-    live ──(backoff gate)──► pending (backing-off rows stay live untouched)
-    pending ──(robots gate, broadcast)──► allowed ∪ disallowed keys
-    allowed ──(circuit breaker: open hosts sit out)──► candidates
-    candidates ──(salted 2-level top-k per host)──► scheduled
-    scheduled ──(synthetic/mapInPandas fetch + Arrow extract)──► fetch_log
-    fetch_log ──(classify, budgets, backoff)──► retries
-    fetch_log ──(outlink discovery)──► discovered
-    retries ∪ discovered ∪ incumbents ──(dedup, left-anti vs seen)──► adds
-    commit atomically: seen_delta, fetch_log, frontier_log (adds + scheduled
-    and disallowed tombstones), host_state, metrics, run_report
+    live ──(pending_frontier: backoff gate)──► pending
+    pending ──(_robots_gate, broadcast)──► allowed ∪ disallowed keys
+    allowed ──(_circuit_breaker: open hosts sit out)──► allowed, budgets
+    allowed ──(_schedule: blends, salted 2-level top-k per host)──► scheduled
+    scheduled ──(_fetch: synthetic fetch + Arrow extract, classify)──► fetch_log
+    fetch_log ──(_retries: budgets, backoff)──► retries
+    fetch_log ──(_discover: outlinks, redirect terminals, focus)──► discovered
+    retries ∪ discovered ∪ incumbents ──(_winners: dedup)──► winners
+    fetch_log ──(_seen_delta, _round_aggregates)──► seen_delta, metrics,
+        host_state, run_report
+    winners ──(_frontier_events: left-anti vs seen)──► adds; scheduled and
+        disallowed keys ──► tombstones
+    commit atomically (_run_round), then _post_commit_report (abort check)
     every compact_every rounds: fold seen_delta and frontier_log into tiers
 
 Scale decisions, explicit:
@@ -62,7 +65,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from web_crawling_prj_spark.functions.hashing import bucket_of, url_hash
@@ -458,7 +461,7 @@ def pending_frontier(
 
 
 def _link_lineage(
-    spark: SparkSession, store: StateStore, round_id: int, cfg: CrawlConfig
+    spark: SparkSession, store: StateStore, round_id: int, cfg: CrawlConfig, max_doc_id: int | None
 ) -> DataFrame | None:
     """Link-graph edges (src_url_hash → url_hash) for PageRank priorities,
     re-derived from the committed fetch_log (outlinks are a pure function of
@@ -467,98 +470,107 @@ def _link_lineage(
     log = store.read_all(spark, "fetch_log", up_to=round_id - 1)
     if log is None:
         return None
-    edges = discover_outlinks(
-        log, links_per_page=cfg.links_per_page, max_doc_id=cfg.extra.get("max_doc_id")
-    )
+    edges = discover_outlinks(log, links_per_page=cfg.links_per_page, max_doc_id=max_doc_id)
     return edges.select("src_url_hash", "url_hash")
 
 
 def _pagerank_priority(
-    spark: SparkSession, store: StateStore, round_id: int, cfg: CrawlConfig, df: DataFrame
+    spark: SparkSession,
+    store: StateStore,
+    round_id: int,
+    cfg: CrawlConfig,
+    df: DataFrame,
+    max_doc_id: int | None,
 ) -> DataFrame:
     """Scheduling-time PageRank blend: full-history lineage → pagerank →
     normalized scores, recomputed every round from committed state, so
     kill/resume and reruns blend the same scores."""
     from web_crawling_prj_spark.operators.graph import blend_priority, normalized_pagerank
 
-    link_log = _link_lineage(spark, store, round_id, cfg)
+    link_log = _link_lineage(spark, store, round_id, cfg, max_doc_id)
     if link_log is None:
         return df
     return blend_priority(df, normalized_pagerank(link_log), weight=cfg.pagerank_weight)
 
 
-def _run_round(
-    spark: SparkSession,
-    store: StateStore,
-    pages: DataFrame,
-    robots: DataFrame,
-    round_id: int,
-    cfg: CrawlConfig,
-) -> dict:
-    round_ts = cfg.round_ts(round_id)
-    live_parts: list[DataFrame] = []
-    pending = pending_frontier(
-        spark, store, round_id, cfg, checkpoint=round_checkpoints.checkpoint, parts_out=live_parts
-    )
-
-    # 2) robots gate (broadcast join + codegen'd prefix predicate).
-    # Checkpointed HERE so the allowed and disallowed branches do not each
-    # re-run the live-view reconstruction, and every later plan starts from
-    # the checkpoint instead of the nested live view. Both outcomes of the
-    # gate are kept: disallowed keys become frontier tombstones.
+def _robots_gate(pending: DataFrame, robots: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Step 2, robots gate (broadcast join + codegen'd prefix predicate) →
+    ``(allowed, disallowed_keys)``. Checkpointed HERE so the allowed and
+    disallowed branches do not each re-run the live-view reconstruction, and
+    every later plan starts from the checkpoint instead of the nested live
+    view. Both outcomes of the gate are kept: disallowed keys become
+    frontier tombstones."""
     flagged = round_checkpoints.checkpoint(gate_frontier_flagged(pending, robots))
     allowed = flagged.where(F.col("robots_allowed")).drop("robots_allowed")
     disallowed_keys = flagged.where(~F.col("robots_allowed")).select("url_hash")
+    return allowed, disallowed_keys
 
-    # 3) circuit breaker (reference C12): hosts with open circuits sit out this
-    # round but their URLs are DEFERRED, not dropped — they stay live in the
-    # log untouched (quarantine is temporal, never data loss). Circuit
-    # state is maintained INCREMENTALLY: each round folds only its own fetch
-    # log into the committed host_state table (O(round), not O(history)).
+
+def _circuit_breaker(
+    spark: SparkSession,
+    store: StateStore,
+    round_id: int,
+    round_ts: str,
+    allowed: DataFrame,
+    robots: DataFrame,
+    cfg: CrawlConfig,
+) -> tuple[DataFrame, DataFrame | None, DataFrame]:
+    """Step 3, circuit breaker (reference C12) → ``(allowed, prev_host_state,
+    budgets)``. Hosts with open circuits sit out this round but their URLs
+    are DEFERRED, not dropped — they stay live in the log untouched
+    (quarantine is temporal, never data loss). Circuit state is maintained
+    INCREMENTALLY: each round folds only its own fetch log into the committed
+    host_state table (O(round), not O(history)). A HALF_OPEN host (reference
+    error_handler.py:223-256: recovery window passed but no success has reset
+    the streak yet) gets a politeness budget of ONE probe URL."""
     prev_host_state = None
     if round_id > 1 and store.has_table("host_state", round_id - 1):
         prev_host_state = store.read_round(spark, "host_state", round_id - 1)
     # else: store predates host_state tables (or round 1) → no circuit history
-    half_open_hosts = None
-    if prev_host_state is not None:
-        tripped = prev_host_state.where(F.col("quarantined_until").isNotNull())
-        open_hosts = tripped.where(
-            F.col("quarantined_until") > F.lit(round_ts).cast("timestamp")
-        ).select("host")
-        # HALF_OPEN (reference error_handler.py:223-256): recovery window passed
-        # but no success has reset the streak yet → admit ONE probe URL
-        half_open_hosts = tripped.where(
-            F.col("quarantined_until") <= F.lit(round_ts).cast("timestamp")
-        ).select("host")
-        allowed = allowed.join(F.broadcast(open_hosts), "host", "left_anti")
-
-    # 4) politeness schedule (salted two-level exact top-k per host).
-    # `scheduled` feeds the fetch, the incumbent probe and the tombstones —
-    # checkpoint it so the window stages run once per round.
-    # The PageRank blend happens HERE, on the rows entering the rank: the
-    # rank stage owns its two designed exchanges anyway, so the scores join
-    # rides into them instead of degrading the pending plan. The blend is a
-    # scheduling-time view: unscheduled backlog rows keep their base
-    # priorities (never rewritten — commit volume stays O(churn)); only rows
-    # that re-enter via the retry path carry a blended value forward
-    # (bounded by the retry budget).
-    if cfg.pagerank_weight > 0:
-        allowed = _pagerank_priority(spark, store, round_id, cfg, allowed)
     budgets = host_budgets(robots, cfg.round_duration_ms, max_per_host=cfg.max_per_host)
-    if half_open_hosts is not None:
-        # half-open circuit: budget forced to 1 probe for the host
-        # full outer: a half-open host with no robots row must still get budget 1
-        budgets = (
-            budgets.join(half_open_hosts.withColumn("_ho", F.lit(True)), "host", "full_outer")
-            .withColumn(
-                "max_per_round",
-                F.when(F.col("_ho"), F.lit(1)).otherwise(F.col("max_per_round")),
-            )
-            .drop("_ho")
+    if prev_host_state is None:
+        return allowed, None, budgets
+    tripped = prev_host_state.where(F.col("quarantined_until").isNotNull())
+    open_hosts = tripped.where(
+        F.col("quarantined_until") > F.lit(round_ts).cast("timestamp")
+    ).select("host")
+    half_open_hosts = tripped.where(
+        F.col("quarantined_until") <= F.lit(round_ts).cast("timestamp")
+    ).select("host")
+    allowed = allowed.join(F.broadcast(open_hosts), "host", "left_anti")
+    # full outer: a half-open host with no robots row must still get budget 1
+    budgets = (
+        budgets.join(half_open_hosts.withColumn("_ho", F.lit(True)), "host", "full_outer")
+        .withColumn(
+            "max_per_round",
+            F.when(F.col("_ho"), F.lit(1)).otherwise(F.col("max_per_round")),
         )
-    # crawl-trap budgeting: candidates for THIS round's schedule are capped
-    # per URL template; trap-cut rows are never tombstoned, so they remain
-    # live for later rounds
+        .drop("_ho")
+    )
+    return allowed, prev_host_state, budgets
+
+
+def _schedule(
+    spark: SparkSession,
+    store: StateStore,
+    round_id: int,
+    cfg: CrawlConfig,
+    allowed: DataFrame,
+    budgets: DataFrame,
+    max_doc_id: int | None,
+) -> DataFrame:
+    """Step 4, politeness schedule (salted two-level exact top-k per host) →
+    ``scheduled``, which feeds the fetch, the incumbent probe and the
+    tombstones — checkpointed so the window stages run once per round. The
+    PageRank blend happens HERE, on the rows entering the rank: the rank
+    stage owns its two designed exchanges anyway, so the scores join rides
+    into them instead of degrading the pending plan. Unscheduled backlog
+    rows keep their base priorities (never rewritten — commit volume stays
+    O(churn)); only rows re-entering via the retry path carry a blended
+    value forward. Rows cut by the per-template trap cap, or that lose the
+    budget race, are never tombstoned: they stay live for later rounds."""
+    if cfg.pagerank_weight > 0:
+        allowed = _pagerank_priority(spark, store, round_id, cfg, allowed, max_doc_id)
     candidates = allowed
     if cfg.trap_max_per_template > 0:
         from web_crawling_prj_spark.operators.traps import cap_trapped_frontier
@@ -570,7 +582,7 @@ def _run_round(
             max_per_template=cfg.trap_max_per_template,
             n_salts=cfg.n_salts,
         )
-    scheduled = round_checkpoints.checkpoint(
+    return round_checkpoints.checkpoint(
         schedule_round(
             candidates,
             budgets,
@@ -579,13 +591,21 @@ def _run_round(
             tiebreak=cfg.schedule_tiebreak,
         )
     )
-    # frontier rows that lost the budget race are never materialized: they
-    # simply stay live in the log (not tombstoned) for the next round.
 
-    # 5) fetch + extract (synthetic deterministic fetcher; same schema as real).
-    # The fetch log feeds FOUR consumers (frontier adds, seen delta, metrics,
-    # its own commit) — checkpoint it so the fetch+extract stage runs once,
-    # not once per committed table, and the commit writes plan from it alone.
+
+def _fetch(
+    scheduled: DataFrame,
+    pages: DataFrame,
+    round_id: int,
+    round_ts: str,
+    cfg: CrawlConfig,
+    max_doc_id: int | None,
+) -> DataFrame:
+    """Step 5, fetch + extract (synthetic deterministic fetcher; same schema
+    as real) and classify → ``fetch_log``. The fetch log feeds FOUR
+    consumers (frontier adds, seen delta, metrics, its own commit) —
+    checkpointed so the fetch+extract stage runs once, not once per committed
+    table, and the commit writes plan from it alone."""
     fetch_log = synthetic_fetch(
         scheduled,
         pages,
@@ -594,12 +614,15 @@ def _run_round(
         failure_per_mille=cfg.failure_per_mille,
         roll_mode=cfg.fetch_roll_mode,
         redirect_per_mille=cfg.redirect_per_mille,
-        max_doc_id=cfg.extra.get("max_doc_id"),
+        max_doc_id=max_doc_id,
     )
-    fetch_log = round_checkpoints.checkpoint(classify_fetch_log(fetch_log))
+    return round_checkpoints.checkpoint(classify_fetch_log(fetch_log))
 
-    # 6) retries re-enter the frontier with backoff; exhausted rows tombstone
-    retries = (
+
+def _retries(fetch_log: DataFrame) -> DataFrame:
+    """Step 6: retryable fetch rows re-enter the frontier with their backoff;
+    exhausted rows tombstone (they land in the seen delta)."""
+    return (
         fetch_log.where(F.col("can_retry"))
         .select(
             F.col("url_canon").alias("url"),
@@ -616,71 +639,72 @@ def _run_round(
         .select(*FRONTIER_COLS)
     )
 
-    # 7) outlink discovery feeds the next frontier
-    max_doc = cfg.extra.get("max_doc_id")
-    discovered = discover_outlinks(
-        fetch_log, links_per_page=cfg.links_per_page, max_doc_id=max_doc
-    ).withColumns({"attempt": F.lit(0), "next_eligible_ts": F.lit(None).cast("timestamp")})
-    discovered = discovered.select(*FRONTIER_COLS)
 
-    # 7b) redirect resolution (reference: httpx follow_redirects inside
-    # services/request_client.py; here the redirect map is DATA): this
-    # round's 3xx rows resolve — through each other, when several hops of a
-    # chain were fetched in the same round — to terminal targets, which
-    # enqueue like discovered links. Each hop's Location is cleaned +
-    # canonicalized first (same strip→canon path as seeds), so chains key
-    # consistently; ``terminated = false`` rows (cycles / over-budget) never
-    # enqueue — their source is already terminal in the fetch log (class
-    # 'redirect', retry budget 0 → seen). Delta-sized: only 3xx rows join.
-    if cfg.redirect_per_mille > 0:
-        from web_crawling_prj_spark.functions.urls import (
-            canonicalize_urls_hybrid,
-            strip_tracking_params,
-        )
-        from web_crawling_prj_spark.operators.redirects import resolve_redirects
+def _redirect_terminals(fetch_log: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """Step 7b, redirect resolution (reference: httpx follow_redirects inside
+    services/request_client.py; here the redirect map is DATA): this round's
+    3xx rows resolve — through each other, when several hops of a chain were
+    fetched in the same round — to terminal targets, which enqueue like
+    discovered links. Each hop's Location is cleaned + canonicalized first
+    (same strip→canon path as seeds), so chains key consistently;
+    ``terminated = false`` rows (cycles / over-budget) never enqueue — their
+    source is already terminal in the fetch log (class 'redirect', retry
+    budget 0 → seen). Delta-sized: only 3xx rows join."""
+    from web_crawling_prj_spark.functions.urls import (
+        canonicalize_urls_hybrid,
+        strip_tracking_params,
+    )
+    from web_crawling_prj_spark.operators.redirects import resolve_redirects
 
-        r3 = fetch_log.where(F.col("error_class") == "redirect").select(
-            F.col("url_canon").alias("src"),
-            strip_tracking_params(F.col("redirect_to")).alias("_loc"),
+    r3 = fetch_log.where(F.col("error_class") == "redirect").select(
+        F.col("url_canon").alias("src"),
+        strip_tracking_params(F.col("redirect_to")).alias("_loc"),
+        "priority",
+        "depth",
+        F.col("fetched_ts").alias("discovered_ts"),
+        F.col("url_hash").alias("src_url_hash"),
+    )
+    # checkpointed: the hop loop reads the edges once per hop, and the
+    # terminals feed both the candidate keys and the winners
+    r3 = round_checkpoints.checkpoint(canonicalize_urls_hybrid(r3, "_loc", "dst").drop("_loc"))
+    resolved = resolve_redirects(
+        r3.select("src", "dst"),
+        max_hops=cfg.redirect_max_hops,
+        checkpoint=round_checkpoints.checkpoint,
+    )
+    return round_checkpoints.checkpoint(
+        resolved.where(F.col("terminated"))
+        .join(r3.drop("dst"), "src")
+        .select(
+            F.col("final").alias("url"),
+            F.col("final").alias("url_canon"),
+            url_hash(F.col("final")).alias("url_hash"),
+            host_of(F.col("final")).alias("host"),
             "priority",
             "depth",
-            F.col("fetched_ts").alias("discovered_ts"),
-            F.col("url_hash").alias("src_url_hash"),
+            "discovered_ts",
+            "src_url_hash",
+            F.lit(0).alias("attempt"),
+            F.lit(None).cast("timestamp").alias("next_eligible_ts"),
         )
-        # checkpointed: the hop loop reads the edges once per hop, and the
-        # terminals feed both the candidate keys and the winners
-        r3 = round_checkpoints.checkpoint(
-            canonicalize_urls_hybrid(r3, "_loc", "dst").drop("_loc")
-        )
-        resolved = resolve_redirects(
-            r3.select("src", "dst"),
-            max_hops=cfg.redirect_max_hops,
-            checkpoint=round_checkpoints.checkpoint,
-        )
-        terminals = round_checkpoints.checkpoint(
-            resolved.where(F.col("terminated"))
-            .join(r3.drop("dst"), "src")
-            .select(
-                F.col("final").alias("url"),
-                F.col("final").alias("url_canon"),
-                url_hash(F.col("final")).alias("url_hash"),
-                host_of(F.col("final")).alias("host"),
-                "priority",
-                "depth",
-                "discovered_ts",
-                "src_url_hash",
-                F.lit(0).alias("attempt"),
-                F.lit(None).cast("timestamp").alias("next_eligible_ts"),
-            )
-            .select(*FRONTIER_COLS)
-        )
-        discovered = discovered.unionByName(terminals)
+        .select(*FRONTIER_COLS)
+    )
 
-    # 7c) focused crawling (WWW'99): blend each parent page's BM25 topic
-    # relevance into its children's priority. Scorer input is THIS round's
-    # fetch log only (delta-sized); the rel table is per-round-small and
-    # broadcasts. Redirect terminals blend their 3xx source's relevance,
-    # which is 0 (no text) — off-topic-by-default, the soft-focus rule.
+
+def _discover(fetch_log: DataFrame, cfg: CrawlConfig, max_doc_id: int | None) -> DataFrame:
+    """Step 7, outlink discovery feeding the next frontier, plus the redirect
+    terminals (7b) and the focus blend (7c, WWW'99): each parent page's BM25
+    topic relevance blends into its children's priority. The scorer input is
+    THIS round's fetch log only (delta-sized); the rel table is
+    per-round-small and broadcasts. Redirect terminals blend their 3xx
+    source's relevance, which is 0 (no text) — off-topic-by-default, the
+    soft-focus rule."""
+    discovered = discover_outlinks(
+        fetch_log, links_per_page=cfg.links_per_page, max_doc_id=max_doc_id
+    ).withColumns({"attempt": F.lit(0), "next_eligible_ts": F.lit(None).cast("timestamp")})
+    discovered = discovered.select(*FRONTIER_COLS)
+    if cfg.redirect_per_mille > 0:
+        discovered = discovered.unionByName(_redirect_terminals(fetch_log, cfg))
     if cfg.focus_weight > 0 and cfg.focus_terms:
         from web_crawling_prj_spark.operators.focus import (
             blend_child_priority,
@@ -691,39 +715,36 @@ def _run_round(
         discovered = blend_child_priority(
             discovered, rel, weight=cfg.focus_weight
         ).select(*FRONTIER_COLS)
+    return discovered
 
-    # dedup preference: in-flight retry state (attempt, backoff) must survive
-    # a fresh rediscovery of the same URL — otherwise attempt counters reset
-    # and the per-class retry budget / backoff gate are silently bypassed.
-    _prefer = [
-        -F.coalesce(F.col("attempt"), F.lit(0)),
-        -F.coalesce(F.col("priority"), F.lit(0.0)),
-    ]
-    # 8) delta commit: O(churn) rows, never the 10^10-row backlog.
-    #   adds = winners among {retries, discovered} ∪ their incumbent rows
-    #          (dedup_within_batch + prefer over candidates AND the live rows
-    #          they collide with — a winning incumbent re-adds its own row,
-    #          a no-op on the view),
-    #          seen-filtered at write time (anti_join_seen_layered) so the
-    #          live view stays disjoint from the seen-set;
-    #   dels = scheduled keys (fetched→seen, or replaced by their retry
-    #          row) + robots-disallowed keys.
-    cand = retries.unionByName(discovered)
-    cand_keys = cand.select("url_hash").distinct()
-    # incumbents = unchanged live rows competing with a candidate key. Probe
-    # each live BRANCH — every branch keeps HashPartitioning(url_hash, P)
-    # (live_frontier_parts contract), so the semi-joins move ONLY the
-    # repartitioned key set (its exchange is reused across branches), never
-    # the backlog. The probe result is ≤ |cand| rows per branch; the robots
-    # flag is re-derived on it (broadcast join), and incumbents are
-    # (eligible ∧ allowed ∧ ¬scheduled) ∪ ¬eligible — an eligible-but-
-    # disallowed row is tombstoned this round, never an incumbent.
-    ck = cand_keys.repartition(cfg.num_buckets, "url_hash")
+
+def _winners(
+    cand: DataFrame,
+    live_parts: list[DataFrame],
+    scheduled: DataFrame,
+    robots: DataFrame,
+    round_ts: str,
+    num_buckets: int,
+) -> DataFrame:
+    """Step 8, incumbents + winners: one row per key among the candidates
+    (retries ∪ discovered) and the live rows they collide with — a winning
+    incumbent re-adds its own row, a no-op on the view. Incumbents are
+    probed per live BRANCH — every branch keeps
+    HashPartitioning(url_hash, P) (live_frontier_parts contract), so the
+    semi-joins move ONLY the repartitioned key set (its exchange is reused
+    across branches), never the backlog. The probe result is ≤ |cand| rows
+    per branch; the robots flag is re-derived on it (broadcast join), and
+    incumbents are (eligible ∧ allowed ∧ ¬scheduled) ∪ ¬eligible — an
+    eligible-but-disallowed row is tombstoned this round, never an
+    incumbent. Dedup preference: in-flight retry state (attempt, backoff)
+    survives a fresh rediscovery of the same URL — otherwise attempt
+    counters reset and the per-class retry budget / backoff gate are
+    silently bypassed."""
+    ck = cand.select("url_hash").distinct().repartition(num_buckets, "url_hash")
     probe = None
     for p in live_parts:
         hit = p.join(ck, "url_hash", "left_semi")
         probe = hit if probe is None else probe.unionByName(hit)
-    inc = None
     if probe is not None:
         elig = F.col("next_eligible_ts").isNull() | (
             F.col("next_eligible_ts") <= F.lit(round_ts).cast("timestamp")
@@ -733,37 +754,49 @@ def _run_round(
             .where(F.col("robots_allowed") | ~elig)
             .drop("robots_allowed")
             .join(
-                scheduled.select("url_hash").repartition(cfg.num_buckets, "url_hash"),
+                scheduled.select("url_hash").repartition(num_buckets, "url_hash"),
                 "url_hash",
                 "left_anti",
             )
             .select(*FRONTIER_COLS)
         )
-    winners = dedup_within_batch(
-        (cand if inc is None else cand.unionByName(inc)).repartition(
-            cfg.num_buckets, "url_hash"
-        ),
-        key="url_hash",
-        prefer=_prefer,
-    )
+        cand = cand.unionByName(inc)
+    prefer = [
+        -F.coalesce(F.col("attempt"), F.lit(0)),
+        -F.coalesce(F.col("priority"), F.lit(0.0)),
+    ]
+    cand = cand.repartition(num_buckets, "url_hash")
+    return dedup_within_batch(cand, key="url_hash", prefer=prefer)
 
-    # 9) seen-delta: everything scheduled this round (fetched or failed —
-    # failures re-enter via the retry path, not by staying "unseen";
-    # reference: a fetched-and-failed sku is re-derived from mode='failed')
-    seen_delta = (
+
+def _seen_delta(fetch_log: DataFrame, round_id: int, num_buckets: int) -> DataFrame:
+    """Step 9, seen delta: everything scheduled this round that will not be
+    retried (fetched or permanently failed — failures re-enter via the retry
+    path, not by staying "unseen")."""
+    return (
         fetch_log.where(~F.col("can_retry"))
         .select(
             "url_hash",
-            bucket_of("url_hash", cfg.num_buckets).alias("bucket"),
+            bucket_of("url_hash", num_buckets).alias("bucket"),
             F.lit(round_id).alias("first_seen_round"),
             F.col("fetched_ts").alias("first_seen_ts"),
         )
-        .repartition(cfg.num_buckets, "url_hash")  # bucket layout, 1 file/bucket
+        .repartition(num_buckets, "url_hash")  # bucket layout, 1 file/bucket
     )
 
-    # 10) per-partition lineage counters (north rule C20) — by seen bucket
+
+def _round_aggregates(
+    fetch_log: DataFrame, prev_host_state: DataFrame | None, round_id: int, num_buckets: int
+) -> dict[str, DataFrame]:
+    """Step 10, the round's aggregate tables: per-partition lineage counters
+    (north rule C20) by seen bucket → ``metrics``; the circuit fold →
+    ``host_state``; and the run report (C20/C4 completion), the alerting row
+    the reference renders into its Teams card, committed per round next to
+    the metrics it summarizes → ``run_report``."""
+    from web_crawling_prj_spark.plans.reports import run_summary
+
     metrics = (
-        fetch_log.groupBy(bucket_of("url_hash", cfg.num_buckets).alias("bucket"))
+        fetch_log.groupBy(bucket_of("url_hash", num_buckets).alias("bucket"))
         .agg(
             F.count("*").alias("scheduled_cnt"),
             F.sum(F.when(F.col("error_class") == "ok", 1).otherwise(0)).alias("fetched_ok_cnt"),
@@ -772,29 +805,34 @@ def _run_round(
         )
         .withColumn("round_id", F.lit(round_id))
     )
-
-    # run report (C20/C4 completion): the alerting row the reference renders
-    # into its Teams card, committed per round next to the metrics it summarizes
-    from web_crawling_prj_spark.plans.reports import run_summary
-
-    new_host_state = update_circuit_state(prev_host_state, fetch_log)
-    tables = {
-        "seen_delta": seen_delta,
-        "fetch_log": fetch_log.drop("max_attempts"),
+    return {
         "metrics": metrics,
-        "host_state": new_host_state,
+        "host_state": update_circuit_state(prev_host_state, fetch_log),
         "run_report": run_summary(metrics),
     }
-    # write-time seen filter on the delta-sized winners (this round's
-    # seen_delta included): keeps the live view seen-clean so reads never
-    # join against the seen-set at all. The winners carry the bucket layout
-    # (repartition upstream), so the tier joins co-locate; the un-folded
-    # seen deltas are one plain scan of ≤ compact_every rounds of churn,
-    # broadcast or shuffled on their own side only.
+
+
+def _frontier_events(
+    spark: SparkSession,
+    store: StateStore,
+    round_id: int,
+    num_buckets: int,
+    pending: DataFrame,
+    winners: DataFrame,
+    seen_delta: DataFrame,
+    del_keys: DataFrame,
+) -> DataFrame:
+    """The round's ``frontier_log`` events, O(churn) rows: adds = the winners
+    as full rows, seen-filtered at write time (this round's seen_delta
+    included) so the live view stays seen-clean and reads never join the
+    seen-set; dels = key-only tombstones for ``del_keys`` (scheduled keys —
+    fetched→seen, or replaced by their retry row — and disallowed keys).
+    The winners carry the bucket layout, so the seen tier joins co-locate;
+    the un-folded seen deltas are one plain scan of ≤ compact_every rounds
+    of churn, broadcast or shuffled on their own side only."""
     seen_bases, seen_deltas = store.read_parts(spark, "seen_delta", up_to=round_id - 1)
     adds = anti_join_seen_layered(winners, [*seen_bases, *seen_deltas, seen_delta])
     ftypes = {f.name: f.dataType for f in pending.select(*FRONTIER_COLS).schema.fields}
-    del_keys = scheduled.select("url_hash").unionByName(disallowed_keys)
     del_rows = del_keys.select(
         *[
             F.lit(None).cast(ftypes[c]).alias(c) if c != "url_hash" else F.col(c)
@@ -806,28 +844,26 @@ def _run_round(
     add_rows = adds.select(
         *FRONTIER_COLS, F.lit(round_id).alias("evt_round"), F.lit(False).alias("is_del")
     )
-    tables["frontier_log"] = add_rows.unionByName(del_rows).repartition(
-        cfg.num_buckets, "url_hash"
-    )
-    store.commit_round(round_id, tables, extra_meta={"round_ts": round_ts})
+    return add_rows.unionByName(del_rows).repartition(num_buckets, "url_hash")
 
-    # read the committed tables back ONCE (two small driver jobs per round);
-    # the artifact render, the summary, and the abort check all share the rows
+
+def _post_commit_report(
+    spark: SparkSession, store: StateStore, round_id: int, cfg: CrawlConfig
+) -> dict:
+    """After the commit: read the committed metrics and run report back ONCE
+    (two small driver jobs), render the run artifact (reference Teams card
+    analog) from them, apply the failure threshold (reference C4/C5) and
+    return the round's summary. The abort raises AFTER committing so a
+    resumed run starts from consistent state."""
     from web_crawling_prj_spark.plans.reports import render_run_artifact
 
     metrics_rows = store.read_round(spark, "metrics", round_id).collect()
     report = store.read_round(spark, "run_report", round_id).first()
-    # render the human-readable run artifact (reference Teams card analog) —
-    # post-commit sidecar, numbers from the committed tables only
     render_run_artifact(spark, store, round_id, rep_row=report, metrics_rows=metrics_rows)
-
     summary = {
         r["bucket"]: (r["scheduled_cnt"], r["fetched_ok_cnt"], r["failed_cnt"])
         for r in metrics_rows
     }
-    # batch/run failure threshold (reference C4/C5): abort AFTER committing so
-    # a resumed run (mode='failed' analog) starts from consistent state;
-    # the round's checkpoints are freed when the next round starts
     if cfg.extra.get("abort_on_failed_run"):
         if report and report["run_failed"]:
             raise RuntimeError(
@@ -843,78 +879,41 @@ def _run_round(
     }
 
 
-def failed_mode_frontier(spark: SparkSession, store: StateStore) -> DataFrame | None:
-    """Reference mode='failed' branch (C14, dags/common/base_source_dag.py:93-104):
-    rebuild a frontier containing ONLY permanently-failed URLs (retry budget
-    exhausted), attempt counters reset — the operator a new run uses to re-crawl
-    yesterday's failures after fixing credentials/proxies."""
-    log = store.read_all(spark, "fetch_log")
-    if log is None:
-        return None
-    w = Window.partitionBy("url_hash").orderBy(F.desc("round_id"), F.desc("attempt"))
-    latest = log.withColumn("_rn", F.row_number().over(w)).where("_rn = 1")
-    failed = latest.where((F.col("error_class") != "ok") & (~F.col("can_retry")))
-    return failed.select(
-        F.col("url_canon").alias("url"),
-        "url_canon",
-        "url_hash",
-        "host",
-        "priority",
-        "depth",
-        F.col("fetched_ts").alias("discovered_ts"),
-        F.lit(None).cast("long").alias("src_url_hash"),
-        F.lit(0).alias("attempt"),
-        F.lit(None).cast("timestamp").alias("next_eligible_ts"),
-    ).select(*FRONTIER_COLS)
-
-
-def refresh_mode_frontier(
+def _run_round(
     spark: SparkSession,
     store: StateStore,
-    now_ts: str,
-    base_interval_h: float = 1.0,
-    max_doublings: int = 6,
-) -> DataFrame | None:
-    """Freshness mode (beyond the reference's all/failed pair, C14): rebuild
-    a frontier of SEEN pages whose adaptive recrawl deadline has passed —
-    interval doubles per consecutive fetch with unchanged extracted content,
-    resets on change (operators.recrawl). Content identity is
-    ``md5(extracted_text)``, so a byte-identical re-render does not count as
-    a change. Attempt counters reset (this is a fresh fetch, not a retry);
-    priority carries over; ``next_eligible_ts`` = the page's own deadline, so
-    the round's backoff gate and the recrawl deadline are one mechanism."""
-    from web_crawling_prj_spark.operators.recrawl import due_for_refetch, recrawl_schedule
-
-    log = store.read_all(spark, "fetch_log")
-    if log is None:
-        return None
-    hist = log.where(F.col("error_class") == "ok").withColumn(
-        "_fp", F.md5(F.coalesce(F.col("extracted_text"), F.lit("")))
+    pages: DataFrame,
+    robots: DataFrame,
+    round_id: int,
+    cfg: CrawlConfig,
+) -> dict:
+    """One round as the ordered list of its stages (module docstring)."""
+    round_ts = cfg.round_ts(round_id)
+    max_doc_id = cfg.extra.get("max_doc_id")
+    live_parts: list[DataFrame] = []
+    pending = pending_frontier(
+        spark, store, round_id, cfg, checkpoint=round_checkpoints.checkpoint, parts_out=live_parts
     )
-    sched = recrawl_schedule(
-        hist,
-        key="url_hash",
-        ts="fetched_ts",
-        fingerprint="_fp",
-        tiebreak="attempt",
-        base_interval_h=base_interval_h,
-        max_doublings=max_doublings,
+    allowed, disallowed_keys = _robots_gate(pending, robots)
+    allowed, prev_host_state, budgets = _circuit_breaker(
+        spark, store, round_id, round_ts, allowed, robots, cfg
     )
-    due = due_for_refetch(
-        sched, key="url_hash", ts="fetched_ts", now=now_ts, tiebreak="attempt"
+    scheduled = _schedule(spark, store, round_id, cfg, allowed, budgets, max_doc_id)
+    fetch_log = _fetch(scheduled, pages, round_id, round_ts, cfg, max_doc_id)
+    cand = _retries(fetch_log).unionByName(_discover(fetch_log, cfg, max_doc_id))
+    winners = _winners(cand, live_parts, scheduled, robots, round_ts, cfg.num_buckets)
+    seen_delta = _seen_delta(fetch_log, round_id, cfg.num_buckets)
+    tables = {
+        "seen_delta": seen_delta,
+        "fetch_log": fetch_log.drop("max_attempts"),
+        **_round_aggregates(fetch_log, prev_host_state, round_id, cfg.num_buckets),
+    }
+    del_keys = scheduled.select("url_hash").unionByName(disallowed_keys)
+    tables["frontier_log"] = _frontier_events(
+        spark, store, round_id, cfg.num_buckets, pending, winners, seen_delta, del_keys
     )
-    return due.select(
-        F.col("url_canon").alias("url"),
-        "url_canon",
-        "url_hash",
-        "host",
-        "priority",
-        "depth",
-        F.col("fetched_ts").alias("discovered_ts"),
-        F.lit(None).cast("long").alias("src_url_hash"),
-        F.lit(0).alias("attempt"),
-        F.col("next_fetch_ts").alias("next_eligible_ts"),
-    ).select(*FRONTIER_COLS)
+    store.commit_round(round_id, tables, extra_meta={"round_ts": round_ts})
+    return _post_commit_report(spark, store, round_id, cfg)
 
 
 def run_crawl(
