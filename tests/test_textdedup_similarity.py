@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -498,3 +499,76 @@ def test_spread_if_narrow_guard(spark, docs):
     wide = docs.repartition(par + 4)
     spread = spread_if_narrow(wide)
     assert spread is wide  # identity — no exchange added above parallelism
+
+
+def _compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's CodegenMetrics)."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_persist_fresh_distinct_entries_share_compiled_code(spark):
+    """Each `_persist_fresh` call gets its own cache entry (never served from
+    an earlier call's), yet generates the same code: the per-call token is a
+    string literal, which generated code references instead of inlining."""
+    from web_crawling_prj_spark.operators.textdedup import _persist_fresh
+
+    df = spark.range(64).withColumn("v", F.col("id") * 3)
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert _persist_fresh(df).count() == 64
+    cached = persistent()
+    compiled = _compiles(spark)
+    assert _persist_fresh(df).count() == 64
+    assert persistent() - cached, "second call was served from the first call's cache"
+    assert _compiles(spark) == compiled
+
+
+def test_composed_curation_plan_compiles_once(spark, docs):
+    """Exact dedup → MinHash + SimHash candidates → Gopher gates, composed as
+    one plan: ≈120 generated classes, more than Spark's default 100-entry
+    codegen cache, so a second run compiles nothing only if the session's
+    cache holds the whole plan (at 100 entries it recompiled ≈90). AQE is off
+    here because it re-plans as stages finish, and the finishing order can
+    add a few classes; the static plan makes the count exact."""
+    from web_crawling_prj_spark.functions.text import gopher_metrics, gopher_pass
+
+    def run():
+        kept = dedup_exact(docs).select("doc_id", "text")
+        near = (
+            minhash_candidate_pairs(kept).select(F.col("id_b").alias("doc_id"))
+            .unionByName(simhash_candidate_pairs(kept).select(F.col("id_b").alias("doc_id")))
+            .distinct()
+            .withColumn("near_dup", F.lit(True))
+        )
+        gates = kept.select("doc_id", gopher_pass(gopher_metrics("text")).alias("gopher_pass"))
+        return sorted(gates.join(near, "doc_id", "left").collect())
+
+    docs.count()  # plan both runs over the materialized fixture
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        first = run()
+        compiled = _compiles(spark)
+        assert run() == first
+        assert _compiles(spark) == compiled
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_simhash_pairs_send_each_representative_through_the_udf_once(spark, docs, monkeypatch):
+    """Both sides of the band self-join read one materialization of the band
+    rows, so the SimHash pandas UDF sees each exact-group representative once."""
+    from pyspark.sql.types import LongType
+
+    import web_crawling_prj_spark.operators.textdedup as td
+
+    rows = spark.sparkContext.accumulator(0)
+    kernel = td.simhash_from_joined_udf.func
+
+    @F.pandas_udf(LongType())
+    def counted(joined: pd.Series, n_toks: pd.Series) -> pd.Series:
+        rows.add(len(joined))
+        return kernel(joined, n_toks)
+
+    monkeypatch.setattr(td, "simhash_from_joined_udf", counted)
+    pairs = {(r.id_a, r.id_b) for r in td.simhash_candidate_pairs(docs).collect()}
+    assert (0, 1) in pairs
+    assert rows.value == len({text for _, text in DOCS})

@@ -43,9 +43,10 @@ _PERSIST_SEQ = [0]  # one unique token per materialization call (see below)
 #: Python GC + ContextCleaner get to them; evicting the oldest beyond the
 #: ring keeps storage pressure flat. Early unpersist is always SAFE — the
 #: data recomputes from lineage if a straggling consumer still holds it.
-#: Size 3 ≥ the largest number of entries any single operator holds live at
-#: once (minhash: sigs + capped bands = 2), while keeping worst-case pinned
-#: storage at 3 entries even when the entries are 10⁷-row frontiers.
+#: Size 3 = the entries one composed curation pass holds live at once
+#: (minhash: sigs + capped bands = 2; simhash: capped bands = 1), while
+#: keeping worst-case pinned storage at 3 entries even when the entries are
+#: 10⁷-row frontiers.
 _FRESH_RING: list = []
 _FRESH_RING_MAX = 3
 
@@ -59,9 +60,14 @@ def _persist_fresh(df: DataFrame) -> DataFrame:
     reuse). A per-call literal token column makes every invocation's plan
     distinct; within the invocation all consumers still hit the one cache
     entry, and the blocks stay LRU-evictable (unlike localCheckpoint blocks,
-    which are the only copy and pin storage until GC)."""
+    which are the only copy and pin storage until GC).
+
+    The token is a STRING literal: generated code reaches a string literal
+    through a reference object, so every call compiles to the same Java
+    source and reuses the compiled class. An int literal would be inlined
+    into the source, making each call's plan a new class to compile."""
     _PERSIST_SEQ[0] += 1
-    cached = df.withColumn("_fresh_seq", F.lit(_PERSIST_SEQ[0])).persist()
+    cached = df.withColumn("_fresh_seq", F.lit(str(_PERSIST_SEQ[0]))).persist()
     _FRESH_RING.append(cached)
     if len(_FRESH_RING) > _FRESH_RING_MAX:
         try:
@@ -772,7 +778,11 @@ def simhash_candidate_pairs(
             F.array(*[F.struct(F.lit(j).alias("band_id"), F.shiftright("simhash", j * 16).bitwiseAND(F.lit(0xFFFF)).alias("band_val")) for j in range(4)])
         ).alias("b"),
     ).select("id", "simhash", "b.band_id", "b.band_val")
-    banded = _cap_buckets(banded, ["band_id", "band_val"], bucket_cap, stats_out)
+    # capped band rows feed both sides of the self-join: materialize so the
+    # SimHash pandas UDF sends each representative through Python once
+    banded = _persist_fresh(
+        _cap_buckets(banded, ["band_id", "band_val"], bucket_cap, stats_out)
+    )
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (
         a.join(
