@@ -106,6 +106,63 @@ def test_init_round_commits_only_the_seed_log(spark, tmp_path, crawl_inputs):
     assert live.count() == frontier_from_seeds(seeds).count() > 0
 
 
+def test_seed_log_keeps_url_only_where_it_differs(spark, tmp_path, crawl_inputs):
+    """The seed log stores ``url`` NULL where it equals ``url_canon``; a seed
+    whose raw url differs keeps it, and the live view restores every url."""
+    from web_crawling_prj_spark.plans.crawl_round import init_crawl, live_frontier
+
+    cfg = crawl_inputs[3]
+    raw = "https://Host-1.example/a?utm_source=x"
+    seeds = spark.createDataFrame(
+        [(raw, 0.5, 0), ("https://host-1.example/b", 0.5, 0)],
+        "url string, priority double, depth int",
+    )
+    store = crawl_store(str(tmp_path / "seedurl"), cfg)
+    init_crawl(spark, store, seeds, cfg)
+    urls = lambda df: {r.url_canon: r.url for r in df.collect()}
+    assert urls(store.read_round(spark, "frontier_log", 0)) == {
+        "https://host-1.example/a": raw,
+        "https://host-1.example/b": None,
+    }
+    assert urls(live_frontier(spark, store, 0, cfg)) == {
+        "https://host-1.example/a": raw,
+        "https://host-1.example/b": "https://host-1.example/b",
+    }
+
+
+def test_url_encoded_store_reads_like_a_full_url_store(
+    spark, tmp_path, crawl_inputs, three_round_store, monkeypatch
+):
+    """The shared 3-round crawl (folded after round 2) crawled again with the
+    url encoding off — a store holding a full ``url`` column, as stores
+    written before the encoding do: both read the same live frontier at
+    every round, ``url`` included, and crawl identically."""
+    import web_crawling_prj_spark.plans.crawl_round as cr
+
+    pages, robots, seeds, cfg = crawl_inputs
+    cfg = _fold_every_2(cfg)
+    enc, _ = three_round_store
+    monkeypatch.setattr(cr, "_encode_url", lambda log: log)
+    full = crawl_store(str(tmp_path / "full"), cfg)
+    run_crawl(spark, full, pages, robots, seeds, rounds=3, cfg=cfg)
+    monkeypatch.undo()
+
+    adds = lambda s: s.read_all(spark, "frontier_log").where(~F.col("is_del"))
+    assert adds(full).where(F.col("url").isNull()).count() == 0
+    # this crawl's seeds are canonical, so the encoded store keeps no url
+    assert adds(enc).where(F.col("url").isNotNull()).count() == 0
+    live = lambda s, r: {
+        row.url_hash: row
+        for row in cr.live_frontier(spark, s, r, cfg).select(*cr.FRONTIER_COLS).collect()
+    }
+    for r in range(4):
+        got = live(enc, r)
+        assert got and got == live(full, r)
+        assert all(row.url == row.url_canon for row in got.values())
+    assert _final_state(enc, spark) == _final_state(full, spark)
+    shutil.rmtree(full.root)
+
+
 def test_three_rounds_end_to_end(spark, crawl_inputs, three_round_store):
     pages, robots, seeds, cfg = crawl_inputs
     store, stats = three_round_store

@@ -227,6 +227,47 @@ def test_read_parts_raises_on_vacuumed_history(spark, tmp_path, reader):
         assert read(spark, "seen_delta", up_to=3).count() == 20
 
 
+def test_round_reads_take_the_schema_from_the_manifest(spark, tmp_path):
+    """Each round's manifest records its tables' schemas, so building a read
+    of committed rounds infers nothing and starts no Spark job; a manifest
+    with no schemas (written before they were recorded) still reads, by
+    inference."""
+    import json
+
+    from web_crawling_prj_spark.plans.statestore import StateStore
+
+    store = StateStore(str(tmp_path / "schemas"))
+    for r in range(3):
+        df = spark.range(5).selectExpr(f"id + {r * 10} AS url_hash", "CAST(id AS INT) AS n")
+        store.commit_round(r, {"seen_delta": df})
+    assert store.manifest(1)["schemas"] == {"seen_delta": "url_hash BIGINT,n INT"}
+
+    def rows(read):
+        return sorted(map(tuple, read.collect()))
+
+    expect = {r: rows(store.read_round(spark, "seen_delta", r)) for r in range(3)}
+    full = rows(store.read_all(spark, "seen_delta"))
+    sc, group = spark.sparkContext, "statestore-schema-reads"
+    sc.setJobGroup(group, "build reads of committed rounds")
+    try:
+        reads = [store.read_round(spark, "seen_delta", 1), store.read_all(spark, "seen_delta")]
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert rows(reads[0]) == expect[1] and rows(reads[1]) == full
+    assert [f.nullable for f in reads[0].schema.fields] == [True, True]  # as inferred
+
+    path = store._manifest_path(1)
+    with open(path) as f:
+        meta = json.load(f)
+    del meta["schemas"]
+    with open(path, "w") as f:
+        json.dump(meta, f)
+    assert rows(store.read_round(spark, "seen_delta", 1)) == expect[1]
+    assert rows(store.read_all(spark, "seen_delta")) == full
+
+
 def test_bucket_layout_drift_refused(spark, tmp_path):
     """Once a fold tier exists, resuming a bucketed store with a different
     num_buckets must fail loudly — mixed layouts would silently put the

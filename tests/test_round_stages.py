@@ -10,17 +10,15 @@ import datetime as dt
 
 from web_crawling_prj_spark.plans.crawl_round import (
     FRONTIER_COLS,
+    FRONTIER_SCHEMA,
     CrawlConfig,
     _circuit_breaker,
+    _decode_url,
+    _encode_url,
     _winners,
     crawl_store,
 )
 
-FRONTIER_SCHEMA = (
-    "url string, url_canon string, url_hash long, host string, priority double, "
-    "depth int, discovered_ts timestamp, src_url_hash long, attempt int, "
-    "next_eligible_ts timestamp"
-)
 ROBOTS_SCHEMA = "host string, disallow_prefixes array<string>, crawl_delay_ms int"
 ROUND_TS = "2025-06-01 00:10:00"
 NOW = dt.datetime(2025, 6, 1, 0, 10)
@@ -108,3 +106,19 @@ def test_circuit_breaker_cuts_open_hosts_and_probes_half_open(spark, tmp_path):
     cut1, prev1, budgets1 = _circuit_breaker(spark, store, 1, ROUND_TS, allowed, robots, cfg)
     assert prev1 is None and cut1.count() == 4
     assert sorted(r.host for r in budgets1.collect()) == ["ok.example", "open.example"]
+
+
+def test_frontier_log_stores_url_only_where_it_differs_from_url_canon(spark):
+    raw = "http://A.example/y?utm_source=z"
+    rows = [
+        _row(1, "a.example", "/x", 0.5, 0),  # url == url_canon
+        (raw, "http://a.example/y", 2, "a.example", 0.5, 0, None, None, 0, None),
+        (None, None, 3, None, None, None, None, None, None, None),  # tombstone
+    ]
+    frontier = spark.createDataFrame(rows, FRONTIER_SCHEMA)
+    stored = _encode_url(frontier)
+    assert {r.url_hash: r.url for r in stored.collect()} == {1: None, 2: raw, 3: None}
+    by_key = lambda df: {r.url_hash: r for r in df.select(*FRONTIER_COLS).collect()}
+    assert by_key(_decode_url(stored)) == by_key(frontier)
+    # rows stored with a full url (stores written before the encoding) read unchanged
+    assert by_key(_decode_url(frontier)) == by_key(frontier)

@@ -553,6 +553,26 @@ def test_composed_curation_plan_compiles_once(spark, docs):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
+def test_a_pipeline_compiles_once_at_any_stage_id(spark):
+    """A union's children are whole-stage pipelines numbered in plan order,
+    so swapping them swaps their stage ids. The session names every
+    whole-stage class alike (``spark.sql.codegen.useIdInClassName`` off),
+    so the swapped plan reuses both compiled classes; with stage ids in the
+    class names it compiled them again. AQE is off for an exact count (see
+    test_composed_curation_plan_compiles_once)."""
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+    a = spark.range(0, 1000, 1, 2).selectExpr("id * 17 AS v").where("v % 3 = 1")
+    b = spark.range(0, 1000, 1, 2).selectExpr("id * 19 + 4 AS v").where("v % 5 = 2")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        first = sorted(a.union(b).collect())
+        compiled = _compiles(spark)
+        assert sorted(b.union(a).collect()) == first
+        assert _compiles(spark) == compiled
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
 def test_simhash_pairs_send_each_representative_through_the_udf_once(spark, docs, monkeypatch):
     """Both sides of the band self-join read one materialization of the band
     rows, so the SimHash pandas UDF sees each exact-group representative once."""

@@ -6,7 +6,7 @@ batches with politeness → fetch with retries → persist results + summary.
 Here every boundary is a stage of one declarative round plan. Three
 barriers — the robots-flagged live view, the schedule and the fetch log —
 are checkpointed and computed where the round reaches them; the commit's
-writes execute the rest from the fetch log's checkpoint (measured: 42 Spark
+writes execute the rest from the fetch log's checkpoint (measured: 37 Spark
 jobs per round on perfbench's crawl_backlog at local[4], most of them small):
 
     frontier_log ──(latest event per key over tiers + recent rounds)──► live
@@ -67,6 +67,15 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from web_crawling_prj_spark.functions.hashing import bucket_of, url_hash
 from web_crawling_prj_spark.functions.urls import host_of
@@ -77,24 +86,52 @@ from web_crawling_prj_spark.operators.retry import classify_fetch_log, update_ci
 from web_crawling_prj_spark.operators.robots import gate_frontier_flagged
 from web_crawling_prj_spark.plans.statestore import StateStore
 
-FRONTIER_COLS = [
-    "url",
-    "url_canon",
-    "url_hash",
-    "host",
-    "priority",
-    "depth",
-    "discovered_ts",
-    "src_url_hash",
-    "attempt",
-    "next_eligible_ts",
-]
+#: the frontier row (PAPER.md §1.1) — the one schema every frontier frame
+#: has: live view, pending, tombstones and the empty frontier
+FRONTIER_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("url_canon", StringType()),
+        StructField("url_hash", LongType()),
+        StructField("host", StringType()),
+        StructField("priority", DoubleType()),
+        StructField("depth", IntegerType()),
+        StructField("discovered_ts", TimestampType()),
+        StructField("src_url_hash", LongType()),
+        StructField("attempt", IntegerType()),
+        StructField("next_eligible_ts", TimestampType()),
+    ]
+)
+FRONTIER_COLS = FRONTIER_SCHEMA.fieldNames()
 
 #: frontier-as-event-log layout: each round commits only
 #: its CHANGES — adds (full replacement rows: retries, discovery winners) and
 #: dels (key-only tombstones: scheduled + robots-disallowed keys). The live
 #: frontier is per-key latest-event-wins over (evt_round, add-beats-del).
 FRONTIER_LOG_COLS = [*FRONTIER_COLS, "evt_round", "is_del"]
+
+
+def _encode_url(log: DataFrame) -> DataFrame:
+    """A frontier_log write's stored ``url``: NULL where it equals
+    ``url_canon``. Discovered links, retries and redirect terminals are
+    canonical by construction and most seeds already are, so each URL is
+    stored once; only a seed whose raw form differs keeps both. ``url``
+    never decides the latest-event resolution (``(evt_round, is_add)`` is
+    unique per key per round), so folds carry the stored form unchanged."""
+    return log.withColumn("url", F.when(F.col("url") != F.col("url_canon"), F.col("url")))
+
+
+def _decode_url(log: DataFrame) -> DataFrame:
+    """Stored frontier_log rows → FRONTIER_SCHEMA rows, ``url`` restored from
+    ``url_canon`` where the write left it NULL. Rows stored with a full
+    ``url`` (stores written before the encoding) read unchanged."""
+    return log.select(
+        *[
+            F.coalesce(F.col("url"), F.col("url_canon")).alias(c) if c == "url" else F.col(c)
+            for c in FRONTIER_COLS
+        ]
+    )
+
 
 _STATE_COLS = [c for c in FRONTIER_COLS if c != "url_hash"]
 
@@ -246,8 +283,10 @@ def init_crawl(spark: SparkSession, store: StateStore, seeds: DataFrame, cfg: Cr
     """Round 0: commit the seed frontier as round-0 add events. The seen-set
     starts empty, so round 0 writes no seen_delta."""
     frontier = frontier_from_seeds(seeds).repartition(cfg.num_buckets, "url_hash")
-    log0 = frontier.withColumns({"evt_round": F.lit(0), "is_del": F.lit(False)}).select(
-        *FRONTIER_LOG_COLS
+    log0 = _encode_url(
+        frontier.withColumns({"evt_round": F.lit(0), "is_del": F.lit(False)}).select(
+            *FRONTIER_LOG_COLS
+        )
     )
     store.commit_round(0, {"frontier_log": log0}, extra_meta={"kind": "init"})
 
@@ -364,7 +403,8 @@ def live_frontier_parts(
     moves the backlog. Per-round cost: one pushed-down scan of each tier +
     delta-sized everything else.
 
-    Returns the branches, in FRONTIER_COLS shape."""
+    Returns the branches, in FRONTIER_COLS shape, each with ``url`` decoded
+    (:func:`_decode_url`)."""
     bases, deltas = store.read_parts(spark, "frontier_log", up_to=upto_round)
     resolved = None
     if deltas:  # one plain scan over the un-folded rounds
@@ -373,24 +413,19 @@ def live_frontier_parts(
             resolved = checkpoint(resolved)
     parts: list[DataFrame] = []
     for i, b in enumerate(bases):  # oldest→newest
-        branch = b.where(~F.col("is_del")).select(*FRONTIER_COLS)
+        branch = _decode_url(b.where(~F.col("is_del")))
         for newer in bases[i + 1 :]:
             branch = branch.join(newer.select("url_hash"), "url_hash", "left_anti")
         if resolved is not None:
             branch = branch.join(resolved.select("url_hash"), "url_hash", "left_anti")
         parts.append(branch)
     if resolved is not None:
-        parts.append(resolved.where(~F.col("is_del")).select(*FRONTIER_COLS))
+        parts.append(_decode_url(resolved.where(~F.col("is_del"))))
     return parts
 
 
 def _empty_frontier(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        "url string, url_canon string, url_hash long, host string, "
-        "priority double, depth int, discovered_ts timestamp, "
-        "src_url_hash long, attempt int, next_eligible_ts timestamp",
-    ).select(*FRONTIER_COLS)
+    return spark.createDataFrame([], FRONTIER_SCHEMA)
 
 
 def live_frontier(
@@ -817,31 +852,30 @@ def _frontier_events(
     store: StateStore,
     round_id: int,
     num_buckets: int,
-    pending: DataFrame,
     winners: DataFrame,
     seen_delta: DataFrame,
     del_keys: DataFrame,
 ) -> DataFrame:
     """The round's ``frontier_log`` events, O(churn) rows: adds = the winners
-    as full rows, seen-filtered at write time (this round's seen_delta
-    included) so the live view stays seen-clean and reads never join the
-    seen-set; dels = key-only tombstones for ``del_keys`` (scheduled keys —
+    as full rows (``url`` stored once, :func:`_encode_url`), seen-filtered
+    at write time (this round's seen_delta included) so the live view stays
+    seen-clean and reads never join the seen-set; dels = key-only
+    tombstones, typed by FRONTIER_SCHEMA, for ``del_keys`` (scheduled keys —
     fetched→seen, or replaced by their retry row — and disallowed keys).
     The winners carry the bucket layout, so the seen tier joins co-locate;
     the un-folded seen deltas are one plain scan of ≤ compact_every rounds
     of churn, broadcast or shuffled on their own side only."""
     seen_bases, seen_deltas = store.read_parts(spark, "seen_delta", up_to=round_id - 1)
     adds = anti_join_seen_layered(winners, [*seen_bases, *seen_deltas, seen_delta])
-    ftypes = {f.name: f.dataType for f in pending.select(*FRONTIER_COLS).schema.fields}
     del_rows = del_keys.select(
         *[
-            F.lit(None).cast(ftypes[c]).alias(c) if c != "url_hash" else F.col(c)
-            for c in FRONTIER_COLS
+            F.lit(None).cast(f.dataType).alias(f.name) if f.name != "url_hash" else F.col(f.name)
+            for f in FRONTIER_SCHEMA.fields
         ],
         F.lit(round_id).alias("evt_round"),
         F.lit(True).alias("is_del"),
     )
-    add_rows = adds.select(
+    add_rows = _encode_url(adds).select(
         *FRONTIER_COLS, F.lit(round_id).alias("evt_round"), F.lit(False).alias("is_del")
     )
     return add_rows.unionByName(del_rows).repartition(num_buckets, "url_hash")
@@ -910,7 +944,7 @@ def _run_round(
     }
     del_keys = scheduled.select("url_hash").unionByName(disallowed_keys)
     tables["frontier_log"] = _frontier_events(
-        spark, store, round_id, cfg.num_buckets, pending, winners, seen_delta, del_keys
+        spark, store, round_id, cfg.num_buckets, winners, seen_delta, del_keys
     )
     store.commit_round(round_id, tables, extra_meta={"round_ts": round_ts})
     return _post_commit_report(spark, store, round_id, cfg)

@@ -17,7 +17,19 @@ manifest are garbage from a killed run and are ignored (and cleaned on the next
 commit attempt). `os.rename` within a directory is atomic on POSIX — the same
 single-atomic-swap trick Iceberg uses with its metadata pointer. On a real
 cluster, swap this class for Iceberg `writeTo(...).append()` + snapshot tags;
-every caller goes through this interface, nothing else changes.
+every caller goes through this interface, nothing else changes. The manifest
+also records each table's schema DDL, so reads of committed rounds pass it to
+the reader instead of inferring it (one Spark job per scan); a manifest
+without schemas is read by inference.
+
+**Durability.** Both commit points — the round manifest and the tier pointer
+(``_manifests/<table>.base.json``) — are a rename of a fully written temp
+file, with no fsync of the file, the data or the directory. A commit is
+therefore atomic against process death (a killed driver leaves the old
+state or the new one, never a mix), but not safe against power loss or a
+kernel crash: the rename can reach disk before the data it publishes. An
+object store has no atomic rename; the same guarantee there needs a
+conditional put (create-if-absent) of the manifest.
 
 Tables are partitioned by round (directory) and data files are laid out by the
 seen-set bucket column where applicable, so reads prune by round and joins can
@@ -157,16 +169,31 @@ class StateStore:
     def _manifest_path(self, round_id: int) -> str:
         return os.path.join(self.root, "_manifests", f"{round_id:06d}.json")
 
-    def _read_rounds(self, spark: SparkSession, table: str, paths: list[str]) -> DataFrame:
+    def _round_ddl(self, table: str, rounds: list[int]) -> str | None:
+        """The schema DDL the manifests of ``rounds`` recorded for ``table``,
+        or None when one of them recorded none (a manifest written before
+        commits recorded schemas) or they disagree."""
+        ddls = {self.manifest(r).get("schemas", {}).get(table) for r in rounds}
+        return ddls.pop() if len(ddls) == 1 else None
+
+    @staticmethod
+    def _scan(spark: SparkSession, ddl: str | None, *paths: str, **options: str) -> DataFrame:
+        """Plain parquet scan of ``paths``. With the table's recorded schema
+        ``ddl`` the reader infers nothing: building the DataFrame starts no
+        Spark job (inference runs one per scan to read a footer)."""
+        reader = spark.read.options(**options)
+        if ddl is not None:
+            reader = reader.schema(ddl)
+        return reader.parquet(*paths)
+
+    def _read_rounds(self, spark: SparkSession, table: str, rounds: list[int]) -> DataFrame:
         """One multi-path scan over per-round dirs. basePath makes the scan a
         single job with directory-level pruning; the synthetic `round`
         partition column it adds is dropped so multi-round reads union
         cleanly with tier reads (which see no partition dir)."""
-        return (
-            spark.read.option("basePath", os.path.join(self.root, table))
-            .parquet(*paths)
-            .drop("round")
-        )
+        paths = [self._table_round_dir(table, r) for r in rounds]
+        ddl = self._round_ddl(table, rounds)
+        return self._scan(spark, ddl, *paths, basePath=os.path.join(self.root, table)).drop("round")
 
     def committed_rounds(self) -> list[int]:
         d = os.path.join(self.root, "_manifests")
@@ -221,7 +248,16 @@ class StateStore:
         # scale, and on a cluster the big writes' task tails backfill).
         with ThreadPoolExecutor(max_workers=min(8, max(1, len(tables)))) as ex:
             list(ex.map(_write, tables.items()))
-        meta = {"round_id": round_id, "tables": sorted(tables), **(extra_meta or {})}
+        # each table's schema as a read returns it (parquet reads make every
+        # column nullable), so reads of the round need no inference job and
+        # rounds whose writers differed only in nullability share one DDL
+        schemas = {n: df._jdf.schema().asNullable().toDDL() for n, df in sorted(tables.items())}
+        meta = {
+            "round_id": round_id,
+            "tables": sorted(tables),
+            "schemas": schemas,
+            **(extra_meta or {}),
+        }
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_manifests"), suffix=".tmp")
         with os.fdopen(fd, "w") as f:
             json.dump(meta, f)
@@ -336,8 +372,7 @@ class StateStore:
         if major:
             df = self.read_all(spark, table, up_to=upto)  # all tiers + new deltas
         else:
-            paths = [self._table_round_dir(table, r) for r in new_rounds]
-            df = self._read_rounds(spark, table, paths)
+            df = self._read_rounds(spark, table, new_rounds)
         if resolver is not None:
             terminal = major or not cur  # fold output has no tier beneath it
             df = resolver(df, terminal)
@@ -424,7 +459,8 @@ class StateStore:
         dirs carry no catalog entry, bucketed tables included)."""
         if not os.path.exists(self._manifest_path(round_id)):
             raise ValueError(f"round {round_id} is not committed")
-        return spark.read.parquet(self._table_round_dir(table, round_id))
+        ddl = self._round_ddl(table, [round_id])
+        return self._scan(spark, ddl, self._table_round_dir(table, round_id))
 
     def read_parts(
         self, spark: SparkSession, table: str, up_to: int | None = None
@@ -453,8 +489,7 @@ class StateStore:
                 bases.append(spark.table(tbl))
             else:
                 bases.append(spark.read.parquet(d))
-        paths = [self._table_round_dir(table, r) for r in delta_rounds]
-        return bases, [self._read_rounds(spark, table, paths)] if paths else []
+        return bases, [self._read_rounds(spark, table, delta_rounds)] if delta_rounds else []
 
     def _layers(self, table: str, up_to: int | None) -> tuple[list[dict], list[int]]:
         """The layering both readers share: (usable base tiers that hold
@@ -510,10 +545,10 @@ class StateStore:
         needed rounds were folded deeper and vacuumed.
         """
         tiers, delta_rounds = self._layers(table, up_to)
-        parts = [spark.read.parquet(self._base_dir(table, t["upto"])) for t in tiers]
-        paths = [self._table_round_dir(table, r) for r in delta_rounds]
-        if paths:
-            parts.append(self._read_rounds(spark, table, paths))
+        # a bucketed tier's pointer entry records its schema
+        parts = [self._scan(spark, t.get("ddl"), self._base_dir(table, t["upto"])) for t in tiers]
+        if delta_rounds:
+            parts.append(self._read_rounds(spark, table, delta_rounds))
         if not parts:
             return None
         out = parts[0]

@@ -78,6 +78,15 @@ def get_spark(
         # full, a long crawl's metaspace stays flat (≈186 MB on local[4]).
         # A static conf: it must be set before the session starts.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # The cache is keyed by the generated source, and by default each
+        # whole-stage class is named after its stage id
+        # (GeneratedIteratorForCodegenStage<N>), so the same pipeline at
+        # another stage id — a plan that gained or lost a stage before it —
+        # is new source and compiles again. With one class name for every
+        # stage, equal pipelines share one compiled class (perfbench
+        # crawl_backlog seed 21, local[4], rounds 2–4: 71/73/81 → 41/49/33
+        # compiles). Only class names in generated-code dumps lose the id.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.compression.codec", "zstd")
