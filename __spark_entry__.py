@@ -97,7 +97,7 @@ def q_frontier_dedup(spark, sf_dir):
 
 
 def q_frontier_dedup_cuckoo(spark, sf_dir):
-    """J1 via the DELETABLE filter tier: frontier ∖ seen routed through a
+    """J1 via the cuckoo filter tier: frontier ∖ seen routed through a
     sharded cuckoo filter (operators.cuckoo — the north-star's "partitioned
     cuckoo/bloom-filter URL-seen set", cuckoo half). Probe-false rows skip
     the exact join; probe-true rows are rescued exactly on `url`, so the
@@ -1844,7 +1844,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "redirect_resolve": q_redirect_resolve,  # 3xx chain resolution, value-exact
         "domain_rollup": q_domain_rollup,  # eTLD+1 registrable-domain rollup, value-exact
         "canonical_groups": q_canonical_groups,  # rel=canonical consolidation, value-exact
-        "frontier_dedup_cuckoo": q_frontier_dedup_cuckoo,  # deletable filter tier, value-exact
+        "frontier_dedup_cuckoo": q_frontier_dedup_cuckoo,  # cuckoo filter tier, value-exact
         "dup_ngram_spans": q_dup_ngram_spans,  # exact substring-dedup spans, value-exact
         "boilerplate_removal": q_boilerplate_removal,  # CCNet line dedup, value-exact
         "trap_templates": q_trap_templates,  # URL-template explosion detection, value-exact

@@ -3,7 +3,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from web_crawling_prj_spark.operators.bloom import build_sharded_bloom, might_contain
-from web_crawling_prj_spark.operators.dedup import anti_join_seen, dedup_within_batch, failed_minus_succeeded
+from web_crawling_prj_spark.operators.dedup import anti_join_seen, dedup_within_batch
 
 
 def _frontier(spark, n=2000):
@@ -54,12 +54,6 @@ def test_dedup_within_batch_keeps_best(spark):
     out = {r.url_hash: (r.priority, r.url) for r in dedup_within_batch(df).collect()}
     assert out[1] == (0.9, "b")  # highest priority wins
     assert out[2] == (0.5, "a")  # tie → lexicographically smallest remaining cols
-
-
-def test_failed_minus_succeeded(spark):
-    allv = spark.range(10).select(F.col("id").alias("url_hash"))
-    ok = spark.range(0, 6).select(F.col("id").alias("url_hash"))
-    assert {r.url_hash for r in failed_minus_succeeded(allv, ok).collect()} == {6, 7, 8, 9}
 
 
 def test_bloom_broadcast_lifecycle(spark):

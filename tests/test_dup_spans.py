@@ -7,10 +7,7 @@ it occurs >= min_count times corpus-wide; overlapping duplicated grams merge.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from web_crawling_prj_spark.operators.textdedup import (
-    dup_span_profile,
     duplicate_ngram_spans,
     positional_ngrams_col,
     shingles_col,
@@ -80,24 +77,6 @@ def test_short_docs_and_min_count(spark):
     pair = _docs(spark, [(1, "w x y z tail one"), (2, "w x y z tail two")])
     assert duplicate_ngram_spans(pair, n=4, min_count=3).count() == 0
     assert duplicate_ngram_spans(pair, n=4, min_count=2).count() == 2
-
-
-def test_dup_span_profile_budgets(spark):
-    docs = _docs(
-        spark,
-        [
-            (1, "a b c p q r s t u x y z"),  # 12 tokens, 6 duplicated
-            (2, "m n p q r s t u k"),  # 9 tokens, 6 duplicated
-            (3, "clean doc no shared runs"),  # 5 tokens, 0
-            (4, ""),  # empty
-        ],
-    )
-    prof = {r.doc_id: r for r in dup_span_profile(docs, n=4, min_count=2).collect()}
-    assert (prof[1].n_tokens, prof[1].dup_tokens, prof[1].n_spans) == (12, 6, 1)
-    assert prof[1].dup_ratio == 0.5
-    assert (prof[2].dup_tokens, prof[2].dup_ratio) == (6, round(6 / 9, 6))
-    assert (prof[3].dup_tokens, prof[3].n_spans, prof[3].dup_ratio) == (0, 0, 0.0)
-    assert (prof[4].n_tokens, prof[4].dup_ratio) == (0, 0.0)
 
 
 def test_spans_partitioning_independent(spark):

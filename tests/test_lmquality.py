@@ -200,32 +200,6 @@ def test_bm25_only_matching_docs_returned(spark):
     assert rows[0].n_terms_hit == 1
 
 
-def test_perplexity_buckets_approx_tracks_exact(spark):
-    """The scale-path bucketer: same schema, ≥90% per-doc agreement with the
-    exact ntile on real documents, and a shuffle-free assignment stage (the
-    only wide op is the threshold aggregation)."""
-    from pyspark.sql import functions as F
-
-    from web_crawling_prj_spark.operators.lmquality import perplexity_buckets_approx
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    uni, bi, totals = train_bigram_lm(
-        d.where(F.col("doc_id") % 7 == 0), "doc_id", "text"
-    )
-    scores = perplexity_scores(
-        d.where(F.col("doc_id") % 7 != 0), uni, bi, totals, "doc_id", "text"
-    ).localCheckpoint(eager=True)
-    exact = {r.doc_id: r.bucket for r in perplexity_buckets(scores, "doc_id").collect()}
-    approx = {
-        r.doc_id: r.bucket
-        for r in perplexity_buckets_approx(scores, "doc_id", accuracy=10_000).collect()
-    }
-    assert set(approx) == set(exact)
-    agree = sum(1 for k in exact if exact[k] == approx[k]) / len(exact)
-    assert agree >= 0.9, f"approx/exact bucket agreement {agree:.2%}"
-    assert set(approx.values()) == {"head", "middle", "tail"}
-
-
 def _plan(df):
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
 

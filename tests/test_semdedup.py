@@ -136,53 +136,3 @@ def test_assignment_tiers_equal_and_shuffle_free(spark):
         lit._jdf.queryExecution(), "simple"
     )
     assert "Exchange" not in plan and "Join" not in plan
-
-
-def test_semdedup_increment_equals_sequential_batch(spark):
-    """Law: screening batch B against frozen centroids + batch A's processed
-    points ≡ one pass where all of A outranks all of B (arrival-order
-    priority), verified by a brute-force twin; planted cross-batch dups drop."""
-    rng = np.random.RandomState(23)
-    a_vecs = rng.randn(12, 8).astype(np.float32)
-    # batch B: 4 fresh + 4 near-copies of batch-A vectors (cross-batch dups)
-    b_fresh = rng.randn(4, 8).astype(np.float32)
-    b_dups = a_vecs[:4] + rng.randn(4, 8).astype(np.float32) * 0.03
-    b_vecs = np.vstack([b_fresh, b_dups])
-    tau = 0.9
-
-    from web_crawling_prj_spark.operators.semdedup import (
-        _score_against,
-        semdedup_increment,
-    )
-
-    a_df = _df(spark, a_vecs.tolist())
-    assigned_a, cents = kmeans(a_df, k=3, iters=2)
-    scored_a = _score_against(assigned_a, cents, "vec_id", "embedding")
-    prior = scored_a.select("vec_id", "embedding", "cluster", "centroid_sim")
-
-    b_df = spark.createDataFrame(
-        [(100 + i, [float(x) for x in v]) for i, v in enumerate(b_vecs.tolist())],
-        "vec_id long, embedding array<float>",
-    )
-    inc = semdedup_increment(b_df, cents, prior, tau=tau).collect()
-    out = {r.vec_id: (r.cluster, r.keep) for r in inc}
-    assert len(out) == 8
-
-    # brute-force sequential twin on the Spark-computed clusters/sims
-    rows_a = [(r.vec_id, r.cluster, r.centroid_sim) for r in prior.collect()]
-    all_v = {i: np.float32(v).astype(float) for i, v in enumerate(a_vecs.tolist())}
-    all_v.update({100 + i: np.float32(v).astype(float) for i, v in enumerate(b_vecs.tolist())})
-    # priority: all A rows first (any internal order is irrelevant — they are
-    # all "earlier"), then B rows by (sim, id)
-    b_prio = sorted((r.centroid_sim, r.vec_id, r.cluster) for r in inc)
-    for idx, (s, vid, c) in enumerate(b_prio):
-        dominated = any(
-            ca == c and _cos(all_v[va], all_v[vid]) >= tau for va, ca, _ in rows_a
-        ) or any(
-            cb == c and _cos(all_v[vb], all_v[vid]) >= tau
-            for (sb, vb, cb) in b_prio[:idx]
-        )
-        assert out[vid][1] == (not dominated), f"vec {vid}"
-    # the planted near-copies of A vectors must be dropped
-    n_dropped = sum(1 for _, keep in out.values() if not keep)
-    assert n_dropped >= 3

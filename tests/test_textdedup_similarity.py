@@ -14,7 +14,6 @@ from web_crawling_prj_spark.operators.similarity import (
 from web_crawling_prj_spark.operators.textdedup import (
     dedup_exact,
     dedup_minhash,
-    exact_duplicates,
     minhash_candidate_pairs,
     ngram_jaccard,
     shingles_col,
@@ -37,8 +36,6 @@ def docs(spark):
 
 
 def test_exact_duplicates(docs):
-    groups = exact_duplicates(docs).collect()
-    assert len(groups) == 1 and groups[0].member_ids == [0, 1] and groups[0].keep_id == 0
     kept = {r.doc_id for r in dedup_exact(docs).collect()}
     assert kept == {0, 2, 3, 4, 5}
 
@@ -368,17 +365,21 @@ def test_cap_buckets_two_level_equals_naive_and_spreads_hot_bucket(spark):
 
 
 def test_run_summary_zero_scheduled_is_idle_not_failed(spark):
-    """ADVICE r2: scheduled == 0 must not divide by zero or flag failure."""
+    """ADVICE r2: scheduled == 0 must not divide by zero or flag failure.
+    The failure threshold is failed ≥ ⌈scheduled / 2⌉ (ceil, as the reference
+    aborts): 2 of 5 failed is not a failed round, 3 of 5 is."""
     from web_crawling_prj_spark.plans.reports import run_summary
 
     m = spark.createDataFrame(
-        [(1, 0, 0, 0, 0, 0), (2, 0, 10, 7, 3, 1)],
+        [(1, 0, 0, 0, 0, 0), (2, 0, 10, 7, 3, 1), (3, 0, 5, 3, 2, 0), (4, 0, 5, 2, 3, 0)],
         "round_id int, bucket int, scheduled_cnt long, fetched_ok_cnt long, "
         "failed_cnt long, retried_cnt long",
     )
     out = {r.round_id: r for r in run_summary(m).collect()}
     assert out[1].success_rate_pct == 100.0 and out[1].run_failed is False
     assert out[2].success_rate_pct == 70.0 and out[2].run_failed is False
+    assert out[3].success_rate_pct == 60.0 and out[3].run_failed is False
+    assert out[4].success_rate_pct == 40.0 and out[4].run_failed is True
 
 
 def test_cms_bounds_and_merge(spark):

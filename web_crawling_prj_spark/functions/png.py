@@ -1,24 +1,10 @@
-"""Pure-stdlib PNG codec (zlib + struct + numpy) — the one REAL media kernel.
+"""PNG header parse — width, height, bit depth and color type from IHDR.
 
-The sandbox has no PIL/ffmpeg, so most media decode stays honestly stubbed
-(operators.multimodal DECODE_BACKEND="fake"), but PNG needs nothing beyond
-zlib: this module implements a genuine, spec-conformant subset of ISO/IEC
-15948 (PNG) —
-
-- :func:`decode_ihdr`: header-only parse (width/height/depth/color type) for
-  metadata extraction without touching pixel data;
-- :func:`png_decode`: full pixel decode for 8-bit greyscale (color type 0)
-  and truecolor RGB (color type 2): chunk walk → IDAT concat →
-  zlib.decompress → per-row unfiltering (all five PNG filter types: None,
-  Sub, Up, Average, Paeth);
-- :func:`png_encode`: encoder (filter 0 rows, one IDAT, CRC32 per chunk);
-- :func:`resize_nearest`: deterministic nearest-neighbor resample.
-
-Row unfiltering for Up runs fully vectorized (numpy row ops); Sub/Average/
-Paeth carry an intra-row byte recurrence, so those rows fall back to a
-per-byte loop — exact per the spec, and cold for our own filter-0 encoder
-output. Reference analog for binary payload handling:
-services/walmart_seller_service.py:113-123 (opaque bytes + typed metadata).
+``operators.multimodal.decode_metadata`` reads a PNG blob's dimensions here
+without decoding pixel data. :func:`_chunks` walks the chunk stream of
+ISO/IEC 15948 (PNG) and checks each chunk's CRC32 as it reads it;
+:func:`decode_ihdr` reads only the first chunk, so a blob cut or corrupted
+inside IHDR raises ValueError rather than yielding a wrong header.
 """
 
 from __future__ import annotations
@@ -26,11 +12,7 @@ from __future__ import annotations
 import struct
 import zlib
 
-import numpy as np
-
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-_CHANNELS = {0: 1, 2: 3}  # greyscale, truecolor
 
 
 def _chunks(data: bytes):
@@ -62,104 +44,3 @@ def decode_ihdr(data: bytes) -> tuple[int, int, int, int]:
             return w, h, depth, color
         break  # IHDR must be first per spec
     raise ValueError("PNG missing IHDR")
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def png_decode(data: bytes) -> np.ndarray:
-    """PNG bytes → uint8 array (H, W) for greyscale or (H, W, 3) for RGB."""
-    w = h = None
-    depth = color = None
-    idat = bytearray()
-    for ctype, payload in _chunks(data):
-        if ctype == b"IHDR":
-            w, h, depth, color = struct.unpack(">IIBB", payload[:10])
-            interlace = payload[12]
-            if depth != 8 or color not in _CHANNELS:
-                raise ValueError(f"unsupported PNG (depth={depth}, color={color})")
-            if interlace:
-                raise ValueError("interlaced PNG not supported")
-        elif ctype == b"IDAT":
-            idat.extend(payload)
-    if w is None:
-        raise ValueError("PNG missing IHDR")
-    ch = _CHANNELS[color]
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    stride = w * ch
-    if len(raw) != h * (stride + 1):
-        raise ValueError("PNG pixel payload size mismatch")
-    rows = raw.reshape(h, stride + 1)
-    filters = rows[:, 0]
-    out = np.zeros((h, stride), dtype=np.uint8)
-    for y in range(h):
-        f = int(filters[y])
-        cur = rows[y, 1:].astype(np.int32)
-        prev = out[y - 1].astype(np.int32) if y > 0 else np.zeros(stride, dtype=np.int32)
-        if f == 0:  # None
-            out[y] = cur
-        elif f == 2:  # Up — vectorized
-            out[y] = (cur + prev) & 0xFF
-        elif f in (1, 3, 4):  # Sub/Average/Paeth: intra-row recurrence
-            line = np.zeros(stride, dtype=np.int32)
-            for x in range(stride):
-                a = line[x - ch] if x >= ch else 0
-                b = prev[x]
-                c = int(out[y - 1, x - ch]) if (y > 0 and x >= ch) else 0
-                if f == 1:
-                    pred = a
-                elif f == 3:
-                    pred = (a + b) // 2
-                else:
-                    pred = _paeth(int(a), int(b), int(c))
-                line[x] = (int(cur[x]) + pred) & 0xFF
-            out[y] = line
-        else:
-            raise ValueError(f"invalid PNG filter type {f}")
-    img = out.reshape(h, w, ch)
-    return img[:, :, 0] if ch == 1 else img
-
-
-def png_encode(img: np.ndarray, compress_level: int = 6) -> bytes:
-    """uint8 array (H, W) or (H, W, 3) → PNG bytes (filter 0, single IDAT)."""
-    a = np.asarray(img, dtype=np.uint8)
-    if a.ndim == 2:
-        color, ch = 0, 1
-        a = a[:, :, None]
-    elif a.ndim == 3 and a.shape[2] == 3:
-        color, ch = 2, 3
-    else:
-        raise ValueError("expected (H, W) or (H, W, 3) uint8 array")
-    h, w = a.shape[:2]
-    rows = a.reshape(h, w * ch)
-    raw = np.concatenate([np.zeros((h, 1), dtype=np.uint8), rows], axis=1)  # filter 0
-    idat = zlib.compress(raw.tobytes(), compress_level)
-
-    def chunk(ctype: bytes, payload: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(payload))
-            + ctype
-            + payload
-            + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return PNG_MAGIC + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
-
-
-def resize_nearest(img: np.ndarray, max_side: int) -> np.ndarray:
-    """Aspect-preserving nearest-neighbor downscale (never upscales).
-
-    out[i, j] = in[floor(i/scale), floor(j/scale)] — deterministic, the same
-    index math any nearest resampler at scale ≤ 1 uses."""
-    h, w = img.shape[:2]
-    scale = min(1.0, max_side / max(w, h))
-    nh, nw = max(1, int(h * scale)), max(1, int(w * scale))
-    yi = np.minimum((np.arange(nh) / scale).astype(np.int64), h - 1)
-    xi = np.minimum((np.arange(nw) / scale).astype(np.int64), w - 1)
-    return img[yi][:, xi]

@@ -231,11 +231,6 @@ def host_of(url: Column | str) -> Column:
     return F.lower(F.parse_url(c, F.lit("HOST")))
 
 
-def strip_fragment(url: Column | str) -> Column:
-    c = F.col(url) if isinstance(url, str) else url
-    return F.regexp_replace(c, "#.*$", "")
-
-
 def url_depth(url_canon: Column | str) -> Column:
     """Path depth of a canonical URL (segments in path)."""
     c = F.col(url_canon) if isinstance(url_canon, str) else url_canon

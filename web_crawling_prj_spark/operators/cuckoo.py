@@ -1,16 +1,12 @@
-"""Sharded cuckoo filter over 64-bit URL keys — the seen-set's DELETABLE
+"""Sharded cuckoo filter over 64-bit URL keys — the seen-set's second
 approximate tier (the north-star names "partitioned cuckoo/bloom-filter URL-seen
 set"; operators.bloom is the bloom half, this is the cuckoo half).
 
-Why a second filter kind when the bloom tier already exists: a Bloom filter is
-add-only — the delta-mode frontier/seen event log (plans.crawl_round) commits
-adds AND tombstones per round, and a bloom over a set that shrinks can only be
-rebuilt. A cuckoo filter (Fan et al., "Cuckoo Filter: Practically Better Than
-Bloom", CoNEXT 2014 — public) stores displaceable fingerprints, so it supports
-`delete` of previously-inserted keys with zero false-negative risk for the keys
-that remain. That makes the filter maintainable incrementally round over round:
-insert the round's adds, delete the round's tombstones, never rescan the
-backlog — the same O(churn) contract as the event log itself.
+A cuckoo filter (Fan et al., "Cuckoo Filter: Practically Better Than Bloom",
+CoNEXT 2014 — public) stores displaceable fingerprints instead of bits. The
+format would also allow deleting an inserted key, which a Bloom filter cannot;
+this module builds and probes only (no incremental insert or delete), so a
+changed seen-set means a rebuild, as for the bloom tier.
 
 Layout mirrors ShardedBloom: P shards keyed by ``pmod(url_hash, P)``; each
 shard is an (m_buckets × 4-slot) table of 16-bit fingerprints (0 = empty).
@@ -18,17 +14,17 @@ Partial-key cuckoo hashing: bucket i1 = h(key) mod m, alternate
 i2 = i1 XOR (fp · 0x5bd1e995) mod m — m is a power of two so the XOR is an
 involution and either bucket recovers the other from (bucket, fp) alone.
 False-positive rate ≈ 2·b/2^f = 8/65536 ≈ 0.012% at b=4, f=16 — ~80× tighter
-than the 1%-fpp bloom at ~2.4× the bits (16 bits/key vs ~9.6at 1%).
+than the 1%-fpp bloom at ~2.4× the bits (16 bits/key vs ~9.6 at 1%).
 
 Build is distributed per shard: one shuffle routes each key to its shard task
 (insert order inside a shard matters for eviction kicks, so unlike the bloom's
 OR-reduce a shard must be built by a single task; keys are sorted first so the
-table bytes are deterministic under any partitioning). Probe and delete are
+table bytes are deterministic under any partitioning). The probe is
 Arrow-vectorized numpy, no per-row Python.
 
 Like the bloom tier this is an OPTIMIZATION ONLY: `might_contain=false` rows
-are provably unseen (no false negatives, including after deletes of inserted
-keys); `true` rows still go through the exact anti-join (operators.dedup).
+are provably unseen (no false negatives); `true` rows still go through the
+exact anti-join (operators.dedup).
 
 Reference analog: the in-memory Python seen-set (services/wayfair_service.py:
 101-164) — exact, single-machine; the approximate tier has no reference
@@ -54,8 +50,7 @@ _MAX_KICKS = 500
 class ShardedCuckoo:
     """P independent (m_buckets, 4) uint16 fingerprint tables; shard s covers
     keys with pmod(key, P) == s. occ[s, b] = occupied slots in bucket b of
-    shard s (buckets stay front-compacted: inserts append, deletes swap the
-    last occupied slot into the hole)."""
+    shard s (buckets stay front-compacted: inserts append)."""
 
     table: np.ndarray  # shape (P, m_buckets, _SLOTS), dtype uint16
     occ: np.ndarray  # shape (P, m_buckets), dtype uint8
@@ -187,61 +182,6 @@ def _shard_pos(ck: ShardedCuckoo, h: np.ndarray):
     return shard, fp, i1, i2
 
 
-def insert_keys(ck: ShardedCuckoo, keys: np.ndarray) -> None:
-    """Incremental adds (the round's seen delta) — in place, per touched shard."""
-    h = np.asarray(keys, dtype=np.int64)
-    if len(h) == 0:
-        return
-    shard = np.mod(h, ck.num_shards)
-    for s in np.unique(shard):
-        _insert_into_shard(
-            ck.table[s], ck.occ[s], np.sort(h[shard == s]), ck.m_buckets
-        )
-
-
-def delete_keys(ck: ShardedCuckoo, keys: np.ndarray) -> int:
-    """Incremental deletes (the round's tombstones) — removes ONE stored copy
-    of each key's fingerprint from its bucket pair, compacting the bucket.
-    Only call with keys that were actually inserted (the event-log contract:
-    tombstones only target committed adds); then the remaining keys keep their
-    zero-false-negative guarantee. Returns the number of fingerprints removed."""
-    h = np.asarray(keys, dtype=np.int64)
-    if len(h) == 0:
-        return 0
-    shard, fp, i1, i2 = _shard_pos(ck, h)
-    removed = 0
-    for s, f, b1, b2 in zip(shard.tolist(), fp.tolist(), i1.tolist(), i2.tolist()):
-        for b in (b1, b2):
-            n = ck.occ[s, b]
-            row = ck.table[s, b, :n]
-            hit = np.nonzero(row == f)[0]
-            if len(hit):
-                last = n - 1
-                ck.table[s, b, hit[0]] = ck.table[s, b, last]
-                ck.table[s, b, last] = 0
-                ck.occ[s, b] = last
-                removed += 1
-                break
-    return removed
-
-
-def cuckoo_to_bytes(ck: ShardedCuckoo) -> bytes:
-    import struct
-
-    head = struct.pack("<II", ck.num_shards, ck.m_buckets)
-    return head + ck.table.tobytes() + ck.occ.tobytes()
-
-
-def cuckoo_from_bytes(data: bytes) -> ShardedCuckoo:
-    import struct
-
-    p, m = struct.unpack("<II", data[:8])
-    tbytes = p * m * _SLOTS * 2
-    table = np.frombuffer(data[8 : 8 + tbytes], dtype=np.uint16).reshape(p, m, _SLOTS).copy()
-    occ = np.frombuffer(data[8 + tbytes :], dtype=np.uint8).reshape(p, m).copy()
-    return ShardedCuckoo(table=table, occ=occ, num_shards=p, m_buckets=m)
-
-
 def broadcast_cuckoo(spark, ck: ShardedCuckoo):
     """Ship the fingerprint tables once per executor; caller owns destroy()
     (same lifecycle contract as operators.bloom.broadcast_bloom)."""
@@ -251,8 +191,8 @@ def broadcast_cuckoo(spark, ck: ShardedCuckoo):
 def cuckoo_might_contain(
     ck: ShardedCuckoo, hash_col: Column | str = "url_hash", spark=None, bcast=None
 ) -> Column:
-    """Vectorized probe column. False ⇒ definitely unseen (no false negatives,
-    preserved across insert_keys/delete_keys maintenance)."""
+    """Vectorized probe column. False ⇒ definitely unseen (no false
+    negatives)."""
     p, m = ck.num_shards, ck.m_buckets
     if bcast is None and spark is not None:
         bcast = broadcast_cuckoo(spark, ck)

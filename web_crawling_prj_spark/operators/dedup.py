@@ -66,8 +66,8 @@ def anti_join_seen(
     ``bloom_bcast``: caller-owned broadcast of the bloom bits (see
     operators.bloom.broadcast_bloom) so round loops can release it.
     ``probe_col``: any prebuilt no-false-negative membership Column (e.g.
-    operators.cuckoo.cuckoo_might_contain — the DELETABLE filter kind) used
-    in place of the bloom probe; mutually exclusive with ``bloom``."""
+    operators.cuckoo.cuckoo_might_contain) used in place of the bloom
+    probe; mutually exclusive with ``bloom``."""
     if bloom is not None and probe_col is not None:
         raise ValueError("pass either bloom or probe_col, not both")
     seen_keys = seen.select(key)
@@ -121,9 +121,3 @@ def anti_join_seen_layered(
     for part in seen_parts:
         pending = pending.join(part.select(key), key, "left_anti")
     return pending
-
-
-def failed_minus_succeeded(all_items: DataFrame, succeeded: DataFrame, key: str = "url_hash") -> DataFrame:
-    """Reference ``get_failed_product_variations`` (wayfair_service.py:196-252):
-    re-crawl set = all ∖ succeeded, same anti-join shape."""
-    return all_items.join(succeeded.select(key), key, "left_anti")

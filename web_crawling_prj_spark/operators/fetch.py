@@ -1,15 +1,15 @@
 """Fetch stage: scheduled batch → fetch results (+extraction, +outlink discovery).
 
 Production shape (reference ``BaseSourceClient._make_single_request``,
-services/request_client.py:126-203): the fetch is I/O inside the data plane —
-here that is ``mapInPandas`` over the scheduled batch, one HTTP client per
-partition, honoring ``fetch_offset_ms`` spacing and ``proxy_slot``. The sandbox
-has no network, so the default fetcher is SYNTHETIC and deterministic: a join
-of the scheduled batch against the `pages` store (the "web"), with failures
-injected by seeded hash in reference-like class proportions
-(error taxonomy: services/error_handler.py:73-99). Both fetchers emit the same
-``fetch_log`` schema, so every downstream operator (retry, seen-set, metrics,
-SCD2 load) is fetcher-agnostic.
+services/request_client.py:126-203): the fetch is I/O inside the data plane,
+a ``mapInPandas`` over the scheduled batch with one HTTP client per
+partition, honoring ``fetch_offset_ms`` spacing and ``proxy_slot``. The one
+fetcher here is SYNTHETIC and deterministic: a join of the scheduled batch
+against the `pages` store (the "web"), with failures injected by seeded hash
+in reference-like class proportions (error taxonomy:
+services/error_handler.py:73-99). It emits the ``fetch_log`` schema every
+downstream operator (retry, seen-set, metrics, SCD2 load) reads; a real HTTP
+fetcher would have to emit the same schema.
 
 Extraction runs inside the same stage via the Arrow UDF
 (functions.text.extract_text_udf) — byte-identical to the stored text
@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import logging
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -222,180 +221,4 @@ def discover_outlinks(
     )
     return out.withColumns(
         {"url_hash": url_hash(F.col("url_canon")), "host": host_of(F.col("url_canon"))}
-    )
-
-
-def has_network(host: str = "example.com", port: int = 80, timeout_s: float = 2.0) -> bool:
-    """Cached-per-process network probe (the PIL/av auto-activation pattern,
-    operators.multimodal): True when an outbound TCP connection succeeds.
-    Gates the real fetcher's external tests; localhost fetching needs no
-    probe."""
-    global _NET_PROBE
-    if _NET_PROBE is None:
-        import socket
-
-        try:
-            socket.create_connection((host, port), timeout=timeout_s).close()
-            _NET_PROBE = True
-        except OSError:
-            _NET_PROBE = False
-    return _NET_PROBE
-
-
-_NET_PROBE: bool | None = None
-
-
-def real_fetch(
-    scheduled: DataFrame,
-    round_id: int,
-    round_ts,
-    timeout_s: float = 10.0,
-    max_bytes: int = 4_000_000,
-    user_agent: str = "wcp-spark/1.0",
-    pace: bool = False,
-) -> DataFrame:
-    """Production HTTP fetcher (reference ``BaseSourceClient._make_single_request``,
-    services/request_client.py:126-203): ``mapInPandas`` over the scheduled
-    batch — one stdlib ``urllib`` opener per partition, one request per row,
-    redirects NOT followed client-side (3xx surfaces as class ``redirect`` +
-    ``redirect_to`` from the Location header, resolved relative to the
-    request URL — the crawl's redirect-resolution step owns chain following,
-    exactly like the synthetic path). Emits the same fetch-log schema as
-    :func:`synthetic_fetch`, so every downstream operator (retry, seen-set,
-    metrics, archive) is fetcher-agnostic.
-
-    Error taxonomy mirrors the reference's exception branch
-    (error_handler.py:73-99): socket timeout → ``timeout``; DNS/connection
-    refusal → ``network``; malformed/oversized response → ``parsing``; an
-    HTTP status code answers for itself. ``pace=True`` sleeps the
-    ``fetch_offset_ms`` delta between a partition's consecutive rows (capped
-    5 s) — politeness spacing the scheduler already computed; leave False in
-    tests. Tested end-to-end against a localhost HTTP server (no external
-    network needed) plus a probe-gated external test that auto-activates
-    when the environment allows outbound connections."""
-    from urllib.parse import urljoin
-
-    def fetch_partition(batches):
-        import urllib.error
-        import urllib.request
-
-        last_off = 0.0
-        # one opener per task, amortized over every batch/row (guide §4.5);
-        # _NoRedirect.__new__ builds a handler class — doing that per row was
-        # avoidable constant work in the request loop (ADVICE r6)
-        opener = urllib.request.build_opener(_NoRedirect())
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if pace:
-                pdf = pdf.sort_values("fetch_offset_ms")
-            codes, kinds, bodies, locs = [], [], [], []
-            for url, off in zip(pdf["url_canon"], pdf["fetch_offset_ms"]):
-                if pace:
-                    import time
-
-                    delta = max(0.0, (float(off or 0) - last_off) / 1000.0)
-                    time.sleep(min(delta, 5.0))
-                    last_off = float(off or 0)
-                code, kind, body, loc = None, None, None, None
-                try:
-                    req = urllib.request.Request(url, headers={"User-Agent": user_agent})
-                    with opener.open(req, timeout=timeout_s) as resp:
-                        code = resp.status
-                        loc = resp.headers.get("Location")
-                        if 200 <= code < 300:
-                            raw = resp.read(max_bytes + 1)
-                            if len(raw) > max_bytes:
-                                kind = "parsing"
-                            else:
-                                body = raw
-                except urllib.error.HTTPError as exc:
-                    code = exc.code
-                    loc = exc.headers.get("Location") if exc.headers else None
-                except TimeoutError:
-                    kind = "timeout"
-                except urllib.error.URLError as exc:
-                    reason = getattr(exc, "reason", None)
-                    kind = "timeout" if isinstance(reason, TimeoutError) else "network"
-                except Exception:
-                    kind = "network"
-                codes.append(code)
-                kinds.append(kind)
-                bodies.append(body)
-                locs.append(
-                    urljoin(url, loc) if loc is not None and code and 300 <= code < 400 else None
-                )
-            out = pdf.copy()
-            out["http_code"] = pd.array(codes, dtype="Int32")
-            out["error_kind"] = pd.array(kinds, dtype=object)
-            out["_body"] = pd.array(bodies, dtype=object)
-            out["redirect_to"] = pd.array(locs, dtype=object)
-            yield out
-
-    schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in scheduled.schema.fields)
-        + ", http_code int, error_kind string, _body binary, redirect_to string"
-    )
-    fetched = scheduled.mapInPandas(fetch_partition, schema=schema)
-    fetched = fetched.withColumns(
-        {
-            "round_id": F.lit(round_id),
-            "fetched_ts": F.lit(round_ts).cast("timestamp")
-            + F.make_interval(secs=F.col("fetch_offset_ms") / 1000.0),
-            "attempt": F.coalesce(F.col("attempt"), F.lit(0)) + 1,
-            "page_doc_id": F.lit(None).cast("long"),
-            "lang": F.lit(None).cast("string"),
-            "extracted_text": F.when(
-                (F.col("http_code") >= 200)
-                & (F.col("http_code") < 300)
-                & F.col("error_kind").isNull(),
-                extract_text_udf("_body"),
-            ),
-        }
-    )
-    return fetched.select(
-        "round_id",
-        "url_hash",
-        "url_canon",
-        "host",
-        "priority",
-        "depth",
-        "attempt",
-        "http_code",
-        "error_kind",
-        "fetched_ts",
-        "proxy_slot",
-        "page_doc_id",
-        "extracted_text",
-        "lang",
-        "redirect_to",
-    )
-
-
-class _NoRedirect:
-    """urllib redirect handler that surfaces 3xx instead of following it —
-    chain resolution is the crawl's job (operators.redirects), mirroring how
-    the synthetic fetcher emits class ``redirect`` + ``redirect_to``."""
-
-    # build_opener accepts handler INSTANCES; subclassing in a closure would
-    # capture the module in the pickled UDF, so this is a tiny top-level class
-    def __new__(cls):
-        import urllib.request
-
-        class H(urllib.request.HTTPRedirectHandler):
-            def redirect_request(self, *a, **k):
-                return None
-
-        return H()
-
-
-def real_fetch_stub(scheduled: DataFrame) -> DataFrame:
-    """Kept as the explicit no-network fallback marker: environments without
-    ANY network (not even loopback) use synthetic_fetch; environments with
-    loopback or outbound access use :func:`real_fetch` (tested end-to-end
-    against a localhost server; external fetch auto-activates behind
-    :func:`has_network`)."""
-    raise NotImplementedError(
-        "no network in sandbox — use synthetic_fetch, or real_fetch where "
-        "loopback/outbound connections are allowed"
     )

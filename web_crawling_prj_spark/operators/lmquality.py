@@ -162,33 +162,6 @@ def perplexity_buckets(scores: DataFrame, key: str, n_buckets: int = 3) -> DataF
     return out.withColumnRenamed("_nt", "bucket")
 
 
-def perplexity_buckets_approx(
-    scores: DataFrame, key: str, n_buckets: int = 3, accuracy: int = 10_000
-) -> DataFrame:
-    """The 100 TB bucket path: ONE aggregation pass computes approximate
-    quantile thresholds (`percentile_approx`, rank error ≤ 1/accuracy) and a
-    broadcast + map-side comparison assigns buckets — no global sort, no
-    single-partition window, unlike :func:`perplexity_buckets`'s exact ntile.
-
-    Honest contract: bucket BOUNDARIES are approximate (docs within the rank
-    error of a threshold may land one bucket off the exact split, and the
-    sketch's merge order makes boundary placement partition-sensitive) —
-    use the exact variant when the output feeds an equality check; this one
-    when the corpus is too large to sort. Same output schema."""
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    thr = scores.agg(
-        F.percentile_approx("perplexity", probs, accuracy).alias("_thr")
-    )
-    bucket = (
-        F.size(F.filter(F.col("_thr"), lambda t: t < F.col("perplexity"))) + 1
-    )
-    out = scores.crossJoin(F.broadcast(thr))
-    if n_buckets == 3:
-        lab = F.when(bucket == 1, "head").when(bucket == 2, "middle").otherwise("tail")
-        return out.select(key, "n_tokens", "perplexity", lab.alias("bucket"))
-    return out.select(key, "n_tokens", "perplexity", bucket.alias("bucket"))
-
-
 # ---------------------------------------------------------------------------
 # DSIR
 

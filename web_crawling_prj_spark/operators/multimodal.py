@@ -4,26 +4,25 @@ A 100 TB training-data pipeline carries media as ``binary`` payload columns
 with a typed metadata struct, processed by Arrow-batched ``mapInPandas``
 operators so the JVM↔Python boundary moves whole columnar batches, never rows.
 
-**PNG images are decoded for REAL** — functions.png is a pure-stdlib
-(zlib+struct+numpy) spec subset, so ``decode_metadata`` / ``resize_images`` /
-``extract_features`` on PNG blobs parse/resample/pool actual pixels with zero
-extra dependencies. The remaining kernels (JPEG, audio, video: PIL/ffmpeg/
-torchaudio are NOT in this container) stay stubbed behind ``DECODE_BACKEND``:
+One operator is reached: ``decode_metadata`` (the ``media_decode`` query of
+``__spark_entry__.py``), which reads each blob's header only. PNG and GIF headers are parsed
+for REAL by stdlib code (functions.png / functions.gif), under any backend.
+Other real media (JPEG, audio, video: PIL/ffmpeg are NOT in this container)
+depends on ``DECODE_BACKEND``:
 
 - ``"auto"`` (default): per-blob, PER-FAMILY capability detection (mirrors
   operators.scd2's provider-based MERGE detection) — the moment PIL (images)
-  or PyAV (audio/video) appears in the image, that family's blobs
-  decode/resize/extract for real with no code or config change; a family
-  whose library is absent keeps the deterministic fake contract below. A
-  partial install (e.g. PyAV without PIL) therefore never breaks the other
-  family — it upgrades only its own.
+  or PyAV (audio/video) appears in the image, that family's blobs decode for
+  real with no code or config change; a family whose library is absent
+  keeps the deterministic fake contract below. A partial install (e.g. PyAV
+  without PIL) therefore never breaks the other family — it upgrades only
+  its own.
 - ``"fake"``: deterministic synthetic decode — parses the payload's
-  self-describing header (our synthetic media blobs carry width/height/etc. in
-  the first bytes) and emits real-shaped features; NEVER probes the real
-  libraries, so output is deterministic even on a machine that has them. All
-  Spark-side plumbing — schema, batch shape, partitioning, UDF signatures —
-  is REAL and tested.
-- ``"real"``: strict — a blob neither the stdlib codecs nor an installed
+  self-describing header (our synthetic media blobs carry width/height/etc.
+  in the first bytes); NEVER probes the real libraries, so output is
+  deterministic even on a machine that has them. Real media it cannot parse
+  is a data error (ValueError).
+- ``"real"``: strict — a plausible real-media blob that no installed
   library can decode raises NotImplementedError with the dependency note
   (the honest environment-gap stub).
 
@@ -31,10 +30,6 @@ The import probes are cached per process (workers re-import this module, so
 each worker probes once — never once per blob). Skip-marked end-to-end tests
 (tests/test_multimodal.py) run the real paths automatically once the
 libraries exist.
-
-Per-blob dispatch: a PNG magic prefix always takes the real stdlib path
-(backend-independent — it needs no missing dependency); WCPM-magic synthetic
-blobs take the backend path.
 
 Synthetic payload format (media_blob): b"WCPM" + mtype(1B) + width(4B LE) +
 height(4B LE) + duration_ms(4B LE) + seeded noise bytes. Deterministic per
@@ -140,8 +135,8 @@ def synth_media_udf(doc_id: pd.Series, mtype: pd.Series) -> pd.Series:
 
 # magics of real media containers this container CANNOT decode (no PIL/av):
 # JPEG, BMP, RIFF (WAV/AVI/WebP), MP4 ftyp at offset 4, Ogg, MP3 ID3.
-# PNG and GIF are NOT here — functions.png / functions.gif decode them for
-# real, stdlib-only.
+# PNG and GIF are NOT here — functions.png / functions.gif parse their
+# headers stdlib-only.
 _REAL_MEDIA_MAGICS = (b"\xff\xd8\xff", b"BM", b"RIFF", b"OggS", b"ID3")
 
 
@@ -221,144 +216,3 @@ def decode_metadata(media: DataFrame, blob_col: str = "media") -> DataFrame:
             )
 
     return media.mapInPandas(fn, schema=out_schema)
-
-
-def extract_features(media: DataFrame, blob_col: str = "media", dim: int = 16) -> DataFrame:
-    """mapInPandas feature extraction: binary → array<float> embedding.
-
-    PNG blobs get REAL features: decoded luminance pooled to a grid
-    (nearest-resample to ⌈√dim⌉², first `dim` cells, unit-norm) — the
-    classical pre-CNN image descriptor, computed from actual pixels. Other
-    blobs: fake backend = seeded projection of the payload bytes
-    (deterministic, unit-norm, real schema); real backend would run CNN/CLIP
-    batch inference here.
-    """
-    import math
-
-    from web_crawling_prj_spark.functions.gif import GIF_MAGICS, gif_decode
-    from web_crawling_prj_spark.functions.png import PNG_MAGIC, png_decode, resize_nearest
-
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in media.schema.fields)
-    out_schema += ", feature array<float>"
-    grid = math.ceil(math.sqrt(dim))
-    backend = DECODE_BACKEND  # driver-side capture (workers re-import the module)
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rng = np.random.default_rng(SEED_FEATURES)
-        proj = rng.standard_normal((64, dim))
-        for pdf in it:
-            feats = []
-            for b in pdf[blob_col]:
-                if b[:8] == PNG_MAGIC or bytes(b[:6]) in GIF_MAGICS:
-                    decode = png_decode if b[:8] == PNG_MAGIC else gif_decode
-                    img = decode(bytes(b)).astype(np.float64)
-                    if img.ndim == 3:
-                        img = img.mean(axis=2)  # luminance
-                    v = resize_nearest(img, grid).reshape(-1)[:dim]
-                    if len(v) < dim:
-                        v = np.pad(v, (0, dim - len(v)))
-                else:
-                    im = None
-                    if backend != "fake" and bytes(b[:4]) != _MAGIC:
-                        im = _pil_open(bytes(b))  # auto/real: family probe
-                    if im is not None:  # auto-activated real image path
-                        img = np.asarray(im.convert("L"), dtype=np.float64)
-                        v = resize_nearest(img, grid).reshape(-1)[:dim]
-                        if len(v) < dim:
-                            v = np.pad(v, (0, dim - len(v)))
-                    elif backend == "real":  # strict: PNG/GIF above stay real
-                        raise NotImplementedError(
-                            "real non-PNG feature extraction needs a model runtime"
-                        )
-                    else:  # fake, or auto with the image library absent
-                        raw = np.frombuffer(b[-64:], dtype=np.uint8).astype(np.float64)
-                        if len(raw) < 64:
-                            raw = np.pad(raw, (0, 64 - len(raw)))
-                        v = raw @ proj
-                n = np.linalg.norm(v)
-                feats.append([float(x) for x in (v / n if n else v)])
-            yield pdf.assign(feature=feats)
-
-    return media.mapInPandas(fn, schema=out_schema)
-
-
-SEED_FEATURES = 42
-
-
-def resize_images(media: DataFrame, blob_col: str = "media", max_side: int = 256) -> DataFrame:
-    """Aspect-preserving downscale to max_side. PNG blobs take the REAL path:
-    stdlib decode → nearest-neighbor resample → re-encode (functions.png).
-    WCPM synthetic blobs rewrite the self-describing header dims (the fake
-    backend's stand-in for a JPEG/etc. re-encode)."""
-    from web_crawling_prj_spark.functions.gif import GIF_MAGICS, gif_decode, gif_encode
-    from web_crawling_prj_spark.functions.png import (
-        PNG_MAGIC,
-        png_decode,
-        png_encode,
-        resize_nearest,
-    )
-
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in media.schema.fields)
-
-    backend = DECODE_BACKEND  # driver-side capture (workers re-import the module)
-
-    from web_crawling_prj_spark.functions.gif import decode_screen
-    from web_crawling_prj_spark.functions.png import decode_ihdr
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for b in pdf[blob_col]:
-                # already within max_side → byte passthrough: no upscale ever,
-                # and no wasted (for JPEG: LOSSY) same-size re-encode — cheap
-                # header-only dims check, the pixel decode never runs
-                if b[:8] == PNG_MAGIC:  # real pixels, real resample
-                    w, h, _, _ = decode_ihdr(bytes(b))
-                    if max(w, h) <= max_side:
-                        out.append(bytes(b))
-                        continue
-                    out.append(png_encode(resize_nearest(png_decode(bytes(b)), max_side)))
-                    continue
-                if bytes(b[:6]) in GIF_MAGICS:  # real pixels, real re-encode
-                    w, h = decode_screen(bytes(b))
-                    if max(w, h) <= max_side:
-                        out.append(bytes(b))
-                        continue
-                    out.append(gif_encode(resize_nearest(gif_decode(bytes(b)), max_side)))
-                    continue
-                if backend != "fake" and bytes(b[:4]) != _MAGIC:
-                    im = _pil_open(bytes(b))  # auto/real: family probe
-                    if im is not None:  # PIL resample + re-encode
-                        import io
-
-                        if max(im.width, im.height) <= max_side:
-                            out.append(bytes(b))
-                            continue
-                        scale = max_side / max(im.width, im.height)
-                        nw = max(1, int(im.width * scale))
-                        nh = max(1, int(im.height * scale))
-                        buf = io.BytesIO()
-                        im.resize((nw, nh)).save(buf, format=im.format or "PNG")
-                        out.append(buf.getvalue())
-                        continue
-                mt, w, h, dur = _parse_header(b, backend)
-                scale = min(1.0, max_side / max(w, h))
-                nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
-                out.append(_MAGIC + struct.pack("<BIII", {v: k for k, v in _MTYPES.items()}.get(mt, 0), nw, nh, dur) + b[17:])
-            pdf = pdf.copy()
-            pdf[blob_col] = out
-            yield pdf
-
-    return media.mapInPandas(fn, schema=out_schema)
-
-
-def sample_video_frames(media: DataFrame, blob_col: str = "media", every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling stub: one output row per sampled timestamp (explode on a
-    native sequence over the decoded duration — the per-frame decode is the
-    stubbed kernel; the row fan-out is real Spark)."""
-    with_meta = decode_metadata(media, blob_col)
-    frames = with_meta.where(F.col("media_type") == "video").withColumn(
-        "frame_ts_ms",
-        F.explode(F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))),
-    )
-    return frames.withColumn("frame", F.lit(None).cast("binary"))  # real: decoded JPEG bytes

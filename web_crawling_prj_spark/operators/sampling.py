@@ -1,11 +1,9 @@
-"""Deterministic sampling for training-data pipelines (SURVEY.md O2/O3 + extras).
+"""Deterministic sampling and packing for training-data pipelines.
 
-Reference analogs: seeded-shuffle + truncate of the proxy pool
-(utils/common/proxy_manager.py:127-129), list slicing. Extended with the
-sampling shapes a 100 TB corpus pipeline actually needs — all pure column math
-(hash-based), so samples are reproducible at any parallelism and resumable
-mid-pipeline (no F.rand in the data plane; rand is seeded per-ROW by key, not
-per-partition-draw).
+Exact stratified sampling and sequence packing — the sampling shapes a 100 TB
+corpus pipeline needs. Both are pure column math (md5-ranked), so results
+are reproducible at any parallelism, resumable mid-pipeline and checkable
+against DuckDB (no F.rand in the data plane).
 """
 
 from __future__ import annotations
@@ -14,38 +12,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def hash_sample(df: DataFrame, fraction: float, key: str, seed: int = 42) -> DataFrame:
-    """Keep ~fraction of rows chosen by key hash — stable across runs/partitions
-    (unlike df.sample, whose output depends on partitioning)."""
-    bucket = F.pmod(F.xxhash64(F.lit(seed), F.col(key)), F.lit(1_000_000))
-    return df.where(bucket < int(fraction * 1_000_000))
-
-
-def shuffled_limit(df: DataFrame, n: int, key: str, seed: int = 42) -> DataFrame:
-    """O3+O2: deterministic 'random' shuffle then take n (reference
-    random.shuffle(proxies)[:limit]) — order by key hash, not F.rand, so the
-    result is a pure function of the data."""
-    return df.orderBy(F.xxhash64(F.lit(seed), F.col(key)), F.col(key)).limit(n)
-
-
-def stratified_topk(df: DataFrame, group: str, k: int, order_col: str, key: str) -> DataFrame:
-    """Per-group top-k with deterministic tiebreak (training-data curation:
-    best-k docs per host/lang/source)."""
-    w = Window.partitionBy(group).orderBy(F.desc(order_col), F.asc(key))
-    return df.withColumn("_rk", F.row_number().over(w)).where(F.col("_rk") <= k).drop("_rk")
-
-
-def proportional_per_group(df: DataFrame, group: str, fraction: float, key: str, seed: int = 42) -> DataFrame:
-    """Hash-sample within every group at the same rate (keeps group mix)."""
-    bucket = F.pmod(F.xxhash64(F.lit(seed), F.col(group), F.col(key)), F.lit(1_000_000))
-    return df.where(bucket < int(fraction * 1_000_000))
-
-
 def stratified_exact_sample(
     df: DataFrame, strata: list[str], fraction: float, key: str
 ) -> DataFrame:
     """EXACT stratified allocation: keep ceil(fraction · n) rows per stratum
-    (hash-rate sampling above only hits the fraction in expectation — tiny
+    (hash-rate sampling only hits the fraction in expectation — tiny
     strata can end up empty or doubled, which skews a curated language/
     quality mix). Rows are chosen by md5(key) rank — a deterministic
     pseudo-random order that is partitioning-independent AND DuckDB-

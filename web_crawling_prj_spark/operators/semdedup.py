@@ -351,103 +351,3 @@ def semdedup(
             F.coalesce(~F.col("_drop"), F.lit(True)).alias("keep"),
         )
     )
-
-
-def semdedup_increment(
-    new_vecs: DataFrame,
-    centroids: DataFrame | list,
-    prior: DataFrame,
-    tau: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Daily-increment SemDeDup: screen a NEW batch against FROZEN centroids
-    and the already-processed corpus — never re-cluster, never recompare old
-    points. Arrival order defines priority: every prior point outranks every
-    new point; within the new batch the order is (centroid_sim ASC, id ASC),
-    exactly :func:`semdedup`'s rule. A new point is dropped iff cosine ≥ tau
-    with ANY prior point in its cluster (kept or dropped — dropped points
-    dominate later arrivals in the batch rule too, and the increment keeps
-    that semantics so sequential increments ≡ one sequential batch pass) or
-    with an earlier new point.
-
-    ``prior``: (id, cluster, centroid_sim, vec) of every previously
-    processed point — i.e. past outputs joined back to their vectors.
-    Returns the NEW rows only, same schema as :func:`semdedup`.
-
-    Cost: assignment is shuffle-free (the frozen-centroid tiers); the
-    screens shuffle new-batch-sized data and join prior per cluster —
-    O(|new| · cluster slice), never O(corpus²)."""
-    cents = centroids
-    if isinstance(cents, DataFrame):
-        cents = [(r["cluster"], list(r["centroid"])) for r in cents.collect()]
-    from web_crawling_prj_spark.operators.textdedup import spread_if_narrow
-
-    # same scan-parallelism guard as :func:`semdedup` — the frozen-centroid
-    # assignment fold runs map-side on the new batch's scan splits
-    new_vecs = spread_if_narrow(new_vecs)
-    assigned = kmeans_assign(new_vecs, cents, id_col, vec_col)
-    cent_df = new_vecs.sparkSession.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in sorted(cents)],
-        "cluster int, centroid array<double>",
-    )
-    from web_crawling_prj_spark.operators.similarity import dot, l2_norm
-
-    scored = _score_against(assigned, cent_df, id_col, vec_col)
-    # same three pair-stage accelerations as :func:`semdedup`: norms hoisted
-    # out of the per-pair cosine (bit-identical values), each screen a
-    # short-circuiting LEFT SEMI join, and the join salted so parallelism is
-    # not capped at the number of clusters; the trailing distinct keeps key
-    # uniqueness provable for the final left join
-    spark_ctx = scored.sparkSession.sparkContext
-    k_est = max(1, len(cents))
-    n_salts = max(1, min(16, (spark_ctx.defaultParallelism + k_est - 1) // k_est))
-    salt_b = F.pmod(F.xxhash64(F.col("_b_id")), F.lit(n_salts)).cast("int")
-    salt_explode = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    norm = l2_norm(F.col(vec_col))
-    new_b = scored.select(
-        "cluster",
-        F.col(id_col).alias("_b_id"),
-        F.col(vec_col).alias("_b_vec"),
-        F.col("centroid_sim").alias("_b_sim"),
-        norm.alias("_b_norm"),
-    ).withColumn("_salt", salt_b)
-    prior_a = prior.select(
-        F.col("cluster").alias("_a_cluster"),
-        F.col(vec_col).alias("_a_vec"),
-        l2_norm(F.col(vec_col)).alias("_a_norm"),
-    ).withColumn("_a_salt", salt_explode)
-    denom = F.col("_a_norm") * F.col("_b_norm")
-    pair_cos = F.round(
-        F.when(denom > 0, dot(F.col("_a_vec"), F.col("_b_vec")) / denom).otherwise(F.lit(0.0)),
-        6,
-    )
-    on_cluster_salt = (F.col("cluster") == F.col("_a_cluster")) & (
-        F.col("_salt") == F.col("_a_salt")
-    )
-    dropped_vs_prior = new_b.join(
-        prior_a, on_cluster_salt & (pair_cos >= tau), "left_semi"
-    ).select(F.col("_b_id").alias(id_col))
-    new_a = scored.select(
-        F.col("cluster").alias("_a_cluster"),
-        F.col(id_col).alias("_a_id"),
-        F.col(vec_col).alias("_a_vec"),
-        F.col("centroid_sim").alias("_a_sim"),
-        norm.alias("_a_norm"),
-    ).withColumn("_a_salt", salt_explode)
-    earlier = (F.col("_a_sim") < F.col("_b_sim")) | (
-        (F.col("_a_sim") == F.col("_b_sim")) & (F.col("_a_id") < F.col("_b_id"))
-    )
-    dropped_vs_new = new_b.join(
-        new_a, on_cluster_salt & earlier & (pair_cos >= tau), "left_semi"
-    ).select(F.col("_b_id").alias(id_col))
-    dropped = dropped_vs_prior.unionByName(dropped_vs_new).distinct()
-    return (
-        scored.join(dropped.withColumn("_drop", F.lit(True)), id_col, "left")
-        .select(
-            id_col,
-            "cluster",
-            "centroid_sim",
-            F.coalesce(~F.col("_drop"), F.lit(True)).alias("keep"),
-        )
-    )

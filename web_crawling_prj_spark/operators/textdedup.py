@@ -212,21 +212,6 @@ def _cap_buckets(
 
 # --- tier 1/2: exact ---
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", normalized: bool = False) -> DataFrame:
-    """Groups of byte-identical (or normalized-identical) docs: (fingerprint,
-    group_size, keep_id=min id, member ids)."""
-    fp = normalized_fingerprint(text_col) if normalized else doc_fingerprint(text_col)
-    return (
-        docs.select(F.col(id_col), fp.alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(
-            F.count("*").alias("group_size"),
-            F.min(id_col).alias("keep_id"),
-            F.sort_array(F.collect_list(id_col)).alias("member_ids"),
-        )
-        .where(F.col("group_size") > 1)
-    )
-
 
 def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", normalized: bool = False) -> DataFrame:
     """Keep one representative (min id) per identical text."""
@@ -409,37 +394,6 @@ def duplicate_ngram_spans(
             "span_end",
             (F.col("span_end") - F.col("span_start")).alias("span_tokens"),
         )
-    )
-
-
-def dup_span_profile(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
-    """Per-doc duplicated-token budget from :func:`duplicate_ngram_spans` —
-    the number a filtering pipeline thresholds on (e.g. drop docs with >50%
-    duplicated tokens). Left join back to ALL docs so clean docs report 0."""
-    spans = duplicate_ngram_spans(docs, id_col, text_col, n=n, min_count=min_count)
-    per_doc = spans.groupBy(id_col).agg(
-        F.sum("span_tokens").alias("dup_tokens"), F.count("*").alias("n_spans")
-    )
-    toks = docs.select(
-        F.col(id_col), F.coalesce(F.size(tokens_col(text_col)), F.lit(0)).alias("n_tokens")
-    )
-    return toks.join(per_doc, id_col, "left").select(
-        id_col,
-        "n_tokens",
-        F.coalesce("dup_tokens", F.lit(0)).alias("dup_tokens"),
-        F.coalesce("n_spans", F.lit(0)).cast("int").alias("n_spans"),
-        F.round(
-            F.when(F.col("n_tokens") == 0, F.lit(0.0)).otherwise(
-                F.coalesce("dup_tokens", F.lit(0)) / F.col("n_tokens")
-            ),
-            6,
-        ).alias("dup_ratio"),
     )
 
 

@@ -1,27 +1,16 @@
-"""Async report pipeline — reference BaseReportsDAG re-expressed (SURVEY.md §3.2).
+"""Per-round run report: the summary table and its human-readable artifact.
 
-Reference flow (dags/common/base_init_reports_dag.py): refresh credentials →
-create each report server-side (:74-102, 300 s create timeout) → poll all
-reports every 10 s up to 3600 s (:104-174) → download ready ones → fail the run
-if failed ≥ ⌈total/2⌉ (:187-192).
-
-The create/poll/download calls are EXTERNAL-SERVICE I/O, not data-plane work,
-so they stay a driver-side loop between Spark jobs; each downloaded report
-lands as rows in a bronze table (DataFrame) for the warehouse load plan. The
-service client is injectable; the default is a deterministic synthetic service
-(report r becomes ready after (hash(r) % k)+1 polls) so semantics — poll
-cadence, timeout, half-failure abort — are fully testable offline.
+The reference (dags/common/base_init_reports_dag.py) fails a report run when
+failed ≥ ⌈total/2⌉ (:187-192) and renders run totals into a Teams card
+(services/notification_handler.py). Here both are computed from a crawl
+round's committed metrics: :func:`run_summary` builds the ``run_report``
+table the round commits, and :func:`render_run_artifact` writes it out next
+to the round manifest as markdown and JSON.
 """
 
 from __future__ import annotations
 
-import logging
-import math
-import time
-from collections.abc import Callable
-from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -133,110 +122,3 @@ def render_run_artifact(spark, store, round_id: int, rep_row=None, metrics_rows=
     with open(base + ".md", "w") as f:
         f.write("\n".join(lines) + "\n")
     return base + ".md"
-
-
-@dataclass
-class ReportJob:
-    report_id: str
-    report_type: str
-    status: str = "created"  # created | ready | downloaded | failed
-    polls: int = 0
-    payload_rows: list | None = None
-
-
-@dataclass
-class ReportServiceConfig:
-    poll_interval_s: float = 10.0  # base_init_reports_dag.py:147
-    max_wait_s: float = 3600.0  # :120
-    create_timeout_s: float = 300.0  # :82-83
-    fail_threshold_ratio: float = 0.5  # :187-192
-    sleep: Callable[[float], None] = field(default=time.sleep)
-
-
-class SyntheticReportService:
-    """Deterministic offline stand-in for the external report API."""
-
-    def __init__(self, ready_after_polls: int = 2, fail_ids: set[str] | None = None):
-        self.ready_after = ready_after_polls
-        self.fail_ids = fail_ids or set()
-
-    def create(self, job: ReportJob) -> None:
-        if job.report_id in self.fail_ids:
-            job.status = "failed"
-
-    def poll(self, job: ReportJob) -> bool:
-        job.polls += 1
-        return job.polls >= self.ready_after
-
-    def download(self, job: ReportJob) -> list:
-        return [(job.report_id, job.report_type, i, f"val-{job.report_id}-{i}") for i in range(3)]
-
-
-def run_report_pipeline(
-    spark: SparkSession,
-    jobs: list[ReportJob],
-    service=None,
-    cfg: ReportServiceConfig | None = None,
-) -> DataFrame:
-    """create → poll-until-ready (≤ max_wait) → download → bronze DataFrame.
-
-    Raises if failed ≥ ⌈total/2⌉ (reference half-failure abort). The poll loop
-    uses injectable sleep so tests run instantly.
-    """
-    service = service or SyntheticReportService()
-    cfg = cfg or ReportServiceConfig()
-    for j in jobs:
-        # reference create timeout (base_init_reports_dag.py:82-83): a create
-        # call that exceeds the budget marks the JOB failed (counted against
-        # the half-failure abort below) instead of hanging the whole pipeline.
-        # The check is POST-HOC — it cannot interrupt a create that hangs
-        # forever (the reference's asyncio timeout can; a sync client should
-        # carry its own socket timeout ≤ create_timeout_s). A create that
-        # SUCCEEDED but blew the budget is cancelled server-side when the
-        # client supports it, so no orphaned remote report keeps running
-        # while counting toward the half-failure abort (ADVICE r4).
-        t0 = time.monotonic()
-        try:
-            service.create(j)
-        except Exception:
-            logging.getLogger(__name__).warning(
-                "report create failed for %s", j.report_id, exc_info=True
-            )
-            j.status = "failed"
-            continue
-        if time.monotonic() - t0 > cfg.create_timeout_s:
-            cancel = getattr(service, "cancel", None)
-            if cancel is not None:
-                try:
-                    cancel(j)
-                except Exception:
-                    logging.getLogger(__name__).warning(
-                        "cancel failed for %s", j.report_id, exc_info=True
-                    )
-            j.status = "failed"
-
-    pending = [j for j in jobs if j.status == "created"]
-    waited = 0.0
-    while pending and waited < cfg.max_wait_s:
-        for j in list(pending):
-            if service.poll(j):
-                j.status = "ready"
-                j.payload_rows = service.download(j)
-                j.status = "downloaded"
-                pending.remove(j)
-        if pending:
-            cfg.sleep(cfg.poll_interval_s)
-            waited += cfg.poll_interval_s
-    for j in pending:
-        j.status = "failed"
-
-    failed = sum(1 for j in jobs if j.status == "failed")
-    # ceil, not round(): reference aborts at failed >= ceil(total/2)
-    # (base_init_reports_dag.py:187-192); banker's rounding would abort 2/5
-    if failed >= max(1, math.ceil(len(jobs) * cfg.fail_threshold_ratio)):
-        raise RuntimeError(f"report run failed: {failed}/{len(jobs)} reports failed")
-
-    rows = [r for j in jobs if j.payload_rows for r in j.payload_rows]
-    return spark.createDataFrame(
-        rows, "report_id string, report_type string, line_no int, value string"
-    )

@@ -81,18 +81,15 @@ def guard_union_partitioning(spark: SparkSession) -> None:
     ``repartition()``) and returns DUPLICATE rows. Unions of branches built on
     bucketed tier scans (the crawl's live view and its incumbent probe) are
     exactly that shape, so this must be off in the session executing those
-    plans. The conf is runtime-settable; flipping it only
-    removes an (incorrect) exchange elision, it never changes results of
-    correct plans. Cost: one conf round-trip per call (sub-ms) — called once
-    per store read entry point, not per row.
+    plans. The conf is runtime-settable, and ``conf.set`` accepts even a key
+    a Spark build does not know, so nothing here is expected to raise.
+    Flipping it only removes an (incorrect) exchange elision, it never
+    changes results of correct plans. Cost: one conf round-trip per call
+    (sub-ms) — called once per store read entry point, not per row.
     """
     key = "spark.sql.unionOutputPartitioning"
-    try:
-        if spark.conf.get(key, "true") != "false":
-            spark.conf.set(key, "false")
-    except Exception:
-        # conf unknown to this Spark build → the buggy claim doesn't exist
-        pass
+    if spark.conf.get(key, "true") != "false":
+        spark.conf.set(key, "false")
 
 
 class StateStore:
